@@ -47,20 +47,7 @@ from sparkflow.session import get_spark
 def events_tumbling_batch(spark, sf_dir):
     """Batch event-time hour buckets — the exact shape BASELINE.md timed
     (the streaming twin is correctness-checked elsewhere; benching it
-    would measure streaming-query startup, not the aggregation). IVM
-    read-through (r11): a session that ran maintenance_rollup_tumbling
-    reads the staged (hour, type) partials — bit-identical output;
-    cold sessions (this bench's default) keep the raw scan."""
-    from sparkflow.sources.io import (
-        rollup_serve, tumbling_rollup, tumbling_rollup_read,
-    )
-
-    serve = rollup_serve(spark, sf_dir, "tumbling")
-    if serve is not None:
-        return serve  # one-stage serving-frame scan (r12)
-    mat = tumbling_rollup(spark, sf_dir, create=False)
-    if mat is not None:
-        return tumbling_rollup_read(mat)
+    would measure streaming-query startup, not the aggregation)."""
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -71,55 +58,6 @@ def events_tumbling_batch(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("n_events"), (F.sum(cents("value")).cast("double") / 100.0).alias("value_sum"))
     )
-
-
-def staged_postures(sf_dir: str) -> dict[str, str]:
-    """Which headline queries will resolve to a durable staged posture
-    in THIS run (r12: postures are content-addressed and survive
-    sessions, so the ledger must say which shape each number measured —
-    'cold' = the raw plan, anything else = the named warm artifact).
-    Pure os.stat probes, no Spark."""
-    from sparkflow.sources import staging
-
-    from sparkflow.sources.io import _ROLLUP_TABLES
-
-    def rollup(name):
-        for suffix, label in (("_serve", "ivm_serve"), ("", "ivm_partials")):
-            if staging.is_published(staging.shared_path(
-                "rollup", sf_dir, _ROLLUP_TABLES[name], f"{name}{suffix}",
-            )):
-                return label
-        return "cold"
-
-    def bucketed(tname, key):
-        return staging.is_published(staging.shared_path(
-            "bucketed", sf_dir, (tname,), f"{tname}_{key}_b32"
-        ))
-
-    facts = bucketed("lineitem", "l_orderkey") and bucketed("orders", "o_orderkey")
-    return {
-        "q1_pricing_summary": rollup("pricing"),
-        "q3_join3_topk": (
-            rollup("q3") if rollup("q3") == "ivm_serve"
-            else ("bucket_family" if facts else "cold")
-        ),
-        "q5_join5_agg": (
-            rollup("q5") if rollup("q5") == "ivm_serve"
-            else ("bucket_family" if facts else "cold")
-        ),
-        "distinct_users": rollup("distinct"),
-        "events_tumbling_1h": rollup("tumbling"),
-        "json_extract_agg": (
-            "ivm_serve" if staging.is_published(staging.shared_path(
-                "json_mat", sf_dir, ("events",), "events_k_serve"))
-            else "typed_copy" if staging.is_published(staging.shared_path(
-                "json_mat", sf_dir, ("events",), "events_k"))
-            else "cold"
-        ),
-        "embeddings_knn": "fxp_matrix" if staging.is_published(
-            staging.shared_path("knn", sf_dir, ("embeddings",), "fxp_matrix")
-        ) else "cold",
-    }
 
 
 BENCH_QUERIES = {
@@ -283,12 +221,6 @@ def main() -> None:
                 "floor_pre_sec": round(floor_pre, 4),
                 "best_idle_floor_sec": round(idle_floor, 4),
                 "idle_waits": waits,
-                # which durable staged posture (if any) each headline
-                # query resolved to in THIS window — postures survive
-                # sessions since r12, so the number's shape must be
-                # self-describing (cold vs warm is no longer implied
-                # by process freshness).
-                "postures": staged_postures(sf_dir),
             }
         )
     )

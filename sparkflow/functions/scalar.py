@@ -143,83 +143,27 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "fn_json",
-    oracle="""
+_JSON_ORACLE = """
     SELECT event_type,
            CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
            MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS k_max,
            CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS DOUBLE)
              / COUNT(*) AS k_avg
     FROM events GROUP BY event_type
-    """,
-)
+    """
+
+
+@register("fn_json_raw_parse", oracle=_JSON_ORACLE)
+@register("fn_json", oracle=_JSON_ORACLE)
 def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON payload extraction (`props` is a JSON string column) +
-    aggregate, with the parse-once READ-THROUGH as the default posture
-    (r8 verdict item 2: per-byte JSON parse in the hot path was the
-    named 100 TB scale-killer — 23.8× DuckDB at sf10 — while the
-    materialized typed copy runs it at 0.13×). If this session has
-    completed maintenance_json_materialize's one-time rewrite, the
-    aggregate reads the typed column straight off parquet (no JSON
-    anywhere, two-column pruned scan); otherwise it falls back to the
-    raw parse: `from_json` with an explicit schema parses each payload
+    aggregate: `from_json` with an explicit schema parses each payload
     once into a typed struct (Jackson, JVM-side) — measurably faster
     than per-path `get_json_object` and the right shape when several
-    fields are extracted (one parse, N struct reads). Both shapes
-    produce identical values (the materialize op's oracle IS this
-    aggregate recomputed from raw), so the key stays EXACT either way;
-    the raw shape remains measurable on its own via fn_json_raw_parse.
-    r12: when the maintenance pass has also published the aggregate's
-    SERVING FRAME (rollup serve convention), the read collapses further
-    to a floor-time constant-size scan — posture ladder
-    serve → typed copy → raw parse, every rung bit-identical."""
-    from ..sources import staging
-    from ..sources.io import materialized_events_k
-
-    serve = staging.stage_parquet(
-        spark, "json_mat", sf_dir, ("events",), "events_k_serve",
-        None, create=False,
-    )
-    if serve is not None:
-        return serve
-    mat = materialized_events_k(spark, sf_dir, create=False)
-    src = (
-        mat.select("event_type", "k")
-        if mat is not None
-        else table(spark, sf_dir, "events").select(
-            "event_type",
-            F.from_json("props", "k LONG").getField("k").alias("k"),
-        )
-    )
-    return (
-        src.groupBy("event_type")
-        .agg(
-            F.sum("k").alias("k_sum"),
-            F.max("k").alias("k_max"),
-            (F.sum("k") / F.count(F.lit(1))).alias("k_avg"),
-        )
-    )
-
-
-@register(
-    "fn_json_raw_parse",
-    oracle="""
-    SELECT event_type,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-           MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS k_max,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS DOUBLE)
-             / COUNT(*) AS k_avg
-    FROM events GROUP BY event_type
-    """,
-)
-def fn_json_raw_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The explicit A/B rung fn_json graduated from (r9 repoint): the
-    same aggregate with the JSON parse IN the hot path, unconditionally
-    — one `from_json` per row per query. Kept as its own key so the
-    per-query parse cost stays measurable against the read-through
-    default (tools/bench_posture.py; SCALE.md 'JSON posture' section)
-    and so the parse path itself keeps a correctness row."""
+    fields are extracted (one parse, N struct reads).
+    fn_json_raw_parse is the same plan under its older A/B-rung name;
+    maintenance_json_materialize is the separate key that builds the
+    parse-once typed copy and serves this aggregate from it."""
     ev = table(spark, sf_dir, "events")
     k = F.from_json("props", "k LONG").getField("k")
     return (

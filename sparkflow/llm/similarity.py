@@ -54,15 +54,6 @@ _HN_MAX_QUERIES = 4096
 # lookup, constant-sized, memoized so warm re-invocations (bench loop,
 # explain dumps) skip the extra job.
 _KNN_QUERY_CACHE: dict = {}
-# (session id, published artifact path) -> (weakref(session),
-# DataFrame handle) for the staged KNN matrix (r13): resolving
-# spark.read.parquet(path) re-lists files and re-reads footers — a
-# ~0.2 s driver job per call at sf30 that dominated the staged read.
-# The path embeds the corpus digest, so a corpus change misses this
-# cache by construction (new address), exactly the staging
-# invalidation rule; the PLAN built over the handle stays fresh per
-# query.
-_KNN_MATRIX_CACHE: dict = {}
 _TOP_K = 10
 
 
@@ -221,21 +212,9 @@ def llm_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's BIGINT list fold produce bit-identical doubles. This is the
     honest way to make vector scoring both fast (no per-element
     interpreted fold) and oracle-exact; real ANN systems quantize for
-    the same determinism/throughput reasons.
-
-    r12 read-through posture: when `maintenance_knn_quantize` has
-    published the fixed-point matrix for this corpus digest, the scan
-    resolves to the staged artifact and the O(n·d) dot products run as
-    ONE Arrow-native int64 matmul (mapInArrow — no posexplode, no
-    per-row join; the per-vector scalar math stays in the SAME Spark
-    expressions, so staged and raw results are bit-identical). Cold
-    sessions keep the JVM explode/join plan below — the fn_json repoint
-    convention: read-throughs never mutate state from a read-only
-    query, and the raw shape stays measurable."""
-    qid_qi = _query_row(spark, sf_dir)
-    mat = _knn_matrix(spark, sf_dir)
-    if mat is not None:
-        return _knn_arrow_read(mat, *qid_qi)
+    the same determinism/throughput reasons. maintenance_knn_quantize
+    is the separate key that stages the fixed-point matrix and scores
+    it with one Arrow int64 matmul."""
     e = table(spark, sf_dir, "embeddings")
     # Resolve the query vector ONCE at plan-build time (in a real KNN
     # service the query vector arrives client-side; here it is one tiny
@@ -313,15 +292,13 @@ def _fxp_matrix_frame(e: DataFrame) -> DataFrame:
     )
 
 
-def _knn_matrix(spark: SparkSession, sf_dir: str, create: bool = False):
+def _knn_matrix(spark: SparkSession, sf_dir: str):
     """The brute-force KNN's staged artifact: the corpus as a
     FIXED-POINT matrix — (vec_id, label, xi: array<long> = round(x·1e6)
-    per coordinate, n2 = Σxi² precomputed). Content-addressed under the
-    shared staging root (sources/staging.py), same read-through rules
-    as every posture: create=False returns the matrix only if published
-    for the CURRENT corpus digest (else None → cold plan), create=True
-    is the maintenance pass. The quantization expression is the exact
-    one the cold plan applies per row, so the two plans score identical
+    per coordinate, n2 = Σxi² precomputed). Built once and published
+    content-addressed under the shared staging root
+    (sources/staging.py). The quantization expression is the exact one
+    llm_knn_cosine applies per row, so the two plans score identical
     integers."""
     from ..sources import staging
 
@@ -347,54 +324,9 @@ def _knn_matrix(spark: SparkSession, sf_dir: str, create: bool = False):
         parts = max(8, src_bytes // (32 << 20))
         return _fxp_matrix_frame(e).repartition(int(parts))
 
-    import weakref
-
-    import os as _os
-
-    final = staging.shared_path("knn", sf_dir, ("embeddings",), "fxp_matrix")
-    memo_key = (id(spark), final)
-
-    def _manifest_id():
-        # the cached handle's frozen file index is only valid for the
-        # EXACT publication it was resolved against: an unpublish +
-        # republish at the same digest address writes new part files
-        # (review r13 — the is_published probe alone would serve a
-        # handle listing deleted files). The manifest's (inode,
-        # mtime_ns) identifies a publication; one os.stat per call.
-        try:
-            st = _os.stat(_os.path.join(final, "_sparkflow_manifest.json"))
-            return (st.st_ino, st.st_mtime_ns)
-        except OSError:
-            return None
-
-    mid = _manifest_id()
-    hit = _KNN_MATRIX_CACHE.get(memo_key)
-    if hit is not None:
-        if hit[0]() is spark and mid is not None and hit[2] == mid:
-            return hit[1]
-        _KNN_MATRIX_CACHE.pop(memo_key, None)  # stale: retracted,
-        # republished, or a dead session — never serve it again
-    mat = staging.stage_parquet(
-        spark, "knn", sf_dir, ("embeddings",), "fxp_matrix", build, create
+    return staging.stage_parquet(
+        spark, "knn", sf_dir, ("embeddings",), "fxp_matrix", build
     )
-    if mat is not None:
-        # r13 advice: bind the cache entry to the publication identity
-        # only when the identity BEFORE stage_parquet resolved the
-        # handle equals the identity AFTER — a republish landing
-        # mid-resolve would otherwise pin the NEW (inode, mtime) to the
-        # OLD file listing and the staleness probe would pass forever.
-        # On mismatch (or a just-created artifact, mid=None) leave the
-        # entry uncached; the next call re-resolves and caches.
-        mid_after = _manifest_id()
-        if mid is not None and mid == mid_after:
-            _KNN_MATRIX_CACHE[memo_key] = (
-                weakref.ref(
-                    spark, lambda _, k=memo_key: _KNN_MATRIX_CACHE.pop(k, None)
-                ),
-                mat,
-                mid_after,
-            )
-    return mat
 
 
 def _knn_arrow_read(mat: DataFrame, qid: int, qi) -> DataFrame:
@@ -403,7 +335,7 @@ def _knn_arrow_read(mat: DataFrame, qid: int, qi) -> DataFrame:
     zero-copy (rows × dim) ndarray, no per-row Python and no
     posexplode/join), emitting exact integer (dot, n2) per vector. The
     per-vector DOUBLE math (divide, sqrt, round) stays in the SAME
-    Spark expressions as the cold plan, so staged and raw top-10 are
+    Spark expressions as llm_knn_cosine, so staged and raw top-10 are
     bit-identical — numpy int64 matmul is exact (|dot| < 2^63, see
     _FXP) and order-independence is the fixed-point design's point.
     Scales: the matmul shards over partitions (each Arrow batch scores
@@ -497,24 +429,23 @@ def _knn_arrow_read(mat: DataFrame, qid: int, qi) -> DataFrame:
 
 @register("maintenance_knn_quantize", oracle=_KNN_ORACLE)
 def maintenance_knn_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintenance pass for the brute-force KNN posture (r12): quantize
-    the corpus once into the staged fixed-point matrix (vec_id, label,
-    xi, n2) and answer the query through it — after this pass,
-    llm_knn_cosine (bench's embeddings_knn) resolves to one Arrow
-    int64 matmul over the published matrix instead of the
-    posexplode/join plan (measured in SCALE.md r12). Append-only ingest
+    """Maintenance pass for the brute-force KNN (r12): quantize the
+    corpus once into the staged fixed-point matrix (vec_id, label, xi,
+    n2) and answer the query through it — one Arrow int64 matmul over
+    the published matrix instead of llm_knn_cosine's posexplode/join
+    plan (measured in SCALE.md r12). Append-only ingest
     folds in by quantizing ONLY the new vectors and appending — the
     artifact is row-wise independent, the simplest IVM of all. Oracle:
     the same exact-arithmetic SQL as llm_knn_cosine — equality IS the
-    read-through's bit-identity claim."""
-    mat = _knn_matrix(spark, sf_dir, create=True)
+    staged matrix's bit-identity claim."""
+    mat = _knn_matrix(spark, sf_dir)
     qid, qi = _query_row(spark, sf_dir)
     return _knn_arrow_read(mat, qid, qi)
 
 
 @register("maintenance_knn_ingest", oracle=_KNN_ORACLE)
 def maintenance_knn_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """APPEND-ONLY ingest for the KNN posture, exercised end-to-end
+    """APPEND-ONLY ingest for the staged KNN matrix, exercised end-to-end
     (the rollup-ingest evidence grade for the simplest IVM there is):
     the corpus splits 90/10 by a deterministic key predicate, the 10%
     "ingest batch" is materialized as its own directory (the landing
@@ -531,14 +462,12 @@ def maintenance_knn_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = staging.stage_parquet(
         spark, "ingest", sf_dir, ("embeddings",), "embeddings_delta",
         lambda: table(spark, sf_dir, "embeddings").filter(pred),
-        create=True,
     )
     base = staging.stage_parquet(
         spark, "ingest", sf_dir, ("embeddings",), "knn_base_matrix",
         lambda: _fxp_matrix_frame(
             table(spark, sf_dir, "embeddings").filter(~pred)
         ),
-        create=True,
     )
     merged = base.unionByName(_fxp_matrix_frame(delta))
     qid, qi = _query_row(spark, sf_dir)

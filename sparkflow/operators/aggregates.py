@@ -97,20 +97,8 @@ def agg_hash_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: filter + group by 2 low-cardinality keys + 8
     aggregates. The classic partial-agg showcase: map-side combine
     reduces the shuffle to (#groups × #partitions) rows regardless of
-    input size. IVM read-through default (r11, the fn_json r9 repoint
-    shape): once maintenance_rollup_pricing has staged the 6-row
-    integer partials this session, the query is a constant-size
-    partials read with bit-identical output (same IEEE expressions
-    over the same integer sums); cold sessions keep this one-scan raw
-    plan, which stays the measurable A/B rung."""
-    from ..sources.io import pricing_rollup, pricing_rollup_read, rollup_serve
-
-    serve = rollup_serve(spark, sf_dir, "pricing")
-    if serve is not None:
-        return serve  # one-stage 6-row scan (r12: durable serving frame)
-    mat = pricing_rollup(spark, sf_dir, create=False)
-    if mat is not None:
-        return pricing_rollup_read(mat)
+    input size. maintenance_rollup_pricing serves the same rows from
+    maintained integer partials."""
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp")
     )
@@ -138,20 +126,8 @@ def agg_hash_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct — Spark plans this as a two-level aggregate
     (dedup on (event_type, user_id) then count), the same keyed-MapState
-    dedup a Flink pattern hand-codes. IVM read-through default (r11):
-    once maintenance_rollup_distinct has staged the OR-mergeable
-    (type, bucket) bitmaps this session, the query is
-    Σ bitmap_count over the partials — exact, orders of magnitude fewer
-    rows than the event scan; cold sessions keep this raw distinct
-    plan, which stays the measurable A/B rung."""
-    from ..sources.io import distinct_rollup, distinct_rollup_read, rollup_serve
-
-    serve = rollup_serve(spark, sf_dir, "distinct")
-    if serve is not None:
-        return serve  # one-stage 5-row scan (r12: the dispatch-floor fix)
-    mat = distinct_rollup(spark, sf_dir, create=False)
-    if mat is not None:
-        return distinct_rollup_read(mat)
+    dedup a Flink pattern hand-codes. maintenance_rollup_distinct serves
+    the same rows from maintained (type, bucket) bitmaps."""
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")

@@ -391,9 +391,7 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clicks.join(purchases, cond).select("click_id", "purchase_id", "user_id")
 
 
-@register(
-    "join_multiway_star",
-    oracle=f"""
+_Q5_ORACLE = f"""
     SELECT n.n_name AS nation,
            {sql_rev_sum('revenue', 'l.l_extendedprice', 'l.l_discount')}
     FROM customer c
@@ -405,60 +403,36 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
       AND o.o_orderdate <  TIMESTAMP '1998-01-01'
     GROUP BY n.n_name
-    """,
-)
-def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship (TPC-H Q5 shape): 6-table star join + grouped revenue,
-    with the BUCKET FAMILY as the default posture where the investment
-    exists (r8 verdict item 2: the fact⋈fact exchange made the shuffle
-    shape 6.7× DuckDB at sf10, while the bucketed twin runs 0.75× with
-    ≤1 exchange — at 100× the bucket family is the plan of record). If
-    this session has already staged the orderkey bucket family (any
-    prior call to join_multiway_star_bucketed / join_bucketed /
-    join_multiway_star_denorm, or a production ingest that bucketBy'd
-    the facts at write time), the flagship consumes it — co-located
-    lineitem⋈orders, zero fact-edge exchange. Otherwise it runs the
-    straight shuffle plan rather than silently paying the one-time
-    bucketing write inside a query that promises read-only semantics.
-    Both shapes return identical rows (same oracle); the shuffle shape
-    stays measurable on its own via join_multiway_star_shuffle.
-
-    r12 (verdict item 4): the FIRST posture probed is the Q5
-    join-aggregate IVM serving frame (maintenance_rollup_q5 — the
-    maintained (nation, year) view published content-addressed): when
-    it exists for this corpus digest, the flagship is a one-stage
-    constant-size scan with bit-identical output. Next the bucket
-    family; finally the cold shuffle shape.
-
-    Shuffle-shape join order: fact-to-fact first (lineitem⋈orders⋈
-    customer shuffles on their keys, AQE may broadcast customer at
-    small SF), then the supplier local-nation condition, then explicit
-    broadcasts of the fixed-size nation/region dims. Date filter sits
-    directly on the orders scan so it pushes into the parquet reader.
     """
-    from ..sources.io import rollup_serve
 
-    serve = rollup_serve(spark, sf_dir, "q5")
-    if serve is not None:
-        return serve  # maintained join-aggregate view (IVM read-through)
-    li = _bucketed_table_if_exists(
-        spark, sf_dir, "lineitem", "l_orderkey", n_buckets=32
+
+@register("join_multiway_star_shuffle", oracle=_Q5_ORACLE)
+@register("join_multiway_star", oracle=_Q5_ORACLE)
+def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flagship (TPC-H Q5 shape): 6-table star join + grouped revenue
+    over plain unbucketed scans. join_multiway_star_shuffle is the same
+    plan under its older A/B-rung name. The bucketed twin
+    (join_multiway_star_bucketed) and the maintained view
+    (maintenance_rollup_q5) are separate keys that build their staged
+    artifact on first call.
+
+    Join order: fact-to-fact first (lineitem⋈orders⋈customer shuffles
+    on their keys, AQE may broadcast customer at small SF), then the
+    supplier local-nation condition, then explicit broadcasts of the
+    fixed-size nation/region dims. Date filter sits directly on the
+    orders scan so it pushes into the parquet reader.
+    """
+    return _star_q5(
+        spark, sf_dir,
+        table(spark, sf_dir, "lineitem"), table(spark, sf_dir, "orders"),
     )
-    o = _bucketed_table_if_exists(
-        spark, sf_dir, "orders", "o_orderkey", n_buckets=32
-    )
-    if li is None or o is None:
-        li = table(spark, sf_dir, "lineitem")
-        o = table(spark, sf_dir, "orders")
-    return _star_q5(spark, sf_dir, li, o)
 
 
 def _star_q5(
     spark: SparkSession, sf_dir: str, lineitem: DataFrame, orders: DataFrame
 ) -> DataFrame:
     """The Q5 star body over caller-supplied fact frames — shared by
-    the flagship (bucket-family read-through), its explicit shuffle
-    rung, and the bucketed twin, so the three postures differ ONLY in
+    the flagship and the bucketed twin, so the two differ ONLY in
     fact-table physical layout, never in join logic."""
     customer = table(spark, sf_dir, "customer")
     supplier = table(spark, sf_dir, "supplier")
@@ -482,36 +456,6 @@ def _star_q5(
     return (
         joined.groupBy(F.col("n_name").alias("nation"))
         .agg(rev_sum("revenue"))
-    )
-
-
-@register(
-    "join_multiway_star_shuffle",
-    oracle=f"""
-    SELECT n.n_name AS nation,
-           {sql_rev_sum('revenue', 'l.l_extendedprice', 'l.l_discount')}
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-    GROUP BY n.n_name
-    """,
-)
-def join_multiway_star_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The explicit A/B rung join_multiway_star graduated from (r9
-    repoint): the Q5 star forced onto plain unbucketed scans, so the
-    fact⋈fact exchange cost stays measurable against the bucket-family
-    default (SCALE.md star-posture ladder: 5.34 s shuffle vs 2.73 s
-    bucketed at sf10) and the shuffle path keeps a correctness row —
-    it is still the plan every FIRST query pays before any bucketing
-    investment exists."""
-    return _star_q5(
-        spark, sf_dir,
-        table(spark, sf_dir, "lineitem"), table(spark, sf_dir, "orders"),
     )
 
 
@@ -675,28 +619,6 @@ def _bucketed_frame(
     return _register_bucketed(spark, reg, final, key, n_buckets)
 
 
-def _bucketed_table_if_exists(
-    spark: SparkSession, sf_dir: str, name: str, key: str, n_buckets: int
-):
-    """The bucketed copy of a fixture table if the one-time staging has
-    already been PUBLISHED for the current corpus digest — by this
-    session, an earlier session, or a concurrent process (r12: the
-    investment is durable) — else None: the flagship's read-through
-    probe (r9 repoint) never triggers the write from a read-only
-    query. A publication miss costs two os.stat-level checks; a hit by
-    a fresh session costs one metadata-only CREATE TABLE."""
-    from ..sources import staging
-
-    reg, final = _bucketed_registration(
-        spark, sf_dir, name, key, n_buckets, (name,)
-    )
-    if spark.catalog.tableExists(reg):
-        return spark.table(reg)
-    if not staging.is_published(final):
-        return None
-    return _register_bucketed(spark, reg, final, key, n_buckets)
-
-
 @register(
     "join_bucketed",
     oracle="""
@@ -732,22 +654,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "join_multiway_star_bucketed",
-    oracle=f"""
-    SELECT n.n_name AS nation,
-           {sql_rev_sum('revenue', 'l.l_extendedprice', 'l.l_discount')}
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-    GROUP BY n.n_name
-    """,
-)
+@register("join_multiway_star_bucketed", oracle=_Q5_ORACLE)
 def join_multiway_star_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship Q5 star (same result and oracle text as
     join_multiway_star) on PRE-BUCKETED fact tables — the engine's
@@ -785,26 +692,11 @@ def join_multiway_star_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _star_q5(spark, sf_dir, li, o)
 
 
-@register(
-    "join_multiway_star_denorm",
-    oracle=f"""
-    SELECT n.n_name AS nation,
-           {sql_rev_sum('revenue', 'l.l_extendedprice', 'l.l_discount')}
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-    GROUP BY n.n_name
-    """,
-)
+@register("join_multiway_star_denorm", oracle=_Q5_ORACLE)
 def join_multiway_star_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship Q5 star (same result and oracle text as
-    join_multiway_star) over a DENORMALIZED bucketed dimension — the
-    third rung of the star-posture ladder, answering the edge the
+    join_multiway_star) over a DENORMALIZED bucketed dimension,
+    answering the edge the
     orderkey bucket family cannot touch (SCALE.md r8: at sf10 the
     customer join still shuffles the joined fact stream because a 1.5M-
     row dim is past broadcast, leaving the bucketed star at 0.79x, not

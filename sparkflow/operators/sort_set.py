@@ -54,52 +54,8 @@ def limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join + agg + global top-10. orderBy().limit()
     → TakeOrderedAndProject (heap per partition, k-merge), not a sort of
     the whole aggregate. Revenue is exact integer units, and o_orderkey breaks
-    ties, so the top-10 *set* is deterministic across engines.
-
-    Bucket-family read-through (r9 verdict item 1, same repoint the
-    flagship got in r9): the cold shape's dominant cost is the
-    fact-side exchange — at sf10 lineitem⋈orders shuffles 891 MB and
-    stage-0 carries 281k executor-ms (tools/decompose_q1q3.py). When
-    the session has already staged the 32-bucket orderkey family, the
-    join is re-ordered FACT-FIRST: lineitem⋈orders consumes the
-    co-located sorted buckets (merge hint pins the scale-representative
-    SMJ), the BUILDING-customer filter joins the orders edge after, and
-    the (o_orderkey, o_orderdate) aggregate reuses the orderkey
-    partitioning — the AQE final plan carries ZERO shuffle exchanges
-    (pinned, tests/test_plans.py), measured 4.7× the cold shape
-    same-window at sf10 with identical rows. Cold sessions keep the
-    original shuffle shape — a read-only query never pays the staging
-    write.
-
-    r12: posture ladder extended — when maintenance_rollup_q3 has
-    published the maintained view's top-10 SERVING FRAME for this
-    corpus digest, the query is a floor-time 10-row scan (bit-identical
-    by the integer-unit construction); else the bucket family; else the
-    cold shuffle shape."""
-    from ..sources.io import rollup_serve
-    from .joins import _bucketed_table_if_exists
-
-    serve = rollup_serve(spark, sf_dir, "q3")
-    if serve is not None:
-        # re-assert the contract ordering (a parquet scan has none)
-        return serve.orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-
+    ties, so the top-10 *set* is deterministic across engines."""
     c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    li = _bucketed_table_if_exists(
-        spark, sf_dir, "lineitem", "l_orderkey", n_buckets=32
-    )
-    o = _bucketed_table_if_exists(
-        spark, sf_dir, "orders", "o_orderkey", n_buckets=32
-    )
-    if li is not None and o is not None:
-        return (
-            li.hint("merge").join(o, F.col("l_orderkey") == o.o_orderkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .groupBy("o_orderkey", "o_orderdate")
-            .agg(rev_sum("revenue"))
-            .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-            .limit(10)
-        )
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     return (

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import table
+from ..operators.joins import _Q5_ORACLE
 from ..oracle_compat import cents, dsum, revenue_units, sql_dsum, sql_rev_sum
 from ..registry import register
 
@@ -463,22 +464,16 @@ def maintenance_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def materialized_events_k(
-    spark: SparkSession, sf_dir: str, create: bool = False
-):
+def materialized_events_k(spark: SparkSession, sf_dir: str):
     """The DURABLE parse-once typed copy of events (props -> k LONG,
-    see maintenance_json_materialize below). With create=True, performs
-    the one-time rewrite if no published copy exists for the current
-    corpus digest and returns the typed frame. With create=False
-    (fn_json's read-through default, r8 verdict item 2), returns the
-    typed frame ONLY if a published rewrite exists — else None,
-    signalling the caller to fall back to the raw parse. r12 (verdict
-    item 1): the copy is CONTENT-ADDRESSED under the shared staging
-    root (sources/staging.py) — it outlives the staging session, a
-    corpus change invalidates by construction (new digest, clean miss),
-    and completion is the manifest written atomically with the publish
-    rename (superseding the per-app _SUCCESS gate; interrupted builds
-    leave only an unpublished scratch)."""
+    see maintenance_json_materialize below): performs the one-time
+    rewrite if no published copy exists for the current corpus digest
+    and returns the typed frame. The copy is CONTENT-ADDRESSED under the
+    shared staging root (sources/staging.py) — it outlives the staging
+    session, a corpus change invalidates by construction (new digest,
+    clean miss), and completion is the manifest written atomically with
+    the publish rename (interrupted builds leave only an unpublished
+    scratch)."""
     from . import staging
 
     def build() -> DataFrame:
@@ -489,7 +484,7 @@ def materialized_events_k(
         )
 
     return staging.stage_parquet(
-        spark, "json_mat", sf_dir, ("events",), "events_k", build, create
+        spark, "json_mat", sf_dir, ("events",), "events_k", build
     )
 
 
@@ -519,20 +514,14 @@ def maintenance_json_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse on every one of N queries and paying it once per ingest; the
     sf10 A/B lives in SCALE.md (tools/bench_posture.py).
     Oracle: the same aggregate recomputed from the raw table — content
-    identity proves the rewrite lost nothing. The materialized copy is
-    namespaced by applicationId like every staged fixture here (two
-    concurrent sessions must not race one directory); staging and the
-    _SUCCESS completion gate live in materialized_events_k, which
-    fn_json also reads through once this pass has run (r9 repoint).
-    r12: the pass ALSO publishes the aggregate's SERVING FRAME (5 rows
-    — k_sum/k_max exact longs, k_avg one deterministic division from
-    them; parquet round-trips all three losslessly), so fn_json's
-    staged read collapses from a 2-column typed scan to a floor-time
-    constant-size read, exactly the rollup serve convention. The typed
-    copy remains the artifact every OTHER downstream query wants."""
+    identity proves the rewrite lost nothing. The pass also publishes
+    the aggregate's SERVING FRAME (5 rows — k_sum/k_max exact longs,
+    k_avg one deterministic division from them; parquet round-trips all
+    three losslessly) and returns a scan of it; the typed copy remains
+    the artifact every OTHER downstream query wants."""
     from . import staging
 
-    mat = materialized_events_k(spark, sf_dir, create=True)
+    mat = materialized_events_k(spark, sf_dir)
     frame = (
         mat.groupBy("event_type")
         .agg(
@@ -543,7 +532,7 @@ def maintenance_json_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return staging.stage_parquet(
         spark, "json_mat", sf_dir, ("events",), "events_k_serve",
-        lambda: frame, create=True,
+        lambda: frame,
     )
 
 
@@ -556,41 +545,16 @@ _ROLLUP_TABLES = {
 }
 
 
-def _staged_rollup(spark: SparkSession, sf_dir: str, name: str,
-                   build, create: bool = False):
-    """DURABLE staged IVM rollup partials (maintenance_rollup_* below —
-    the same read-through convention as materialized_events_k): with
-    create=True, builds the partials once into an app-scoped scratch
-    and publishes them atomically under the content-addressed shared
-    root (r11 verdict item 1 — the partials now outlive the staging
-    session; any session over the same corpus digest reads through);
-    with create=False, returns the partials ONLY if a published build
-    exists for the CURRENT corpus digest — else None, signalling the
-    caller to fall back to the raw full-scan plan (a changed corpus
-    changes the digest, so stale partials can never serve)."""
+def _staged_rollup(spark: SparkSession, sf_dir: str, name: str, build):
+    """DURABLE staged IVM rollup partials (maintenance_rollup_* below):
+    built once into an app-scoped scratch and published atomically
+    under the content-addressed shared root, so any session over the
+    same corpus digest reuses them (a changed corpus changes the
+    digest, so stale partials can never serve)."""
     from . import staging
 
     return staging.stage_parquet(
-        spark, "rollup", sf_dir, _ROLLUP_TABLES[name], name, build, create
-    )
-
-
-def rollup_serve(spark: SparkSession, sf_dir: str, name: str):
-    """The rollup's SERVING artifact — the final query frame itself
-    (types × 1 rows, not types × buckets), written once by the
-    maintenance pass from the exact read-side expressions. A staged
-    consumer (agg_distinct / agg_hash_group / bench's tumbling twin)
-    scans this single constant-size parquet in ONE stage with zero
-    aggregation — the r11 verdict item 3 fix: agg_distinct's staged
-    residual was pure dispatch floor (two-stage partials re-agg), so
-    collapse the read to a bare scan. Values are bit-identical to the
-    partials read (parquet round-trips doubles losslessly). None when
-    the maintenance pass hasn't published for this corpus digest."""
-    from . import staging
-
-    return staging.stage_parquet(
-        spark, "rollup", sf_dir, _ROLLUP_TABLES[name], f"{name}_serve",
-        None, create=False,
+        spark, "rollup", sf_dir, _ROLLUP_TABLES[name], name, build
     )
 
 
@@ -603,7 +567,7 @@ def _publish_serve(spark: SparkSession, sf_dir: str, name: str,
 
     return staging.stage_parquet(
         spark, "rollup", sf_dir, _ROLLUP_TABLES[name], f"{name}_serve",
-        lambda: frame, create=True,
+        lambda: frame,
     )
 
 
@@ -631,7 +595,7 @@ def tumbling_merge(parts: DataFrame) -> DataFrame:
     )
 
 
-def tumbling_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
+def tumbling_rollup(spark: SparkSession, sf_dir: str):
     """(hour_start, event_type, n_events, value_cents) partials — the
     materialized view behind the 1-hour tumbling aggregate. Count and
     integer-cents sum are commutative monoids, so partials at output
@@ -640,7 +604,7 @@ def tumbling_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
     (SUM(int)::double / 100 is associative over the integer sums)."""
     return _staged_rollup(
         spark, sf_dir, "tumbling",
-        lambda: tumbling_partials(table(spark, sf_dir, "events")), create,
+        lambda: tumbling_partials(table(spark, sf_dir, "events")),
     )
 
 
@@ -667,7 +631,7 @@ def distinct_merge(parts: DataFrame) -> DataFrame:
     )
 
 
-def distinct_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
+def distinct_rollup(spark: SparkSession, sf_dir: str):
     """(event_type, bucket, bm, n_events) partials — EXACT distinct as
     mergeable bitmaps (agg_bitmap_distinct's machinery as a maintained
     artifact): each user sets one bit in one fixed bucket bitmap, so
@@ -677,7 +641,7 @@ def distinct_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
     orders of magnitude below the event count."""
     return _staged_rollup(
         spark, sf_dir, "distinct",
-        lambda: distinct_partials(table(spark, sf_dir, "events")), create,
+        lambda: distinct_partials(table(spark, sf_dir, "events")),
     )
 
 
@@ -719,7 +683,7 @@ def pricing_merge(parts: DataFrame) -> DataFrame:
     )
 
 
-def pricing_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
+def pricing_rollup(spark: SparkSession, sf_dir: str):
     """Q1 pricing-summary partials per (l_returnflag, l_linestatus):
     the five exact integer unit-sums plus the per-column non-null
     counts — every one a commutative monoid, so the 6-row partial table
@@ -728,13 +692,13 @@ def pricing_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
     expressions, same IEEE operations in the same order)."""
     return _staged_rollup(
         spark, sf_dir, "pricing",
-        lambda: pricing_partials(table(spark, sf_dir, "lineitem")), create,
+        lambda: pricing_partials(table(spark, sf_dir, "lineitem")),
     )
 
 
 def tumbling_rollup_read(mat) -> DataFrame:
     """Final tumbling frame from staged partials (shared by the
-    maintenance key and bench.py's read-through)."""
+    maintenance and ingest keys)."""
     return mat.select(
         "hour_start", "event_type", "n_events",
         (F.col("value_cents").cast("double") / 100.0).alias("value_sum"),
@@ -743,7 +707,7 @@ def tumbling_rollup_read(mat) -> DataFrame:
 
 def distinct_rollup_read(mat) -> DataFrame:
     """Final distinct-count frame from staged bitmap partials (shared
-    by the maintenance key and agg_distinct's read-through)."""
+    by the maintenance and ingest keys)."""
     return mat.groupBy("event_type").agg(
         F.sum(F.bitmap_count("bm")).cast("bigint").alias("n_users"),
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -752,8 +716,8 @@ def distinct_rollup_read(mat) -> DataFrame:
 
 def pricing_rollup_read(mat) -> DataFrame:
     """Final Q1 frame from staged integer partials (shared by the
-    maintenance key and agg_hash_group's read-through) — the exact raw
-    expressions re-applied over the merged integer sums."""
+    maintenance and ingest keys) — the exact raw expressions re-applied
+    over the merged integer sums."""
     return mat.groupBy("l_returnflag", "l_linestatus").agg(
         (F.sum("qty_c").cast("double") / 100.0).alias("sum_qty"),
         (F.sum("price_c").cast("double") / 100.0).alias("sum_base_price"),
@@ -788,14 +752,10 @@ def maintenance_rollup_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     per ingest, after which the query is a partials read — measured
     same-window at sf10 in SCALE.md ('IVM posture A/B'). Oracle: the
     full recompute from raw events — equality IS the IVM correctness
-    claim. bench.py's events_tumbling_batch reads through these
-    partials when a session has staged them; the cold fallback (and
-    stream_tumbling's TRUE-streaming identity, which this key
-    deliberately leaves untouched) keeps the raw shape measurable.
-    r12: partials AND the serving frame are published content-addressed
-    (sources/staging.py), so the investment survives sessions and the
-    read-through consumer is a one-stage constant-size scan."""
-    mat = tumbling_rollup(spark, sf_dir, create=True)
+    claim. Partials AND the serving frame are published
+    content-addressed (sources/staging.py), so the investment survives
+    sessions and a repeat call is a one-stage constant-size scan."""
+    mat = tumbling_rollup(spark, sf_dir)
     return _publish_serve(spark, sf_dir, "tumbling", tumbling_rollup_read(mat))
 
 
@@ -813,15 +773,12 @@ def maintenance_rollup_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-floor row): maintained (type, bucket) bitmaps — OR-mergeable
     across ingest batches, so exact uniques never rescan history
     (agg_bitmap_distinct documents the machinery; this key makes it a
-    STAGED ARTIFACT with a read-through consumer). After this pass,
-    agg_distinct's default resolves to Σ bitmap_count over the partials
-    (types × ⌈users/2²⁵⌉ rows) instead of a raw-event distinct — the
-    same r9 repoint shape as fn_json, cold fallback unchanged and
-    measurable. Oracle: COUNT(DISTINCT) recomputed from raw. r12:
-    durable content-addressed publish + a serving artifact (the 5-row
-    final frame), so the staged consumer is a bare one-stage scan —
-    the dispatch-floor fix the r11 verdict asked for."""
-    mat = distinct_rollup(spark, sf_dir, create=True)
+    STAGED ARTIFACT): the answer is Σ bitmap_count over the partials
+    (types × ⌈users/2²⁵⌉ rows) instead of a raw-event distinct. Oracle:
+    COUNT(DISTINCT) recomputed from raw. Durable content-addressed
+    publish + a serving artifact (the 5-row final frame), so a repeat
+    call is a bare one-stage scan."""
+    mat = distinct_rollup(spark, sf_dir)
     return _publish_serve(spark, sf_dir, "distinct", distinct_rollup_read(mat))
 
 
@@ -850,11 +807,9 @@ def maintenance_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     a constant-size read. The read side recomputes each output with the
     SAME IEEE expressions as the raw plan (SUM(int)::double / scale,
     then / count for the averages), so staged and raw results are
-    bit-identical — the oracle is the full recompute. agg_hash_group
-    reads through these partials when staged (r9 fn_json repoint
-    shape); cold sessions keep the raw one-scan plan. r12: durable
+    bit-identical — the oracle is the full recompute. Durable
     content-addressed publish + a 6-row serving artifact."""
-    mat = pricing_rollup(spark, sf_dir, create=True)
+    mat = pricing_rollup(spark, sf_dir)
     return _publish_serve(spark, sf_dir, "pricing", pricing_rollup_read(mat))
 
 
@@ -919,45 +874,28 @@ def q5_rollup_read(mat: DataFrame) -> DataFrame:
     )
 
 
-def q5_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
+def q5_rollup(spark: SparkSession, sf_dir: str):
     return _staged_rollup(
         spark, sf_dir, "q5",
         lambda: q5_partials(spark, sf_dir, table(spark, sf_dir, "lineitem")),
-        create,
     )
 
 
-_SQL_Q5 = f"""
-    SELECT n.n_name AS nation,
-           {sql_rev_sum('revenue', 'l.l_extendedprice', 'l.l_discount')}
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-    GROUP BY n.n_name
-    """
-
-
-@register("maintenance_rollup_q5", oracle=_SQL_Q5)
+@register("maintenance_rollup_q5", oracle=_Q5_ORACLE)
 def maintenance_rollup_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVM posture for the FLAGSHIP star join (join_multiway_star — the
     last r11 `weak` row with no <2x sf10 posture): one maintenance pass
     materializes the Q5 join-aggregate at (nation, order-year)
     granularity — ~175 rows at any scale factor — and publishes both
     the partials and the 1996-97 serving frame content-addressed
-    (sources/staging.py). Every later session's flagship query is then
-    a one-stage constant-size scan; ingest batches fold in by
+    (sources/staging.py). Every later call is then a one-stage
+    constant-size scan; ingest batches fold in by
     delta-join + SUM without rescanning lineitem history
     (maintenance_rollup_ingest_q5 exercises exactly that). Oracle: the
     full star recompute — equality IS the join-aggregate IVM
     correctness claim, and the integer-unit revenue makes staged and
-    raw bit-identical. The cold star shapes stay measurable via
-    join_multiway_star_shuffle / _bucketed."""
-    mat = q5_rollup(spark, sf_dir, create=True)
+    raw bit-identical. join_multiway_star is the cold star plan."""
+    mat = q5_rollup(spark, sf_dir)
     return _publish_serve(spark, sf_dir, "q5", q5_rollup_read(mat))
 
 
@@ -1017,11 +955,10 @@ def q3_rollup_read(mat: DataFrame) -> DataFrame:
     )
 
 
-def q3_rollup(spark: SparkSession, sf_dir: str, create: bool = False):
+def q3_rollup(spark: SparkSession, sf_dir: str):
     return _staged_rollup(
         spark, sf_dir, "q3",
         lambda: q3_partials(spark, sf_dir, table(spark, sf_dir, "lineitem")),
-        create,
     )
 
 
@@ -1044,15 +981,14 @@ def maintenance_rollup_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     join whose best warm shape was the ~1.75x bucket-family read): one
     maintenance pass materializes the BUILDING-segment revenue view at
     (orderkey, orderdate) granularity and publishes BOTH the partials
-    and the top-10 serving frame content-addressed. Later sessions'
-    limit_topk is a floor-time 10-row scan; ingest batches fold in by
+    and the top-10 serving frame content-addressed. A later call is a
+    floor-time 10-row scan; ingest batches fold in by
     delta-join + SUM and a top-10 recompute over the view (a partials
     scan, never the fact history — maintenance_rollup_ingest_q3 proves
     the delta-only plan). Oracle: the full 3-way recompute — equality
-    IS the maintained-top-k correctness claim. The bucket-family and
-    cold shapes stay measurable (retract the serve, or
-    join_multiway_star_bucketed's twin for the family)."""
-    mat = q3_rollup(spark, sf_dir, create=True)
+    IS the maintained-top-k correctness claim. limit_topk is the cold
+    plan."""
+    mat = q3_rollup(spark, sf_dir)
     return _publish_serve(spark, sf_dir, "q3", q3_rollup_read(mat))
 
 
@@ -1097,12 +1033,11 @@ def _ingest_fixture(spark: SparkSession, sf_dir: str, name: str):
         tname, pred, partials, _merge = _INGEST_SPECS[name]
     delta = staging.stage_parquet(
         spark, "ingest", sf_dir, (tname,), f"{tname}_delta",
-        lambda: table(spark, sf_dir, tname).filter(pred()), create=True,
+        lambda: table(spark, sf_dir, tname).filter(pred()),
     )
     base = staging.stage_parquet(
         spark, "ingest", sf_dir, _ROLLUP_TABLES[name], f"{name}_base_partials",
         lambda: partials(table(spark, sf_dir, tname).filter(~pred())),
-        create=True,
     )
     return base, delta
 
@@ -1133,7 +1068,7 @@ def _rollup_ingest(spark: SparkSession, sf_dir: str, name: str, read) -> DataFra
 
     merged = staging.stage_parquet(
         spark, "ingest", sf_dir, _ROLLUP_TABLES[name], f"{name}_partials_v2",
-        lambda: rollup_ingest_update(spark, sf_dir, name), create=True,
+        lambda: rollup_ingest_update(spark, sf_dir, name),
     )
     return read(merged)
 
@@ -1195,7 +1130,7 @@ def maintenance_rollup_ingest_pricing(spark: SparkSession, sf_dir: str) -> DataF
     return _rollup_ingest(spark, sf_dir, "pricing", pricing_rollup_read)
 
 
-@register("maintenance_rollup_ingest_q5", oracle=_SQL_Q5)
+@register("maintenance_rollup_ingest_q5", oracle=_Q5_ORACLE)
 def maintenance_rollup_ingest_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELTA-JOIN IVM for the flagship join-aggregate (the classic
     incremental maintenance of γ(L ⋈ dims)): the ingest batch ΔL joins

@@ -14,8 +14,8 @@ correctness or concurrent-writer safety:
   identical digest -> a fresh session finds the previous session's
   investment. Any change to the corpus (new file, rewrite, append)
   changes the digest, so a stale artifact can never be read against a
-  mutated source: readers simply miss and fall back to the cold plan
-  (the invalidation rule is the address itself).
+  mutated source: the next call misses and rebuilds (the invalidation
+  rule is the address itself).
 
 - **Scratch-then-publish.** Writers build into a PRIVATE scratch
   directory (namespaced by applicationId — the concurrent-writer
@@ -142,8 +142,8 @@ def publish(scratch: str, final: str, manifest: dict) -> None:
 
 
 def unpublish(kind: str, sf_dir: str, tables, name: str) -> None:
-    """Remove a published artifact (tests' and benchmarks' cold-posture
-    setup; never called from a query path). A corpus that lacks some of
+    """Remove a published artifact (test cleanup; never called from a
+    query path). A corpus that lacks some of
     the artifact's source tables cannot have the artifact published
     (the digest is uncomputable), so there is nothing to retract."""
     try:
@@ -153,19 +153,14 @@ def unpublish(kind: str, sf_dir: str, tables, name: str) -> None:
     shutil.rmtree(final, ignore_errors=True)
 
 
-def stage_parquet(spark, kind: str, sf_dir: str, tables, name: str,
-                  build, create: bool = False):
-    """Generic durable read-through: return a DataFrame over the
-    published artifact `(kind, name)` for `sf_dir`'s current corpus
-    digest. With create=True, a miss triggers build() -> parquet into
-    the app-scoped scratch, then an atomic publish. With create=False
-    (the read-only consumer probe), a miss returns None — the caller
-    falls back to its cold plan; a read-only query never pays a staging
-    write."""
+def stage_parquet(spark, kind: str, sf_dir: str, tables, name: str, build):
+    """Build-or-reuse: return a DataFrame over the published artifact
+    `(kind, name)` for `sf_dir`'s current corpus digest. A miss triggers
+    build() -> parquet into the app-scoped scratch, then an atomic
+    publish. Called only by maintenance keys and the bucket-family
+    keys, which always build what they serve."""
     final = shared_path(kind, sf_dir, tables, name)
     if not is_published(final):
-        if not create:
-            return None
         scratch = scratch_path(final, spark.sparkContext.applicationId)
         build().write.mode("overwrite").parquet(scratch)
         publish(scratch, final, {

@@ -1,8 +1,11 @@
 """Shared fixtures: one tuned local SparkSession per test session, sf
-dirs, and a DuckDB oracle connection factory."""
+dirs, a private corpus copy, and a DuckDB oracle connection factory."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 import sys
 
 import duckdb
@@ -38,6 +41,45 @@ def sf_small() -> str:
 @pytest.fixture(scope="session")
 def sf_med() -> str:
     return SF_MED
+
+
+@pytest.fixture
+def private_corpus(spark, sf_small, tmp_path):
+    """A private copy of sf_small. On teardown every artifact published
+    for it under the shared staging root is removed (matched by the
+    manifest's recorded sf_dir), together with the session's bucketed
+    registrations over it, so a test leaves no staged state behind."""
+    from sparkflow.sources import staging
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    for t in TABLES:
+        shutil.copyfile(
+            os.path.join(sf_small, f"{t}.parquet"), corpus / f"{t}.parquet"
+        )
+    sf = str(corpus)
+    yield sf
+    root = staging.SHARED_ROOT
+    for kind in os.listdir(root) if os.path.isdir(root) else ():
+        for digest in os.listdir(os.path.join(root, kind)):
+            ddir = os.path.join(root, kind, digest)
+            for name in os.listdir(ddir):
+                manifest = os.path.join(ddir, name, "_sparkflow_manifest.json")
+                try:
+                    with open(manifest, encoding="utf-8") as fh:
+                        mine = json.load(fh).get("sf_dir") == sf
+                except (OSError, ValueError):
+                    continue
+                if not mine:
+                    continue
+                shutil.rmtree(os.path.join(ddir, name), ignore_errors=True)
+                if kind == "bucketed":
+                    for row in spark.sql(
+                        f"SHOW TABLES LIKE 'sparkflow_bucketed_*_{digest}'"
+                    ).collect():
+                        spark.sql(f"DROP TABLE IF EXISTS {row.tableName}")
+            if not os.listdir(ddir):
+                os.rmdir(ddir)
 
 
 @pytest.fixture(scope="session")

@@ -1277,76 +1277,34 @@ def test_vacuum_retains_by_position_not_version_arithmetic(
 
 
 def test_ivm_rollup_read_through_bit_identical(spark, sf_small):
-    """r11 IVM posture: after the maintenance_rollup_* passes stage
-    their partials, the three repointed defaults (agg_hash_group,
-    agg_distinct, bench's events_tumbling_batch) must (a) actually
-    resolve to the partials read — the executed plan scans the staged
-    rollup path, not the raw table — and (b) return BIT-IDENTICAL
-    values to the raw plan (the IEEE-reconstruction claim the
-    full-recompute oracles pin)."""
+    """r11 IVM: each maintenance key that publishes a serving frame (a)
+    answers from it — every file its plan scans lies under the shared
+    staging root, none is a raw table — and (b) returns BIT-IDENTICAL
+    values to the cold query it maintains — the IEEE-reconstruction
+    claim the full-recompute oracles pin."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     import sparkflow
     from bench import events_tumbling_batch
-    from sparkflow.catalog import table
-    from sparkflow.oracle_compat import cents, davg, dsum
+    from sparkflow.sources import staging
 
-    # raw references computed inline (the pre-repoint plans), BEFORE
-    # staging could possibly be consulted
-    ev = table(spark, sf_small, "events")
-    raw_distinct = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    ).toPandas()
-    li = table(spark, sf_small, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
-    disc_price = F.floor(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-        * 10000 + F.lit(0.5)).cast("long")
-    charge = F.floor(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-        * (F.lit(1) + F.col("l_tax")) * 1000000 + F.lit(0.5)).cast("long")
-    raw_q1 = li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity", "sum_qty"),
-        dsum("l_extendedprice", "sum_base_price"),
-        (F.sum(disc_price).cast("double") / 10000.0).alias("sum_disc_price"),
-        (F.sum(charge).cast("double") / 1000000.0).alias("sum_charge"),
-        davg("l_quantity", "avg_qty"),
-        davg("l_extendedprice", "avg_price"),
-        davg("l_discount", "avg_disc"),
-        F.count(F.lit(1)).alias("count_order"),
-    ).toPandas()
-    hour = F.expr("timestamp_micros(((unix_micros(ts) div 1000000)"
-                  " div 3600) * 3600 * 1000000)")
-    raw_tumbling = ev.groupBy(hour.alias("hour_start"), "event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (F.sum(cents("value")).cast("double") / 100.0).alias("value_sum"),
-    ).toPandas()
-
-    # stage all three rollups
-    for k in ("maintenance_rollup_pricing", "maintenance_rollup_distinct",
-              "maintenance_rollup_tumbling"):
-        sparkflow.QUERIES[k](spark, sf_small).count()
-
-    def plan_of(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    for got_df, raw, sort_cols in (
-        (sparkflow.QUERIES["agg_distinct"](spark, sf_small),
-         raw_distinct, ["event_type"]),
-        (sparkflow.QUERIES["agg_hash_group"](spark, sf_small),
-         raw_q1, ["l_returnflag", "l_linestatus"]),
-        (events_tumbling_batch(spark, sf_small),
-         raw_tumbling, ["hour_start", "event_type"]),
+    q = sparkflow.QUERIES
+    for key, cold, sort_cols in (
+        ("maintenance_rollup_distinct", q["agg_distinct"], ["event_type"]),
+        ("maintenance_rollup_pricing", q["agg_hash_group"],
+         ["l_returnflag", "l_linestatus"]),
+        ("maintenance_rollup_tumbling", events_tumbling_batch,
+         ["hour_start", "event_type"]),
+        ("maintenance_rollup_q5", q["join_multiway_star"], ["nation"]),
+        ("maintenance_json_materialize", q["fn_json"], ["event_type"]),
     ):
-        plan = plan_of(got_df)
-        assert "/rollup/" in plan, plan[:1200]
-        assert "events.parquet" not in plan and "lineitem.parquet" not in plan, (
-            "staged default still scans the raw table")
+        want = (cold(spark, sf_small).toPandas().sort_values(sort_cols)
+                .reset_index(drop=True))
+        got_df = q[key](spark, sf_small)
+        files = got_df.inputFiles()
+        assert files and all(staging.SHARED_ROOT in p for p in files), (key, files)
         got = (got_df.toPandas().sort_values(sort_cols)
                .reset_index(drop=True))
-        want = raw.sort_values(sort_cols).reset_index(drop=True)
         # bit-identity, not approx: astype(str) compares exact doubles
         pd.testing.assert_frame_equal(
             got[want.columns].astype(str), want.astype(str))

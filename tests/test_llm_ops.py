@@ -939,32 +939,30 @@ def test_ivf_kmeans_recall_and_full_probe_exact(spark, sf_small):
     assert r3 >= 0.5, f"kmeans-IVF recall at nprobe=3: {r3}"
 
 
-def test_knn_posture_bit_identical_and_read_only(spark, sf_small):
-    """maintenance_knn_quantize (r12): llm_knn_cosine's read-through
-    resolves to the staged fixed-point matrix ONLY after the
-    maintenance pass published it, the staged Arrow-matmul top-10 is
-    BIT-identical to the cold explode/join plan, and a read-only query
-    never stages (the fn_json repoint contract)."""
+def test_knn_posture_bit_identical_and_read_only(spark, private_corpus):
+    """maintenance_knn_quantize (r12): its staged Arrow-matmul top-10 is
+    BIT-identical to llm_knn_cosine's explode/join plan; llm_knn_cosine
+    never publishes the fixed-point matrix, and never reads it once the
+    maintenance key has."""
     import pandas as pd
 
-    from sparkflow.llm.similarity import _knn_matrix
     from sparkflow.sources import staging
 
-    staging.unpublish("knn", sf_small, ("embeddings",), "fxp_matrix")
-    cold = sparkflow.QUERIES["llm_knn_cosine"](spark, sf_small).toPandas()
-    # the cold run must NOT have published anything (read-only probe)
-    assert _knn_matrix(spark, sf_small) is None
-    staged_frame = sparkflow.QUERIES["maintenance_knn_quantize"](
-        spark, sf_small
-    ).toPandas()
-    assert _knn_matrix(spark, sf_small) is not None
-    warm = sparkflow.QUERIES["llm_knn_cosine"](spark, sf_small).toPandas()
-    for df in (warm, staged_frame):
-        pd.testing.assert_frame_equal(
-            cold.sort_values("vec_id").reset_index(drop=True),
-            df.sort_values("vec_id").reset_index(drop=True),
-        )
-    staging.unpublish("knn", sf_small, ("embeddings",), "fxp_matrix")
+    sf = private_corpus
+    matrix = staging.shared_path("knn", sf, ("embeddings",), "fxp_matrix")
+
+    def ordered(df):
+        return df.toPandas().sort_values("vec_id").reset_index(drop=True)
+
+    cold = ordered(sparkflow.QUERIES["llm_knn_cosine"](spark, sf))
+    assert not staging.is_published(matrix)
+    staged = sparkflow.QUERIES["maintenance_knn_quantize"](spark, sf)
+    assert any(staging.SHARED_ROOT in p for p in staged.inputFiles())
+    pd.testing.assert_frame_equal(cold, ordered(staged))
+    assert staging.is_published(matrix)
+    again = sparkflow.QUERIES["llm_knn_cosine"](spark, sf)
+    assert not any(staging.SHARED_ROOT in p for p in again.inputFiles())
+    pd.testing.assert_frame_equal(cold, ordered(again))
 
 
 def test_knn_ingest_delta_only_and_identical(spark, sf_small):
@@ -985,41 +983,6 @@ def test_knn_ingest_delta_only_and_identical(spark, sf_small):
         inc.toPandas().sort_values("vec_id").reset_index(drop=True),
         full.toPandas().sort_values("vec_id").reset_index(drop=True),
     )
-
-
-def test_knn_matrix_cache_survives_republish(spark, sf_small):
-    """review r13: the memoized matrix handle must never outlive its
-    PUBLICATION — an unpublish + republish at the SAME digest address
-    writes new part files, and a cached handle's frozen file index
-    would list deleted ones. The manifest (inode, mtime_ns) identity
-    check must force a re-resolve: after retract+restage, the probe
-    returns a WORKING frame (collect succeeds, same rows)."""
-    import sparkflow
-    from sparkflow.llm.similarity import _knn_matrix
-    from sparkflow.sources import staging
-
-    staging.unpublish("knn", sf_small, ("embeddings",), "fxp_matrix")
-    first = sparkflow.QUERIES["maintenance_knn_quantize"](
-        spark, sf_small).toPandas()
-    m1 = _knn_matrix(spark, sf_small)
-    assert m1 is not None
-    n1 = m1.count()  # while its publication is live
-    assert n1 > 0  # warm the cache
-    # retract: the guarded probe must MISS, not serve the stale handle
-    # (unpublish is destructive — m1 itself is dead from here on; the
-    # open-reader guarantee applies to corpus-change republication
-    # under a NEW address, which the mid-read staging test pins)
-    staging.unpublish("knn", sf_small, ("embeddings",), "fxp_matrix")
-    assert _knn_matrix(spark, sf_small) is None
-    # republish at the same digest (same corpus): new part files — the
-    # fresh probe must resolve the NEW listing, not a cached one
-    second = sparkflow.QUERIES["maintenance_knn_quantize"](
-        spark, sf_small).toPandas()
-    m2 = _knn_matrix(spark, sf_small)
-    assert m2 is not None
-    assert m2.count() == n1  # resolvable — no dead file index
-    assert first.equals(second)
-    staging.unpublish("knn", sf_small, ("embeddings",), "fxp_matrix")
 
 
 def test_knn_arrow_prune_keeps_nan_cosines(spark):

@@ -9,8 +9,6 @@ sys.path.insert(0, "/root/repo")
 
 import sparkflow
 from sparkflow.plans.explain import formatted_plan, pushed_filters, read_schemas
-from sparkflow.sources import staging
-from sparkflow.sources.io import _ROLLUP_TABLES
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_small):
@@ -37,112 +35,16 @@ def test_dim_joins_broadcast_not_shuffle(spark, sf_small):
 def test_flagship_star_join_all_broadcast(spark, sf_small):
     """At dim/fact ratios like this star schema, every join should be a
     broadcast hash join — zero join shuffles, only the final group-by
-    exchange. Pinned on the explicit SHUFFLE rung (r9): the flagship
-    key is now a bucket-family read-through whose plan depends on
-    whether this session staged the buckets; the rung is the
-    deterministic cold-session shape."""
-    df = sparkflow.QUERIES["join_multiway_star_shuffle"](spark, sf_small)
+    exchange."""
+    df = sparkflow.QUERIES["join_multiway_star"](spark, sf_small)
     plan = formatted_plan(df)
     assert plan.count("BroadcastHashJoin") >= 4, plan[:500]
     assert "SortMergeJoin" not in plan
 
 
-def test_flagship_star_reads_through_bucket_family(spark, sf_small):
-    """r9 repoint (r8 verdict item 2): once the session has staged the
-    orderkey bucket family, the FLAGSHIP key consumes it — both fact
-    scans read the bucketed copies and the fact⋈fact exchange is gone
-    (≤1 shuffle on the AQE final plan, the group-by). On a cold session
-    the same key must fall back to plain scans (probed via the private
-    helper, which never triggers the write)."""
-    import re
-
-    from sparkflow.operators import joins as J
-    from sparkflow.sources import staging
-    from sparkflow.sources.io import _ROLLUP_TABLES
-
-    # this test pins the BUCKET posture: retract any published Q5 IVM
-    # serving frame (r12 — postures are durable, so an earlier run may
-    # have staged the higher-priority read-through)
-    staging.unpublish("rollup", sf_small, _ROLLUP_TABLES["q5"], "q5_serve")
-    # stage the family exactly the way any bucket-family query does
-    sparkflow.QUERIES["join_multiway_star_bucketed"](spark, sf_small).collect()
-    assert J._bucketed_table_if_exists(
-        spark, sf_small, "lineitem", "l_orderkey", 32) is not None
-    df = sparkflow.QUERIES["join_multiway_star"](spark, sf_small)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    fin = plan.split("== Initial Plan ==")[0]
-    assert "sparkflow_bucketed_lineitem" in fin, fin[:2000]
-    assert "sparkflow_bucketed_orders" in fin, fin[:2000]
-    shuffles = [
-        ln for ln in fin.splitlines()
-        if re.search(r"\bExchange hashpartitioning", ln)
-        and "Reused" not in ln
-    ]
-    assert len(shuffles) <= 1, shuffles
-    # the probe is read-only: a table nobody staged stays un-staged
-    assert J._bucketed_table_if_exists(
-        spark, sf_small, "part", "p_partkey", 32) is None
-
-
 def test_topk_uses_take_ordered(spark, sf_small):
-    # pin the COMPUTE shapes: retract the r12 maintained-top-10 serve
-    # frame (whose read is a bare 10-row scan, deliberately sans top-k
-    # operator) so this asserts the cold/bucket plans
-    staging.unpublish("rollup", sf_small, _ROLLUP_TABLES["q3"], "q3_serve")
     df = sparkflow.QUERIES["limit_topk"](spark, sf_small)
     assert "TakeOrderedAndProject" in formatted_plan(df)
-
-
-def test_topk_reads_through_bucket_family(spark, sf_small):
-    """r10 repoint (r9 verdict item 1): once the orderkey bucket family
-    is staged, limit_topk consumes it fact-first — both fact scans read
-    the bucketed copies, the 891 MB-at-sf10 fact exchange is gone, and
-    the (o_orderkey, o_orderdate) aggregate reuses the bucket
-    partitioning: ZERO shuffle exchanges on the AQE final plan (the
-    top-10 is TakeOrderedAndProject, not a sort exchange). Rows must
-    equal the cold shuffle shape's exactly."""
-    import re
-
-    from sparkflow.operators import joins as J
-
-    staging.unpublish("rollup", sf_small, _ROLLUP_TABLES["q3"], "q3_serve")
-    sparkflow.QUERIES["join_multiway_star_bucketed"](spark, sf_small).collect()
-    assert J._bucketed_table_if_exists(
-        spark, sf_small, "lineitem", "l_orderkey", 32) is not None
-    df = sparkflow.QUERIES["limit_topk"](spark, sf_small)
-    rows_warm = df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    fin = plan.split("== Initial Plan ==")[0]
-    assert "sparkflow_bucketed_lineitem" in fin, fin[:2000]
-    assert "sparkflow_bucketed_orders" in fin, fin[:2000]
-    assert "TakeOrderedAndProject" in fin
-    shuffles = [
-        ln for ln in fin.splitlines()
-        if re.search(r"\bExchange hashpartitioning", ln)
-        and "Reused" not in ln
-    ]
-    assert len(shuffles) == 0, shuffles
-    # identity vs the explicit shuffle shape (its own registered rung
-    # would read through too in this session, so rebuild it plainly)
-    from pyspark.sql import functions as F
-
-    from sparkflow.catalog import table
-    from sparkflow.oracle_compat import rev_sum
-
-    c = table(spark, sf_small, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING")
-    cold = (
-        c.join(table(spark, sf_small, "orders"),
-               c.c_custkey == F.col("o_custkey"))
-        .join(table(spark, sf_small, "lineitem"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(rev_sum("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-    assert sorted(map(tuple, rows_warm)) == sorted(map(tuple, cold.collect()))
 
 
 def test_semi_anti_plan_as_joins_not_subqueries(spark, sf_small):
@@ -153,10 +55,8 @@ def test_semi_anti_plan_as_joins_not_subqueries(spark, sf_small):
 
 
 def test_date_filter_pushdown_on_flagship(spark, sf_small):
-    """Both flagship postures must push the date filter into their
-    orders scan (bucketing survives filters, so the read-through is
-    covered by its own test above)."""
-    df = sparkflow.QUERIES["join_multiway_star_shuffle"](spark, sf_small)
+    """The flagship must push the date filter into its orders scan."""
+    df = sparkflow.QUERIES["join_multiway_star"](spark, sf_small)
     pf = pushed_filters(df)
     assert any("o_orderdate" in line for line in pf), pf
 
@@ -262,12 +162,9 @@ def test_banded_rank_never_single_partition(spark, sf_small):
 
 
 def test_knn_scan_path_stays_jvm_side(spark, sf_small):
-    """llm_knn_cosine's COLD scan side must contain no Python evaluation
+    """llm_knn_cosine's scan side must contain no Python evaluation
     node (ArrowEval/BatchEval) — the whole dot-product pipeline is
-    posexplode + broadcast join + integer aggregation inside codegen.
-    (r12: retract the staged fixed-point matrix first — the warm shape
-    is deliberately MapInArrow and is pinned by its own posture test.)"""
-    staging.unpublish("knn", sf_small, ("embeddings",), "fxp_matrix")
+    posexplode + broadcast join + integer aggregation inside codegen."""
     df = sparkflow.QUERIES["llm_knn_cosine"](spark, sf_small)
     plan = formatted_plan(df)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
@@ -797,45 +694,6 @@ def test_containment_blocking_is_equi_join_no_allpairs(spark, sf_small):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_fn_json_reads_through_materialized_copy(spark, sf_small):
-    """r9 repoint (r8 verdict item 2): before the session runs the
-    parse-once maintenance pass, fn_json parses raw JSON (from_json in
-    the plan); after it, the SAME key reads the typed parquet copy —
-    no JSON function anywhere in the plan, scan pruned to the two
-    needed columns — and both shapes return identical rows (the 100 TB
-    posture: pay the parse once per ingest, not once per query)."""
-    from sparkflow.sources import staging
-    from sparkflow.sources.io import materialized_events_k
-
-    # r12: the posture is a LADDER (serve frame -> typed copy -> raw
-    # parse); retract the serve first so each rung is pinned in order
-    staging.unpublish("json_mat", sf_small, ("events",), "events_k_serve")
-    cold = materialized_events_k(spark, sf_small, create=False)
-    if cold is None:  # cold this session: pin the raw-parse shape
-        df_raw = sparkflow.QUERIES["fn_json"](spark, sf_small)
-        assert "from_json" in formatted_plan(df_raw).lower()
-        raw_rows = sorted(map(tuple, df_raw.collect()))
-    else:  # another test materialized already: raw rung still covers it
-        df_raw = sparkflow.QUERIES["fn_json_raw_parse"](spark, sf_small)
-        raw_rows = sorted(map(tuple, df_raw.collect()))
-    sparkflow.QUERIES["maintenance_json_materialize"](spark, sf_small).collect()
-    df = sparkflow.QUERIES["fn_json"](spark, sf_small)
-    plan = formatted_plan(df)
-    assert "from_json" not in plan.lower(), plan[:800]
-    # top rung: the serve frame — a bare constant-size scan, no agg
-    assert "events_k_serve" in plan, plan[:800]
-    assert "HashAggregate" not in plan, plan[:800]
-    assert sorted(map(tuple, df.collect())) == raw_rows
-    # middle rung: retract the serve, keep the typed copy — the SAME
-    # key aggregates over the pruned typed scan
-    staging.unpublish("json_mat", sf_small, ("events",), "events_k_serve")
-    df_mid = sparkflow.QUERIES["fn_json"](spark, sf_small)
-    plan_mid = formatted_plan(df_mid)
-    assert "from_json" not in plan_mid.lower(), plan_mid[:800]
-    assert "events_k" in plan_mid and "events_k_serve" not in plan_mid
-    assert sorted(map(tuple, df_mid.collect())) == raw_rows
 
 
 def test_exact_substr_is_equi_join_no_allpairs(spark, sf_small):

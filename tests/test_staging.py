@@ -1,104 +1,82 @@
-"""Durable content-addressed posture staging (r11 verdict item 1).
+"""Durable content-addressed staging (r11 verdict item 1).
 
-The contract under test: a posture staged by ONE session is read
-through by a FRESH session (different process, different
-applicationId) with no re-staging; a corpus whose content digest
-changed can never serve the stale artifact (clean miss -> cold
-fallback); concurrent publishers never corrupt each other; and the
-serving frames are bit-identical to the cold plans they replace.
+The contract under test: only maintenance keys and the bucket-family
+keys publish staged artifacts, and every other registered query plans
+from its inputs alone, whatever an earlier run published; a corpus
+whose content digest changed can never serve the stale artifact (a
+clean miss rebuilds); concurrent publishers never corrupt each other;
+and the serving frames are bit-identical to the cold plans.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import subprocess
-import sys
-import textwrap
-
-import pytest
 
 import sparkflow
 from sparkflow.sources import staging
-from sparkflow.sources.io import distinct_rollup, rollup_serve
+from sparkflow.sources.io import _ROLLUP_TABLES
+
+#: registered queries (plus bench's tumbling twin) that must never read
+#: the shared staging root
+_COLD_KEYS = ("agg_hash_group", "agg_distinct", "limit_topk",
+              "join_multiway_star", "fn_json", "llm_knn_cosine")
 
 
-def _stage_all(spark, sf_dir):
-    for key in ("maintenance_rollup_distinct", "maintenance_rollup_pricing",
-                "maintenance_rollup_tumbling"):
-        sparkflow.QUERIES[key](spark, sf_dir).collect()
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
 
-def test_fresh_process_reads_through(spark, sf_small):
-    """Stage the distinct rollup + the orderkey bucket family in THIS
-    session, then prove a brand-new PROCESS (own SparkContext, own
-    applicationId) resolves both postures without any staging write:
-    the rollup consumer returns the serving frame, and the bucketed
-    probe re-attaches with metadata-only DDL."""
-    sparkflow.QUERIES["maintenance_rollup_distinct"](spark, sf_small).collect()
-    sparkflow.QUERIES["join_multiway_star_bucketed"](spark, sf_small).collect()
-    expected = sorted(
-        (r["event_type"], r["n_users"], r["n_events"])
-        for r in sparkflow.QUERIES["agg_distinct"](spark, sf_small).collect()
+def test_results_independent_of_published_artifacts(spark, private_corpus):
+    """Run every key that publishes a staged artifact over the same
+    corpus, then rebuild the cold queries: none of them may scan the
+    shared staging root, and each returns exactly its first rows."""
+    from bench import events_tumbling_batch
+
+    sf = private_corpus
+    queries = {k: sparkflow.QUERIES[k] for k in _COLD_KEYS}
+    queries["events_tumbling_batch"] = events_tumbling_batch
+    first = {k: _rows(fn(spark, sf)) for k, fn in queries.items()}
+    publishers = sorted(
+        k for k in sparkflow.QUERIES if k.startswith("maintenance_rollup_")
+    ) + ["maintenance_json_materialize", "maintenance_knn_quantize",
+         "join_multiway_star_bucketed"]
+    for key in publishers:
+        sparkflow.QUERIES[key](spark, sf).collect()
+    assert staging.is_published(
+        staging.shared_path("rollup", sf, _ROLLUP_TABLES["pricing"], "pricing_serve")
     )
-    script = textwrap.dedent(f"""
-        import sys
-        sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
-        import sparkflow
-        from sparkflow.session import get_spark
-        from sparkflow.operators.joins import _bucketed_table_if_exists
-        from sparkflow.sources.io import distinct_rollup, rollup_serve
-        import os
-        os.environ["SPARK_GRAFT_CPUS"] = "4"
-        spark = get_spark("staging-fresh-twin", shuffle_partitions=4)
-        spark.sparkContext.setLogLevel("ERROR")
-        sf = {sf_small!r}
-        serve = rollup_serve(spark, sf, "distinct")
-        assert serve is not None, "fresh session missed the published serve frame"
-        got = sorted((r["event_type"], r["n_users"], r["n_events"])
-                     for r in sparkflow.QUERIES["agg_distinct"](spark, sf).collect())
-        assert got == {expected!r}, got
-        li = _bucketed_table_if_exists(spark, sf, "lineitem", "l_orderkey", 32)
-        assert li is not None, "fresh session missed the published bucket family"
-        assert li.count() == 6000
-        print("FRESH_SESSION_OK")
-        spark.stop()
-    """)
-    out = subprocess.run(
-        [sys.executable, "-c", script], capture_output=True, text=True,
-        timeout=420,
-    )
-    assert "FRESH_SESSION_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
+    for k, fn in queries.items():
+        df = fn(spark, sf)
+        staged = [p for p in df.inputFiles() if staging.SHARED_ROOT in p]
+        assert not staged, (k, staged)
+        assert _rows(df) == first[k], k
 
 
-def test_digest_change_invalidates(spark, sf_small, tmp_path):
+def test_digest_change_invalidates(spark, private_corpus):
     """The invalidation rule IS the address: stage against a private
     copy of the corpus, mutate the corpus (mtime bump — the cheapest
-    change a rewrite makes), and every probe must miss — the consumer
-    falls back to the raw plan and still returns correct values."""
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    for t in sparkflow.catalog.TABLES:
-        shutil.copyfile(
-            os.path.join(sf_small, f"{t}.parquet"), corpus / f"{t}.parquet"
+    change a rewrite makes), and the published artifact no longer
+    resolves — the maintenance key rebuilds under the new digest and
+    still returns the cold values."""
+    sf = private_corpus
+    cold = _rows(sparkflow.QUERIES["agg_distinct"](spark, sf))
+    sparkflow.QUERIES["maintenance_rollup_distinct"](spark, sf).collect()
+
+    def serve_path():
+        return staging.shared_path(
+            "rollup", sf, _ROLLUP_TABLES["distinct"], "distinct_serve"
         )
-    sf = str(corpus)
-    cold = sorted(
-        (r["event_type"], r["n_users"], r["n_events"])
-        for r in sparkflow.QUERIES["agg_distinct"](spark, sf).collect()
-    )
-    _stage_all(spark, sf)
-    assert rollup_serve(spark, sf, "distinct") is not None
+
+    old = serve_path()
+    assert staging.is_published(old)
     # mutate the corpus: same bytes, newer mtime — a conservative
     # staleness signal (rewrites always bump mtime)
-    os.utime(corpus / "events.parquet")
-    assert rollup_serve(spark, sf, "distinct") is None
-    assert distinct_rollup(spark, sf, create=False) is None
-    got = sorted(
-        (r["event_type"], r["n_users"], r["n_events"])
-        for r in sparkflow.QUERIES["agg_distinct"](spark, sf).collect()
-    )
+    os.utime(os.path.join(sf, "events.parquet"))
+    assert serve_path() != old and not staging.is_published(serve_path())
+    got = _rows(sparkflow.QUERIES["maintenance_rollup_distinct"](spark, sf))
     assert got == cold
+    assert staging.is_published(serve_path())
 
 
 def test_concurrent_publish_loser_discards(tmp_path):
@@ -126,56 +104,12 @@ def test_serve_frames_bit_identical(spark, sf_med):
     expressions, so staged reads are bit-identical to the cold plans
     (parquet round-trips doubles losslessly) — checked on the Q1
     pricing frame, whose eight doubles are the most bit-fragile."""
-    cold = sparkflow.QUERIES["agg_hash_group"](spark, sf_med)
-    # force the cold shape regardless of published artifacts
-    from pyspark.sql import functions as F
-
-    from sparkflow.catalog import table
-    from sparkflow.oracle_compat import davg, dsum
-    from sparkflow.operators.aggregates import _charge_units, _disc_price_units
-
-    li = table(spark, sf_med, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp")
-    )
-    cold = li.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity", "sum_qty"),
-        dsum("l_extendedprice", "sum_base_price"),
-        (F.sum(_disc_price_units()).cast("double") / 10000.0).alias("sum_disc_price"),
-        (F.sum(_charge_units()).cast("double") / 1000000.0).alias("sum_charge"),
-        davg("l_quantity", "avg_qty"),
-        davg("l_extendedprice", "avg_price"),
-        davg("l_discount", "avg_disc"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-    cold_pd = cold.toPandas().sort_values(
-        ["l_returnflag", "l_linestatus"]).reset_index(drop=True)
-    sparkflow.QUERIES["maintenance_rollup_pricing"](spark, sf_med).collect()
-    serve = rollup_serve(spark, sf_med, "pricing")
-    assert serve is not None
-    warm_pd = serve.toPandas().sort_values(
-        ["l_returnflag", "l_linestatus"]).reset_index(drop=True)
+    order = ["l_returnflag", "l_linestatus"]
+    cold_pd = sparkflow.QUERIES["agg_hash_group"](spark, sf_med).toPandas()
+    cold_pd = cold_pd.sort_values(order).reset_index(drop=True)
+    warm_pd = sparkflow.QUERIES["maintenance_rollup_pricing"](
+        spark, sf_med).toPandas().sort_values(order).reset_index(drop=True)
     assert cold_pd[warm_pd.columns].equals(warm_pd)  # exact, not approx
-
-
-def test_read_only_probe_never_writes(spark, sf_small, tmp_path):
-    """create=False probes and _bucketed_table_if_exists on an unstaged
-    corpus return None without creating anything under the shared
-    root."""
-    corpus = tmp_path / "c2"
-    corpus.mkdir()
-    for t in sparkflow.catalog.TABLES:
-        shutil.copyfile(
-            os.path.join(sf_small, f"{t}.parquet"), corpus / f"{t}.parquet"
-        )
-    sf = str(corpus)
-    digest = staging.corpus_digest(sf, ("events",))
-    assert rollup_serve(spark, sf, "distinct") is None
-    assert distinct_rollup(spark, sf, create=False) is None
-    from sparkflow.operators.joins import _bucketed_table_if_exists
-
-    assert _bucketed_table_if_exists(spark, sf, "lineitem", "l_orderkey", 32) is None
-    root = os.path.join(staging.SHARED_ROOT, "rollup", digest)
-    assert not os.path.exists(root)
 
 
 def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
@@ -198,7 +132,7 @@ def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
         )
 
     staging.stage_parquet(
-        spark, "testvac", sf, ["events"], "counts", build, create=True
+        spark, "testvac", sf, ["events"], "counts", build
     )
     live = staging.shared_path("testvac", sf, ["events"], "counts")
     assert staging.is_published(live)
@@ -238,7 +172,7 @@ def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
 
     # a corpus that VANISHED entirely -> undigestable, same age rule
     staging.stage_parquet(
-        spark, "testvac", sf, ["events"], "counts", build, create=True
+        spark, "testvac", sf, ["events"], "counts", build
     )
     gone = staging.shared_path("testvac", sf, ["events"], "counts")
     shutil.rmtree(corpus)
@@ -250,33 +184,16 @@ def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
 
 def test_q3_serve_frame_matches_cold_topk(spark, sf_small):
     """maintenance_rollup_q3 (r12): the maintained top-10 serve frame
-    read by limit_topk equals the cold 3-way shuffle plan row-for-row
-    (integer revenue units → identical doubles), including the
-    contract ordering; retracting the serve falls back cleanly."""
+    equals limit_topk's cold 3-way plan row-for-row (integer revenue
+    units → identical doubles), in the contract order."""
     from pyspark.sql import functions as F
 
-    from sparkflow.catalog import table
-    from sparkflow.oracle_compat import rev_sum
-    from sparkflow.sources.io import _ROLLUP_TABLES
-
-    staging.unpublish("rollup", sf_small, _ROLLUP_TABLES["q3"], "q3_serve")
-    c = table(spark, sf_small, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING")
-    o = table(spark, sf_small, "orders")
-    li = table(spark, sf_small, "lineitem")
-    cold = (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, F.col("l_orderkey") == o.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(rev_sum("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    ).collect()
-    sparkflow.QUERIES["maintenance_rollup_q3"](spark, sf_small).collect()
-    warm = sparkflow.QUERIES["limit_topk"](spark, sf_small).collect()
+    cold = sparkflow.QUERIES["limit_topk"](spark, sf_small).collect()
+    serve = sparkflow.QUERIES["maintenance_rollup_q3"](spark, sf_small)
+    warm = serve.orderBy(F.col("revenue").desc(), F.col("o_orderkey")).collect()
+    assert len(cold) == 10
     assert [tuple(r) for r in warm] == [tuple(r) for r in cold]
-    staging.unpublish("rollup", sf_small, _ROLLUP_TABLES["q3"], "q3_serve")
-    assert len(sparkflow.QUERIES["limit_topk"](spark, sf_small).collect()) == 10
+
 
 def test_mid_read_publish_never_tears(spark, sf_small, tmp_path):
     """r13 (r12 verdict item 9): a concurrent ingest publishing while a
@@ -284,7 +201,7 @@ def test_mid_read_publish_never_tears(spark, sf_small, tmp_path):
     Three guarantees, each pinned:
 
     1. a writer MID-BUILD is invisible — its scratch (data files, no
-       manifest, not renamed) makes the read-only probe miss cleanly;
+       manifest, not renamed) is not published;
     2. an ingest that mutates the corpus publishes under a NEW digest
        address — the open reader's resolved frame is untouched and
        collects identical rows after the publish;
@@ -309,18 +226,13 @@ def test_mid_read_publish_never_tears(spark, sf_small, tmp_path):
     scratch = staging.scratch_path(final, "torn-writer")
     build().write.mode("overwrite").parquet(scratch)
     assert not staging.is_published(final)
-    assert staging.stage_parquet(
-        spark, "race", sf, ("events",), "counts", build, create=False
-    ) is None
     shutil.rmtree(scratch)
 
-    # publish for real; resolve an open reader
-    staging.stage_parquet(
-        spark, "race", sf, ("events",), "counts", build, create=True
-    )
+    # publish for real and resolve an open reader over it
     reader = staging.stage_parquet(
-        spark, "race", sf, ("events",), "counts", build, create=False
+        spark, "race", sf, ("events",), "counts", build
     )
+    assert staging.is_published(final)
     before = reader.toPandas().sort_values("event_type").reset_index(drop=True)
     assert len(before) > 0
 
@@ -330,9 +242,7 @@ def test_mid_read_publish_never_tears(spark, sf_small, tmp_path):
     os.utime(corpus / "events.parquet")
     new_final = staging.shared_path("race", sf, ("events",), "counts")
     assert new_final != old_final
-    staging.stage_parquet(
-        spark, "race", sf, ("events",), "counts", build, create=True
-    )
+    staging.stage_parquet(spark, "race", sf, ("events",), "counts", build)
     assert staging.is_published(new_final)
 
     # (3) age-guarded vacuum keeps the superseded artifact inside the
@@ -366,12 +276,10 @@ def test_maintenance_vacuum_sweeps_staging_root(spark, sf_small, tmp_path):
     sf = str(corpus)
     from sparkflow.catalog import table as _table
 
-    live = staging.stage_parquet(
+    staging.stage_parquet(
         spark, "mvkind", sf, ("events",), "live", lambda: _table(
             spark, sf, "events").groupBy("event_type").count(),
-        create=True,
     )
-    assert live is not None
     live_path = staging.shared_path("mvkind", sf, ("events",), "live")
 
     # orphan artifact whose corpus is then deleted; manifest backdated
@@ -385,7 +293,6 @@ def test_maintenance_vacuum_sweeps_staging_root(spark, sf_small, tmp_path):
     staging.stage_parquet(
         spark, "mvkind", str(gone), ("events",), "dead", lambda: _table(
             spark, str(gone), "events").groupBy("event_type").count(),
-        create=True,
     )
     shutil.rmtree(gone)
     old = 4000.0
@@ -426,7 +333,7 @@ def test_staging_vacuum_keeps_unverifiable_source(
         )
 
     staging.stage_parquet(
-        spark, "testunv", sf, ["events"], "counts", build, create=True
+        spark, "testunv", sf, ["events"], "counts", build
     )
     live = staging.shared_path("testunv", sf, ["events"], "counts")
     assert staging.is_published(live)
@@ -494,7 +401,7 @@ def test_staging_vacuum_stale_digest_sweeps(spark, sf_small, tmp_path):
         )
 
     staging.stage_parquet(
-        spark, "teststale", sf, ["events"], "counts", build, create=True
+        spark, "teststale", sf, ["events"], "counts", build
     )
     live = staging.shared_path("teststale", sf, ["events"], "counts")
     assert staging.is_published(live)

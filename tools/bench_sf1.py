@@ -73,25 +73,8 @@ def main() -> None:
         SF1 = sys.argv[1]
     if len(sys.argv) > 2:
         sf_label = float(sys.argv[2])
-    # r12: staged postures are DURABLE (content-addressed), so a fresh
-    # process is no longer cold — an earlier session's rollup serving
-    # frames / bucket family would silently turn this suite's raw-plan
-    # trend (r7→r11) into a staged-read measurement. Default: RETRACT
-    # postures first, preserving the historical protocol; pass `staged`
-    # as argv[3] to keep them and measure the warm default-experience
-    # suite instead. Either way the mode is printed in the JSON.
-    postures = "staged" if len(sys.argv) > 3 and sys.argv[3] == "staged" \
-        else "retracted"
     if not os.path.isdir(SF1):
         raise SystemExit(f"{SF1} missing — run: python tools/scale_smoke.py gen")
-    if postures == "retracted":
-        from tools.bench_ivm import _clean_postures
-
-        _clean_postures(SF1)
-        from sparkflow.sources import staging as _staging
-
-        _staging.unpublish("json_mat", SF1, ("events",), "events_k")
-        _staging.unpublish("json_mat", SF1, ("events",), "events_k_serve")
 
     # Scale-appropriate session tuning, each lever measured at sf10
     # (config sweep this session, 60M-row lineitem):
@@ -175,7 +158,6 @@ def main() -> None:
         "ratio": round(tot_s / tot_d, 3),
         "dispatch_floor_sec": round(floor, 4),
         "sf": sf_label,
-        "postures": postures,
     }))
     spark.stop()
 

@@ -11,13 +11,12 @@ engines. Two additions specific to these rows:
 - q1: scan-only control over exactly the pruned columns (the map-side
   partial aggregate's input), so "work vs plumbing" falls out as
   (stage0 − scan) vs (stage1 + dispatch).
-- q3: a bucket-family WARM variant — the same orderkey bucket family
-  the flagship reads through (32 buckets on l_orderkey/o_orderkey),
+- q3: a bucket-family WARM variant — the orderkey bucket family of
+  join_multiway_star_bucketed (32 buckets on l_orderkey/o_orderkey),
   with the join re-ordered fact-first (lineitem⋈orders co-located,
   ZERO exchange on the 60M-row side; the customer filter joins the
   already-aggregated-width orders edge after). Staging cost timed
-  separately; if this wins, limit_topk gets the same
-  _bucketed_table_if_exists read-through the flagship has.
+  separately.
 
 Usage: python tools/decompose_q1q3.py [sf_dir]  # default /tmp/sparkflow_sf10
 """

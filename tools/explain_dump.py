@@ -6,9 +6,11 @@ without running Spark."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import sparkflow
 from sparkflow.plans.explain import formatted_plan
@@ -52,10 +54,7 @@ HEADLINE = [
     "join_multiway_star_denorm",
     "maintenance_json_materialize",
     "llm_bpe_train",
-    # r9: the explicit A/B rungs the repointed defaults graduated from,
-    # and the avro round-trip source
-    "join_multiway_star_shuffle",
-    "fn_json_raw_parse",
+    # r9: the avro round-trip source
     "scan_avro",
     "llm_dedup_near_prefix",
     "maintenance_table_versions",
@@ -122,44 +121,7 @@ HEADLINE = [
 ]
 
 
-# r16 (r15 verdict item 9): the IVM read-through keys get BOTH
-# postures dumped — the staged serve-frame read (what a warm session
-# runs) AND the cold plan after retracting the listed artifacts (the
-# shape a fresh cluster pays, the one a reviewer wants to audit for
-# pushdown/broadcast). Artifacts republish when the maintenance keys
-# later in HEADLINE run, so the shared store ends the dump warm.
-from sparkflow.sources.io import _ROLLUP_TABLES  # noqa: E402
-
-DUAL = {
-    "agg_hash_group": [
-        ("rollup", _ROLLUP_TABLES["pricing"], "pricing_serve"),
-        ("rollup", _ROLLUP_TABLES["pricing"], "pricing"),
-    ],
-    "agg_distinct": [
-        ("rollup", _ROLLUP_TABLES["distinct"], "distinct_serve"),
-        ("rollup", _ROLLUP_TABLES["distinct"], "distinct"),
-    ],
-    "limit_topk": [
-        ("rollup", _ROLLUP_TABLES["q3"], "q3_serve"),
-        ("rollup", _ROLLUP_TABLES["q3"], "q3"),
-    ],
-    "join_multiway_star": [
-        ("rollup", _ROLLUP_TABLES["q5"], "q5_serve"),
-        ("rollup", _ROLLUP_TABLES["q5"], "q5"),
-    ],
-    "fn_json": [
-        ("json_mat", ("events",), "events_k_serve"),
-        ("json_mat", ("events",), "events_k"),
-    ],
-    "llm_knn_cosine": [
-        ("knn", ("embeddings",), "fxp_matrix"),
-    ],
-}
-
-
 def main() -> None:
-    from sparkflow.sources import staging
-
     spark = get_spark("explain-dump", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     sf = "/root/testdata/sf0.01"
@@ -169,12 +131,10 @@ def main() -> None:
         "`PushedFilters` (predicate pushdown), `ReadSchema` (column\n"
         "pruning), `BroadcastHashJoin` vs `SortMergeJoin` (dim joins must\n"
         "broadcast), `TakeOrderedAndProject` (top-k), `HashAggregate`\n"
-        "pairs (partial+final). IVM read-through keys show BOTH postures:\n"
-        "the published serve-frame read and the cold plan after the\n"
-        "artifacts are retracted (r15 verdict item 9).\n"
+        "pairs (partial+final).\n"
     )
 
-    def dump(name, title_suffix=""):
+    def dump(name):
         df = sparkflow.QUERIES[name](spark, sf)
         plan = formatted_plan(df).strip()
         lines = plan.splitlines()
@@ -183,17 +143,11 @@ def main() -> None:
         if len(lines) > 150:
             plan = "\n".join(lines[:150]) + \
                 f"\n... [{len(lines) - 150} more lines truncated]"
-        out.append(f"\n## {name}{title_suffix}\n\n```\n{plan}\n```\n")
+        out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
 
     for name in HEADLINE:
-        if name in DUAL:
-            dump(name, " — published posture (staged serve read)")
-            for kind, tables, art in DUAL[name]:
-                staging.unpublish(kind, sf, tables, art)
-            dump(name, " — cold posture (artifacts retracted)")
-        else:
-            dump(name)
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+        dump(name)
+    with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("".join(out))
     print("wrote EXPLAIN.md")
     spark.stop()

@@ -44,13 +44,11 @@ def main(rungs):
     os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
     spark = get_spark("rfm-ab", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
-    from tools.bench_ivm import _clean_postures
 
     fn = sparkflow.QUERIES["events_rfm"]
     sql = _CK.format(q=sparkflow.ORACLES["events_rfm"])
     out = {"load_1m": os.getloadavg()[0], "rungs": {}}
     for sf_dir in rungs:
-        _clean_postures(sf_dir)
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW events AS SELECT * FROM "

@@ -126,14 +126,8 @@ def run(rungs: list[tuple[str, float]]) -> None:
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from tools.bench_ivm import _clean_postures
-
     out = {"load_1m": os.getloadavg()[0], "rungs": {}}
     for sf_dir, sf in rungs:
-        # r14: retract any published IVM postures — this is the COLD
-        # proof; a staged serve frame left by run_staged would turn
-        # these rows into warm reads
-        _clean_postures(sf_dir)
         con = duckdb.connect()
         for t in _rung_tables(sf_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
@@ -187,73 +181,9 @@ def run(rungs: list[tuple[str, float]]) -> None:
     print(json.dumps(out))
 
 
-def run_staged(rungs: list[tuple[str, float]]) -> None:
-    """r11 verdict item 8 — extend the shard proof to the STAGED IVM
-    reads: the serving-frame scan is claimed constant-size, so staged
-    q1/distinct/tumbling absolute times should stay FLAT from sf10 to
-    sf30 (approaching pure dispatch floor) while DuckDB's full
-    recompute grows with the data. Protocol: retract postures, pay the
-    staging pass (reported), then interleaved fresh-plan medians."""
-    import duckdb
-
-    import sparkflow
-    from bench import BENCH_QUERIES
-    from sparkflow.session import get_spark
-    from tools.bench_ivm import _QUERIES, _clean_postures
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
-    spark = get_spark("shard-proof-staged", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    out = {"load_1m": os.getloadavg()[0], "rungs": {}}
-    for sf_dir, sf in rungs:
-        have = set(_rung_tables(sf_dir))
-        # gate each query on the tables its rung actually carries (r12
-        # gen writes the q5 star; embeddings ride along when generated)
-        need = {"q5_join5_agg": "supplier", "q3_join3_topk": "customer",
-                "embeddings_knn": "embeddings"}
-        names = {k: v for k, v in _QUERIES.items()
-                 if need.get(k) is None or need[k] in have}
-        _clean_postures(sf_dir)
-        con = duckdb.connect()
-        for t in have:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{sf_dir}/{t}.parquet')")
-        row = {}
-        for name, (key, mkey) in names.items():
-            t0 = time.perf_counter()
-            sparkflow.QUERIES[mkey](spark, sf_dir).toPandas()
-            t_stage = time.perf_counter() - t0
-            fn, sql = BENCH_QUERIES[name], sparkflow.ORACLES[key]
-            fn(spark, sf_dir).toPandas()  # warm
-            con.execute(sql).fetchdf()
-            t_s, t_d = [], []
-            for _ in range(_RUNS):
-                t0 = time.perf_counter()
-                con.execute(sql).fetchdf()
-                t_d.append(time.perf_counter() - t0)
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).toPandas()  # fresh plan: staged read
-                t_s.append(time.perf_counter() - t0)
-            ms, md = statistics.median(t_s), statistics.median(t_d)
-            row[name] = {"staged_spark_s": round(ms, 3),
-                         "duck_s": round(md, 3),
-                         "ratio": round(ms / md, 2),
-                         "stage_cost_s": round(t_stage, 2)}
-            print(f"sf{sf:<4g} {name:22s} staged {ms:6.3f}s  "
-                  f"duck {md:6.3f}s  ratio {ms / md:5.2f}x  "
-                  f"(stage {t_stage:.1f}s)")
-        out["rungs"][f"sf{sf:g}"] = row
-        con.close()
-    print(json.dumps(out))
-
-
 if __name__ == "__main__":
     if sys.argv[1] == "gen":
         gen(int(sys.argv[2]), sys.argv[3])
-    elif sys.argv[1] == "staged":
-        run_staged([(a.split("=")[0], float(a.split("=")[1]))
-                    for a in sys.argv[2:]])
     else:
         run([(a.split("=")[0], float(a.split("=")[1]))
              for a in sys.argv[2:]])
