@@ -21,9 +21,13 @@ with an exchange this loop times the final stage + fetch, not the full
 pipeline. At sf0.1 the distinction is within the dispatch floor; at a
 scale where it matters, use tools/bench_sf1.py, which rebuilds the
 DataFrame per iteration (fresh shuffle ids -> genuine full executions)
-and runs DuckDB interleaved in the same window. This file keeps the
-prepared-plan protocol because BENCH_r* continuity depends on it — see
-BASELINE.md's round-7 section for the cross-methodology numbers.
+and runs DuckDB interleaved in the same window, or coldbench's
+`headline_sf1` workload (`python3 coldbench/run.py --workload
+headline_sf1 --seed N --seconds S`), which builds every plan fresh each
+pass on a seeded 10x corpus and checks each result against DuckDB.
+This file keeps the prepared-plan protocol because BENCH_r* continuity
+depends on it — see BASELINE.md's round-7 section for the
+cross-methodology numbers.
 """
 
 from __future__ import annotations

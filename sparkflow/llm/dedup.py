@@ -278,8 +278,8 @@ def _near_pairs_plan(
     verify_input_only: bool = False,
 ) -> DataFrame:
     """The MinHash+LSH+Jaccard pipeline as a lazy plan (see
-    llm_dedup_near for semantics). The two flags exist ONLY for the A/B
-    instrumentation in tools/scale_ladder.py: ``length_prefilter=False``
+    llm_dedup_near for semantics). The two flags exist ONLY for A/B
+    instrumentation (SCALE.md's scale ladder): ``length_prefilter=False``
     disables the token-count candidate cut (the cut provably never
     changes the result; the flag measures how many verify-join pairs it
     removes), and ``verify_input_only=True`` returns the candidate set

@@ -1360,7 +1360,7 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows back into each pair's dot. Now vectors stay ARRAYS:
     # quantization and the norm are JVM array folds, the within-cell
     # pair join carries one row per vector, and each pair's dot is one
-    # zip_with fold (0.81× in the same-window A/B, tools/ab_r16.py).
+    # zip_with fold (0.81× in the same-window A/B, tools/perf.py ab).
     # Identical int64 arithmetic → identical rows (same products, same
     # sums, same sqrt). No materialization boundary on q: the join's
     # two references re-run a projected codegen parquet scan, which the

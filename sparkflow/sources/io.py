@@ -512,7 +512,7 @@ def maintenance_json_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to (event_type, k) two columns instead of shipping the whole
     payload string. At 100 TB this is the difference between paying the
     parse on every one of N queries and paying it once per ingest; the
-    sf10 A/B lives in SCALE.md (tools/bench_posture.py).
+    sf10 A/B lives in SCALE.md.
     Oracle: the same aggregate recomputed from the raw table — content
     identity proves the rewrite lost nothing. The pass also publishes
     the aggregate's SERVING FRAME (5 rows — k_sum/k_max exact longs,
@@ -1366,9 +1366,12 @@ def _pq_footer_stats(path: str, keys: list) -> "tuple | None":
     to a per-file Spark aggregate. Zero-row files return (0, []) so
     callers can keep their loud rejection.
 
-    Exactness: every versioned table here keys on INTEGER columns
-    (o_orderkey, o_custkey, user_id), and parquet int64 row-group
-    stats are exact — the truncation caveat applies to strings only.
+    Exactness: a key must be an INT32/INT64 column with an integer (or
+    no) logical type — parquet integer row-group stats are exact and
+    the manifest stores them as ints. Any other key (decimal, double,
+    date, string) raises ValueError for every file, whichever path its
+    stats would take: int() would truncate a decimal max of 9.50 to 9
+    and prune the file that holds it.
     Guide §5 (the driver should do almost no data work): per-file
     manifest stats are metadata, and dispatching one Spark job per
     file made the staging of every versioned-table key driver-bound
@@ -1377,12 +1380,21 @@ def _pq_footer_stats(path: str, keys: list) -> "tuple | None":
     import pyarrow.parquet as _pq
 
     md = _pq.ParquetFile(path).metadata
+    schema = md.schema
+    colidx = {schema.column(j).path: j for j in range(len(schema))}
+    for key in keys:
+        if key not in colidx:
+            continue
+        col = schema.column(colidx[key])
+        if (col.physical_type not in ("INT32", "INT64")
+                or col.logical_type.type not in ("NONE", "INT")):
+            raise ValueError(
+                f"stats key {key!r} in {path} is {col.physical_type} "
+                f"{col.logical_type}; (min,max) manifest stats need an "
+                f"integer column"
+            )
     if md.num_rows == 0:
         return (0, [])
-    rg0 = md.row_group(0)
-    colidx = {
-        rg0.column(j).path_in_schema: j for j in range(rg0.num_columns)
-    }
     stats = []
     for key in keys:
         j = colidx.get(key)
@@ -1395,66 +1407,43 @@ def _pq_footer_stats(path: str, keys: list) -> "tuple | None":
                 return None
             mn = st.min if mn is None else min(mn, st.min)
             mx = st.max if mx is None else max(mx, st.max)
-        stats.append((int(mn), int(mx)))
+        stats.append((mn, mx))
     return (md.num_rows, stats)
 
 
-def _tv_with_stats(spark: SparkSession, paths: list, key: str) -> list:
-    """Manifest entries with per-file (min,max) stats on `key` — the one
-    stats builder every versioned-table commit goes through (orders
-    tables key on o_orderkey, the CDC user-state table on user_id).
-    Stats come from the parquet footers (_pq_footer_stats) with a
+def _tv_with_stats(spark: SparkSession, paths: list, *keys: str) -> list:
+    """Manifest entries with per-file (min,max) stats on each of `keys`:
+    (min_key,max_key) on the first, (min_key2,max_key2) on the second.
+    The one stats builder every versioned-table commit goes through
+    (orders tables key on o_orderkey, the CDC user-state table on
+    user_id; the Z-order tables on (o_custkey, o_orderkey), the 2-D
+    metadata that drops every file whose stats miss a box predicate on
+    EITHER dimension). Stats come from the parquet footers
+    (_pq_footer_stats, which also refuses non-integer keys) with a
     per-file Spark aggregate as the fallback for files without
     row-group statistics; both paths produce identical entries."""
     out = []
     for f in paths:
-        fs = _pq_footer_stats(f, [key])
-        if fs is not None and fs[0] > 0:
-            fmin, fmax = fs[1][0]
-        elif fs is not None:  # footer says zero rows
-            fmin = fmax = None
+        fs = _pq_footer_stats(f, list(keys))
+        if fs is not None:
+            mm = fs[1] if fs[0] > 0 else None
         else:  # no usable footer stats — one Spark job for this file
-            fmin, fmax = spark.read.parquet(f).agg(
-                F.min(key), F.max(key)).first()
-        if fmin is None:
+            r = spark.read.parquet(f).agg(
+                *[agg(k) for k in keys for agg in (F.min, F.max)]).first()
+            mm = None if r[0] is None else list(zip(r[::2], r[1::2]))
+        if mm is None:
             # A zero-row data file has no stats; committing it would
             # poison every (min,max) prune downstream. Reject loudly
             # rather than raise an opaque TypeError at int(None).
             raise ValueError(
                 f"no rows in {f} — zero-row data files cannot carry "
-                f"(min,max) stats on {key!r}; drop the file before commit"
+                f"(min,max) stats on {keys!r}; drop the file before commit"
             )
-        out.append({"path": f, "min_key": int(fmin), "max_key": int(fmax)})
-    return out
-
-
-def _tv_with_stats2(spark: SparkSession, paths: list,
-                    key1: str, key2: str) -> list:
-    """Manifest entries with per-file (min,max) stats on TWO keys —
-    (min_key,max_key) on key1 and (min_key2,max_key2) on key2. The 2-D
-    metadata that funds Z-order file skipping (scan_zorder_pruned,
-    maintenance_table_optimize_zorder): a box predicate drops every
-    file whose stats miss it on EITHER dimension. Footer-read with a
-    Spark-aggregate fallback, as in _tv_with_stats."""
-    out = []
-    for f in paths:
-        fs = _pq_footer_stats(f, [key1, key2])
-        if fs is not None and fs[0] > 0:
-            r = (fs[1][0][0], fs[1][0][1], fs[1][1][0], fs[1][1][1])
-        elif fs is not None:  # footer says zero rows
-            r = (None,)
-        else:  # no usable footer stats — one Spark job for this file
-            r = spark.read.parquet(f).agg(
-                F.min(key1), F.max(key1), F.min(key2), F.max(key2)
-            ).first()
-        if r[0] is None:
-            raise ValueError(
-                f"no rows in {f} — zero-row data files cannot carry "
-                f"(min,max) stats; drop the file before commit"
-            )
-        out.append({"path": f,
-                    "min_key": int(r[0]), "max_key": int(r[1]),
-                    "min_key2": int(r[2]), "max_key2": int(r[3])})
+        e = {"path": f}
+        for i, (mn, mx) in enumerate(mm):
+            sfx = str(i + 1) if i else ""
+            e[f"min_key{sfx}"], e[f"max_key{sfx}"] = int(mn), int(mx)
+        out.append(e)
     return out
 
 
@@ -2291,7 +2280,7 @@ def _stage_zorder_optimized(spark: SparkSession, sf_dir: str) -> str:
             .repartitionByRange(16, "o_orderkey")
             .write.mode("overwrite").parquet(v1_dir)
         )
-        _tv_commit(base, 1, _tv_with_stats2(
+        _tv_commit(base, 1, _tv_with_stats(
             spark, sorted(_glob.glob(os.path.join(v1_dir, "*.parquet"))),
             "o_custkey", "o_orderkey"))
     if not os.path.exists(os.path.join(base, "manifest_v2.json")):
@@ -2319,7 +2308,7 @@ def _stage_zorder_optimized(spark: SparkSession, sf_dir: str) -> str:
             .drop("zx", "zy", "z")
             .write.mode("overwrite").parquet(v2_dir)
         )
-        _tv_commit(base, 2, _tv_with_stats2(
+        _tv_commit(base, 2, _tv_with_stats(
             spark, sorted(_glob.glob(os.path.join(v2_dir, "*.parquet"))),
             "o_custkey", "o_orderkey"))
     return base
@@ -2422,7 +2411,7 @@ def maintenance_table_optimize_zorder_incremental(
             .repartition(4)  # round-robin: deliberately unclustered
             .write.mode("overwrite").parquet(append_dir)
         )
-        fresh = _tv_with_stats2(
+        fresh = _tv_with_stats(
             spark, sorted(_glob.glob(os.path.join(append_dir, "*.parquet"))),
             "o_custkey", "o_orderkey")
         for e in fresh:
@@ -2461,7 +2450,7 @@ def maintenance_table_optimize_zorder_incremental(
             .drop("zx", "zy", "z")
             .write.mode("overwrite").parquet(v4_dir)
         )
-        fresh = _tv_with_stats2(
+        fresh = _tv_with_stats(
             spark, sorted(_glob.glob(os.path.join(v4_dir, "*.parquet"))),
             "o_custkey", "o_orderkey")
         for e in fresh:
@@ -3036,7 +3025,7 @@ def scan_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("zx", "zy", "z")
             .write.mode("overwrite").parquet(z_dir)
         )
-        _tv_commit(base, 1, _tv_with_stats2(
+        _tv_commit(base, 1, _tv_with_stats(
             spark, sorted(_glob.glob(os.path.join(z_dir, "*.parquet"))),
             "o_custkey", "o_orderkey"))
     c_lo = cmin + (cmax - cmin + 1) // 4

@@ -11,7 +11,9 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout first, so its own sparkflow/tools are the ones imported
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sparkflow.catalog import TABLES
 from sparkflow.session import get_spark
@@ -49,8 +51,6 @@ def private_corpus(spark, sf_small, tmp_path):
     for it under the shared staging root is removed (matched by the
     manifest's recorded sf_dir), together with the session's bucketed
     registrations over it, so a test leaves no staged state behind."""
-    from sparkflow.sources import staging
-
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     for t in TABLES:
@@ -59,7 +59,16 @@ def private_corpus(spark, sf_small, tmp_path):
         )
     sf = str(corpus)
     yield sf
+    remove_published(spark, sf)
+
+
+def published_for(sf: str) -> list:
+    """(kind, digest, artifact dir) of every artifact under the shared
+    staging root whose manifest names `sf` as its sf_dir."""
+    from sparkflow.sources import staging
+
     root = staging.SHARED_ROOT
+    found = []
     for kind in os.listdir(root) if os.path.isdir(root) else ():
         for digest in os.listdir(os.path.join(root, kind)):
             ddir = os.path.join(root, kind, digest)
@@ -70,16 +79,23 @@ def private_corpus(spark, sf_small, tmp_path):
                         mine = json.load(fh).get("sf_dir") == sf
                 except (OSError, ValueError):
                     continue
-                if not mine:
-                    continue
-                shutil.rmtree(os.path.join(ddir, name), ignore_errors=True)
-                if kind == "bucketed":
-                    for row in spark.sql(
-                        f"SHOW TABLES LIKE 'sparkflow_bucketed_*_{digest}'"
-                    ).collect():
-                        spark.sql(f"DROP TABLE IF EXISTS {row.tableName}")
-            if not os.listdir(ddir):
-                os.rmdir(ddir)
+                if mine:
+                    found.append((kind, digest, os.path.join(ddir, name)))
+    return found
+
+
+def remove_published(spark, sf: str) -> None:
+    """Remove every artifact published for `sf` (published_for) and the
+    session's bucketed catalog registrations over it."""
+    for kind, digest, path in published_for(sf):
+        shutil.rmtree(path, ignore_errors=True)
+        if kind == "bucketed":
+            for row in spark.sql(
+                f"SHOW TABLES LIKE 'sparkflow_bucketed_*_{digest}'"
+            ).collect():
+                spark.sql(f"DROP TABLE IF EXISTS {row.tableName}")
+        if not os.listdir(os.path.dirname(path)):
+            os.rmdir(os.path.dirname(path))
 
 
 @pytest.fixture(scope="session")

@@ -10,8 +10,6 @@ from __future__ import annotations
 import json
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 from sparkflow.sources import avrolite as av
 
 SCHEMA = {
@@ -872,6 +870,7 @@ def test_splittable_avro_survives_mid_split_task_retry(tmp_path):
     yields 100 rows then raises; a marker file makes the failure
     one-shot; the job must still return every container row once."""
     import json
+    import os
     import subprocess
     import sys
 
@@ -905,7 +904,7 @@ def test_splittable_avro_survives_mid_split_task_retry(tmp_path):
     script.write_text(
         '''
 import json, os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from pyspark.sql import SparkSession
 from sparkflow.sources.custom import AvroLiteSource, _AvroRangeReader
 
@@ -954,7 +953,8 @@ spark.stop()
 '''
     )
     out = subprocess.run(
-        [sys.executable, str(script), marker, avro_path],
+        [sys.executable, str(script), marker, avro_path,
+         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))],
         capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
@@ -1389,7 +1389,7 @@ def test_tv_stats_footer_matches_spark_agg_and_falls_back(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkflow.sources.io import (
-        _pq_footer_stats, _tv_with_stats, _tv_with_stats2,
+        _pq_footer_stats, _tv_with_stats,
     )
 
     d = os.path.join(str(tmp_path), "t")
@@ -1409,7 +1409,7 @@ def test_tv_stats_footer_matches_spark_agg_and_falls_back(spark, tmp_path):
     assert len(paths) == 4
 
     ents = _tv_with_stats(spark, paths, "k1")
-    ents2 = _tv_with_stats2(spark, paths, "k1", "k2")
+    ents2 = _tv_with_stats(spark, paths, "k1", "k2")
     for f, e, e2 in zip(paths, ents, ents2):
         sdf = spark.read.parquet(f)
         mn, mx, mn2, mx2 = sdf.agg(
@@ -1442,3 +1442,24 @@ def test_tv_stats_footer_matches_spark_agg_and_falls_back(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="zero-row"):
         _tv_with_stats(spark, [empty], "k1")
+
+    # (d) non-integer keys are refused, not truncated by int(): a
+    # decimal(10,2) key (Spark writes it INT64 physical, DECIMAL logical)
+    # whose max 9.50 would read as 9, and a double key — on the footer
+    # path and on a file without statistics (the Spark fallback's case)
+    from decimal import Decimal
+
+    nonint = os.path.join(str(tmp_path), "nonint")
+    spark.createDataFrame(
+        [(Decimal("1.75"), 1.75), (Decimal("9.50"), 9.5)],
+        "kd decimal(10,2), kf double",
+    ).coalesce(1).write.parquet(nonint)
+    (with_stats,) = glob.glob(os.path.join(nonint, "*.parquet"))
+    no_stats = os.path.join(str(tmp_path), "nonint_nostats.parquet")
+    pq.write_table(
+        pq.read_table(with_stats), no_stats, write_statistics=False
+    )
+    for f in (with_stats, no_stats):
+        for key, typ in (("kd", "Decimal"), ("kf", "DOUBLE")):
+            with _pytest.raises(ValueError, match=f"'{key}'.* {typ}"):
+                _tv_with_stats(spark, [f], key)

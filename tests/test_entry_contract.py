@@ -3,10 +3,6 @@ would break the harness silently if violated."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as mod
 
 
@@ -23,11 +19,13 @@ def test_survey_s2_table_matches_registry():
     so a table row drifting from the registry (or an unregistered key
     squatting in the table) must fail the suite, not wait for judgment
     day. Parses the same `| `key`` table-row shape the judge greps."""
+    import os
     import re
 
     import sparkflow
 
-    txt = open("/root/repo/SURVEY.md", encoding="utf-8").read()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    txt = open(os.path.join(root, "SURVEY.md"), encoding="utf-8").read()
     assert "## §2." in txt and "\n## §3." in txt
     s2 = txt.split("## §2.", 1)[1].split("\n## §3.", 1)[0]
     rows = re.findall(r"^\|\s*`([a-z0-9_]+)`", s2, re.M)

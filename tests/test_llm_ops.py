@@ -4,12 +4,8 @@ finding the synthesized duplicates, simhash locality)."""
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import sparkflow
 

@@ -3,10 +3,6 @@ viable at 100 TB, checked mechanically against the physical plan."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import sparkflow
 from sparkflow.plans.explain import formatted_plan, pushed_filters, read_schemas
 

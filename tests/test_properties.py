@@ -5,12 +5,8 @@ deadline disabled (JVM warm-up noise)."""
 
 from __future__ import annotations
 
-import sys
-
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from sparkflow.catalog import table
 from sparkflow.oracle_compat import cents

@@ -10,13 +10,10 @@ are absent offline, see sparkflow/sources/protolite.py header)."""
 from __future__ import annotations
 
 import math
-import sys
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from sparkflow.sources import protolite as pl
 

@@ -10,8 +10,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
 import sparkflow
 from sparkflow.catalog import table as cat_table
 from tools.check import compare
@@ -798,7 +796,7 @@ def test_reseeded_twin_keeps_fixed_ops_exact_and_live(spark, tmp_path_factory):
     import duckdb
 
     import sparkflow
-    from tools.check import compare
+    from conftest import published_for, remove_published
     from tools.reseed import gen
 
     dst = str(tmp_path_factory.mktemp("reseed_twin"))
@@ -818,16 +816,22 @@ def test_reseeded_twin_keeps_fixed_ops_exact_and_live(spark, tmp_path_factory):
         "win_value_fns", "agg_unpivot", "agg_decimal_sum",
         "scan_schema_evolution", "scan_json_corrupt",
     ]
-    for name in keys:
-        sdf = sparkflow.QUERIES[name](spark, dst).toPandas()
-        assert len(sdf) > 0, f"{name}: degenerate (0 rows) on the twin"
-        odf = con.execute(sparkflow.ORACLES[name]).fetchdf()
-        verdict = compare(sdf, odf)
-        assert verdict == "EXACT", f"{name}: {verdict}"
-    # the one degenerate mode row counts can't see: scan_json_corrupt is
-    # a 1-row aggregate — its n_good must be a real count, not 0
-    agg = sparkflow.QUERIES["scan_json_corrupt"](spark, dst).toPandas()
-    assert int(agg["n_good"].iloc[0]) > 0
+    try:
+        for name in keys:
+            sdf = sparkflow.QUERIES[name](spark, dst).toPandas()
+            assert len(sdf) > 0, f"{name}: degenerate (0 rows) on the twin"
+            odf = con.execute(sparkflow.ORACLES[name]).fetchdf()
+            verdict = compare(sdf, odf)
+            assert verdict == "EXACT", f"{name}: {verdict}"
+        # the one degenerate mode row counts can't see: scan_json_corrupt
+        # is a 1-row aggregate — its n_good must be a real count, not 0
+        agg = sparkflow.QUERIES["scan_json_corrupt"](spark, dst).toPandas()
+        assert int(agg["n_good"].iloc[0]) > 0
+    finally:
+        # join_bucketed publishes the twin's bucket family to the
+        # shared staging root; the twin must leave none of it behind
+        remove_published(spark, dst)
+    assert published_for(dst) == []
 
 
 def test_bfs_matches_python_replay(spark, sf_small):

@@ -7,12 +7,8 @@ boundaries and event-time timers genuinely fire on watermark advance.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import sparkflow
 from sparkflow.streaming import stateful

@@ -3,11 +3,11 @@
 At sf0.1 every headline query sits on the ~30 ms dispatch floor, so the
 "within 2x of baseline" criterion measures the harness, not the plans.
 This tool measures the same 8 headline queries at sf1 — the 10x replica
-of sf0.1 (lineitem 6M rows, events 1M, built by tools/scale_smoke.py
-with consistent key remaps) — Spark vs DuckDB, SAME WINDOW, interleaved
-per iteration so machine-load drift hits both engines equally
-(BASELINE.md round-5 load note; only same-window A/B is meaningful on
-this box).
+of sf0.1 (lineitem 6M rows, events 1M, written by coldbench/corpus.py
+with consistent per-replica key offsets) — Spark vs DuckDB, SAME
+WINDOW, interleaved per iteration so machine-load drift hits both
+engines equally (BASELINE.md round-5 load note; only same-window A/B is
+meaningful on this box).
 
 Methodology deliberately DIFFERS from bench.py in one respect: the
 Spark DataFrame is REBUILT each iteration. Re-collecting a prepared
@@ -26,11 +26,9 @@ two engines provably compute the same result while being timed
 (spot-verified EXACT at sf10 for q1/distinct/q5/knn this session).
 
 Usage:
-  python tools/scale_smoke.py gen      # once: build /tmp/sparkflow_scale10x
+  python3 coldbench/corpus.py x10 <seed> /tmp/sparkflow_scale10x  # once
   python tools/bench_sf1.py            # run at sf1, print table + JSON line
-  # bigger rung (floor <10% of every query needs ~sf10 on this box):
-  python tools/scale_smoke.py gen 100 /tmp/sparkflow_sf10
-  python tools/bench_sf1.py /tmp/sparkflow_sf10 10
+  python tools/bench_sf1.py DIR LABEL  # another corpus dir, its sf label
 """
 
 from __future__ import annotations
@@ -74,7 +72,9 @@ def main() -> None:
     if len(sys.argv) > 2:
         sf_label = float(sys.argv[2])
     if not os.path.isdir(SF1):
-        raise SystemExit(f"{SF1} missing — run: python tools/scale_smoke.py gen")
+        raise SystemExit(
+            f"{SF1} missing — run: python3 coldbench/corpus.py x10 <seed> {SF1}"
+        )
 
     # Scale-appropriate session tuning, each lever measured at sf10
     # (config sweep this session, 60M-row lineitem):
