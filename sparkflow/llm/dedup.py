@@ -271,19 +271,9 @@ _NEAR_CTES = f"""corpus AS ({CORPUS_SQL}),
 # reference; for the single-reference oracles it is a harmless hint.
 
 
-def _near_pairs_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    length_prefilter: bool = True,
-    verify_input_only: bool = False,
-) -> DataFrame:
+def _near_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash+LSH+Jaccard pipeline as a lazy plan (see
-    llm_dedup_near for semantics). The two flags exist ONLY for A/B
-    instrumentation (SCALE.md's scale ladder): ``length_prefilter=False``
-    disables the token-count candidate cut (the cut provably never
-    changes the result; the flag measures how many verify-join pairs it
-    removes), and ``verify_input_only=True`` returns the candidate set
-    entering the verify join instead of the verified pairs.
+    llm_dedup_near for semantics).
 
     Deliberately LAZY end-to-end — measured at the 10x scale point,
     both materialization alternatives LOSE to the single-DAG lazy plan
@@ -420,14 +410,10 @@ def _near_pairs_plan(
     # na/nb carried through the verify aggregation, deleting the two
     # post-agg size joins the old plan needed. Provably identical pair
     # set; the oracle applies the same bound in its candf CTE.
-    cand_sized = cand.join(sa, "doc_a").join(sb, "doc_b")
-    if length_prefilter:
-        cand_sized = cand_sized.filter(
-            F.least("na", "nb").cast("double")
-            >= F.greatest("na", "nb") * _JACCARD_MIN
-        )
-    if verify_input_only:
-        return cand_sized
+    cand_sized = cand.join(sa, "doc_a").join(sb, "doc_b").filter(
+        F.least("na", "nb").cast("double")
+        >= F.greatest("na", "nb") * _JACCARD_MIN
+    )
     ta = toks.select(F.col("doc_id").alias("doc_a"), "tok")
     tb = toks.select(F.col("doc_id").alias("doc_b"), "tok")
     inter = (

@@ -153,7 +153,9 @@ unbounded-execution evidence.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -215,6 +217,26 @@ class _Step:
     # notNext(condition) AFTER this step: the event DIRECTLY following
     # this step's bound event (in (ts, tiebreak) order) must not match
     # the condition (see CepPattern.not_next)
+
+
+@dataclass(frozen=True)
+class _ChainSet:
+    """The validated chain set CepPattern._chain_set hands to both back
+    ends. `kind` is 'any_pairs' (the followedByAny pair enumeration),
+    'plain' (chains[0] gates, one annotation chain per optional step),
+    'enum' (the 2^k include/exclude variants of the optional steps,
+    OR-gated) or 'split' (the 1-rep / >=2-rep variants of each
+    both-strict oneOrMore/times(1, m) step, OR-gated). chains[0] is
+    always the required-step chain with no optional included and every
+    split step at one repetition; chains[-1] of an 'enum' set includes
+    every optional."""
+
+    kind: str
+    chains: tuple  # step lists
+    incl: tuple  # per chain: frozenset of the with_<opt> flags it includes
+    flag_names: tuple  # with_<opt> per optional step, in pattern order
+    counted: tuple  # oneOrMore / times(n, m) steps
+    anchor_idx: int | None  # skip_to_first/last anchor copy in chains[0]
 
 
 @dataclass(frozen=True)
@@ -300,7 +322,7 @@ class CepPattern:
         # step: the 1-rep variant (plain strict hop) and the >=2-rep
         # variant (the r13 times(2, m) both-strict expansion), gated
         # by EXISTS-any and combined by greedy max-start across
-        # variants (see compile()'s split-chain branch; brute-force
+        # variants (the front end's 'split' kind, _chain_set; brute-force
         # fuzz in tests/test_properties.py).
         # r13: next() after a RELAXED-reached oneOrMore/times(n, m)
         # step is sound — the existence collapse places the single
@@ -766,76 +788,19 @@ class CepPattern:
 
     @staticmethod
     def _event_expansion(steps) -> list:
-        """times-expanded [(event_type, transition, negated_etype)] for
-        one chain — the declarative form the streaming compiler
-        consumes; negated_etype is set on the FIRST copy of a step
-        whose entering gap carries a mid-pattern negation (the batch
+        """times-expanded [(event_type, transition, gate_etype)] for one
+        chain — the declarative form the streaming machines consume.
+        gate_etype is the negated type guarding the copy's entering
+        gap: an until() step's stop type gates EVERY copy (a k-rep
+        match needs all k repetitions before the freeze), a mid-pattern
+        negation gates the FIRST copy of the step it closes (the batch
         compiler's `first and neg_before` rule), None elsewhere.
-        Requires every step (and every negation) declared via
-        `etype`."""
+        compile_stream checks the etype= declarations first
+        (_require_etypes)."""
         out = []
         for s in steps:
-            if s.etype is None:
-                raise ValueError(
-                    f"step {s.name!r} was built from a Column predicate —"
-                    " declare it with etype=... to compile for streaming"
-                )
-            if s.contiguity == "followed_by_any":
-                raise ValueError(
-                    "followedByAny patterns compile through the pair-"
-                    "enumeration path (compile/compile_stream route "
-                    "them before any carry-chain expansion)"
-                )
-            neg_et = None
-            if s.neg_before is not None:
-                neg_et = s.neg_before[2]
-                if neg_et is None:
-                    raise ValueError(
-                        f"the negation before step {s.name!r} was built "
-                        "from a Column predicate — declare it with "
-                        "etype=... to compile for streaming"
-                    )
-            inner = "next" if s.consecutive else "followed_by"
-            for k in range(s.times):
-                out.append((
-                    s.etype,
-                    s.contiguity if k == 0 else inner,
-                    neg_et if k == 0 else None,
-                ))
-        return out
-
-    def _until_expansion(self, steps=None) -> list:
-        """times-expanded [(event_type, transition, gate_etype)] for a
-        pattern containing until() loops — like _event_expansion, but
-        an until step's stop type gates EVERY copy's entering gap (a
-        k-rep match needs all k repetitions before the freeze), while
-        ordinary mid-negations gate first copies only. `steps`
-        overrides self.steps for OR-split variant expansions (r16)."""
-        out = []
-        for s in (self.steps if steps is None else steps):
-            if s.etype is None:
-                raise ValueError(
-                    f"step {s.name!r} was built from a Column predicate —"
-                    " declare it with etype=... to compile for streaming"
-                )
-            neg_et = None
-            if s.neg_before is not None:
-                neg_et = s.neg_before[2]
-                if neg_et is None:
-                    raise ValueError(
-                        f"the negation before step {s.name!r} was built "
-                        "from a Column predicate — declare it with "
-                        "etype=... to compile for streaming"
-                    )
-            u_et = None
-            if s.until is not None:
-                u_et = s.until[2]
-                if u_et is None:
-                    raise ValueError(
-                        f"the until() condition on step {s.name!r} was "
-                        "built from a Column predicate — declare it "
-                        "with etype=... to compile for streaming"
-                    )
+            neg_et = s.neg_before[2] if s.neg_before is not None else None
+            u_et = s.until[2] if s.until is not None else None
             inner = "next" if s.consecutive else "followed_by"
             for k in range(s.times):
                 out.append((
@@ -873,20 +838,11 @@ class CepPattern:
         """(event_expansion, nn_ets) for a pattern with notNext gates:
         nn_ets[i] = the notNext stop type gating expanded copy i (set
         on the LAST copy of a gated step, None elsewhere)."""
-        nn = []
-        for s in self.steps:
-            for k in range(s.times):
-                if s.not_next is not None and k == s.times - 1:
-                    if s.not_next[2] is None:
-                        raise ValueError(
-                            f"the notNext after step {s.name!r} was "
-                            "built from a Column predicate — declare "
-                            "it with etype=... to compile for "
-                            "streaming"
-                        )
-                    nn.append(s.not_next[2])
-                else:
-                    nn.append(None)
+        nn = [
+            s.not_next[2] if s.not_next is not None and k == s.times - 1
+            else None
+            for s in self.steps for k in range(s.times)
+        ]
         return self._event_expansion(self.steps), nn
 
     def _needs_variant_enum(self) -> bool:
@@ -912,109 +868,254 @@ class CepPattern:
             s.contiguity == "next" for s in self.steps[opt_idx[0] + 1:]
         )
 
-    def stream_chains(self) -> tuple:
-        """(main_chain, [(flag_name, variant_chain), ...]) — the same
-        chain set the batch compiler builds (required steps gate; one
-        variant per optional step annotates), each times-expanded to
-        [(event_type, transition, negated_etype)]. MID-PATTERN
-        negations stream (r12): their gate reads only PREFIX maxima
-        (latest prefix-complete position, latest negated position) —
-        causal, so the keyed state machine carries them exactly. Only
-        TERMINAL negation refuses here: its window looks at FUTURE
-        events, so its streaming form is the watermarked outer interval
-        join (stateful.cep_negation_stream)."""
-        if self.neg is not None or self.pending_neg is not None:
+    def _chain_set(self) -> _ChainSet:
+        """The one CEP front end: every composition rule, checked once,
+        and the chain set both back ends lower — compile() to window
+        carries (build_chain), compile_stream() to one keyed state
+        machine. Refusals are loud and identical for both compilers;
+        compile_stream adds only its stream-only rules on top.
+
+        Chain kinds (see _ChainSet):
+        - 'plain': the required steps gate; one annotation chain per
+          optional step (k+1 chains — the skip variant dominates when
+          every transition around an optional is relaxed).
+        - 'enum': all 2^k include/exclude variants of the k optional
+          steps, OR-gated with greedy max-start across variants. Used
+          when the skip-variant dominance is unsound: a next() after
+          an optional step, a gap bound (see _needs_variant_enum), or
+          an until() loop (excluding an optional widens the stop-gated
+          gap: clean(a, b) implies clean(o, b), not vice versa).
+        - 'split': a counted step with lower bound 1 whose entering
+          and leaving transitions are both strict has no single
+          times-expansion — the 1-rep match binds ONE event to both
+          LAG(1) edges while a k>=2-rep match anchors two distinct
+          events — so each such step splits into its 1-rep variant
+          (quantifier stripped) and its >=2-rep variant (the
+          times(2[, m]) both-strict expansion), OR-gated like 'enum'.
+          times(1, 1) needs no split: its only variant is the 1-rep
+          chain."""
+        if not self.steps:
+            raise ValueError("empty pattern")
+        if self.pending_neg is not None:
             raise ValueError(
-                "stream_chains() covers the causal chain set — a "
-                "TERMINAL negation streams via compile_stream's "
-                "watermark-delayed hold (r13), not as a carry chain "
-                "(mid-pattern negations stream fine)"
+                f"mid-pattern notFollowedBy {self.pending_neg[0]!r} must "
+                "be followed by a positive followed_by() step (to end a "
+                "pattern with a negation, pass within=)"
             )
-        # after_match_skip('skip_past_last_event') streams too (r12):
-        # the acceptance cursor (last accepted match position) is one
-        # more long of causal keyed state — see stateful._cep_skip_fn
-        if self.steps and self.steps[-1].optional:
+        if self.steps[-1].optional:
             raise ValueError(
                 "the final step cannot be optional — it anchors the "
                 "match row"
             )
-        if self._needs_variant_enum():
-            raise ValueError(
-                "optional steps in a strict-contiguity region compile "
-                "via 2^k variant enumeration, not a main-chain-plus-"
-                "annotations set — stream_chains() has no single "
-                "gating chain to return (compile_stream routes these "
-                "patterns to the enum-gated state machine directly)"
-            )
-        required_steps = [s for s in self.steps if not s.optional]
-        for i, s in enumerate(required_steps):
-            if (s.contiguity == "next" and s.times == 1
-                    and (s.one_or_more
-                         or (s.up_to is not None and s.up_to >= 2))
-                    and i + 1 < len(required_steps)
-                    and required_steps[i + 1].contiguity == "next"):
-                raise ValueError(
-                    f"the both-strict oneOrMore/times(1, m) step "
-                    f"{s.name!r} compiles as an OR of two carry "
-                    "chains (r14) — stream_chains() has no single "
-                    "gating chain to return (compile_stream routes "
-                    "these patterns to the or-split keyed machine, "
-                    "stateful.cep_or_split_stream)"
-                )
-        counted = [s for s in self.steps
-                   if s.one_or_more or s.up_to is not None]
-        # r13 (r12 verdict item 8): ANY number of counted steps streams
-        # — each adds one carry pair + one running count to the keyed
-        # state (same algebra, more state longs)
-        for c in counted:
-            if c.etype is None:
-                raise ValueError(
-                    f"counted step {c.name!r} was built from a "
-                    "Column predicate — declare it with etype=... to "
-                    "compile for streaming"
-                )
+        if any(s.contiguity == "followed_by_any" for s in self.steps):
+            self._validate_any_pairs()
+            return _ChainSet("any_pairs", (self.steps,), (frozenset(),),
+                             (), (), None)
         required = [s for s in self.steps if not s.optional]
-        main = self._event_expansion(required)
-        variants = []
-        for o in (s for s in self.steps if s.optional):
-            chain = [s for s in self.steps if not s.optional or s is o]
-            variants.append((f"with_{o.name}", self._event_expansion(chain)))
-        return main, variants
+        opts = [s for s in self.steps if s.optional]
+        counted = [s for s in required
+                   if s.one_or_more or s.up_to is not None]
+        has_nn = any(s.not_next is not None for s in self.steps)
+        if has_nn and self.steps[-1].not_next is not None:
+            raise ValueError(
+                "a pattern cannot end in notNext (FlinkCEP refuses the "
+                "same) — there is no following step to emit the match "
+                "at; use a terminal notFollowedBy with a within horizon "
+                "instead"
+            )
+        if has_nn and opts:
+            raise ValueError(
+                "notNext composes with plain, counted, mid-negated and "
+                "terminal-negated chains, skip strategies, gap bounds "
+                "and until() — its combination with optional steps is "
+                "not built (each 2^k variant chain would need its own "
+                "pending slot)"
+            )
+        if self.skip != "no_skip" and (counted or opts):
+            raise ValueError(
+                f"after_match_skip({self.skip!r}) does not "
+                "compose with optional()/oneOrMore()/times(n, m) "
+                "annotations — their per-row flags/counts don't fold "
+                "into an acceptance scan"
+            )
+        anchor_idx = self._skip_anchor_idx()
+        if self.gap_us is not None and counted:
+            raise ValueError(
+                "oneOrMore/times(n, m) do not compose with "
+                "within(..., 'previous_and_current'): a repetition "
+                "chain can bridge time the collapsed single hop "
+                "cannot, so the existence collapse is unsound — "
+                "use a fixed times(n)"
+            )
+        split = [  # positions in `required`
+            i for i, s in enumerate(required)
+            if s.contiguity == "next" and s.times == 1
+            and (s.one_or_more or (s.up_to is not None and s.up_to >= 2))
+            and i + 1 < len(required)
+            and required[i + 1].contiguity == "next"
+        ]
+        flag_names = tuple(f"with_{o.name}" for o in opts)
+        strict_opts = self._needs_variant_enum()
+        if strict_opts and counted:
+            raise ValueError(
+                "oneOrMore/times(n, m) repetition counts do not "
+                "compose with optional steps in a strict-contiguity "
+                "region: the count pool is defined against the "
+                "single greedy gating chain, which the 2^k variant "
+                "enumeration replaces — make the optional step "
+                "required or use relaxed contiguity"
+            )
+        if split and not strict_opts:
+            if has_nn:
+                raise ValueError(
+                    "notNext does not compose with a both-strict "
+                    "oneOrMore/times(1, m) step in the same pattern — "
+                    "the OR-split streaming machine has no delayed "
+                    "absorption; relax one edge of the split step"
+                )
+            if opts:
+                raise ValueError(
+                    "optional() does not compose with a both-strict "
+                    "oneOrMore/times(1, m) step — each annotation "
+                    "chain would itself need the OR-of-two-chains "
+                    "split; make the optional step required or relax "
+                    "one edge of the repetition"
+                )
+            if len(split) > 3:
+                raise ValueError(
+                    f"{len(split)} both-strict oneOrMore/times(1, m) "
+                    "steps would enumerate "
+                    f"{2 ** len(split)} OR-variant chains — cap is 3 "
+                    "(8 chains); restructure the pattern"
+                )
+            chains = [
+                [(replace(s, times=2) if mask >> split.index(i) & 1
+                  else replace(s, one_or_more=False, times=1,
+                               up_to=None))
+                 if i in split else s
+                 for i, s in enumerate(required)]
+                for mask in range(1 << len(split))
+            ]
+            return _ChainSet("split", tuple(chains),
+                             (frozenset(),) * len(chains), (),
+                             tuple(counted), anchor_idx)
+        if strict_opts or (opts and any(s.until is not None
+                                        for s in self.steps)):
+            if len(opts) > 6:
+                raise ValueError(
+                    f"{len(opts)} optional steps would enumerate "
+                    f"{2 ** len(opts)} variant chains — cap is 6 "
+                    "(64 chains); restructure the pattern"
+                )
+            masks = range(1 << len(opts))
+            opt_pos = [i for i, s in enumerate(self.steps) if s.optional]
+            return _ChainSet(
+                "enum",
+                tuple([s for i, s in enumerate(self.steps)
+                       if not s.optional or mask >> opt_pos.index(i) & 1]
+                      for mask in masks),
+                tuple(frozenset(f for j, f in enumerate(flag_names)
+                                if mask >> j & 1) for mask in masks),
+                flag_names, tuple(counted), anchor_idx,
+            )
+        return _ChainSet(
+            "plain",
+            (required,) + tuple(
+                [s for s in self.steps if not s.optional or s is o]
+                for o in opts
+            ),
+            (frozenset(),) + tuple(frozenset([f]) for f in flag_names),
+            flag_names, tuple(counted), anchor_idx,
+        )
+
+    def _require_etypes(self) -> None:
+        """Stream-only rule: the keyed state machines evaluate every
+        predicate row by row, so each step, negation, until() and
+        notNext condition must be declared with etype=."""
+        named = [(f"step {s.name!r}", s.etype) for s in self.steps]
+        for s in self.steps:
+            if s.neg_before is not None:
+                named.append((f"the negation before step {s.name!r}",
+                              s.neg_before[2]))
+            if s.until is not None:
+                named.append((f"the until() condition on step "
+                              f"{s.name!r}", s.until[2]))
+            if s.not_next is not None:
+                named.append((f"the notNext after step {s.name!r}",
+                              s.not_next[2]))
+        if self.neg is not None:
+            named.append(("the terminal negation", self.neg_etype))
+        for what, et in named:
+            if et is None:
+                raise ValueError(
+                    f"{what} was built from a Column predicate — "
+                    "declare it with etype=... to compile for streaming"
+                )
+
+    def stream_chains(self) -> tuple:
+        """(main_chain, [(flag_name, variant_chain), ...]) — the
+        front end's 'plain' chain set (required steps gate; one variant
+        per optional step annotates), each times-expanded by
+        _event_expansion. Only the 'plain' kind without a terminal
+        negation has this shape; compile_stream routes the others to
+        their own machines."""
+        if self.neg is not None:
+            raise ValueError(
+                "stream_chains() covers the causal chain set — a "
+                "TERMINAL negation streams via compile_stream's "
+                "watermark-delayed hold, not as a carry chain "
+                "(mid-pattern negations stream fine)"
+            )
+        cs = self._chain_set()
+        if cs.kind != "plain":
+            raise ValueError({
+                "any_pairs": "followedByAny patterns compile through "
+                "the pair enumeration — there is no carry chain",
+                "enum": "optional steps in a strict-contiguity region, "
+                "under a gap bound or beside an until() loop compile "
+                "via 2^k variant enumeration",
+                "split": "a both-strict oneOrMore/times(1, m) step "
+                "compiles as an OR of two carry chains",
+            }[cs.kind] + " — stream_chains() has no single gating "
+                "chain to return")
+        self._require_etypes()
+        main, *variants = [self._event_expansion(c) for c in cs.chains]
+        return main, list(zip(cs.flag_names, variants))
 
     def expanded_event_steps(self) -> list:
         """The gating (required-step) chain as [(event_type,
-        transition)] — see stream_chains for the full set including
-        optional-step annotation variants."""
+        transition, gate_etype)] — see stream_chains for the full set
+        including optional-step annotation variants."""
         return self.stream_chains()[0]
 
     def _skip_anchor_idx(self):
-        """Expanded-step index where the carry stamps the after-match
-        anchor position (skip_to_first / skip_to_last), validated the
-        same way the batch compile validates its anchor; None for
-        unanchored strategies."""
+        """Expanded index in the required chain of the copy that moves
+        the skip_to_first / skip_to_last cursor (the FIRST / LAST
+        times-copy of the anchor step); None for unanchored
+        strategies."""
         if self.skip not in ("skip_to_first", "skip_to_last"):
             return None
         required = [s for s in self.steps if not s.optional]
-        if self.skip_step not in [s.name for s in required]:
+        names = [s.name for s in required]
+        if self.skip_step not in names:
             raise ValueError(
                 f"after_match_skip anchor step {self.skip_step!r} "
-                "is not a pattern step"
+                f"is not a pattern step (steps: {names})"
             )
-        if self.skip_step == required[0].name:
+        if self.skip_step == names[0]:
             raise ValueError(
                 "the after_match_skip anchor may not be the begin "
-                "step — use skip_to_next"
+                "step — its event IS the match start, so the "
+                "cursor could never advance past a start; use "
+                "skip_to_next (FlinkCEP throws on the same "
+                "composition)"
             )
-        idx = 0
-        anchor = None
+        idx = anchor = 0
         for s in required:
-            for k in range(s.times):
-                if s.name == self.skip_step and (
-                    k == 0 if self.skip == "skip_to_first"
-                    else k == s.times - 1
-                ):
-                    anchor = idx
-                idx += 1
+            if s.name == self.skip_step:
+                anchor = idx + (0 if self.skip == "skip_to_first"
+                                else s.times - 1)
+            idx += s.times
         return anchor
 
     def _validate_any_pairs(self) -> None:
@@ -1054,8 +1155,8 @@ class CepPattern:
         the horizon — a bin-bucketed range self-join (the bin trick
         manufactures an equi key: a completion's bin is the start's
         own or the next, never further, so each pair joins on exactly
-        one bin; cost O(n · per-bin density), not O(n²))."""
-        self._validate_any_pairs()
+        one bin; cost O(n · per-bin density), not O(n²)). The front
+        end has validated the class (_validate_any_pairs)."""
         a, b = self.steps
         W = self.within_us
         s_us = F.unix_micros(F.col(ts))
@@ -1096,837 +1197,129 @@ class CepPattern:
         previous-row hits (for strict transitions), O(1) per key
         regardless of stream length — so the same declarative pattern
         runs unbounded with bounded state, Flink's CEP-on-keyed-state
-        shape. Optional steps stream too: their annotation chains ride
-        in the same state tuple and emit the same `with_<name>` flags
-        as the batch compile. Mid-pattern negated gaps stream (causal
-        prefix-maxima gates), every after-match skip strategy streams
-        (causal cursors, r13), and ANY number of counted steps
-        (oneOrMore / times(n, m)) stream with their `n_<name>` outputs
-        — the carry pairs with one count-at-start per counted step and
-        the running counts ride the state (r13, r12 verdict item 8).
-        TERMINAL negation streams too (r13): candidates hold in keyed
-        state until the watermark passes match_ts + T — see
-        stateful.cep_terminal_negation_stream. Output timestamps in
-        epoch µs (the stateful-twin convention). Bit-equality with the
-        batch compile is pinned by pytest across micro-batch
-        boundaries for every streaming surface (the terminal-negation
-        twin's contract is the match set — its batch-only
-        next_<neg>_ts audit column is unbounded-lookahead).
+        shape. It lowers the same chain set as compile() (one front
+        end, _chain_set), so both compilers accept and refuse the same
+        compositions. Optional-step annotation chains, 2^k enum and
+        OR-split variants ride one state tuple and emit the same
+        `with_<name>` flags and `n_<name>` counts as the batch compile;
+        mid-pattern negated gaps, notNext, until() loops, gap bounds
+        and every after-match skip strategy stream as causal state;
+        TERMINAL negation holds candidates in keyed state until the
+        watermark passes match_ts + T (stateful.
+        cep_terminal_negation_stream and its composites). Output
+        timestamps in epoch µs (the stateful-twin convention).
+        Bit-equality with the batch compile is pinned by pytest across
+        micro-batch boundaries for every streaming surface (the
+        terminal-negation twin's contract is the match set — its
+        batch-only next_<neg>_ts audit column is unbounded-lookahead).
 
-        r15 invariant: EVERY pattern the batch compile() accepts now
-        streams — the last composition refusals (midneg×gap with
-        skip / terminal negation / optionals; OR-split × negation;
-        strict-optional enum × negation) were constructed this round,
-        so the only streaming-specific requirements left are
-        declarative etype= steps (row-evaluable predicates for keyed
-        state) and event times >= 1970-01-01 (the -1 state sentinel);
-        every remaining raise in this method mirrors a batch
-        refusal."""
+        Stream-only rules, on top of the front end's: every predicate
+        is declared with etype= (keyed state evaluates it row by row),
+        and the gating chain has at least 2 positive steps after
+        times() expansion (a single step has no transition to carry).
+        The keyed machines also refuse event times before 1970-01-01,
+        which collide with their -1 state sentinel."""
         from . import stateful
 
-        if any(s.contiguity == "followed_by_any" for s in self.steps):
-            # r15: the two-step enumeration class streams as a
-            # WATERMARKED STREAM-STREAM INTERVAL SELF-JOIN — Spark
-            # bounds both sides' state by the watermark + the join's
-            # time range, the streaming-native form of the batch
-            # binned range join (refusals shared with compile())
-            self._validate_any_pairs()
+        cs = self._chain_set()
+        self._require_etypes()
+        if sum(s.times for s in cs.chains[0]) < 2:
+            raise ValueError(
+                "compile_stream needs at least 2 positive steps (times() "
+                "copies count) — a single-step pattern has no transition "
+                "for keyed state to carry; use compile()"
+            )
+        args = (spark, files_dir, sf_dir)
+        W, gap, skip = self.within_us, self.gap_us, self.skip
+        neg = ((self.neg_etype, self.neg_within_us) if self.neg is not None
+               else (None, None))
+        if cs.kind == "any_pairs":
             a, b = self.steps
-            if a.etype is None or b.etype is None:
-                raise ValueError(
-                    "followedByAny steps were built from Column "
-                    "predicates — declare them with etype=... to "
-                    "compile for streaming"
-                )
-            return stateful.cep_any_pairs_stream(
-                spark, files_dir, sf_dir, a.etype, b.etype,
-                self.within_us,
-            )
-        if any(s.not_next is not None for s in self.steps):
-            # r15: notNext streams via one-row delayed absorption
-            # (stateful._cep_not_next_fn); refusals mirror compile().
-            # r16 (r15 verdict item 1): skip strategies and gap bounds
-            # COMPOSE — the delayed absorption rides the r13 skip
-            # cursors and the r14 count-gated gap buffers (the LEAD(1)
-            # gate is causal at the bind row), so the nn routes below
-            # mirror the plain gap/skip dispatch with nn_ets threaded.
-            if self.steps[-1].not_next is not None:
-                raise ValueError(
-                    "a pattern cannot end in notNext (FlinkCEP "
-                    "refuses the same) — there is no following step "
-                    "to emit the match at; use a terminal "
-                    "notFollowedBy with a within horizon instead"
-                )
-            if any(s.optional for s in self.steps):
-                raise ValueError(
-                    "notNext composes with plain, counted, "
-                    "mid-negated and terminal-negated chains, skip "
-                    "strategies, gap bounds and until() (r16) — its "
-                    "combination with optional steps is not built "
-                    "(each 2^k variant chain would need its own "
-                    "pending slot; the batch compile and "
-                    "compile_stream refuse the same combination to "
-                    "keep parity)"
-                )
-            req = [s for s in self.steps if not s.optional]
-            for i, st_ in enumerate(req):
-                if (st_.contiguity == "next" and st_.times == 1
-                        and (st_.one_or_more
-                             or (st_.up_to is not None
-                                 and st_.up_to >= 2))
-                        and i + 1 < len(req)
-                        and req[i + 1].contiguity == "next"):
-                    raise ValueError(
-                        "notNext does not compose with a both-strict "
-                        "oneOrMore/times(1, m) step in the same "
-                        "pattern — the OR-split streaming machine "
-                        "has no delayed absorption; relax one edge "
-                        "of the split step"
-                    )
-            counted_steps = [s for s in self.steps
-                             if s.one_or_more or s.up_to is not None]
-            for c in counted_steps:
-                if c.etype is None:
-                    raise ValueError(
-                        f"counted step {c.name!r} was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-            if self.neg is not None and self.neg_etype is None:
-                raise ValueError(
-                    "the terminal negation was built from a Column "
-                    "predicate — declare it with etype=... to "
-                    "compile for streaming"
-                )
-            steps_x, nn_ets = self._not_next_expansion()
-            if any(s.until is not None for s in self.steps):
-                # r16: notNext × until streams — the until machine's
-                # freeze riders with one-row delayed absorption
-                # (stateful._cep_until_fn nn handling; resolution
-                # runs before the stop freeze). gap/skip cannot
-                # co-occur (both refuse counted steps) and the
-                # or-split combination was refused above.
-                return stateful.cep_until_stream(
-                    spark, files_dir, sf_dir, self._until_expansion(),
-                    self.within_us,
-                    [(c.name, c.etype, c.up_to,
-                      c.until[2] if c.until is not None else None)
-                     for c in counted_steps],
-                    self.neg_etype if self.neg is not None else None,
-                    self.neg_within_us if self.neg is not None
-                    else None,
-                    entry_idx=self._until_entry_indices(
-                        self.steps, counted_steps),
-                    nn_ets=nn_ets,
-                )
-            if self.gap_us is not None:
-                # batch gap refusals re-checked (this branch returns
-                # before the plain gap dispatch runs its mirrors)
-                if counted_steps:
-                    raise ValueError(
-                        "oneOrMore/times(n, m) do not compose with "
-                        "within(..., 'previous_and_current') — the "
-                        "batch compile refuses the same combination"
-                    )
-                if self.skip != "no_skip":
-                    anchor_idx = self._skip_anchor_idx()
-                    if self.neg is not None:
-                        return stateful.cep_gap_skip_neg_stream(
-                            spark, files_dir, sf_dir, steps_x,
-                            self.within_us, self.gap_us, self.skip,
-                            anchor_idx, self.neg_etype,
-                            self.neg_within_us, nn_ets=nn_ets,
-                        )
-                    return stateful.cep_gap_skip_stream(
-                        spark, files_dir, sf_dir, steps_x,
-                        self.within_us, self.gap_us, self.skip,
-                        anchor_idx, nn_ets=nn_ets,
-                    )
-                if self.neg is not None:
-                    return stateful.cep_gap_negation_stream(
-                        spark, files_dir, sf_dir, steps_x,
-                        self.within_us, self.gap_us, self.neg_etype,
-                        self.neg_within_us, nn_ets=nn_ets,
-                    )
-                return stateful.cep_gap_bound_stream(
-                    spark, files_dir, sf_dir, steps_x, self.within_us,
-                    self.gap_us, nn_ets=nn_ets,
-                )
-            if self.skip != "no_skip":
-                if counted_steps:
-                    raise ValueError(
-                        f"after_match_skip({self.skip!r}) does not "
-                        "compose with oneOrMore/times(n, m) "
-                        "annotations (the batch compile refuses the "
-                        "same combination)"
-                    )
-                anchor_idx = self._skip_anchor_idx()
-                if self.neg is not None:
-                    return stateful.cep_skip_neg_stream(
-                        spark, files_dir, sf_dir, steps_x,
-                        self.within_us, self.skip, anchor_idx,
-                        self.neg_etype, self.neg_within_us,
-                        nn_ets=nn_ets,
-                    )
-                return stateful.cep_compiled_stream(
-                    spark, files_dir, sf_dir, steps_x, self.within_us,
-                    skip=self.skip, anchor_idx=anchor_idx,
-                    nn_ets=nn_ets,
-                )
-            return stateful.cep_not_next_stream(
-                spark, files_dir, sf_dir, steps_x, self.within_us,
-                [(c.name, c.etype, c.up_to) for c in counted_steps],
-                nn_ets, self.neg_etype if self.neg is not None else None,
-                self.neg_within_us if self.neg is not None else None,
-            )
+            return stateful.cep_any_pairs_stream(*args, a.etype, b.etype, W)
+        xs = [self._event_expansion(c) for c in cs.chains]
+        counted = [(c.name, c.etype, c.up_to) for c in cs.counted]
+        nn = (self._not_next_expansion()[1]
+              if any(s.not_next is not None for s in self.steps) else None)
         if any(s.until is not None for s in self.steps):
-            # r15: until() loops stream via the paired machinery plus
-            # the per-level freeze riders (stateful._cep_until_fn).
-            # Every refusal below mirrors a batch refusal — the
-            # parity invariant holds for this surface too.
-            # r16 (r15 verdict item 8): until × optional streams as
-            # the 2^k full-variant enumeration through the SAME
-            # per-variant freeze-rider machine as the OR-split
-            # (stateful._cep_until_split_fn with incl_flags) — see
-            # the dispatch below the shared refusals.
-            if any(s.optional for s in self.steps):
-                if self._needs_variant_enum():
-                    raise ValueError(
-                        "repetition counts do not compose with "
-                        "optional steps in a strict-contiguity "
-                        "region (the batch compile refuses the same "
-                        "combination)"
-                    )
-                if self.steps[-1].optional:
-                    raise ValueError(
-                        "the final step cannot be optional — it "
-                        "anchors the match row"
-                    )
-            if self.gap_us is not None:
-                raise ValueError(
-                    "oneOrMore/times(n, m) do not compose with "
-                    "within(..., 'previous_and_current') — the batch "
-                    "compile refuses the same combination"
+            counted = [(c.name, c.etype, c.up_to,
+                        c.until[2] if c.until is not None else None)
+                       for c in cs.counted]
+            entry = [self._until_entry_indices(c, cs.counted)
+                     for c in cs.chains]
+            if cs.kind == "plain":
+                return stateful.cep_until_stream(
+                    *args, xs[0], W, counted, *neg, entry_idx=entry[0],
+                    nn_ets=nn,
                 )
-            if self.skip != "no_skip":
-                raise ValueError(
-                    f"after_match_skip({self.skip!r}) does not "
-                    "compose with optional()/oneOrMore()/times(n, m) "
-                    "annotations (the batch compile refuses the same "
-                    "combination)"
-                )
-            req = [s for s in self.steps if not s.optional]
-            split = [
-                st_ for i, st_ in enumerate(req)
-                if st_.contiguity == "next" and st_.times == 1
-                and (st_.one_or_more
-                     or (st_.up_to is not None and st_.up_to >= 2))
-                and i + 1 < len(req)
-                and req[i + 1].contiguity == "next"
-            ]
-            counted_steps = [s for s in self.steps
-                             if s.one_or_more or s.up_to is not None]
-            for c in counted_steps:
-                if c.etype is None:
-                    raise ValueError(
-                        f"counted step {c.name!r} was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-            if self.neg is not None and self.neg_etype is None:
-                raise ValueError(
-                    "the terminal negation was built from a Column "
-                    "predicate — declare it with etype=... to "
-                    "compile for streaming"
-                )
-            counted_arg = [
-                (c.name, c.etype, c.up_to,
-                 c.until[2] if c.until is not None else None)
-                for c in counted_steps
-            ]
-            if split:
-                # r16 (r15 verdict item 2): until() × both-strict
-                # OR-split streams — one freeze-rider variant machine
-                # per quantifier expansion, shared counts, winner by
-                # the lexicographic (h, c.., u-as-inf..) max
-                # (stateful._cep_until_split_fn)
-                if any(s.optional for s in self.steps):
-                    raise ValueError(
-                        "optional() does not compose with a "
-                        "both-strict oneOrMore/times(1, m) step (the "
-                        "batch compile refuses the same combination)"
-                    )
-                if len(split) > 3:
-                    raise ValueError(
-                        f"{len(split)} both-strict "
-                        "oneOrMore/times(1, m) steps would enumerate "
-                        f"{2 ** len(split)} OR-variant chains — cap "
-                        "is 3"
-                    )
-                variant_steps, variant_lists = [], []
-                for mask in range(1 << len(split)):
-                    var = []
-                    for s in req:
-                        if s in split:
-                            j = split.index(s)
-                            var.append(
-                                replace(s, times=2)
-                                if mask >> j & 1
-                                else replace(s, one_or_more=False,
-                                             times=1, up_to=None)
-                            )
-                        else:
-                            var.append(s)
-                    variant_steps.append(self._until_expansion(var))
-                    variant_lists.append(var)
-                return stateful.cep_until_split_stream(
-                    spark, files_dir, sf_dir, variant_steps,
-                    self.within_us, counted_arg,
-                    self.neg_etype if self.neg is not None else None,
-                    self.neg_within_us if self.neg is not None
-                    else None,
-                    entry_idx=[
-                        self._until_entry_indices(v, counted_steps)
-                        for v in variant_lists
-                    ],
-                )
-            if any(s.optional for s in self.steps):
-                # r16 (r15 verdict item 8): until × optional — the
-                # 2^k include/exclude variants each run a FULL
-                # freeze-rider chain (the skip-variant shortcut is
-                # unsound under stop gates: excluding an optional
-                # widens the gated gap), combined by the same
-                # per-variant machine as the OR-split, plus
-                # with_<name> flags from the satisfied-variant set
-                opts = [(i, s) for i, s in enumerate(self.steps)
-                        if s.optional]
-                if len(opts) > 6:
-                    raise ValueError(
-                        f"{len(opts)} optional steps would enumerate "
-                        f"{2 ** len(opts)} until-gated variant "
-                        "chains — cap is 6 (64 chains)"
-                    )
-                variant_steps, incl, variant_lists = [], [], []
-                for mask in range(1 << len(opts)):
-                    inc = {i for j, (i, _s) in enumerate(opts)
-                           if mask >> j & 1}
-                    chain = [s for i, s in enumerate(self.steps)
-                             if not s.optional or i in inc]
-                    variant_steps.append(self._until_expansion(chain))
-                    variant_lists.append(chain)
-                    incl.append(frozenset(
-                        f"with_{s.name}" for i, s in opts if i in inc
-                    ))
-                flag_names = [f"with_{s.name}" for _i, s in opts]
-                return stateful.cep_until_split_stream(
-                    spark, files_dir, sf_dir, variant_steps,
-                    self.within_us, counted_arg,
-                    self.neg_etype if self.neg is not None else None,
-                    self.neg_within_us if self.neg is not None
-                    else None,
-                    incl_flags=incl, flag_names=flag_names,
-                    entry_idx=[
-                        self._until_entry_indices(v, counted_steps)
-                        for v in variant_lists
-                    ],
-                )
-            return stateful.cep_until_stream(
-                spark, files_dir, sf_dir, self._until_expansion(),
-                self.within_us, counted_arg,
-                self.neg_etype if self.neg is not None else None,
-                self.neg_within_us if self.neg is not None else None,
-                entry_idx=self._until_entry_indices(
-                    self.steps, counted_steps),
+            return stateful.cep_until_split_stream(
+                *args, xs, W, counted, *neg, incl_flags=list(cs.incl),
+                flag_names=list(cs.flag_names), entry_idx=entry,
             )
-        if self.gap_us is not None:
-            # r13: gap-bounded patterns stream with per-level (ts,
-            # start) BUFFERS bounded by one gap horizon — the bound's
-            # inherent memory (see stateful._cep_gap_fn). The batch
-            # compile's gap refusals are re-checked HERE because this
-            # branch returns before compile()-equivalent validation
-            # runs — without them the refused compositions would
-            # stream silently wrong (review r13): a counted step would
-            # stream the collapsed chain (the exact unsoundness batch
-            # refuses), a negated gap would be ignored ( _cep_gap_fn
-            # carries no gate), a skip strategy would emit every
-            # overlapping match.
-            if any(s.one_or_more or s.up_to is not None
-                   for s in self.steps):
-                raise ValueError(
-                    "oneOrMore/times(n, m) do not compose with "
-                    "within(..., 'previous_and_current') — the batch "
-                    "compile refuses the same combination"
-                )
-            # r15 (r14 verdict items 3/4): mid-pattern negation under
-            # the gap bound composes with EVERYTHING ELSE that gap
-            # bounds admit — the count-gated buffers ride the plain
-            # chain (_gap_hits, r14), the position-struct skip chain
-            # (_gap_skip_hits), every 2^k enum variant, and the
-            # watermark hold (feasibility is causal at the match
-            # row) — so no midneg composition refusal remains here;
-            # the batch/stream support matrices are identical.
-            if self.skip != "no_skip":
-                # r14 continuation: skip+gap STREAMS — the buffered
-                # carry generalizes to (h, sp[, ap]) position structs
-                # and the acceptance cursor is causal
-                # (stateful._cep_gap_skip_fn). With a terminal
-                # negation on top, candidates hold until the
-                # watermark passes their deadline and the cursor
-                # folds at flush time over the SURVIVORS, in match
-                # order (deadlines are nondecreasing) — exactly the
-                # batch fold-after-negation-filter
-                # (stateful._cep_gap_skip_neg_fn)
-                if any(s.optional for s in self.steps):
-                    raise ValueError(
-                        "after_match_skip does not compose with "
-                        "optional steps (the batch compile refuses "
-                        "the same combination)"
-                    )
-                anchor_idx = self._skip_anchor_idx()
+        if gap is not None:
+            if skip != "no_skip":
                 if self.neg is not None:
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
                     return stateful.cep_gap_skip_neg_stream(
-                        spark, files_dir, sf_dir,
-                        self._event_expansion(self.steps),
-                        self.within_us, self.gap_us, self.skip,
-                        anchor_idx, self.neg_etype, self.neg_within_us,
+                        *args, xs[0], W, gap, skip, cs.anchor_idx, *neg,
+                        nn_ets=nn,
                     )
                 return stateful.cep_gap_skip_stream(
-                    spark, files_dir, sf_dir,
-                    self._event_expansion(self.steps), self.within_us,
-                    self.gap_us, self.skip, anchor_idx,
+                    *args, xs[0], W, gap, skip, cs.anchor_idx, nn_ets=nn,
                 )
-            if any(s.optional for s in self.steps):
-                # r14 (r13 verdict item 4b): optional-under-gap
-                # streams as the SAME 2^k include/exclude variant set
-                # the batch compile enumerates — one gap-buffered
-                # chain per variant in one keyed state tuple, OR-gated
-                # emission with greedy max-start and with_<name> flags
-                # (stateful._cep_gap_enum_fn). With a terminal
-                # negation on top (the triple composition), the enum
-                # candidates feed the watermark-delayed hold instead
-                # (stateful._cep_gap_enum_neg_fn).
-                if self.steps[-1].optional:
-                    raise ValueError(
-                        "the final step cannot be optional — it "
-                        "anchors the match row"
-                    )
-                opts = [(i, s) for i, s in enumerate(self.steps)
-                        if s.optional]
-                if len(opts) > 6:
-                    raise ValueError(
-                        f"{len(opts)} optional steps under a gap "
-                        f"bound would run {2 ** len(opts)} buffered "
-                        "variant machines — cap is 6 (64 chains)"
-                    )
-                variant_steps, incl = [], []
-                for mask in range(1 << len(opts)):
-                    inc = {i for j, (i, _s) in enumerate(opts)
-                           if mask >> j & 1}
-                    chain = [s for i, s in enumerate(self.steps)
-                             if not s.optional or i in inc]
-                    variant_steps.append(self._event_expansion(chain))
-                    incl.append(frozenset(
-                        f"with_{s.name}" for i, s in opts if i in inc
-                    ))
-                flag_names = [f"with_{s.name}" for _i, s in opts]
+            if cs.kind == "enum":
                 if self.neg is not None:
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
                     return stateful.cep_gap_enum_neg_stream(
-                        spark, files_dir, sf_dir, variant_steps,
-                        self.within_us, self.gap_us, incl, flag_names,
-                        self.neg_etype, self.neg_within_us,
+                        *args, xs, W, gap, list(cs.incl),
+                        list(cs.flag_names), *neg,
                     )
                 return stateful.cep_gap_enum_stream(
-                    spark, files_dir, sf_dir, variant_steps,
-                    self.within_us, self.gap_us, incl, flag_names,
+                    *args, xs, W, gap, list(cs.incl), list(cs.flag_names),
                 )
             if self.neg is not None:
-                # r14 (r13 verdict item 4a): terminal negation + gap
-                # bound streams as the watermark-delayed hold COMPOSED
-                # with the horizon-pruned buffered carry
-                # (stateful._cep_gap_neg_fn)
-                if self.neg_etype is None:
-                    raise ValueError(
-                        "the terminal negation was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
                 return stateful.cep_gap_negation_stream(
-                    spark, files_dir, sf_dir,
-                    self._event_expansion(self.steps), self.within_us,
-                    self.gap_us, self.neg_etype, self.neg_within_us,
+                    *args, xs[0], W, gap, *neg, nn_ets=nn,
                 )
             return stateful.cep_gap_bound_stream(
-                spark, files_dir, sf_dir,
-                self._event_expansion(self.steps), self.within_us,
-                self.gap_us,
+                *args, xs[0], W, gap, nn_ets=nn,
+            )
+        if nn is not None and skip == "no_skip":
+            return stateful.cep_not_next_stream(
+                *args, xs[0], W, counted, nn, *neg,
             )
         if self.neg is not None:
-            # TERMINAL negation streams via watermark-delayed emission
-            # (r13, r12 verdict item 4): candidates held in keyed state
-            # until the watermark passes match_ts + T, killed on a
-            # negated arrival in the open interval. The annotation
-            # surfaces don't compose here (the batch next_<neg>_ts
-            # audit column is unbounded-lookahead by definition).
-            has_opt = any(s.optional for s in self.steps)
-            has_cnt = any(s.one_or_more or s.up_to is not None
-                          for s in self.steps)
-            if has_opt or has_cnt:
-                # r14 continuation: annotation flags and repetition
-                # counts are CAUSAL (they evaluate at the match row),
-                # so they ride the watermark-held candidate
-                # (stateful._cep_compiled_neg_fn); only the 2^k
-                # strict-optional enumeration and the both-strict
-                # OR-split stay batch-only under terminal negation
-                if self.skip != "no_skip":
-                    raise ValueError(
-                        "after_match_skip does not compose with "
-                        "optional()/oneOrMore()/times(n, m) "
-                        "annotations (the batch compile refuses the "
-                        "same combination)"
-                    )
-                if self._needs_variant_enum():
-                    # r15 (r14 verdict item 3): strict-contiguity
-                    # optional regions × terminal negation stream —
-                    # the 2^k enum machine's OR-gated emission is
-                    # causal at the match row, so it feeds the same
-                    # watermark-delayed hold as every other
-                    # neg composite (stateful._cep_enum_neg_fn)
-                    if has_cnt:
-                        raise ValueError(
-                            "repetition counts do not compose with "
-                            "optional steps in a strict-contiguity "
-                            "region (the batch compile refuses the "
-                            "same combination)"
-                        )
-                    if self.steps and self.steps[-1].optional:
-                        raise ValueError(
-                            "the final step cannot be optional — it "
-                            "anchors the match row"
-                        )
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                    opts = [(i, s) for i, s in enumerate(self.steps)
-                            if s.optional]
-                    if len(opts) > 6:
-                        raise ValueError(
-                            f"{len(opts)} optional steps under strict "
-                            "contiguity would enumerate "
-                            f"{2 ** len(opts)} variant chains — cap "
-                            "is 6"
-                        )
-                    masks, variant_steps = [], []
-                    for mask in range(1 << len(opts)):
-                        inc = {i for j, (i, _s) in enumerate(opts)
-                               if mask >> j & 1}
-                        chain = [s for i, s in enumerate(self.steps)
-                                 if not s.optional or i in inc]
-                        variant_steps.append(
-                            self._event_expansion(chain))
-                        masks.append(frozenset(
-                            f"with_{s.name}" for i, s in opts
-                            if i in inc
-                        ))
-                    flag_names = [f"with_{s.name}" for _i, s in opts]
-                    return stateful.cep_enum_neg_stream(
-                        spark, files_dir, sf_dir, variant_steps,
-                        self.within_us, masks, flag_names,
-                        self.neg_etype, self.neg_within_us,
-                    )
-                req = [s for s in self.steps if not s.optional]
-                split = [
-                    s for i, st_ in enumerate(req)
-                    for s in [st_]
-                    if (st_.contiguity == "next" and st_.times == 1
-                        and (st_.one_or_more
-                             or (st_.up_to is not None
-                                 and st_.up_to >= 2))
-                        and i + 1 < len(req)
-                        and req[i + 1].contiguity == "next")
-                ]
-                if split:
-                    # r15 (r14 verdict item 3): the both-strict
-                    # OR-split × terminal negation streams — the
-                    # 2^|split| variant machines' lexicographic
-                    # winner and pools are causal at the match row,
-                    # so they feed the watermark hold
-                    # (stateful._cep_or_split_neg_fn)
-                    if any(s.optional for s in self.steps):
-                        raise ValueError(
-                            "optional() does not compose with a "
-                            "both-strict oneOrMore/times(1, m) step "
-                            "(the batch compile refuses the same "
-                            "combination)"
-                        )
-                    if len(split) > 3:
-                        raise ValueError(
-                            f"{len(split)} both-strict "
-                            "oneOrMore/times(1, m) steps would "
-                            f"enumerate {2 ** len(split)} OR-variant "
-                            "chains — cap is 3"
-                        )
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                    counted_steps = [s for s in self.steps
-                                     if s.one_or_more
-                                     or s.up_to is not None]
-                    for c in counted_steps:
-                        if c.etype is None:
-                            raise ValueError(
-                                f"counted step {c.name!r} was built "
-                                "from a Column predicate — declare "
-                                "it with etype=... to compile for "
-                                "streaming"
-                            )
-                    variant_steps = []
-                    for mask in range(1 << len(split)):
-                        var = []
-                        for s in req:
-                            if s in split:
-                                j = split.index(s)
-                                var.append(
-                                    replace(s, times=2)
-                                    if mask >> j & 1
-                                    else replace(s, one_or_more=False,
-                                                 times=1, up_to=None)
-                                )
-                            else:
-                                var.append(s)
-                        variant_steps.append(self._event_expansion(var))
-                    return stateful.cep_or_split_neg_stream(
-                        spark, files_dir, sf_dir, variant_steps,
-                        self.within_us,
-                        [(c.name, c.etype, c.up_to)
-                         for c in counted_steps],
-                        self.neg_etype, self.neg_within_us,
-                    )
-                if self.steps and self.steps[-1].optional:
-                    raise ValueError(
-                        "the final step cannot be optional — it "
-                        "anchors the match row"
-                    )
-                if self.neg_etype is None:
-                    raise ValueError(
-                        "the terminal negation was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-                counted_steps = [s for s in self.steps
-                                 if s.one_or_more or s.up_to is not None]
-                for c in counted_steps:
-                    if c.etype is None:
-                        raise ValueError(
-                            f"counted step {c.name!r} was built from "
-                            "a Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                main = self._event_expansion(req)
-                variants = [
-                    (f"with_{o.name}", self._event_expansion(
-                        [s for s in self.steps
-                         if not s.optional or s is o]))
-                    for o in (s for s in self.steps if s.optional)
-                ]
-                return stateful.cep_compiled_neg_stream(
-                    spark, files_dir, sf_dir, main, self.within_us,
-                    variants,
-                    [(c.name, c.etype, c.up_to)
-                     for c in counted_steps],
-                    self.neg_etype, self.neg_within_us,
-                )
-            if self.skip != "no_skip":
-                # r14 continuation: skip × terminal negation streams —
-                # the causal position-struct carries feed the
-                # watermark hold, and the acceptance cursor folds at
-                # flush time over the survivors in match order
-                # (stateful._cep_skip_neg_fn)
-                if self.neg_etype is None:
-                    raise ValueError(
-                        "the terminal negation was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
+            if skip != "no_skip":
                 return stateful.cep_skip_neg_stream(
-                    spark, files_dir, sf_dir,
-                    self._event_expansion(self.steps), self.within_us,
-                    self.skip, self._skip_anchor_idx(),
-                    self.neg_etype, self.neg_within_us,
+                    *args, xs[0], W, skip, cs.anchor_idx, *neg, nn_ets=nn,
                 )
-            if self.neg_etype is None:
-                raise ValueError(
-                    "the terminal negation was built from a Column "
-                    "predicate — declare it with etype=... to compile "
-                    "for streaming"
+            if cs.kind == "enum":
+                return stateful.cep_enum_neg_stream(
+                    *args, xs, W, list(cs.incl), list(cs.flag_names), *neg,
+                )
+            if cs.kind == "split":
+                return stateful.cep_or_split_neg_stream(
+                    *args, xs, W, counted, *neg,
+                )
+            if cs.counted or cs.flag_names:
+                return stateful.cep_compiled_neg_stream(
+                    *args, xs[0], W, list(zip(cs.flag_names, xs[1:])),
+                    counted, *neg,
                 )
             return stateful.cep_terminal_negation_stream(
-                spark, files_dir, sf_dir,
-                self._event_expansion(self.steps), self.within_us,
-                self.neg_etype, self.neg_within_us,
+                *args, xs[0], W, *neg,
             )
-        if self._needs_variant_enum():
-            # r13: the strict-contiguity optional region streams as the
-            # same 2^k variant-chain set the batch compile enumerates —
-            # every variant is an ordinary carry chain in keyed state;
-            # emission OR-gates across variants with greedy max-start
-            # (see stateful._cep_compiled_fn's enum mode)
-            if any(s.one_or_more or s.up_to is not None
-                   for s in self.steps):
-                raise ValueError(
-                    "repetition counts do not compose with optional "
-                    "steps in a strict-contiguity region (the batch "
-                    "compile refuses the same combination)"
-                )
-            if self.skip != "no_skip":
-                raise ValueError(
-                    "after_match_skip does not compose with optional "
-                    "steps (the batch compile refuses the same "
-                    "combination)"
-                )
-            opts = [(i, s) for i, s in enumerate(self.steps)
-                    if s.optional]
-            if len(opts) > 6:
-                raise ValueError(
-                    f"{len(opts)} optional steps under strict "
-                    "contiguity would enumerate "
-                    f"{2 ** len(opts)} variant chains — cap is 6"
-                )
-            masks, variant_steps = [], []
-            for mask in range(1 << len(opts)):
-                inc = {i for j, (i, _s) in enumerate(opts)
-                       if mask >> j & 1}
-                chain = [s for i, s in enumerate(self.steps)
-                         if not s.optional or i in inc]
-                variant_steps.append(self._event_expansion(chain))
-                masks.append(frozenset(
-                    f"with_{s.name}" for i, s in opts if i in inc
-                ))
-            flag_names = [f"with_{s.name}" for _i, s in opts]
-            # the all-include variant (longest) carries the >=2-step
-            # sanity check; the enum chains drive everything else
+        if cs.kind == "enum":
             return stateful.cep_compiled_stream(
-                spark, files_dir, sf_dir, variant_steps[-1],
-                self.within_us,
-                enum=(masks, variant_steps, flag_names),
+                *args, xs[-1], W,
+                enum=(list(cs.incl), xs, list(cs.flag_names)),
             )
-        required = [s for s in self.steps if not s.optional]
-        split = [
-            s for i, s in enumerate(required)
-            if s.contiguity == "next" and s.times == 1
-            and (s.one_or_more or (s.up_to is not None and s.up_to >= 2))
-            and i + 1 < len(required)
-            and required[i + 1].contiguity == "next"
-        ]
-        if split:
-            # r14: the both-strict oneOrMore/times(1, m) OR-split
-            # streams as one paired carry chain per quantifier variant
-            # (stateful._cep_or_split_fn), sharing the running counts —
-            # the same chain set the batch compile builds
-            if any(s.optional for s in self.steps):
-                raise ValueError(
-                    "optional() does not compose with a both-strict "
-                    "oneOrMore/times(1, m) step (the batch compile "
-                    "refuses the same combination)"
-                )
-            if self.skip != "no_skip":
-                raise ValueError(
-                    "after_match_skip does not compose with "
-                    "oneOrMore/times(n, m) annotations (the batch "
-                    "compile refuses the same combination)"
-                )
-            if len(split) > 3:
-                raise ValueError(
-                    f"{len(split)} both-strict oneOrMore/times(1, m) "
-                    "steps would enumerate "
-                    f"{2 ** len(split)} OR-variant chains — cap is 3"
-                )
-            counted = [s for s in self.steps
-                       if s.one_or_more or s.up_to is not None]
-            for c in counted:
-                if c.etype is None:
-                    raise ValueError(
-                        f"counted step {c.name!r} was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-            variant_steps = []
-            for mask in range(1 << len(split)):
-                var = []
-                for s in required:
-                    if s in split:
-                        j = split.index(s)
-                        var.append(
-                            replace(s, times=2)
-                            if mask >> j & 1
-                            else replace(s, one_or_more=False,
-                                         times=1, up_to=None)
-                        )
-                    else:
-                        var.append(s)
-                variant_steps.append(self._event_expansion(var))
-            return stateful.cep_or_split_stream(
-                spark, files_dir, sf_dir, variant_steps,
-                self.within_us,
-                [(c.name, c.etype, c.up_to) for c in counted],
-            )
-        main, variants = self.stream_chains()
-        counted = [s for s in self.steps
-                   if s.one_or_more or s.up_to is not None]
-        if counted and self.skip != "no_skip":
-            raise ValueError(
-                f"after_match_skip({self.skip!r}) does not "
-                "compose with oneOrMore/times(n, m) annotations "
-                "(the batch compile refuses the same combination)"
-            )
-        anchor_idx = None
-        if self.skip in ("skip_to_first", "skip_to_last"):
-            # expanded index of the anchor copy (first/last times-copy
-            # of the named step) — the streaming carry stamps its ap
-            # there, mirroring the batch struct's stamp_anchor hop
-            required = [s for s in self.steps if not s.optional]
-            if self.skip_step not in [s.name for s in required]:
-                raise ValueError(
-                    f"after_match_skip anchor step {self.skip_step!r} "
-                    "is not a pattern step"
-                )
-            if self.skip_step == required[0].name:
-                raise ValueError(
-                    "the after_match_skip anchor may not be the begin "
-                    "step — use skip_to_next"
-                )
-            idx = 0
-            for s in required:
-                for k in range(s.times):
-                    if s.name == self.skip_step and (
-                        k == 0 if self.skip == "skip_to_first"
-                        else k == s.times - 1
-                    ):
-                        anchor_idx = idx
-                    idx += 1
+        if cs.kind == "split":
+            return stateful.cep_or_split_stream(*args, xs, W, counted)
         return stateful.cep_compiled_stream(
-            spark, files_dir, sf_dir, main, self.within_us,
-            flag_variants=variants,
-            skip=self.skip,
-            anchor_idx=anchor_idx,
-            counted=[(c.name, c.etype, c.up_to) for c in counted],
+            *args, xs[0], W,
+            flag_variants=list(zip(cs.flag_names, xs[1:])),
+            skip=skip,
+            anchor_idx=cs.anchor_idx,
+            counted=counted,
+            nn_ets=nn,
         )
 
     def _check_open(self, name: str) -> None:
@@ -1956,113 +1349,24 @@ class CepPattern:
         window ordered by event-time microseconds: same partitioning,
         one extra in-partition sort, still zero additional
         exchanges.)"""
-        if not self.steps:
-            raise ValueError("empty pattern")
-        if self.pending_neg is not None:
-            raise ValueError(
-                f"mid-pattern notFollowedBy {self.pending_neg[0]!r} must "
-                "be followed by a positive followed_by() step (to end a "
-                "pattern with a negation, pass within=)"
-            )
-        if self.neg is not None and self.neg_within_us is None:
-            raise ValueError("notFollowedBy requires a within horizon")
-        if self.steps[-1].optional:
-            raise ValueError(
-                "the final step cannot be optional — it anchors the "
-                "match row"
-            )
-        if any(s.contiguity == "followed_by_any" for s in self.steps):
+        cset = self._chain_set()
+        if cset.kind == "any_pairs":
             return self._compile_any_pairs(df, key, ts, tiebreak)
-        required = [s for s in self.steps if not s.optional]
         order = [F.col(ts), F.col(tiebreak)]
         w_order = Window.partitionBy(key).orderBy(*order)
         w_prev = w_order.rowsBetween(Window.unboundedPreceding, -1)
 
         # counted (oneOrMore) steps: one running-count column each,
-        # shared by the main chain's struct carry and the final n_
+        # shared by the gating chains' struct carries and the final n_
         # outputs. Monotone in row order, so struct MAX stays greedy.
-        counted = [s for s in required
-                   if s.one_or_more or s.up_to is not None]
-        # r16 (r15 verdict item 8): until() × optional COMPOSES — but
-        # NOT via the k+1 annotation-chain shortcut: under stop gates
-        # the skip variant is no longer less constrained (skipping an
-        # optional WIDENS the gated gap: clean(a, b) implies
-        # clean(o, b), not vice versa), so the match gate and pools
-        # come from a FULL 2^k variant enumeration with counts and
-        # freeze riders per variant — the OR-split combination
-        # machinery (see the until-optional branch below).
-        # Strict-contiguity optional regions still refuse via the enum
-        # path's counted guard. r15 continuation: until() × terminal
-        # notFollowedBy COMPOSES — the forward RANGE negation window
-        # is orthogonal to the stop gates and the freeze arithmetic
-        # (streaming: the causal pool rides the watermark hold).
-        if any(s.not_next is not None for s in self.steps):
-            # r15 notNext refusals, mirrored EXACTLY in compile_stream;
-            # r16: skip strategies and gap bounds now COMPOSE — the
-            # LEAD(1) flag folds into the gated copy's predicate before
-            # any carry is built, so the position-struct skip fold and
-            # the bounded gap carries run unchanged over the gated hit
-            # columns (streaming: the one-row delayed absorption rides
-            # the skip cursors and the count-gated gap buffers — see
-            # stateful._cep_skip_fn / _gap_hits nn handling)
-            if self.steps[-1].not_next is not None:
-                raise ValueError(
-                    "a pattern cannot end in notNext (FlinkCEP "
-                    "refuses the same) — there is no following step "
-                    "to emit the match at; use a terminal "
-                    "notFollowedBy with a within horizon instead"
-                )
-            if any(s.optional for s in self.steps):
-                raise ValueError(
-                    "notNext composes with plain, counted, "
-                    "mid-negated and terminal-negated chains, skip "
-                    "strategies, gap bounds and until() (r16) — its "
-                    "combination with optional steps is not built "
-                    "(each 2^k variant chain would need its own "
-                    "pending slot; the batch compile and "
-                    "compile_stream refuse the same combination to "
-                    "keep parity)"
-                )
+        counted = list(cset.counted)
         skip_mode = self.skip != "no_skip"
-        if skip_mode and (counted or any(s.optional for s in self.steps)):
-            raise ValueError(
-                f"after_match_skip({self.skip!r}) does not "
-                "compose with optional()/oneOrMore()/times(n, m) "
-                "annotations — their per-row flags/counts don't fold "
-                "into an acceptance scan"
-            )
-        anchor = None
-        if self.skip in ("skip_to_first", "skip_to_last"):
-            names = [s.name for s in required]
-            if self.skip_step not in names:
-                raise ValueError(
-                    f"after_match_skip anchor step {self.skip_step!r} "
-                    f"is not a pattern step (steps: {names})"
-                )
-            if self.skip_step == required[0].name:
-                raise ValueError(
-                    "the after_match_skip anchor may not be the begin "
-                    "step — its event IS the match start, so the "
-                    "cursor could never advance past a start; use "
-                    "skip_to_next (FlinkCEP throws on the same "
-                    "composition)"
-                )
-            anchor = ("first" if self.skip == "skip_to_first"
-                      else "last", self.skip_step)
         w_gap = w_same = None
         if self.gap_us is not None:
             # per-gap bound (within previous_and_current, r13): the
-            # theorems that ELIDE events don't survive it — refuse
-            # those compositions loudly; everything else compiles with
-            # bounded carries (see build_chain)
-            if counted:
-                raise ValueError(
-                    "oneOrMore/times(n, m) do not compose with "
-                    "within(..., 'previous_and_current'): a repetition "
-                    "chain can bridge time the collapsed single hop "
-                    "cannot, so the existence collapse is unsound — "
-                    "use a fixed times(n)"
-                )
+            # compositions whose theorems ELIDE events are refused by
+            # the front end; everything else compiles with bounded
+            # carries (see build_chain)
             # r14: mid-pattern notFollowedBy COMPOSES with the gap
             # bound — NOT via latest-prefix-row dominance (a bounded
             # carry is not monotone over non-null rows, so that
@@ -2171,7 +1475,7 @@ class CepPattern:
                     nq_cols[s.name] = c
 
         def build_chain(cur, steps, prefix, with_counts, with_pos=False,
-                        with_anchor=None):
+                        anchor_idx=None):
             """Materialize one hit/carry chain; expand times(n) into n
             single-occurrence transitions — the carry consumes strictly-
             earlier rows, so copies bind distinct events (relaxed → MAX
@@ -2181,10 +1485,10 @@ class CepPattern:
             row order — ties on h resolve to the latest start row, the
             greedy chain). A step with neg_before compiles its
             transition as the gated latest-prefix-row connect (see
-            module docstring: latest-row dominance). with_anchor
-            (r13, skip_to_first/skip_to_last) = ('first'|'last', step
-            name): an `ap` field rides the struct, -1 until the
-            anchor hop REPLACES it with the current row position — the
+            module docstring: latest-row dominance). anchor_idx
+            (r13, skip_to_first/skip_to_last) = the expanded index of
+            the anchor copy: an `ap` field rides the struct, -1 until
+            the anchor hop REPLACES it with the current row position — the
             trailing lexicographic field only breaks exact (h, sp)
             ties, i.e. chains sharing the greedy start row resolve to
             the latest anchor event. Returns (df, final carry column,
@@ -2193,12 +1497,7 @@ class CepPattern:
             for s in steps:
                 inner = "next" if s.consecutive else "followed_by"
                 for k in range(s.times):
-                    at_anchor = (
-                        with_anchor is not None
-                        and s.name == with_anchor[1]
-                        and (k == 0 if with_anchor[0] == "first"
-                             else k == s.times - 1)
-                    )
+                    at_anchor = len(expanded) == anchor_idx
                     p_eff = s.pred
                     # notNext (r15): the LAST copy's bind is
                     # infeasible when its direct successor matches —
@@ -2222,18 +1521,15 @@ class CepPattern:
             # could report a pool below its lower bound — probed by
             # test_until_prefix_pool_entry_relative). entry_stamp maps
             # the expanded ENTRY index -> the counted ks to restamp
-            # there; until_first[k] == 1 means the entry IS the begin
-            # row and start_value stamps it (unchanged fast path).
+            # there; an entry at index 0 IS the begin row and
+            # start_value stamps it (unchanged fast path).
             entry_stamp: dict = {}
             if with_counts:
-                fi = 0
-                for s in steps:
-                    for kk in range(s.times):
-                        if s.until is not None and kk == 0 and fi >= 2:
-                            k_idx = counted.index(s)
-                            entry_stamp.setdefault(fi - 1, []).append(
-                                k_idx)
-                        fi += 1
+                for k, e in enumerate(
+                    self._until_entry_indices(steps, counted)
+                ):
+                    if e >= 1:
+                        entry_stamp.setdefault(e, []).append(k)
 
             def start_value(row_ts):
                 if not use_struct:
@@ -2268,7 +1564,7 @@ class CepPattern:
                     # (h, sp) lexicographic MAX = latest start ts, ties
                     # to the latest start row — the same greedy chain
                     fields.append(F.col(pos_col).alias("sp"))
-                if with_anchor is not None:
+                if anchor_idx is not None:
                     fields.append(F.lit(-1).alias("ap"))
                 return F.struct(*fields)
 
@@ -2438,255 +1734,72 @@ class CepPattern:
                 <= self.within_us
             )
 
-        if self._needs_variant_enum():
-            # STRICT-CONTIGUITY optional region (r13, r12 verdict item
-            # 3): a next() transition after an optional step means the
-            # skip variant is NOT less constrained (LAG(1) rebinds to a
-            # different predecessor when the optional is dropped), so
-            # the k+1-chain dominance shortcut is unsound. Fall back to
-            # the ground-truth semantics: enumerate all 2^k
-            # include/exclude variants of the k optional steps — each
-            # an ordinary carry chain over the SAME sort/exchange — and
-            # combine declaratively:
-            #   match    = ANY variant completes within the window
-            #   start_ts = the greatest satisfied variant's max start
-            #              (greedy max-start ACROSS variants; for
-            #              all-relaxed patterns this provably equals
-            #              the k+1 path's answer, so the shortcut stays
-            #              the fast path when dominance holds)
-            #   with_<o> = ANY variant INCLUDING o completes
-            # 2^k chains are window-column cost, not exchanges; k is
-            # capped because each chain adds m columns to one stage.
-            if counted:
-                raise ValueError(
-                    "oneOrMore/times(n, m) repetition counts do not "
-                    "compose with optional steps in a strict-contiguity "
-                    "region: the count pool is defined against the "
-                    "single greedy gating chain, which the 2^k variant "
-                    "enumeration replaces — make the optional step "
-                    "required or use relaxed contiguity"
-                )
-            opts = [(i, s) for i, s in enumerate(self.steps) if s.optional]
-            if len(opts) > 6:
-                raise ValueError(
-                    f"{len(opts)} optional steps under strict "
-                    "contiguity would enumerate "
-                    f"{2 ** len(opts)} variant chains — cap is 6 "
-                    "(64 chains); restructure the pattern"
-                )
-            oks, starts = [], []
-            for mask in range(1 << len(opts)):
-                inc = {i for j, (i, _s) in enumerate(opts)
-                       if mask >> j & 1}
-                chain = [s for i, s in enumerate(self.steps)
-                         if not s.optional or i in inc]
-                cur, vcol, v_start = build_chain(
-                    cur, chain, f"_cep_e{mask}_", with_counts=False
-                )
-                oks.append(within_ok(vcol, v_start))
-                starts.append(F.when(oks[-1], v_start(vcol)))
-            match = oks[0]
-            for okv in oks[1:]:
-                match = match | okv
-            start_expr = F.greatest(*starts)
-            flags = []
-            for j, (_i, o) in enumerate(opts):
-                fl = None
-                for mask in range(1 << len(opts)):
-                    if mask >> j & 1:
-                        fl = oks[mask] if fl is None else fl | oks[mask]
-                flags.append(fl.alias(f"with_{o.name}"))
-            rep_counts = []
+        # Every chain of the set is an ordinary carry chain over the
+        # SAME sort/exchange. A 'plain' set's first chain gates the
+        # match and the others annotate; an 'enum' or 'split' set is
+        # OR-gated:
+        #   match    = ANY variant completes within the window
+        #   start_ts = the greedy max-start ACROSS satisfied variants —
+        #              the null-skipping GREATEST of their carries,
+        #              lexicographic over the (h, c0.., u..) structs
+        #              (count fields are identical at equal start rows,
+        #              and an unknown freeze rider is the +inf sentinel)
+        #   with_<o> = ANY variant INCLUDING o completes
+        # 2^k chains are window-column cost, not exchanges (the front
+        # end caps k). Only the gating chains carry counts; a skip
+        # strategy refuses annotations, so its set is one chain.
+        plain = cset.kind == "plain"
+        chain_cols, oks = [], []
+        for i, chain in enumerate(cset.chains):
+            cur, col, start_of = build_chain(
+                cur, chain, f"_cep_c{i}_", with_counts=i == 0 or not plain,
+                with_pos=skip_mode, anchor_idx=cset.anchor_idx,
+            )
+            if i == 0:
+                gate_start = start_of
+            chain_cols.append(col)
+            oks.append(within_ok(col, start_of))
+        if plain:
+            prev_col = chain_cols[0]
         else:
-            # r14 (r13 verdict item 3): a counted step with lower
-            # bound 1 whose ENTERING and LEAVING transitions are both
-            # strict has no single times-expansion — the 1-rep match
-            # binds ONE event to both LAG(1) edges while a k>=2-rep
-            # match anchors two distinct events. Compile it as an OR
-            # OF TWO CHAINS per such step: the 1-rep variant (plain
-            # strict hop, quantifier stripped) and the >=2-rep variant
-            # (the r13-sound times(2[, m]) both-strict expansion).
-            # Every variant is an ordinary carry chain in the already-
-            # proven class, so per-variant greedy dominance holds; the
-            # match is EXISTS-any, and start/counts come from the
-            # greedy max-start variant (lexicographic struct GREATEST
-            # across satisfied chains — the same combination rule as
-            # the 2^k optional enumeration). times(1, 1) needs no
-            # split: its only variant IS the 1-rep chain.
-            split = [
-                s for i, s in enumerate(required)
-                if s.contiguity == "next" and s.times == 1
-                and (s.one_or_more
-                     or (s.up_to is not None and s.up_to >= 2))
-                and i + 1 < len(required)
-                and required[i + 1].contiguity == "next"
-            ]
-            if split and any(s.not_next is not None for s in self.steps):
-                raise ValueError(
-                    "notNext does not compose with a both-strict "
-                    "oneOrMore/times(1, m) step in the same pattern — "
-                    "the OR-split streaming machine has no delayed "
-                    "absorption; relax one edge of the split step"
-                )
-            # r16 (r15 verdict item 2): until() COMPOSES with a
-            # both-strict split elsewhere in the pattern — the freeze
-            # riders (u fields, nondecreasing, unknown == +inf
-            # sentinel) ride each variant's (h, c..) struct and the
-            # cross-variant GREATEST compares them lexicographically
-            # AFTER the counts, so two variants tying on (h, c..)
-            # share a start row and therefore the same u; fuzzed in
-            # tests/test_properties.py::test_cep_until_or_split_fuzz.
-            # (until on the split step itself is impossible: the
-            # builder requires a relaxed-entered loop.)
-            if split and any(s.optional for s in self.steps):
-                raise ValueError(
-                    "optional() does not compose with a both-strict "
-                    "oneOrMore/times(1, m) step — each annotation "
-                    "chain would itself need the OR-of-two-chains "
-                    "split; make the optional step required or relax "
-                    "one edge of the repetition"
-                )
-            if len(split) > 3:
-                raise ValueError(
-                    f"{len(split)} both-strict oneOrMore/times(1, m) "
-                    "steps would enumerate "
-                    f"{2 ** len(split)} OR-variant chains — cap is 3 "
-                    "(8 chains); restructure the pattern"
-                )
-            if split:
-                # skip/gap/mid-negation compositions are already
-                # refused above through the counted-step guards
-                chain_cols = []
-                start_of = None
-                for mask in range(1 << len(split)):
-                    var = []
-                    for s in required:
-                        if s in split:
-                            j = split.index(s)
-                            var.append(
-                                replace(s, times=2)
-                                if mask >> j & 1
-                                else replace(s, one_or_more=False,
-                                             times=1, up_to=None)
-                            )
-                        else:
-                            var.append(s)
-                    cur, vcol, start_of = build_chain(
-                        cur, var, f"_cep_s{mask}_", with_counts=True
-                    )
-                    chain_cols.append(vcol)
-                oks = [within_ok(c, start_of) for c in chain_cols]
-                # null-skipping GREATEST of the satisfied chains'
-                # carry structs: non-null iff ANY variant completed
-                # within the window, and lexicographic (h, c0..) max
-                # = greedy max-start across variants (count fields
-                # are identical at equal start rows)
-                winner = F.greatest(*[
-                    F.when(ok, F.col(c))
-                    for ok, c in zip(oks, chain_cols)
-                ])
-                prev_col = "_cep_or"
-                cur = cur.withColumn(prev_col, winner)
-                flags = []
-            elif any(s.until is not None for s in self.steps) \
-                    and any(s.optional for s in self.steps):
-                # r16 (r15 verdict item 8): until × optional — the
-                # skip-variant dominance shortcut is UNSOUND under
-                # stop gates (excluding an optional widens the gated
-                # gap: the A-to-B gap must be stop-clean where the
-                # O-to-B gap need not be), so BOTH the match gate and
-                # the pools enumerate all 2^k include/exclude
-                # variants, each a full counted chain with gates and
-                # freeze riders, combined exactly like the OR-split:
-                # EXISTS-any match, lexicographic (h, c.., u..)
-                # GREATEST winner, flags = any including variant
-                # completes. Brute-force fuzz:
-                # tests/test_properties.py::test_cep_until_optional_fuzz
-                opts = [(i, s) for i, s in enumerate(self.steps)
-                        if s.optional]
-                if len(opts) > 6:
-                    raise ValueError(
-                        f"{len(opts)} optional steps would enumerate "
-                        f"{2 ** len(opts)} until-gated variant chains "
-                        "— cap is 6 (64 chains); restructure the "
-                        "pattern"
-                    )
-                chain_cols = []
-                start_of = None
-                for mask in range(1 << len(opts)):
-                    inc = {i for j, (i, _s) in enumerate(opts)
-                           if mask >> j & 1}
-                    chain = [s for i, s in enumerate(self.steps)
-                             if not s.optional or i in inc]
-                    cur, vcol, start_of = build_chain(
-                        cur, chain, f"_cep_u{mask}_", with_counts=True
-                    )
-                    chain_cols.append(vcol)
-                oks = [within_ok(c, start_of) for c in chain_cols]
-                winner = F.greatest(*[
-                    F.when(ok, F.col(c))
-                    for ok, c in zip(oks, chain_cols)
-                ])
-                prev_col = "_cep_uo"
-                cur = cur.withColumn(prev_col, winner)
-                flags = []
-                for j, (_i, o) in enumerate(opts):
-                    fl = None
-                    for mask in range(1 << len(opts)):
-                        if mask >> j & 1:
-                            fl = (oks[mask] if fl is None
-                                  else fl | oks[mask])
-                    flags.append(fl.alias(f"with_{o.name}"))
-            else:
-                # main chain (required steps) gates the match; one
-                # extra chain per optional step computes its
-                # annotation flag
-                cur, prev_col, start_of = build_chain(
-                    cur, required, "_cep_h", with_counts=True,
-                    with_pos=skip_mode, with_anchor=anchor
-                )
-                flags = []
-                for j, o in enumerate(
-                    s for s in self.steps if s.optional
-                ):
-                    variant = [s for s in self.steps
-                               if not s.optional or s is o]
-                    cur, vcol, v_start = build_chain(
-                        cur, variant, f"_cep_v{j}_h", with_counts=False
-                    )
-                    flags.append(
-                        within_ok(vcol, v_start).alias(f"with_{o.name}")
-                    )
+            prev_col = "_cep_win"
+            cur = cur.withColumn(prev_col, F.greatest(*[
+                F.when(ok, F.col(c)) for ok, c in zip(oks, chain_cols)
+            ]))
+        flags = [
+            reduce(operator.or_, [ok for ok, inc in zip(oks, cset.incl)
+                                  if f in inc]).alias(f)
+            for f in cset.flag_names
+        ]
+        match = within_ok(prev_col, gate_start)
+        start_expr = gate_start(prev_col)
 
-            match = within_ok(prev_col, start_of)
-            start_expr = start_of(prev_col)
-
-            rep_counts = []
-            for k, s in enumerate(counted):
-                # pool = s-pred events in (start_row, match_row]:
-                # count-before-match (+1 if the match row itself
-                # matches) minus count-up-to-and-including-start (the
-                # carried c_k). With until (r15), the pool is further
-                # clamped at the carried freeze value u_k = the count
-                # just before the first stop event after the start —
-                # LEAST(incl-count-at-match, u_k) - c_k counts exactly
-                # the repetitions in (start, first-stop) ∩ (start,
-                # match], and the per-copy gates guarantee it covers
-                # the bound repetitions
-                incl = (
-                    F.col(cnt_cols[s.name])
-                    + F.when(s.pred, F.lit(1)).otherwise(F.lit(0))
-                )
-                if s.until is not None:
-                    incl = F.least(incl, F.col(prev_col)[f"u{k}"])
-                pool = incl - F.col(prev_col)[f"c{k}"]
-                if s.up_to is not None:
-                    # times(n, m): the range's upper bound caps how
-                    # many repetitions a match may absorb; pool >= n is
-                    # guaranteed (the n chained events live in the
-                    # span)
-                    pool = F.least(pool, F.lit(s.up_to))
-                rep_counts.append(pool.cast("bigint").alias(f"n_{s.name}"))
+        rep_counts = []
+        for k, s in enumerate(counted):
+            # pool = s-pred events in (start_row, match_row]:
+            # count-before-match (+1 if the match row itself
+            # matches) minus count-up-to-and-including-start (the
+            # carried c_k). With until (r15), the pool is further
+            # clamped at the carried freeze value u_k = the count
+            # just before the first stop event after the start —
+            # LEAST(incl-count-at-match, u_k) - c_k counts exactly
+            # the repetitions in (start, first-stop) ∩ (start,
+            # match], and the per-copy gates guarantee it covers
+            # the bound repetitions
+            incl = (
+                F.col(cnt_cols[s.name])
+                + F.when(s.pred, F.lit(1)).otherwise(F.lit(0))
+            )
+            if s.until is not None:
+                incl = F.least(incl, F.col(prev_col)[f"u{k}"])
+            pool = incl - F.col(prev_col)[f"c{k}"]
+            if s.up_to is not None:
+                # times(n, m): the range's upper bound caps how
+                # many repetitions a match may absorb; pool >= n is
+                # guaranteed (the n chained events live in the
+                # span)
+                pool = F.least(pool, F.lit(s.up_to))
+            rep_counts.append(pool.cast("bigint").alias(f"n_{s.name}"))
 
         out_cols = [
             F.col(key),
@@ -2701,7 +1814,7 @@ class CepPattern:
                 F.col(prev_col)["sp"].alias("_start_pos"),
                 F.col(pos_col).alias("_match_pos"),
             ]
-            if anchor is not None:
+            if cset.anchor_idx is not None:
                 out_cols.append(
                     F.col(prev_col)["ap"].alias("_anchor_pos")
                 )

@@ -489,6 +489,29 @@ def cep_times_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFr
 # ---------------------------------------------------------------------------
 
 
+def _cep_events(pdf_iter) -> pd.DataFrame | None:
+    """One micro-batch of a key's events for a keyed CEP machine: the
+    non-empty Arrow chunks concatenated and sorted by (ts, event_id);
+    None when the batch holds no rows. Every machine encodes "no hit
+    yet" as -1 in epoch-µs state slots, so a pre-1970 event time
+    (negative µs) would be indistinguishable from no hit and silently
+    diverge from the batch compile, which handles such timestamps
+    fine — refuse it loudly instead."""
+    chunks = [p for p in pdf_iter if len(p)]
+    if not chunks:
+        return None
+    pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
+    tmin = _ts_us(pdf["ts"]).min()
+    if tmin < 0:
+        raise ValueError(
+            "CepPattern.compile_stream requires event times >= "
+            f"1970-01-01 (epoch µs {tmin} < 0 collides with the -1 "
+            "no-hit state sentinel; the batch CepPattern.compile has no "
+            "such limit)"
+        )
+    return pdf
+
+
 def _cep_chain_hits(steps, C, L, BP, LQ, etype, t):
     """One row's hit vector for one expanded chain, evaluated against
     the PRE-row state (the batch plan's strictly-before frames). A
@@ -581,12 +604,6 @@ def _cep_compiled_fn(chains: list, within_us, counted=None, enum=None):
     sizes = [len(steps) - 1 for _, steps in chains]
     if enum is not None:
         enum_masks, flag_names = enum
-        if counted:
-            raise ValueError(
-                "repetition counts do not compose with the enum-gated "
-                "variant chains (the batch compile refuses the same "
-                "combination)"
-            )
     else:
         enum_masks = None
         flag_names = [name for name, _ in chains[1:]]
@@ -624,23 +641,9 @@ def _cep_compiled_fn(chains: list, within_us, counted=None, enum=None):
         QCs = vals[off:off + K]
         off += K
         pos = vals[off]
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        # the state encoding uses -1 as the 'no hit yet' sentinel for
-        # epoch-µs carries, so a pre-1970 event time (negative µs) would
-        # be indistinguishable from no-hit and silently diverge from
-        # the batch compile, which handles such timestamps fine (r11
-        # advice). Refuse loudly instead — event streams with pre-epoch
-        # event times need a shifted encoding, not a wrong answer.
-        _tmin = _ts_us(pdf["ts"]).min()
-        if _tmin < 0:
-            raise ValueError(
-                f"cep_compiled_stream requires event times >= 1970-01-01 "
-                f"(epoch µs {_tmin} < 0 collides with the -1 no-hit state "
-                "sentinel; the batch CepPattern.compile has no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for nm in cnt_names:
             out[f"n_{nm}"] = []
@@ -785,16 +788,9 @@ def _cep_or_split_fn(chains: list, within_us, counted):
         QCs = vals[off:off + K]
         off += K
         pos = vals[off]
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for nm in cnt_names:
             out[f"n_{nm}"] = []
@@ -1006,16 +1002,9 @@ def _cep_or_split_neg_fn(chains: list, within_us, counted, neg_et,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
 
         def ok(v, t):
             return v >= 0 and (within_us is None or t - v <= within_us)
@@ -1194,16 +1183,9 @@ def _cep_enum_neg_fn(chains: list, within_us, enum_masks, flag_names,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
 
         def ok(v, t):
             return v >= 0 and (within_us is None or t - v <= within_us)
@@ -1346,17 +1328,9 @@ def _cep_skip_fn(steps, within_us, strategy="skip_past_last_event",
             Ppos = vals[base + 2 + 3 * n:base + 2 + 4 * n]
         else:
             Pts = Psp = Pap = Ppos = None
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        _tmin = _ts_us(pdf["ts"]).min()
-        if _tmin < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
@@ -1541,16 +1515,9 @@ def _cep_compiled_neg_fn(chains, within_us, counted, neg_et,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
 
         def ok(v, t):
             return v >= 0 and (within_us is None or t - v <= within_us)
@@ -1645,8 +1612,6 @@ def cep_compiled_neg_stream(
     )
     chains = [(None, main)] + [(nm, st) for nm, st in flag_variants]
     counted = list(counted) if counted else []
-    if len(main) < 2:
-        raise ValueError("streaming compile needs >= 2 positive steps")
     fields = (
         ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT",
          "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
@@ -1749,16 +1714,9 @@ def _cep_skip_neg_fn(steps, within_us, strategy, anchor_idx,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
             pdf["event_type"].to_numpy(),
@@ -1854,8 +1812,6 @@ def cep_skip_neg_stream(
     ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
         "ts", "0 seconds"
     )
-    if len(steps) < 2:
-        raise ValueError("skip-negation stream needs >= 2 steps")
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
     fields = (
         ["cts ARRAY<BIGINT>", "csp ARRAY<BIGINT>",
@@ -1981,16 +1937,9 @@ def _cep_gap_skip_neg_fn(steps, within_us, gap_us, strategy,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
             pdf["event_type"].to_numpy(),
@@ -2034,9 +1983,6 @@ def cep_gap_skip_neg_stream(
     ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
         "ts", "0 seconds"
     )
-    n = len(steps) - 1
-    if n < 1:
-        raise ValueError("gap-skip-negation stream needs >= 2 steps")
     fields = _gap_skip_state_fields(steps, pend=True, nn_ets=nn_ets)
     return ev.groupBy("user_id").applyInPandasWithState(
         _cep_gap_skip_neg_fn(list(steps), within_us, gap_us, strategy,
@@ -2125,17 +2071,9 @@ def _cep_terminal_neg_fn(steps, within_us, neg_et, neg_within_us):
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        _tmin = _ts_us(pdf["ts"]).min()
-        if _tmin < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
             pdf["event_type"].to_numpy(),
@@ -2520,17 +2458,9 @@ def _cep_gap_fn(steps, within_us, gap_us, nn_ets=None):
             qc = [0] * n if has_neg else None
             prev_ts = -1
             pn = [[-1] * n, [-1] * n, [-1] * n] if has_nn else None
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        _tmin = _ts_us(pdf["ts"]).min()
-        if _tmin < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
@@ -2662,16 +2592,9 @@ def _cep_gap_skip_fn(steps, within_us, gap_us, strategy,
             L = [[-1] * n, [-1] * n, [-1] * n]
             prev_ts, pos, cursor = -1, 0, -1
             pn = ([[-1] * n for _ in range(5)] if has_nn else None)
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
@@ -2820,16 +2743,9 @@ def _cep_gap_neg_fn(steps, within_us, gap_us, neg_et, neg_within_us,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
             pdf["event_type"].to_numpy(),
@@ -2878,8 +2794,6 @@ def cep_gap_negation_stream(
         "ts", "0 seconds"
     )
     n = len(steps) - 1
-    if n < 1:
-        raise ValueError("gap-negation stream needs >= 2 steps")
     has_mneg = any(st[2] is not None for st in steps)
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
     fields = (
@@ -2964,16 +2878,9 @@ def _cep_gap_enum_fn(variant_steps, within_us, gap_us, incl_flags,
             L = [[-1] * ns[v] for v in range(nvar)]
             qc = [[0] * ns[v] for v in range(nvar)] if has_mneg else []
             prev_ts = -1
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": [],
                **{f: [] for f in flag_names}}
         for eid, etype, t in zip(
@@ -3130,16 +3037,9 @@ def _cep_gap_enum_neg_fn(variant_steps, within_us, gap_us, incl_flags,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         for eid, etype, t in zip(
             pdf["event_id"].to_numpy(),
             pdf["event_type"].to_numpy(),
@@ -3284,15 +3184,12 @@ def cep_terminal_negation_stream(
     ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
         "ts", "0 seconds"
     )
-    n = len(steps) - 1
     fields = (
         ["c ARRAY<BIGINT>", "l ARRAY<BIGINT>",
          "bp ARRAY<BIGINT>", "lq ARRAY<BIGINT>", "pos BIGINT",
          "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
          "pend_sus ARRAY<BIGINT>"]
     )
-    if n < 1:
-        raise ValueError("terminal-negation stream needs >= 2 steps")
     return ev.groupBy("user_id").applyInPandasWithState(
         _cep_terminal_neg_fn(list(steps), within_us, neg_et,
                              neg_within_us),
@@ -3465,16 +3362,9 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for nm in cnt_names:
             out[f"n_{nm}"] = []
@@ -3844,16 +3734,9 @@ def _cep_not_next_fn(steps, within_us, counted, nn_ets, neg_et=None,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for nm in cnt_names:
             out[f"n_{nm}"] = []
@@ -3996,8 +3879,6 @@ def cep_not_next_stream(
     ev = _events_stream(spark, files_dir, sf_dir)
     if neg_et is not None:
         ev = ev.withWatermark("ts", "0 seconds")
-    if len(steps) < 2:
-        raise ValueError("streaming compile needs >= 2 positive steps")
     fields = ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"]
     if neg_et is not None:
         fields += ["pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
@@ -4034,8 +3915,6 @@ def cep_until_stream(
     ev = _events_stream(spark, files_dir, sf_dir)
     if neg_et is not None:
         ev = ev.withWatermark("ts", "0 seconds")
-    if len(steps) < 2:
-        raise ValueError("streaming compile needs >= 2 positive steps")
     fields = ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"]
     if neg_et is not None:
         fields += ["pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
@@ -4192,16 +4071,9 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
                 )
             return
 
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
+        pdf = _cep_events(pdf_iter)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        if _ts_us(pdf["ts"]).min() < 0:
-            raise ValueError(
-                "cep_compiled_stream requires event times >= 1970-01-01 "
-                "(the -1 no-hit state sentinel; the batch compile has "
-                "no such limit)"
-            )
         out = {"match_id": [], "match_us": [], "start_us": []}
         for nm in cnt_names:
             out[f"n_{nm}"] = []
@@ -4387,8 +4259,6 @@ def cep_until_split_stream(
     ev = _events_stream(spark, files_dir, sf_dir)
     if neg_et is not None:
         ev = ev.withWatermark("ts", "0 seconds")
-    if any(len(steps) < 2 for steps in variant_steps):
-        raise ValueError("streaming compile needs >= 2 positive steps")
     flag_names = list(flag_names or [])
     fields = ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"]
     if neg_et is not None:
@@ -4434,17 +4304,12 @@ def cep_compiled_stream(
     causal). Terminal negation does NOT route here: compile_stream
     sends it to cep_terminal_negation_stream (r13), which holds
     candidates in keyed state until the watermark passes match_ts + T
-    — a watermark-delayed hold, not an interval join."""
-    if len(steps) < 2:
-        raise ValueError("streaming compile needs >= 2 positive steps")
+    — a watermark-delayed hold, not an interval join. Like every
+    cep_*_stream wrapper it trusts its arguments: compile_stream's
+    front end (CepPattern._chain_set) has refused the compositions no
+    machine implements, and patterns under 2 positive steps."""
     ev = _events_stream(spark, files_dir, sf_dir)
     if skip != "no_skip":
-        if flag_variants:
-            raise ValueError(
-                "after_match_skip does not compose with optional-step "
-                "annotation chains (the batch builder refuses the same "
-                "combination)"
-            )
         anchored = skip in ("skip_to_first", "skip_to_last")
         has_nn = (nn_ets is not None
                   and any(e is not None for e in nn_ets))

@@ -2264,7 +2264,7 @@ def test_until_prefix_pool_entry_relative(spark):
     cnt_steps = [s for s in pat.steps
                  if s.one_or_more or s.up_to is not None]
     fn = _cep_until_fn(
-        pat._until_expansion(), 100 * 1_000_000,
+        pat._event_expansion(pat.steps), 100 * 1_000_000,
         [("b", "B", None, "U")],
         entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
     )
@@ -2586,3 +2586,186 @@ def test_followed_by_any_plan_and_rules(spark, sf_small):
                  .followed_by_any("b", etype="B"))
     with pytest.raises(ValueError, match="requires within"):
         unbounded.compile(None)
+
+
+# -- batch/stream parity of the shared front end ------------------------
+
+_GRID_AXES = (
+    ("mid", ("followed_by", "next")),
+    ("quant", (None, "one_or_more", "times2", "times1_3")),
+    ("optional", (False, True)),
+    ("mid_neg", (False, True)),
+    ("not_next", (False, True)),
+    ("until", (False, True)),
+    ("term_neg", (False, True)),
+    ("skip", ("no_skip", "skip_past_last_event", "skip_to_last")),
+    ("gap", (False, True)),
+    ("leave", ("followed_by", "next")),
+)
+
+# refusals only compile_stream makes (keyed state needs row-evaluable
+# predicates and at least one transition to carry)
+_STREAM_ONLY = ("compile_stream needs at least 2 positive steps",
+                "was built from a Column predicate")
+
+
+def _grid_pattern(combo, typed=True):
+    """a -mid-> b[quant][until][notNext] [-> o optional] [no q] -leave-> c
+    within 1 hour [gap 10 min] [no t within 5 min] [skip]. Untyped
+    steps carry a placeholder predicate: enough for the builder's
+    verdict, without a Column per step."""
+    (mid, quant, optional, mid_neg, not_next, until, term_neg, skip, gap,
+     leave) = combo
+
+    def on(name):
+        return {"etype": name.upper()} if typed else {"pred": name}
+
+    p = getattr(CepPattern.begin("a", **on("a")), mid)("b", **on("b"))
+    if quant == "one_or_more":
+        p = p.one_or_more()
+    elif quant == "times2":
+        p = p.times(2)
+    elif quant == "times1_3":
+        p = p.times(1, 3)
+    if until:
+        p = p.until("u", **on("u"))
+    if not_next:
+        p = p.not_next("x", **on("x"))
+    if optional:
+        p = p.followed_by("o", **on("o")).optional()
+    if mid_neg:
+        p = p.not_followed_by("q", **on("q"))
+    p = getattr(p, leave)("c", **on("c")).within("1 hour")
+    if gap:
+        p = p.within("10 minutes", "previous_and_current")
+    if term_neg:
+        p = p.not_followed_by("t", within="5 minutes", **on("t"))
+    if skip != "no_skip":
+        p = p.after_match_skip(skip, "b" if skip == "skip_to_last" else None)
+    return p
+
+
+def _parity_grid(typed=True) -> list:
+    """Every combination of _GRID_AXES the builder accepts, as
+    (axis values, pattern). Builder refusals are shared by both
+    compilers, so they are not part of the parity question."""
+    import itertools
+
+    out = []
+    for combo in itertools.product(*(vals for _, vals in _GRID_AXES)):
+        try:
+            out.append((combo, _grid_pattern(combo, typed)))
+        except ValueError:
+            continue
+    return out
+
+
+def _pairwise(rows: list) -> list:
+    """Greedy subset of `rows` that covers every pair of axis values
+    some row covers (first row wins ties, so the subset is fixed)."""
+    import itertools
+
+    def pairs(combo):
+        return {(i, combo[i], j, combo[j])
+                for i, j in itertools.combinations(range(len(combo)), 2)}
+
+    todo = set().union(*(pairs(c) for c, _ in rows))
+    picked = []
+    while todo:
+        best = max(rows, key=lambda r: len(pairs(r[0]) & todo))
+        picked.append(best)
+        todo -= pairs(best[0])
+    return picked
+
+
+def _parity_extras() -> list:
+    """Hand cases the grid does not reach: a dangling mid-pattern
+    negation (no within=, no following step) on every stream route,
+    and single-step patterns, which only compile() accepts."""
+    A = CepPattern.begin("a", etype="A")
+    ab = A.followed_by("b", etype="B")
+    dangle = [
+        ab.within(10),
+        ab.within(10, "previous_and_current"),
+        ab.one_or_more().until("u", etype="U").followed_by("c", etype="C"),
+        ab.not_next("x", etype="X").followed_by("c", etype="C"),
+        A.followed_by("o", etype="O").optional().next("c", etype="C"),
+        A.next("b", etype="B").one_or_more().next("c", etype="C"),
+        ab.followed_by("c", etype="C")
+        .after_match_skip("skip_past_last_event"),
+    ]
+    single = [
+        A,
+        A.within(10),
+        A.within(10, "previous_and_current"),
+        A.not_followed_by("t", etype="T", within=5),
+        A.after_match_skip("skip_past_last_event"),
+    ]
+    return ([(("dangling", i), p.not_followed_by("n", etype="N"))
+             for i, p in enumerate(dangle)]
+            + [(("single", i), p) for i, p in enumerate(single)])
+
+
+def _outcome(build):
+    try:
+        build()
+    except ValueError as e:
+        return str(e)
+    return None
+
+
+def test_compile_and_compile_stream_accept_alike(spark, sf_small,
+                                                 tmp_path_factory):
+    """One front end: compile() and compile_stream() accept or refuse
+    every composition alike — with the same message — except for the
+    stream-only rules. Covers every pair of grid axis values plus the
+    hand cases; a single-step pattern compiles in batch and is refused
+    by the one stream-only message. The full grid is too slow for
+    tier-1 (every compile() analyses eagerly)."""
+    from sparkflow.streaming import stateful
+
+    stream_dir = stateful.split_events_to_files(
+        spark, sf_small, str(tmp_path_factory.mktemp("cep_parity")), 2
+    )
+    df = table(spark, sf_small, "events")
+    cases = [(c, _grid_pattern(c))
+             for c, _ in _pairwise(_parity_grid(typed=False))]
+    cases += _parity_extras()
+    assert len(cases) >= 20
+    diverged = []
+    for axes, pat in cases:
+        batch = _outcome(lambda: pat.compile(df))
+        stream = _outcome(
+            lambda: pat.compile_stream(spark, stream_dir, sf_small))
+        if axes[0] == "single":
+            ok = batch is None and stream is not None \
+                and stream.startswith(_STREAM_ONLY[0])
+        elif stream is not None and any(m in stream for m in _STREAM_ONLY):
+            ok = batch is None
+        else:
+            ok = batch == stream
+        if not ok:
+            diverged.append((axes, batch, stream))
+    assert not diverged, diverged
+
+
+def test_stream_refuses_pre_1970_event_times(spark, sf_small, tmp_path):
+    """The keyed machines encode "no hit yet" as -1 epoch µs, so an
+    event before 1970-01-01 must fail the streaming query loudly (the
+    batch compile has no such limit)."""
+    from pyspark.errors import StreamingQueryException
+
+    from sparkflow.streaming import stateful
+
+    rows = [(1, 1, "A", -100), (1, 2, "B", -50), (1, 3, "C", -10)]
+    files = str(tmp_path / "pre1970")
+    (spark.createDataFrame(
+        rows, "user_id BIGINT, event_id BIGINT, event_type STRING, sec INT")
+     .withColumn("ts", F.timestamp_seconds("sec")).drop("sec")
+     .coalesce(1).write.parquet(files))
+    pat = (CepPattern.begin("a", etype="A").followed_by("b", etype="B")
+           .followed_by("c", etype="C").within(120))
+    assert pat.compile(spark.read.parquet(files)).count() == 1
+    with pytest.raises(StreamingQueryException, match="1970"):
+        stateful.run_to_memory(
+            pat.compile_stream(spark, files, sf_small), "t_cep_pre1970")

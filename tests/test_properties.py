@@ -3584,7 +3584,7 @@ def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
     }
 
     fn = _cep_until_fn(
-        pat._until_expansion(), within_s * 1_000_000,
+        pat._event_expansion(pat.steps), within_s * 1_000_000,
         [("b", b_t, cap, u_t)],
         "A" if with_neg else None,
         neg_s * 1_000_000 if with_neg else None,
@@ -3679,7 +3679,7 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
     # streaming machine vs the batch rows
     cnt_steps = [s for s in pat.steps
                  if s.one_or_more or s.up_to is not None]
-    steps_u = pat._until_expansion()
+    steps_u = pat._event_expansion(pat.steps)
     _sx, nn_ets = pat._not_next_expansion()
     fn = _cep_until_fn(
         steps_u, within_s * 1_000_000,
@@ -4034,7 +4034,7 @@ def test_cep_until_optional_state_fuzz(streams, types, opt_pos,
         inc = {i for j, (i, _s) in enumerate(opts) if mask >> j & 1}
         chain = [s for i, s in enumerate(pat.steps)
                  if not s.optional or i in inc]
-        variant_steps.append(pat._until_expansion(chain))
+        variant_steps.append(pat._event_expansion(chain))
         entry.append(pat._until_entry_indices(chain, cnt_steps))
         incl.append(frozenset(
             f"with_{s.name}" for i, s in opts if i in inc))
@@ -4152,7 +4152,7 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
                                          times=1, up_to=None))
             else:
                 var.append(s)
-        variant_steps.append(pat._until_expansion(var))
+        variant_steps.append(pat._event_expansion(var))
     fn = _cep_until_split_fn(
         variant_steps, within_s * 1_000_000,
         [("b", b_t, None, u_t), ("c", c_t, cap_c, None)],
