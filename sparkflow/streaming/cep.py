@@ -175,6 +175,14 @@ _UNITS_US = {
 }
 
 
+def _cond(pred, etype):
+    """The Column a step, negation, until() or notNext condition
+    compiles to: its Column predicate, or event_type equality for an
+    etype= declaration — built only when compile() reads it, so the
+    builder and compile_stream touch no JVM."""
+    return pred if pred is not None else F.col("event_type") == etype
+
+
 def _duration_us(d) -> int:
     """'24 hours' / '30 minutes' / numeric seconds → microseconds."""
     if isinstance(d, (int, float)):
@@ -189,7 +197,8 @@ def _duration_us(d) -> int:
 @dataclass(frozen=True)
 class _Step:
     name: str
-    pred: object  # pyspark Column (untyped: Column isn't importable cheaply)
+    pred: object  # pyspark Column (untyped: Column isn't importable
+    # cheaply); None when declared with etype= (see _cond)
     contiguity: str  # 'begin' | 'followed_by' | 'next'
     times: int = 1
     consecutive: bool = False  # internal contiguity of the times-expansion
@@ -205,8 +214,8 @@ class _Step:
     # times(n) expansion (existence collapse — at-least-n ≡ exactly-n
     # under relaxed contiguity), the range's upper bound caps the
     # emitted n_<name> repetition count at m
-    neg_before: tuple | None = None  # (name, pred): mid-pattern negated
-    # gap between the PREVIOUS step's event and this step's event
+    neg_before: tuple | None = None  # (name, pred, etype): mid-pattern
+    # negated gap between the PREVIOUS step's event and this step's event
     until: tuple | None = None  # (name, pred, etype) — FlinkCEP
     # .until(condition) on a looping (oneOrMore/times(n, m)) step:
     # once a stop event occurs strictly after the chain start, no
@@ -254,7 +263,7 @@ class CepPattern:
     # (r13): per-TRANSITION event-time bound — every consecutive pair
     # of matched events must lie within this horizon (vs within_us,
     # FIRST_AND_LAST, the whole-chain span); both may be set
-    pending_neg: tuple = None  # (name, pred) awaiting its following step
+    pending_neg: tuple = None  # (name, pred, etype) awaiting its next step
     skip: str = "no_skip"  # after-match strategy: 'no_skip' emits every
     # match row (the default one-row-per-match-row contract);
     # 'skip_past_last_event' keeps only greedily non-overlapping
@@ -271,10 +280,8 @@ class CepPattern:
     # row-evaluable predicate, not a Column).
     @staticmethod
     def _resolve(name, pred, etype):
-        if pred is None:
-            if etype is None:
-                raise ValueError(f"step {name!r} needs pred or etype")
-            pred = F.col("event_type") == etype
+        if pred is None and etype is None:
+            raise ValueError(f"step {name!r} needs pred or etype")
         return pred
 
     @classmethod
@@ -609,7 +616,7 @@ class CepPattern:
         successor matches, so greedy dominance and every window shape
         are untouched; zero new exchanges. Streams with a ONE-ROW
         DELAYED absorption (a bind's validity is known at the next
-        event; see stateful._cep_not_next_fn). A pattern cannot END
+        event; see stateful.not_next_scan). A pattern cannot END
         in notNext (FlinkCEP refuses the same — there is no following
         step to emit at); a terminal notFollowedBy COMPOSES (r15
         same-round continuation — the held candidates are produced by
@@ -1160,7 +1167,7 @@ class CepPattern:
         a, b = self.steps
         W = self.within_us
         s_us = F.unix_micros(F.col(ts))
-        starts = df.filter(a.pred).select(
+        starts = df.filter(_cond(a.pred, a.etype)).select(
             F.col(key),
             F.col(tiebreak).alias("start_id"),
             F.col(ts).alias("start_ts"),
@@ -1170,7 +1177,7 @@ class CepPattern:
                 F.floor(s_us / W).cast("long") + 1,
             )).alias("_bin"),
         )
-        ends = df.filter(b.pred).select(
+        ends = df.filter(_cond(b.pred, b.etype)).select(
             F.col(key),
             F.col(tiebreak).alias("match_id"),
             F.col(ts).alias("match_ts"),
@@ -1202,16 +1209,17 @@ class CepPattern:
         compositions. Optional-step annotation chains, 2^k enum and
         OR-split variants ride one state tuple and emit the same
         `with_<name>` flags and `n_<name>` counts as the batch compile;
-        mid-pattern negated gaps, notNext, until() loops, gap bounds
-        and every after-match skip strategy stream as causal state;
-        TERMINAL negation holds candidates in keyed state until the
-        watermark passes match_ts + T (stateful.
-        cep_terminal_negation_stream and its composites). Output
-        timestamps in epoch µs (the stateful-twin convention).
-        Bit-equality with the batch compile is pinned by pytest across
-        micro-batch boundaries for every streaming surface (the
-        terminal-negation twin's contract is the match set — its
-        batch-only next_<neg>_ts audit column is unbounded-lookahead).
+        mid-pattern negated gaps, notNext, until() loops and gap bounds
+        stream as causal state. The after-match skip cursor and the
+        TERMINAL negation are stages of the one keyed adapter
+        (stateful.cep_keyed_fn): the skip fold runs over the machine's
+        candidates, and the negation holds them in keyed state until
+        the watermark passes match_ts + T. Output timestamps in epoch
+        µs (the stateful-twin convention). Bit-equality with the batch
+        compile is pinned by pytest across micro-batch boundaries for
+        every streaming surface (the terminal-negation twin's contract
+        is the match set — its batch-only next_<neg>_ts audit column is
+        unbounded-lookahead).
 
         Stream-only rules, on top of the front end's: every predicate
         is declared with etype= (keyed state evaluates it row by row),
@@ -1229,98 +1237,62 @@ class CepPattern:
                 "copies count) — a single-step pattern has no transition "
                 "for keyed state to carry; use compile()"
             )
-        args = (spark, files_dir, sf_dir)
-        W, gap, skip = self.within_us, self.gap_us, self.skip
-        neg = ((self.neg_etype, self.neg_within_us) if self.neg is not None
-               else (None, None))
         if cs.kind == "any_pairs":
             a, b = self.steps
-            return stateful.cep_any_pairs_stream(*args, a.etype, b.etype, W)
+            return stateful.cep_any_pairs_stream(
+                spark, files_dir, sf_dir, a.etype, b.etype, self.within_us)
+        return stateful.cep_keyed_stream(
+            spark, files_dir, sf_dir, *self._keyed_stages(cs))
+
+    def _keyed_stages(self, cs: _ChainSet) -> tuple:
+        """(carry scan, hold, skip) — the arguments of
+        stateful.cep_keyed_fn for this pattern's validated chain set
+        (any kind but 'any_pairs'): one keyed machine picked from the
+        chain shape, the terminal-negation hold ((neg etype, T) or
+        None) and the after-match skip strategy (or None)."""
+        from . import stateful
+
         xs = [self._event_expansion(c) for c in cs.chains]
+        W, gap = self.within_us, self.gap_us
+        incl, flags = list(cs.incl), list(cs.flag_names)
         counted = [(c.name, c.etype, c.up_to) for c in cs.counted]
         nn = (self._not_next_expansion()[1]
               if any(s.not_next is not None for s in self.steps) else None)
+        skip = None if self.skip == "no_skip" else self.skip
         if any(s.until is not None for s in self.steps):
             counted = [(c.name, c.etype, c.up_to,
                         c.until[2] if c.until is not None else None)
                        for c in cs.counted]
             entry = [self._until_entry_indices(c, cs.counted)
                      for c in cs.chains]
-            if cs.kind == "plain":
-                return stateful.cep_until_stream(
-                    *args, xs[0], W, counted, *neg, entry_idx=entry[0],
-                    nn_ets=nn,
-                )
-            return stateful.cep_until_split_stream(
-                *args, xs, W, counted, *neg, incl_flags=list(cs.incl),
-                flag_names=list(cs.flag_names), entry_idx=entry,
+            scan = (stateful.until_scan(xs[0], W, counted, entry[0], nn)
+                    if cs.kind == "plain" else
+                    stateful.until_split_scan(xs, W, counted, incl, flags,
+                                              entry))
+        elif gap is not None:
+            scan = (
+                stateful.gap_skip_scan(xs[0], W, gap, cs.anchor_idx, nn)
+                if skip is not None else
+                stateful.gap_enum_scan(xs, W, gap, incl, flags)
+                if cs.kind == "enum" else
+                stateful.gap_scan(xs[0], W, gap, nn)
             )
-        if gap is not None:
-            if skip != "no_skip":
-                if self.neg is not None:
-                    return stateful.cep_gap_skip_neg_stream(
-                        *args, xs[0], W, gap, skip, cs.anchor_idx, *neg,
-                        nn_ets=nn,
-                    )
-                return stateful.cep_gap_skip_stream(
-                    *args, xs[0], W, gap, skip, cs.anchor_idx, nn_ets=nn,
-                )
-            if cs.kind == "enum":
-                if self.neg is not None:
-                    return stateful.cep_gap_enum_neg_stream(
-                        *args, xs, W, gap, list(cs.incl),
-                        list(cs.flag_names), *neg,
-                    )
-                return stateful.cep_gap_enum_stream(
-                    *args, xs, W, gap, list(cs.incl), list(cs.flag_names),
-                )
-            if self.neg is not None:
-                return stateful.cep_gap_negation_stream(
-                    *args, xs[0], W, gap, *neg, nn_ets=nn,
-                )
-            return stateful.cep_gap_bound_stream(
-                *args, xs[0], W, gap, nn_ets=nn,
-            )
-        if nn is not None and skip == "no_skip":
-            return stateful.cep_not_next_stream(
-                *args, xs[0], W, counted, nn, *neg,
-            )
-        if self.neg is not None:
-            if skip != "no_skip":
-                return stateful.cep_skip_neg_stream(
-                    *args, xs[0], W, skip, cs.anchor_idx, *neg, nn_ets=nn,
-                )
-            if cs.kind == "enum":
-                return stateful.cep_enum_neg_stream(
-                    *args, xs, W, list(cs.incl), list(cs.flag_names), *neg,
-                )
-            if cs.kind == "split":
-                return stateful.cep_or_split_neg_stream(
-                    *args, xs, W, counted, *neg,
-                )
-            if cs.counted or cs.flag_names:
-                return stateful.cep_compiled_neg_stream(
-                    *args, xs[0], W, list(zip(cs.flag_names, xs[1:])),
-                    counted, *neg,
-                )
-            return stateful.cep_terminal_negation_stream(
-                *args, xs[0], W, *neg,
-            )
-        if cs.kind == "enum":
-            return stateful.cep_compiled_stream(
-                *args, xs[-1], W,
-                enum=(list(cs.incl), xs, list(cs.flag_names)),
-            )
-        if cs.kind == "split":
-            return stateful.cep_or_split_stream(*args, xs, W, counted)
-        return stateful.cep_compiled_stream(
-            *args, xs[0], W,
-            flag_variants=list(zip(cs.flag_names, xs[1:])),
-            skip=skip,
-            anchor_idx=cs.anchor_idx,
-            counted=counted,
-            nn_ets=nn,
-        )
+        elif skip is not None:
+            scan = stateful.skip_scan(xs[0], W, cs.anchor_idx, nn)
+        elif nn is not None:
+            scan = stateful.not_next_scan(xs[0], W, counted, nn)
+        elif cs.kind == "split":
+            scan = stateful.or_split_scan([(None, x) for x in xs], W,
+                                          counted)
+        elif cs.kind == "enum":
+            scan = stateful.compiled_scan([(None, x) for x in xs], W,
+                                          enum=(incl, flags))
+        else:
+            scan = stateful.compiled_scan(
+                [(None, xs[0])] + list(zip(flags, xs[1:])), W, counted)
+        hold = (None if self.neg is None
+                else (self.neg_etype, self.neg_within_us))
+        return scan, hold, skip
 
     def _check_open(self, name: str) -> None:
         if not self.steps:
@@ -1408,7 +1380,8 @@ class CepPattern:
         for k, s in enumerate(counted):
             c = f"_cep_cnt{k}"
             cur = cur.withColumn(
-                c, F.count(F.when(s.pred, F.lit(1))).over(w_prev)
+                c, F.count(F.when(_cond(s.pred, s.etype), F.lit(1)))
+                .over(w_prev)
             )
             cnt_cols[s.name] = c
         # until() freeze values (r15): nbu(x) = the repeated-step count
@@ -1430,7 +1403,8 @@ class CepPattern:
                 c,
                 F.coalesce(
                     F.min(
-                        F.when(s.until[1], F.col(cnt_cols[s.name]))
+                        F.when(_cond(*s.until[1:]),
+                               F.col(cnt_cols[s.name]))
                     ).over(w_after_rows),
                     F.lit(_NO_STOP),
                 ),
@@ -1452,7 +1426,7 @@ class CepPattern:
                     c,
                     F.coalesce(
                         F.lead(
-                            s.not_next[1].cast("boolean"), 1
+                            _cond(*s.not_next[1:]).cast("boolean"), 1
                         ).over(w_order),
                         F.lit(False),
                     ),
@@ -1469,7 +1443,7 @@ class CepPattern:
                     cur = cur.withColumn(
                         c,
                         F.count(
-                            F.when(s.neg_before[1], F.lit(1))
+                            F.when(_cond(*s.neg_before[1:]), F.lit(1))
                         ).over(w_prev),
                     )
                     nq_cols[s.name] = c
@@ -1498,7 +1472,7 @@ class CepPattern:
                 inner = "next" if s.consecutive else "followed_by"
                 for k in range(s.times):
                     at_anchor = len(expanded) == anchor_idx
-                    p_eff = s.pred
+                    p_eff = _cond(s.pred, s.etype)
                     # notNext (r15): the LAST copy's bind is
                     # infeasible when its direct successor matches —
                     # folding the LEAD flag into the predicate leaves
@@ -1546,7 +1520,7 @@ class CepPattern:
                                       .alias(f"c{k}"))
                         continue
                     c0 = F.col(cnt_cols[cs.name]) + F.when(
-                        cs.pred, F.lit(1)
+                        _cond(cs.pred, cs.etype), F.lit(1)
                     ).otherwise(F.lit(0))
                     fields.append(c0.alias(f"c{k}"))
                 # until freeze values ride AFTER the counts — nbu is
@@ -1595,7 +1569,7 @@ class CepPattern:
                     if j in ks:
                         fields.append(
                             (F.col(cnt_cols[cs.name]) + F.when(
-                                cs.pred, F.lit(1)
+                                _cond(cs.pred, cs.etype), F.lit(1)
                             ).otherwise(F.lit(0))).alias(f"c{j}")
                         )
                     else:
@@ -1617,9 +1591,9 @@ class CepPattern:
                 # gate is mutually exclusive with until (builder)
                 gate_pred = None
                 if first and s.neg_before is not None:
-                    gate_pred = s.neg_before[1]
+                    gate_pred = _cond(*s.neg_before[1:])
                 elif s.until is not None and i > 0:
-                    gate_pred = s.until[1]
+                    gate_pred = _cond(*s.until[1:])
                 if i == 0:
                     hit = F.when(pred, start_value(F.col(ts)))
                 elif first and s.neg_before is not None \
@@ -1631,7 +1605,7 @@ class CepPattern:
                     # strictly-before count iff some feasible b
                     # exists, and then v is the max carry among the
                     # feasible rows
-                    _qname, qpred, _qet = s.neg_before
+                    qpred = _cond(*s.neg_before[1:])
                     nq = F.col(nq_cols[s.name])
                     entry = F.when(
                         F.col(prev_col).isNotNull(),
@@ -1788,7 +1762,8 @@ class CepPattern:
             # the bound repetitions
             incl = (
                 F.col(cnt_cols[s.name])
-                + F.when(s.pred, F.lit(1)).otherwise(F.lit(0))
+                + F.when(_cond(s.pred, s.etype), F.lit(1))
+                .otherwise(F.lit(0))
             )
             if s.until is not None:
                 incl = F.least(incl, F.col(prev_col)[f"u{k}"])
@@ -1819,7 +1794,8 @@ class CepPattern:
                     F.col(prev_col)["ap"].alias("_anchor_pos")
                 )
         if self.neg is not None:
-            neg_name, neg_pred = self.neg
+            neg_name = self.neg[0]
+            neg_pred = _cond(self.neg[1], self.neg_etype)
             # RANGE frame over event-time µs: events with ts STRICTLY
             # greater than the match row's — the documented open
             # interval (match_ts, match_ts+T], independent of the
@@ -2458,7 +2434,7 @@ def stream_cep_both_strict_one_or_more(
     tests/test_properties.py. Same one-exchange chained-Window plan;
     the second chain is two more window columns, not a new shuffle.
     STREAMS too (r14): compile_stream routes to the 2-variant paired
-    keyed machine (stateful.cep_or_split_stream — shared running
+    keyed machine (stateful.or_split_scan — shared running
     counts, lexicographic winner), twin pytest bit-equal across
     micro-batch boundaries incl. fake-GroupState fuzz."""
     pat = (
@@ -2869,11 +2845,11 @@ def stream_cep_within_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stream_cep_midneg_gap) and the position struct riding the
     bounded GREATEST (stream_cep_skip_gap). r14:
     the gap compositions STREAM too — optional-under-gap as 2^k
-    gap-buffered variant machines (stateful._cep_gap_enum_fn),
+    gap-buffered variant machines (stateful.gap_enum_scan),
     terminal-negation+gap as the watermark hold over the buffered
-    carry (stateful._cep_gap_neg_fn), and even the triple
-    optional+negation+gap (the enum machines feeding the hold,
-    stateful._cep_gap_enum_neg_fn); twin pytests are bit-equal
+    carry (stateful.gap_scan + cep_keyed_fn's hold), and even the
+    triple optional+negation+gap (the enum machines feeding the
+    hold); twin pytests are bit-equal
     across micro-batch boundaries incl. fake-GroupState fuzz. The
     oracle unrolls the identical bounded carries; brute-force fuzz
     incl. same-second ties and both-bounds-active patterns is in
@@ -2986,7 +2962,7 @@ def stream_cep_skip_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Brute-force fuzz over random streams: tests/test_properties.py.
     STREAMS too (r14): the gap machine's buffers generalize to
     (h, sp[, ap]) position structs and the acceptance cursor is
-    causal (stateful._cep_gap_skip_fn) — twin pytest bit-equal across
+    causal (stateful.gap_skip_scan) — twin pytest bit-equal across
     micro-batch boundaries + fake-GroupState fuzz over all three
     cursor rules."""
     pat = (
@@ -3475,7 +3451,7 @@ def stream_cep_opt_midneg_gap(
     running error count. Brute-force fuzz (incl. the terminal-
     negation QUADRUPLE): test_cep_opt_midneg_gap_fuzz. STREAMS (2^k
     count-gated gap machines in one keyed state tuple —
-    _cep_gap_enum_fn with per-variant bq/qc; twin pytest + fake-
+    gap_enum_scan with per-variant bq/qc; twin pytest + fake-
     GroupState fuzz)."""
     pat = (
         CepPattern.begin("signup", etype="signup")
@@ -3576,7 +3552,7 @@ def stream_cep_or_split_neg(
     negated/positive types: test_cep_or_split_neg_fuzz. STREAMS (r15:
     the 2-variant paired keyed machine's winner and pools are causal
     at the match row, so they ride the watermark-delayed hold —
-    stateful._cep_or_split_neg_fn; twin contract = the match set
+    stateful.or_split_scan + cep_keyed_fn's hold; twin contract = the match set
     without the audit column; fake-timer-GroupState fuzz +
     availableNow twin in tests)."""
     pat = (
@@ -3658,8 +3634,8 @@ def stream_cep_next_optional_neg(
     unroll. Brute-force fuzz: test_cep_enum_neg_fuzz. STREAMS (r15:
     the enum machine's OR-gated emission and flags are causal at the
     match row, so they ride the watermark-delayed hold —
-    stateful._cep_enum_neg_fn; fake-timer-GroupState fuzz +
-    availableNow twin in tests)."""
+    stateful.compiled_scan's enum mode + the hold; fake-timer
+    GroupState fuzz + availableNow twin in tests)."""
     pat = (
         CepPattern.begin("view", etype="view")
         .next("click", etype="click")
@@ -3763,7 +3739,7 @@ def stream_cep_until(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions (incl. stop==repeat rows sitting AT the freeze):
     tests/test_properties.py::test_cep_until_fuzz. STREAMS (r15:
     paired carries + per-level freeze riders, stop events freezing
-    before the row's hits — stateful._cep_until_fn; twin pytest
+    before the row's hits — stateful.until_scan; twin pytest
     bit-equal across micro-batch boundaries + fake-GroupState
     fuzz)."""
     pat = (
@@ -3898,7 +3874,7 @@ def stream_cep_until_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles colliding:
     tests/test_properties.py::test_cep_until_or_split_fuzz. STREAMS
     (r16): one freeze-rider variant machine per quantifier expansion
-    sharing running counts (stateful._cep_until_split_fn) —
+    sharing running counts (stateful.until_split_scan) —
     fake-GroupState fuzz incl. the terminal-negation hold +
     availableNow twin."""
     pat = (
@@ -4052,7 +4028,7 @@ def stream_cep_until_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles, optional before AND after the loop:
     tests/test_properties.py::test_cep_until_optional_fuzz. STREAMS
     (r16): the 2^k variants run through the per-variant freeze-rider
-    machine with incl_flags (stateful._cep_until_split_fn);
+    machine with incl_flags (stateful.until_split_scan);
     fake-GroupState fuzz + availableNow twin."""
     pat = (
         CepPattern.begin("signup", etype="signup")
@@ -4121,7 +4097,7 @@ def stream_cep_not_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row DELAYED ABSORPTION — a bind parks in a pending keyed-state
     slot until its direct successor delivers the verdict, surviving
     micro-batch boundaries; strict hops and downstream gates read
-    only valid binds — stateful._cep_not_next_fn; twin pytest +
+    only valid binds — stateful.not_next_scan; twin pytest +
     fake-GroupState fuzz incl. the verdict event landing on the other
     side of the batch split)."""
     pat = (
@@ -4218,7 +4194,7 @@ def stream_cep_not_next_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fuzz (all four strategies × gate position):
     tests/test_properties.py::test_cep_not_next_skip_fuzz. STREAMS
     (r16): the one-row delayed absorption parks (ts, sp, ap, pos) in
-    pending state slots riding _cep_skip_fn's causal cursor —
+    pending state slots riding skip_scan's causal cursor —
     fake-GroupState fuzz + availableNow twin."""
     pat = (
         CepPattern.begin("view", etype="view")

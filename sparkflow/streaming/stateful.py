@@ -29,10 +29,11 @@ set in the test session, as it would be on a real cluster.
 
 from __future__ import annotations
 
+import bisect
 import importlib.util
 import os
 import shutil
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterator, NamedTuple, Tuple
 
 import numpy as np
 import pandas as pd
@@ -485,23 +486,25 @@ def cep_times_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# Compiled CEP patterns — the combinator's generic O(1)-state twin (r11)
+# Compiled CEP patterns — carry scans behind one keyed adapter (r11)
 # ---------------------------------------------------------------------------
 
 
-def _cep_events(pdf_iter) -> pd.DataFrame | None:
+def _cep_events(pdf_iter) -> tuple | None:
     """One micro-batch of a key's events for a keyed CEP machine: the
-    non-empty Arrow chunks concatenated and sorted by (ts, event_id);
-    None when the batch holds no rows. Every machine encodes "no hit
-    yet" as -1 in epoch-µs state slots, so a pre-1970 event time
-    (negative µs) would be indistinguishable from no hit and silently
-    diverge from the batch compile, which handles such timestamps
-    fine — refuse it loudly instead."""
+    non-empty Arrow chunks concatenated and sorted by (ts, event_id),
+    returned as (event_ids, event_types, epoch-µs times) lists; None
+    when the batch holds no rows. Every machine encodes "no hit yet"
+    as -1 in epoch-µs state slots, so a pre-1970 event time (negative
+    µs) would be indistinguishable from no hit and silently diverge
+    from the batch compile, which handles such timestamps fine —
+    refuse it loudly instead."""
     chunks = [p for p in pdf_iter if len(p)]
     if not chunks:
         return None
     pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-    tmin = _ts_us(pdf["ts"]).min()
+    ts = _ts_us(pdf["ts"])
+    tmin = ts.min()
     if tmin < 0:
         raise ValueError(
             "CepPattern.compile_stream requires event times >= "
@@ -509,7 +512,161 @@ def _cep_events(pdf_iter) -> pd.DataFrame | None:
             "no-hit state sentinel; the batch CepPattern.compile has no "
             "such limit)"
         )
-    return pdf
+    return (pdf["event_id"].tolist(), pdf["event_type"].tolist(),
+            ts.tolist())
+
+
+class CarryScan(NamedTuple):
+    """One keyed CEP machine: pure carry algebra over a key's sorted
+    micro-batch. `scan(vals, eids, etypes, ts)` takes the carry state in
+    the `fields` layout (`init()` for a new key) and returns (new state,
+    candidates). A candidate is (match_id, match_us, start_us, *riders)
+    — `riders` are its output columns after start_us (n_<name> pools,
+    with_<name> flags) — plus (start_pos, match_pos, anchor_pos) when
+    the machine keeps an after-match skip cursor at state index
+    `cursor`. cep_keyed_fn runs it."""
+
+    fields: list
+    init: Callable
+    scan: Callable
+    riders: tuple = ()
+    cursor: int | None = None
+
+
+def _pend_cols(machine: CarryScan) -> list:
+    """The terminal-negation hold's pending columns: one per candidate
+    field."""
+    return (["mid", "mus", "sus"] + [r.split()[0] for r in machine.riders]
+            + (["sp", "mp", "ap"] if machine.cursor is not None else []))
+
+
+def cep_keyed_fn(machine: CarryScan, hold=None, skip=None):
+    """The one keyed CEP adapter (applyInPandasWithState function): it
+    unpacks or initialises the GroupState, takes the key's events in
+    through _cep_events, runs the machine's carry scan, applies the two
+    optional stages and builds the output frame.
+
+    hold = (neg_etype, T), the TERMINAL-negation hold (FlinkCEP's
+    watermark-delayed answer to notFollowedBy(within=T)): candidates
+    wait in pending arrays (the state fields after the machine's own)
+    until the event-time watermark passes match_ts + T, and a negated
+    event in the open interval (match_ts, match_ts + T] kills one — a
+    negated event at the match's own timestamp does not (the batch
+    RANGE frame). A negated event only kills candidates found at
+    earlier rows (a later row's match_ts is >= its own ts), so checking
+    a batch's candidates against all its negated events at once equals
+    the per-row kill. Survivors emit on the data path once the
+    watermark has passed their deadline, or on the event-time timer
+    re-armed at the earliest held deadline (keys that go quiet).
+    Pending size is bounded by the key's matches in one T horizon, the
+    negation's inherent buffering. The batch compile's next_<neg>_ts
+    audit column is batch-only (unbounded lookahead): the twin contract
+    is the match set.
+
+    skip = an after-match strategy, the acceptance-cursor fold over the
+    emitted candidates in row order (at flush time under a hold:
+    deadlines are nondecreasing in match order, so survivors flush in
+    match-row order, and the batch compile applies the negation before
+    _skip_fold). The cursor never feeds back into the carries, so the
+    fold after the scan equals the fold inline. skip_past_last_event
+    accepts start_pos > cursor and moves it to the match row;
+    skip_to_next accepts start_pos > cursor and moves it to the start;
+    skip_to_first/skip_to_last accept start_pos >= cursor and move it
+    to the anchor copy's row (stamped by the carry)."""
+    nv = len(machine.fields)
+    cols = ["match_id", "match_us", "start_us"] + [
+        r.split()[0] for r in machine.riders]
+    flags = [c for c, r in zip(cols[3:], machine.riders)
+             if r.endswith("BOOLEAN")]
+    width = len(_pend_cols(machine))
+    anchored = skip in ("skip_to_first", "skip_to_last")
+    past = skip == "skip_past_last_event"
+
+    def fold(cands, vals):
+        cursor = vals[machine.cursor]
+        kept = []
+        for c in cands:
+            sp, mp, ap = c[-3:]
+            if sp >= cursor if anchored else sp > cursor:
+                kept.append(c)
+                cursor = mp if past else (ap if anchored else sp)
+        vals[machine.cursor] = cursor
+        return kept
+
+    def fn(
+        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            got = list(state.get)
+            vals, pend = got[:nv], [list(c) for c in got[nv:]]
+        else:
+            vals, pend = machine.init(), [[] for _ in range(width)]
+        negs = []
+        if hold is not None and state.hasTimedOut:
+            cands = []
+        else:
+            ev = _cep_events(pdf_iter)
+            if ev is None:
+                return
+            vals, cands = machine.scan(vals, *ev)
+            if hold is not None:
+                negs = [t for e, t in zip(ev[1], ev[2]) if e == hold[0]]
+        if hold is not None:
+            horizon = hold[1]
+            wm_us = state.getCurrentWatermarkMs() * 1000
+            ripe, held = [], []
+            for c in list(zip(*pend)) + cands:
+                i = bisect.bisect_right(negs, c[1])
+                if i < len(negs) and negs[i] <= c[1] + horizon:
+                    continue
+                (ripe if c[1] + horizon < wm_us else held).append(c)
+            cands = ripe
+            pend = ([[int(v) for v in col] for col in zip(*held)]
+                    or [[] for _ in range(width)])
+        if skip is not None:
+            cands = fold(cands, vals)
+        state.update(tuple(vals) + (tuple(pend) if hold is not None else ()))
+        if hold is not None and pend[1]:
+            # fire when the watermark passes the earliest deadline (ms,
+            # +1 so the timestamp is strictly beyond the watermark as
+            # Spark requires)
+            state.setTimeoutTimestamp((min(pend[1]) + horizon) // 1000 + 1)
+        if cands:
+            out = dict(zip(cols, map(list, zip(*cands))))
+            for f in flags:
+                out[f] = [bool(v) for v in out[f]]
+            yield pd.DataFrame({"user_id": [key[0]] * len(cands), **out})
+
+    return fn
+
+
+def cep_keyed_stream(
+    spark: SparkSession, files_dir: str, sf_dir: str,
+    machine: CarryScan, hold=None, skip=None,
+) -> DataFrame:
+    """True-streaming execution of a compiled CEP pattern (reached via
+    cep.CepPattern.compile_stream, which picks the machine and the
+    stages): the file stream keyed by user_id through cep_keyed_fn.
+    State = the machine's fields, plus the hold's pending arrays; a
+    hold needs a watermark (0 s delay — the file replay is in order; a
+    production deployment would set its lateness bound here) and
+    event-time timers. Output timestamps are epoch µs."""
+    ev = _events_stream(spark, files_dir, sf_dir)
+    fields = list(machine.fields)
+    if hold is not None:
+        ev = ev.withWatermark("ts", "0 seconds")
+        fields += [f"pend_{c} ARRAY<BIGINT>" for c in _pend_cols(machine)]
+    return ev.groupBy("user_id").applyInPandasWithState(
+        cep_keyed_fn(machine, hold, skip),
+        outputStructType=(
+            "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
+            "start_us BIGINT" + "".join(f", {r}" for r in machine.riders)
+        ),
+        stateStructType=", ".join(fields),
+        outputMode="append",
+        timeoutConf=(GroupStateTimeout.EventTimeTimeout
+                     if hold is not None else GroupStateTimeout.NoTimeout),
+    )
 
 
 def _cep_chain_hits(steps, C, L, BP, LQ, etype, t):
@@ -571,8 +728,8 @@ def _cep_chain_hits_paired(steps, C, L, BP, LQ, Ccs, Lcs, QCs, cnt_ets,
     return hh, hcs
 
 
-def _cep_compiled_fn(chains: list, within_us, counted=None, enum=None):
-    """Keyed-state executor for a compiled CEP pattern: `chains` =
+def compiled_scan(chains: list, within_us, counted=None, enum=None):
+    """Carry scan for a compiled CEP pattern: `chains` =
     [(flag_name_or_None, expanded_steps)], the first chain GATES the
     match (cep.CepPattern's required steps), later chains annotate
     (`with_<name>` flags for optional steps). Per chain, state = C[i]
@@ -611,20 +768,23 @@ def _cep_compiled_fn(chains: list, within_us, counted=None, enum=None):
     # that enters step j+1 (None = ungated)
     qtypes = [[st[2] for st in steps[1:]] for _, steps in chains]
     counted = list(counted) if counted else []
-    cnt_names = [c[0] for c in counted]
     cnt_ets = [c[1] for c in counted]
     up_tos = [c[2] for c in counted]
     K = len(counted)
+    n0 = sizes[0]
+    fields = []
+    for ci, n in enumerate(sizes):
+        fields += [f"{p}{ci}_{i} BIGINT"
+                   for p in ("c", "l", "bp", "lq") for i in range(n)]
+    for k in range(K):
+        fields += [f"{p}{k}_{i} BIGINT" for p in ("cc", "lc")
+                   for i in range(n0)]
+    fields += [f"qc{k} BIGINT" for k in range(K)] + ["pos BIGINT"]
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n0 = sizes[0]
-        if state.exists:
-            vals = list(state.get)
-        else:
-            vals = [-1] * (4 * sum(sizes) + 2 * K * n0)
-            vals += [0] * K + [0]
+    def ok(v, t):
+        return v >= 0 and (within_us is None or t - v <= within_us)
+
+    def scan(vals, eids, etypes, ts):
         CL, off = [], 0
         for n in sizes:
             CL.append((
@@ -641,24 +801,8 @@ def _cep_compiled_fn(chains: list, within_us, counted=None, enum=None):
         QCs = vals[off:off + K]
         off += K
         pos = vals[off]
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for nm in cnt_names:
-            out[f"n_{nm}"] = []
-        for nm in flag_names:
-            out[nm] = []
-
-        def ok(v, t):
-            return v >= 0 and (within_us is None or t - v <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             if counted:
                 C0, L0, BP0, LQ0 = CL[0]
                 hh, hcs = _cep_chain_hits_paired(
@@ -678,29 +822,21 @@ def _cep_compiled_fn(chains: list, within_us, counted=None, enum=None):
             if enum_masks is not None:
                 oks = [ok(h[-1], t) for h in hits]
                 if any(oks):
-                    out["match_id"].append(int(eid))
-                    out["match_us"].append(t)
-                    out["start_us"].append(max(
-                        h[-1] for h, okv in zip(hits, oks) if okv
+                    cands.append((
+                        eid, t,
+                        max(h[-1] for h, okv in zip(hits, oks) if okv),
+                        *(any(okv for okv, mask in zip(oks, enum_masks)
+                              if nm in mask) for nm in flag_names),
                     ))
-                    for nm in flag_names:
-                        out[nm].append(any(
-                            okv for okv, mask in zip(oks, enum_masks)
-                            if nm in mask
-                        ))
             elif ok(hits[0][-1], t):
-                out["match_id"].append(int(eid))
-                out["match_us"].append(t)
-                out["start_us"].append(hits[0][-1])
-                for k in range(K):
-                    pool = (QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                            - hcs[k][-1])
-                    out[f"n_{cnt_names[k]}"].append(
-                        pool if up_tos[k] is None
-                        else min(pool, up_tos[k])
-                    )
-                for nm, h in zip(flag_names, hits[1:]):
-                    out[nm].append(ok(h[-1], t))
+                pools = [QCs[k] + (1 if etype == cnt_ets[k] else 0)
+                         - hcs[k][-1] for k in range(K)]
+                cands.append((
+                    eid, t, hits[0][-1],
+                    *(p if cap is None else min(p, cap)
+                      for p, cap in zip(pools, up_tos)),
+                    *(ok(h[-1], t) for h in hits[1:]),
+                ))
             for ci, ((C, L, BP, LQ), hit, qt) in enumerate(
                 zip(CL, hits, qtypes)
             ):
@@ -728,48 +864,53 @@ def _cep_compiled_fn(chains: list, within_us, counted=None, enum=None):
                 if etype == cnt_ets[k]:
                     QCs[k] += 1
             pos += 1
-        state.update(
-            tuple(v for C, L, BP, LQ in CL for v in C + L + BP + LQ)
-            + tuple(v for k in range(K) for v in Ccs[k] + Lcs[k])
-            + tuple(QCs)
-            + (pos,)
-        )
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        return (
+            [v for C, L, BP, LQ in CL for v in C + L + BP + LQ]
+            + [v for k in range(K) for v in Ccs[k] + Lcs[k]]
+            + QCs + [pos]
+        ), cands
 
-    return fn
+    return CarryScan(
+        fields,
+        lambda: [-1] * (4 * sum(sizes) + 2 * K * n0) + [0] * K + [0],
+        scan,
+        [f"n_{c[0]} BIGINT" for c in counted]
+        + [f"{nm} BOOLEAN" for nm in flag_names],
+    )
 
 
-def _cep_or_split_fn(chains: list, within_us, counted):
-    """r14: keyed-state executor for the OR-OF-CHAINS compile of a
-    both-strict oneOrMore/times(1, m) step (see cep.CepPattern.next):
-    every chain is one quantifier variant of the SAME pattern (1-rep /
-    >=2-rep per split step), ALL paired with the count-at-start
-    carries (the batch struct), sharing one running count per counted
-    step. A row matches when ANY variant completes within the window;
-    the winner is the lexicographic max (start, c0..) over satisfied
-    variants — the batch struct GREATEST — and the pools are computed
-    from the winner's counts. State = per chain 4·(m_c−1) causal longs
-    + 2·K·(m_c−1) count carries, plus K shared running counts and the
-    row counter: O(1) per key."""
+def or_split_scan(chains: list, within_us, counted):
+    """r14: carry scan for the OR-OF-CHAINS compile of a both-strict
+    oneOrMore/times(1, m) step (see cep.CepPattern.next): every chain
+    is one quantifier variant of the SAME pattern (1-rep / >=2-rep per
+    split step), ALL paired with the count-at-start carries (the batch
+    struct), sharing one running count per counted step. A row matches
+    when ANY variant completes within the window; the winner is the
+    lexicographic max (start, c0..) over satisfied variants — the batch
+    struct GREATEST — and the pools are computed from the winner's
+    counts. State = per chain 4·(m_c−1) causal longs + 2·K·(m_c−1)
+    count carries, plus K shared running counts and the row counter:
+    O(1) per key."""
     sizes = [len(steps) - 1 for _, steps in chains]
     qtypes = [[st[2] for st in steps[1:]] for _, steps in chains]
     counted = list(counted) if counted else []
-    cnt_names = [c[0] for c in counted]
     cnt_ets = [c[1] for c in counted]
     up_tos = [c[2] for c in counted]
     K = len(counted)
+    fields = []
+    for v, n in enumerate(sizes):
+        fields += [f"{p}_{v}_{i} BIGINT"
+                   for p in ("c", "l", "bp", "lq") for i in range(n)]
+    for v, n in enumerate(sizes):
+        for k in range(K):
+            fields += [f"{p}_{v}_{k}_{i} BIGINT"
+                       for p in ("ccs", "lcs") for i in range(n)]
+    fields += [f"qc_{k} BIGINT" for k in range(K)] + ["pos BIGINT"]
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-        else:
-            vals = [-1] * (4 * sum(sizes) + 2 * K * sum(sizes))
-            vals += [0] * K + [0]
+    def ok(v, t):
+        return v >= 0 and (within_us is None or t - v <= within_us)
+
+    def scan(vals, eids, etypes, ts):
         CL, CNT, off = [], [], 0
         for n in sizes:
             CL.append((
@@ -788,22 +929,8 @@ def _cep_or_split_fn(chains: list, within_us, counted):
         QCs = vals[off:off + K]
         off += K
         pos = vals[off]
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for nm in cnt_names:
-            out[f"n_{nm}"] = []
-
-        def ok(v, t):
-            return v >= 0 and (within_us is None or t - v <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             hits = []
             for (C, L, BP, LQ), (ccs, lcs), (_, steps) in zip(
                 CL, CNT, chains
@@ -820,16 +947,13 @@ def _cep_or_split_fn(chains: list, within_us, counted):
                     (hh[-1],) + tuple(hcs[k][-1] for k in range(K))
                     for (hh, hcs), okv in zip(hits, oks) if okv
                 )
-                out["match_id"].append(int(eid))
-                out["match_us"].append(t)
-                out["start_us"].append(win[0])
-                for k in range(K):
-                    pool = (QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                            - win[1 + k])
-                    out[f"n_{cnt_names[k]}"].append(
-                        pool if up_tos[k] is None
-                        else min(pool, up_tos[k])
-                    )
+                pools = [QCs[k] + (1 if etype == cnt_ets[k] else 0)
+                         - win[1 + k] for k in range(K)]
+                cands.append((
+                    eid, t, win[0],
+                    *(p if cap is None else min(p, cap)
+                      for p, cap in zip(pools, up_tos)),
+                ))
             for (C, L, BP, LQ), (ccs, lcs), (hh, hcs), qt in zip(
                 CL, CNT, hits, qtypes
             ):
@@ -853,439 +977,35 @@ def _cep_or_split_fn(chains: list, within_us, counted):
                 if etype == cnt_ets[k]:
                     QCs[k] += 1
             pos += 1
-        state.update(
-            tuple(v for C, L, BP, LQ in CL for v in C + L + BP + LQ)
-            + tuple(v for ccs, lcs in CNT
-                    for k in range(K) for v in ccs[k] + lcs[k])
-            + tuple(QCs)
-            + (pos,)
-        )
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        return (
+            [v for C, L, BP, LQ in CL for v in C + L + BP + LQ]
+            + [v for ccs, lcs in CNT
+               for k in range(K) for v in ccs[k] + lcs[k]]
+            + QCs + [pos]
+        ), cands
 
-    return fn
-
-
-def cep_or_split_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    variant_steps: list, within_us, counted: list,
-) -> DataFrame:
-    """True-streaming compile of the OR-of-chains split (see
-    _cep_or_split_fn): one paired carry chain per quantifier variant
-    in one keyed state tuple, shared running counts."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    K = len(counted)
-    fields = []
-    for v, steps in enumerate(variant_steps):
-        n = len(steps) - 1
-        fields += (
-            [f"c_{v}_{i} BIGINT" for i in range(n)]
-            + [f"l_{v}_{i} BIGINT" for i in range(n)]
-            + [f"bp_{v}_{i} BIGINT" for i in range(n)]
-            + [f"lq_{v}_{i} BIGINT" for i in range(n)]
-        )
-    for v, steps in enumerate(variant_steps):
-        n = len(steps) - 1
-        for k in range(K):
-            fields += (
-                [f"ccs_{v}_{k}_{i} BIGINT" for i in range(n)]
-                + [f"lcs_{v}_{k}_{i} BIGINT" for i in range(n)]
-            )
-    fields += [f"qc_{k} BIGINT" for k in range(K)]
-    fields.append("pos BIGINT")
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", n_{c[0]} BIGINT" for c in counted)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_or_split_fn([(None, s) for s in variant_steps], within_us,
-                         counted),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return CarryScan(
+        fields,
+        lambda: [-1] * (4 * sum(sizes) + 2 * K * sum(sizes))
+        + [0] * K + [0],
+        scan,
+        [f"n_{c[0]} BIGINT" for c in counted],
     )
 
 
-def _cep_or_split_neg_fn(chains: list, within_us, counted, neg_et,
-                         neg_within_us):
-    """r15 (r14 verdict item 3): the both-strict oneOrMore/times(1, m)
-    OR-split × TERMINAL negation — _cep_or_split_fn's paired variant
-    machines feeding the watermark-delayed candidate hold of
-    _cep_compiled_neg_fn. The OR-split winner (lexicographic
-    (start, c0..) max over satisfied variants) and its pools are
-    CAUSAL — they evaluate at the match row from the variants' carry
-    state — so a winning match simply becomes a PENDING candidate
-    (match_id, match_us, start_us, pools...), killed by a negated
-    arrival in the open interval (match_ts, match_ts + T], emitted
-    when the event-time watermark passes the deadline (data path or
-    timer). State = the OR-split machine's flat carry block as ONE
-    array field + the pending arrays (∝ matches in one T horizon)."""
-    sizes = [len(steps) - 1 for _, steps in chains]
-    qtypes = [[st[2] for st in steps[1:]] for _, steps in chains]
-    counted = list(counted) if counted else []
-    cnt_names = [c[0] for c in counted]
-    cnt_ets = [c[1] for c in counted]
-    up_tos = [c[2] for c in counted]
-    K = len(counted)
-    NP = 3 + K  # mid, mus, sus, pools...
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        base = 4 * sum(sizes) + 2 * K * sum(sizes)
-        if state.exists:
-            vals = list(state.get)
-            flat = list(vals[0])
-            QCs = list(vals[1])
-            pos = vals[2]
-            pend = [list(vals[3 + j]) for j in range(NP)]
-        else:
-            flat = [-1] * base
-            QCs = [0] * K
-            pos = 0
-            pend = [[] for _ in range(NP)]
-        CL, CNT, off = [], [], 0
-        for n in sizes:
-            CL.append((
-                flat[off:off + n], flat[off + n:off + 2 * n],
-                flat[off + 2 * n:off + 3 * n],
-                flat[off + 3 * n:off + 4 * n],
-            ))
-            off += 4 * n
-        for n in sizes:
-            ccs = [flat[off + 2 * k * n:off + (2 * k + 1) * n]
-                   for k in range(K)]
-            lcs = [flat[off + (2 * k + 1) * n:off + (2 * k + 2) * n]
-                   for k in range(K)]
-            CNT.append((ccs, lcs))
-            off += 2 * K * n
-
-        def flush(wm_us):
-            out = {"match_id": [], "match_us": [], "start_us": [],
-                   **{f"n_{nm}": [] for nm in cnt_names}}
-            keep = [[] for _ in range(NP)]
-            for row in zip(*pend):
-                if row[1] + neg_within_us < wm_us:
-                    out["match_id"].append(row[0])
-                    out["match_us"].append(row[1])
-                    out["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        out[f"n_{nm}"].append(row[3 + k])
-                else:
-                    for j, v in enumerate(row):
-                        keep[j].append(v)
-            return out, keep
-
-        def save(keep):
-            new_flat = []
-            for C, L, BP, LQ in CL:
-                new_flat += C + L + BP + LQ
-            for ccs, lcs in CNT:
-                for k in range(K):
-                    new_flat += ccs[k] + lcs[k]
-            state.update((new_flat, QCs, pos) + tuple(keep))
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-
-        def ok(v, t):
-            return v >= 0 and (within_us is None or t - v <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            hits = []
-            for (C, L, BP, LQ), (ccs, lcs), (_, steps) in zip(
-                CL, CNT, chains
-            ):
-                hits.append(_cep_chain_hits_paired(
-                    steps, C, L, BP, LQ, ccs, lcs, QCs, cnt_ets,
-                    etype, t,
-                ))
-            if etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
-            oks = [ok(hh[-1], t) for hh, _ in hits]
-            if any(oks):
-                win = max(
-                    (hh[-1],) + tuple(hcs[k][-1] for k in range(K))
-                    for (hh, hcs), okv in zip(hits, oks) if okv
-                )
-                row = [int(eid), t, win[0]]
-                for k in range(K):
-                    pool = (QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                            - win[1 + k])
-                    row.append(
-                        pool if up_tos[k] is None
-                        else min(pool, up_tos[k])
-                    )
-                for j, v in enumerate(row):
-                    pend[j].append(v)
-            for (C, L, BP, LQ), (ccs, lcs), (hh, hcs), qt in zip(
-                CL, CNT, hits, qtypes
-            ):
-                for i in range(len(C)):
-                    htup = (hh[i],) + tuple(
-                        hcs[k][i] for k in range(K))
-                    ctup = (C[i],) + tuple(
-                        ccs[k][i] for k in range(K))
-                    if htup > ctup:
-                        C[i] = hh[i]
-                        for k in range(K):
-                            ccs[k][i] = hcs[k][i]
-                    for k in range(K):
-                        lcs[k][i] = hcs[k][i]
-                    if hh[i] >= 0:
-                        BP[i] = pos
-                    L[i] = hh[i]
-                    if qt[i] is not None and etype == qt[i]:
-                        LQ[i] = pos
-            for k in range(K):
-                if etype == cnt_ets[k]:
-                    QCs[k] += 1
-            pos += 1
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
-
-
-def cep_or_split_neg_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    variant_steps: list, within_us, counted: list,
-    neg_et: str, neg_within_us: int,
-) -> DataFrame:
-    """True-streaming compile of the OR-of-chains split × terminal
-    negation (see _cep_or_split_neg_fn)."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
-    )
-    counted = list(counted) if counted else []
-    fields = (
-        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT",
-         "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-         "pend_sus ARRAY<BIGINT>"]
-        + [f"pend_n{k} ARRAY<BIGINT>" for k in range(len(counted))]
-    )
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", n_{c[0]} BIGINT" for c in counted)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_or_split_neg_fn([(None, s) for s in variant_steps],
-                             within_us, counted, neg_et,
-                             neg_within_us),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _cep_enum_neg_fn(chains: list, within_us, enum_masks, flag_names,
-                     neg_et, neg_within_us):
-    """r15 (r14 verdict item 3 continuation): strict-contiguity
-    optional regions × TERMINAL negation — the 2^k enum machine of
-    _cep_compiled_fn's enum mode feeding the watermark-delayed hold.
-    The OR-gated emission (any variant completes; start = greedy max
-    across satisfied variants; with_<o> = OR over satisfied variants
-    including o) is CAUSAL at the match row, so it becomes a pending
-    candidate carrying its flags, killed by a negated arrival in the
-    open interval (match_ts, match_ts + T], flushed when the
-    watermark passes the deadline."""
-    sizes = [len(steps) - 1 for _, steps in chains]
-    qtypes = [[st[2] for st in steps[1:]] for _, steps in chains]
-    nf = len(flag_names)
-    NP = 3 + nf
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        base = 4 * sum(sizes)
-        if state.exists:
-            vals = list(state.get)
-            flat = list(vals[0])
-            pos = vals[1]
-            pend = [list(vals[2 + j]) for j in range(NP)]
-        else:
-            flat = [-1] * base
-            pos = 0
-            pend = [[] for _ in range(NP)]
-        CL, off = [], 0
-        for n in sizes:
-            CL.append((
-                flat[off:off + n], flat[off + n:off + 2 * n],
-                flat[off + 2 * n:off + 3 * n],
-                flat[off + 3 * n:off + 4 * n],
-            ))
-            off += 4 * n
-
-        def flush(wm_us):
-            out = {"match_id": [], "match_us": [], "start_us": [],
-                   **{f: [] for f in flag_names}}
-            keep = [[] for _ in range(NP)]
-            for row in zip(*pend):
-                if row[1] + neg_within_us < wm_us:
-                    out["match_id"].append(row[0])
-                    out["match_us"].append(row[1])
-                    out["start_us"].append(row[2])
-                    for j, f in enumerate(flag_names):
-                        out[f].append(bool(row[3 + j]))
-                else:
-                    for j, v in enumerate(row):
-                        keep[j].append(v)
-            return out, keep
-
-        def save(keep):
-            new_flat = []
-            for C, L, BP, LQ in CL:
-                new_flat += C + L + BP + LQ
-            state.update((new_flat, pos) + tuple(keep))
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-
-        def ok(v, t):
-            return v >= 0 and (within_us is None or t - v <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            hits = [
-                _cep_chain_hits(steps, C, L, BP, LQ, etype, t)
-                for (C, L, BP, LQ), (_, steps) in zip(CL, chains)
-            ]
-            if etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
-            oks = [ok(h[-1], t) for h in hits]
-            if any(oks):
-                pend[0].append(int(eid))
-                pend[1].append(t)
-                pend[2].append(max(
-                    h[-1] for h, okv in zip(hits, oks) if okv
-                ))
-                for j, nm in enumerate(flag_names):
-                    pend[3 + j].append(int(any(
-                        okv for okv, mask in zip(oks, enum_masks)
-                        if nm in mask
-                    )))
-            for (C, L, BP, LQ), hit, qt in zip(CL, hits, qtypes):
-                for i in range(len(C)):
-                    if hit[i] > C[i]:
-                        C[i] = hit[i]
-                    if hit[i] >= 0:
-                        BP[i] = pos
-                    L[i] = hit[i]
-                    if qt[i] is not None and etype == qt[i]:
-                        LQ[i] = pos
-            pos += 1
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
-
-
-def cep_enum_neg_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    variant_steps: list, within_us, enum_masks: list,
-    flag_names: list, neg_et: str, neg_within_us: int,
-) -> DataFrame:
-    """True-streaming compile of strict-contiguity optional regions ×
-    terminal negation (see _cep_enum_neg_fn)."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
-    )
-    fields = (
-        ["flat ARRAY<BIGINT>", "pos BIGINT",
-         "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-         "pend_sus ARRAY<BIGINT>"]
-        + [f"pend_f{j} ARRAY<BIGINT>" for j in range(len(flag_names))]
-    )
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", {f} BOOLEAN" for f in flag_names)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_enum_neg_fn([(None, s) for s in variant_steps], within_us,
-                         enum_masks, flag_names, neg_et,
-                         neg_within_us),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _cep_skip_fn(steps, within_us, strategy="skip_past_last_event",
-                 anchor_idx=None, nn_ets=None):
-    """Keyed-state executor for a compiled pattern under an after-match
-    skip strategy (r12 skip_past_last_event; r13 skip_to_next /
+def skip_scan(steps, within_us, anchor_idx=None, nn_ets=None):
+    """Carry scan for a compiled pattern under an after-match skip
+    strategy (r12 skip_past_last_event; r13 skip_to_next /
     skip_to_first / skip_to_last): the carry values become (ts,
     start-position[, anchor-position]) tuples under the same
     lexicographic running max the batch compile's struct uses, and
-    acceptance is one extra long of state — the cursor; a match emits
-    iff its greedy chain's start clears the cursor (start-maximality
-    makes that exactly 'some chain clears it', the batch fold's
-    argument), and the cursor advances per strategy:
-
-    - skip_past_last_event: start > cursor; cursor := match row pos
-    - skip_to_next: start > cursor; cursor := accepted start pos
-    - skip_to_first/skip_to_last: start >= cursor; cursor := accepted
-      chain's anchor pos (the carry stamps ap at expanded step
-      `anchor_idx`, mirroring the batch stamp_anchor hop)
+    acceptance is one extra long of state — the cursor, folded by
+    cep_keyed_fn; a match is accepted iff its greedy chain's start
+    clears the cursor (start-maximality makes that exactly 'some chain
+    clears it', the batch fold's argument). Candidates carry (start
+    pos, match row pos, anchor pos); the anchor position is stamped at
+    expanded step `anchor_idx` (skip_to_first/skip_to_last only),
+    mirroring the batch stamp_anchor hop.
 
     Everything is causal, so all four strategies stream with O(1)
     state: 6·(m-1)+2 longs (8·(m-1)+2 with an anchor — ts+sp[+ap] for
@@ -1299,45 +1019,34 @@ def _cep_skip_fn(steps, within_us, strategy="skip_past_last_event",
     struct."""
     m = len(steps)
     n = m - 1
-    anchored = strategy in ("skip_to_first", "skip_to_last")
+    anchored = anchor_idx is not None
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
+    base = (8 if anchored else 6) * n
+    fields = (
+        [f"{p}_{i} BIGINT" for p in ("cts", "csp", "lts", "lsp", "bp", "lq")
+         + (("cap", "lap") if anchored else ()) for i in range(n)]
+        + ["last_acc BIGINT", "pos BIGINT"]
+        + ([f"pnn_{p}_{i} BIGINT" for p in ("ts", "sp", "ap", "pos")
+            for i in range(n)] if has_nn else [])
+    )
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        base = (8 if anchored else 6) * n
-        if state.exists:
-            vals = list(state.get)
-        else:
-            vals = [-1] * base + [-1, 0] + ([-1] * (4 * n)
-                                            if has_nn else [])
+    def scan(vals, eids, etypes, ts):
         Cts, Csp = vals[0:n], vals[n:2 * n]
         Lts, Lsp = vals[2 * n:3 * n], vals[3 * n:4 * n]
         BP, LQ = vals[4 * n:5 * n], vals[5 * n:6 * n]
         if anchored:
             Cap, Lap = vals[6 * n:7 * n], vals[7 * n:8 * n]
-            last_acc, pos = vals[8 * n], vals[8 * n + 1]
         else:
             Cap, Lap = [0] * n, [0] * n  # unused (tie-breaks only ever
             # compare equal junk against equal junk — no-op updates)
-            last_acc, pos = vals[6 * n], vals[6 * n + 1]
+        cursor, pos = vals[base], vals[base + 1]
         if has_nn:
             Pts = vals[base + 2:base + 2 + n]
             Psp = vals[base + 2 + n:base + 2 + 2 * n]
             Pap = vals[base + 2 + 2 * n:base + 2 + 3 * n]
             Ppos = vals[base + 2 + 3 * n:base + 2 + 4 * n]
-        else:
-            Pts = Psp = Pap = Ppos = None
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             if has_nn:
                 # (0) resolve pendings: this event IS the gated binds'
                 # direct successor — absorb (carry max + BP + lag) if
@@ -1373,21 +1082,10 @@ def _cep_skip_fn(steps, within_us, strategy="skip_past_last_event",
                     ):
                         hts[i], hsp[i] = cin_ts, cin_sp
                         hap[i] = pos if i == anchor_idx else cin_ap
-            accepted = (
-                hts[-1] >= 0
-                and (within_us is None or t - hts[-1] <= within_us)
-                and (hsp[-1] >= last_acc if anchored
-                     else hsp[-1] > last_acc)
-            )
-            if accepted:
-                out["match_id"].append(int(eid))
-                out["match_us"].append(t)
-                out["start_us"].append(hts[-1])
-                last_acc = (
-                    pos if strategy == "skip_past_last_event"
-                    else hap[-1] if anchored
-                    else hsp[-1]
-                )
+            if hts[-1] >= 0 and (
+                within_us is None or t - hts[-1] <= within_us
+            ):
+                cands.append((eid, t, hts[-1], hsp[-1], pos, hap[-1]))
             for i in range(n):
                 if has_nn and nn_ets[i] is not None:
                     # PARK the gated hit; resolution above owns the
@@ -1409,720 +1107,26 @@ def _cep_skip_fn(steps, within_us, strategy="skip_past_last_event",
                 if neg_et is not None and etype == neg_et:
                     LQ[i] = pos
             pos += 1
-        state.update(tuple(
+        return (
             Cts + Csp + Lts + Lsp + BP + LQ
             + (Cap + Lap if anchored else [])
-            + [last_acc, pos]
+            + [cursor, pos]
             + (Pts + Psp + Pap + Ppos if has_nn else [])
-        ))
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        ), cands
 
-    return fn
-
-
-def _cep_compiled_neg_fn(chains, within_us, counted, neg_et,
-                         neg_within_us):
-    """r14 continuation: optional-step annotations and oneOrMore/
-    times(n, m) counts composed with TERMINAL negation — the causal
-    chain machinery of _cep_compiled_fn (gating chain paired with
-    count-at-start carries, one annotation chain per optional step)
-    feeding the watermark-delayed hold: flags and pools are causal
-    (they evaluate at the match row), so they simply RIDE the pending
-    candidate until the watermark passes match_ts + T; a negated
-    arrival in the open interval kills the candidate, annotations and
-    all."""
-    sizes = [len(steps) - 1 for _, steps in chains]
-    qtypes = [[st[2] for st in steps[1:]] for _, steps in chains]
-    counted = list(counted) if counted else []
-    cnt_names = [c[0] for c in counted]
-    cnt_ets = [c[1] for c in counted]
-    up_tos = [c[2] for c in counted]
-    K = len(counted)
-    flag_names = [name for name, _ in chains[1:]]
-    NF = len(flag_names)
-    NP = 3 + K + NF  # mid, mus, sus, pools..., flags...
-    n0 = sizes[0]
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        base = 4 * sum(sizes) + 2 * K * n0
-        if state.exists:
-            vals = list(state.get)
-            flat = list(vals[0])
-            QCs = list(vals[1])
-            pos = vals[2]
-            pend = [list(vals[3 + j]) for j in range(NP)]
-        else:
-            flat = [-1] * base
-            QCs = [0] * K
-            pos = 0
-            pend = [[] for _ in range(NP)]
-        CL, off = [], 0
-        for n in sizes:
-            CL.append((
-                flat[off:off + n], flat[off + n:off + 2 * n],
-                flat[off + 2 * n:off + 3 * n],
-                flat[off + 3 * n:off + 4 * n],
-            ))
-            off += 4 * n
-        Ccs, Lcs = [], []
-        for _k in range(K):
-            Ccs.append(flat[off:off + n0])
-            Lcs.append(flat[off + n0:off + 2 * n0])
-            off += 2 * n0
-
-        def flush(wm_us):
-            out = {"match_id": [], "match_us": [], "start_us": [],
-                   **{f"n_{nm}": [] for nm in cnt_names},
-                   **{nm: [] for nm in flag_names}}
-            keep = [[] for _ in range(NP)]
-            for row in zip(*pend):
-                if row[1] + neg_within_us < wm_us:
-                    out["match_id"].append(row[0])
-                    out["match_us"].append(row[1])
-                    out["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        out[f"n_{nm}"].append(row[3 + k])
-                    for j, nm in enumerate(flag_names):
-                        out[nm].append(bool(row[3 + K + j]))
-                else:
-                    for j, v in enumerate(row):
-                        keep[j].append(v)
-            return out, keep
-
-        def save(keep):
-            new_flat = []
-            for C, L, BP, LQ in CL:
-                new_flat += C + L + BP + LQ
-            for k in range(K):
-                new_flat += Ccs[k] + Lcs[k]
-            state.update((new_flat, QCs, pos) + tuple(keep))
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-
-        def ok(v, t):
-            return v >= 0 and (within_us is None or t - v <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            if counted:
-                C0, L0, BP0, LQ0 = CL[0]
-                hh, hcs = _cep_chain_hits_paired(
-                    chains[0][1], C0, L0, BP0, LQ0, Ccs, Lcs, QCs,
-                    cnt_ets, etype, t,
-                )
-                hits = [hh] + [
-                    _cep_chain_hits(steps, C, L, BP, LQ, etype, t)
-                    for (C, L, BP, LQ), (_, steps)
-                    in zip(CL[1:], chains[1:])
-                ]
-            else:
-                hcs = []
-                hits = [
-                    _cep_chain_hits(steps, C, L, BP, LQ, etype, t)
-                    for (C, L, BP, LQ), (_, steps) in zip(CL, chains)
-                ]
-            if etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
-            if ok(hits[0][-1], t):
-                vals_row = [int(eid), t, hits[0][-1]]
-                for k in range(K):
-                    pool = (QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                            - hcs[k][-1])
-                    vals_row.append(
-                        pool if up_tos[k] is None
-                        else min(pool, up_tos[k])
-                    )
-                for h in hits[1:]:
-                    vals_row.append(int(ok(h[-1], t)))
-                for j, v in enumerate(vals_row):
-                    pend[j].append(v)
-            for ci, ((C, L, BP, LQ), hit, qt) in enumerate(
-                zip(CL, hits, qtypes)
-            ):
-                paired = counted and ci == 0
-                for i in range(len(C)):
-                    if paired:
-                        htup = (hit[i],) + tuple(
-                            hcs[k][i] for k in range(K))
-                        ctup = (C[i],) + tuple(
-                            Ccs[k][i] for k in range(K))
-                        if htup > ctup:
-                            C[i] = hit[i]
-                            for k in range(K):
-                                Ccs[k][i] = hcs[k][i]
-                        for k in range(K):
-                            Lcs[k][i] = hcs[k][i]
-                    elif hit[i] > C[i]:
-                        C[i] = hit[i]
-                    if hit[i] >= 0:
-                        BP[i] = pos
-                    L[i] = hit[i]
-                    if qt[i] is not None and etype == qt[i]:
-                        LQ[i] = pos
-            for k in range(K):
-                if etype == cnt_ets[k]:
-                    QCs[k] += 1
-            pos += 1
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
-
-
-def cep_compiled_neg_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    main: list, within_us, flag_variants, counted,
-    neg_et: str, neg_within_us: int,
-) -> DataFrame:
-    """True-streaming compile of annotation/count chains × terminal
-    negation (see _cep_compiled_neg_fn)."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
+    return CarryScan(
+        fields,
+        lambda: [-1] * base + [-1, 0] + ([-1] * (4 * n) if has_nn else []),
+        scan,
+        cursor=base,
     )
-    chains = [(None, main)] + [(nm, st) for nm, st in flag_variants]
-    counted = list(counted) if counted else []
-    fields = (
-        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT",
-         "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-         "pend_sus ARRAY<BIGINT>"]
-        + [f"pend_n{k} ARRAY<BIGINT>" for k in range(len(counted))]
-        + [f"pend_f{j} ARRAY<BIGINT>"
-           for j in range(len(flag_variants))]
-    )
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", n_{c[0]} BIGINT" for c in counted)
-        + "".join(f", {nm} BOOLEAN" for nm, _ in flag_variants)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_compiled_neg_fn(chains, within_us, counted, neg_et,
-                             neg_within_us),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _cep_skip_neg_fn(steps, within_us, strategy, anchor_idx,
-                     neg_et, neg_within_us, nn_ets=None):
-    """r14 continuation: after-match skip × TERMINAL negation — the
-    causal position-struct carries of _cep_skip_fn feeding a
-    watermark-delayed hold whose acceptance cursor folds AT FLUSH
-    TIME: candidates (with their start/match/anchor positions) hold
-    until the watermark passes match_ts + T, killed by an in-horizon
-    negated arrival; deadlines are nondecreasing in match order, so
-    survivors flush in match-row order and the cursor rules apply
-    exactly as the batch fold over the negation-SURVIVING match rows
-    (the compile applies the negation filter BEFORE _skip_fold —
-    pinned by test_skip_past_with_terminal_negation)."""
-    m = len(steps)
-    n = m - 1
-    anchored = strategy in ("skip_to_first", "skip_to_last")
-    past = strategy == "skip_past_last_event"
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    NP = 6  # pend columns: mid, mus, sus, spos, mpos, apos
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            Cts, Csp = list(vals[0]), list(vals[1])
-            Lts, Lsp = list(vals[2]), list(vals[3])
-            BP, LQ = list(vals[4]), list(vals[5])
-            Cap, Lap = list(vals[6]), list(vals[7])
-            cursor, pos = vals[8], vals[9]
-            pend = [list(vals[10 + j]) for j in range(NP)]
-            pn = ([list(vals[10 + NP + j]) for j in range(4)]
-                  if has_nn else None)
-        else:
-            Cts, Csp, Lts, Lsp, BP, LQ, Cap, Lap = (
-                [-1] * n for _ in range(8)
-            )
-            cursor, pos = -1, 0
-            pend = [[] for _ in range(NP)]
-            pn = [[-1] * n for _ in range(4)] if has_nn else None
-
-        def flush(wm_us):
-            nonlocal cursor
-            out = {"match_id": [], "match_us": [], "start_us": []}
-            keep = [[] for _ in range(NP)]
-            for mid, mus, sus, sp, mp, ap in zip(*pend):
-                if mus + neg_within_us < wm_us:
-                    ok = sp >= cursor if anchored else sp > cursor
-                    if ok:
-                        out["match_id"].append(mid)
-                        out["match_us"].append(mus)
-                        out["start_us"].append(sus)
-                        cursor = mp if past else (ap if anchored
-                                                  else sp)
-                else:
-                    for j, v in enumerate((mid, mus, sus, sp, mp, ap)):
-                        keep[j].append(v)
-            return out, keep
-
-        def save(keep):
-            state.update(
-                (Cts, Csp, Lts, Lsp, BP, LQ, Cap, Lap, cursor, pos)
-                + tuple(keep)
-                + (tuple(pn) if has_nn else ())
-            )
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            if has_nn:
-                # resolve pendings (r16 delayed absorption — see
-                # _cep_skip_fn): validated binds join the carry max /
-                # lag / BP before this row's hits read them
-                for i in range(n):
-                    if nn_ets[i] is None:
-                        continue
-                    P = pn
-                    if P[0][i] >= 0 and etype != nn_ets[i]:
-                        if (P[0][i], P[1][i], P[2][i]) > (
-                            Cts[i], Csp[i], Cap[i]
-                        ):
-                            Cts[i], Csp[i] = P[0][i], P[1][i]
-                            Cap[i] = P[2][i]
-                        BP[i] = P[3][i]
-                        Lts[i], Lsp[i], Lap[i] = (
-                            P[0][i], P[1][i], P[2][i]
-                        )
-                    else:
-                        Lts[i], Lsp[i], Lap[i] = -1, -1, -1
-                    P[0][i] = P[1][i] = P[2][i] = P[3][i] = -1
-            hts, hsp, hap = [-1] * m, [-1] * m, [-1] * m
-            for i, (et, trans, gneg) in enumerate(steps):
-                if etype != et:
-                    continue
-                if i == 0:
-                    hts[0], hsp[0] = t, pos
-                else:
-                    cin_ts, cin_sp, cin_ap = (
-                        (Cts[i - 1], Csp[i - 1], Cap[i - 1])
-                        if trans == "followed_by"
-                        else (Lts[i - 1], Lsp[i - 1], Lap[i - 1])
-                    )
-                    if cin_ts >= 0 and (
-                        gneg is None or LQ[i - 1] <= BP[i - 1]
-                    ):
-                        hts[i], hsp[i] = cin_ts, cin_sp
-                        hap[i] = pos if i == anchor_idx else cin_ap
-            if etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
-            if hts[-1] >= 0 and (
-                within_us is None or t - hts[-1] <= within_us
-            ):
-                for j, v in enumerate((int(eid), t, hts[-1], hsp[-1],
-                                       pos, hap[-1])):
-                    pend[j].append(v)
-            for i in range(n):
-                if has_nn and nn_ets[i] is not None:
-                    pn[0][i], pn[1][i], pn[2][i] = (
-                        hts[i], hsp[i], hap[i]
-                    )
-                    pn[3][i] = pos if hts[i] >= 0 else -1
-                else:
-                    if (hts[i], hsp[i], hap[i]) > (
-                        Cts[i], Csp[i], Cap[i]
-                    ):
-                        Cts[i], Csp[i] = hts[i], hsp[i]
-                        Cap[i] = hap[i]
-                    if hts[i] >= 0:
-                        BP[i] = pos
-                    Lts[i], Lsp[i] = hts[i], hsp[i]
-                    Lap[i] = hap[i]
-                gneg = steps[i + 1][2]
-                if gneg is not None and etype == gneg:
-                    LQ[i] = pos
-            pos += 1
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
-
-
-def cep_skip_neg_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, strategy: str, anchor_idx,
-    neg_et: str, neg_within_us: int, nn_ets=None,
-) -> DataFrame:
-    """True-streaming compile of after-match skip × terminal negation
-    (see _cep_skip_neg_fn)."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
-    )
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    fields = (
-        ["cts ARRAY<BIGINT>", "csp ARRAY<BIGINT>",
-         "lts ARRAY<BIGINT>", "lsp ARRAY<BIGINT>",
-         "bp ARRAY<BIGINT>", "lq ARRAY<BIGINT>",
-         "cap ARRAY<BIGINT>", "lap ARRAY<BIGINT>",
-         "cursor BIGINT", "pos BIGINT",
-         "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-         "pend_sus ARRAY<BIGINT>", "pend_sp ARRAY<BIGINT>",
-         "pend_mp ARRAY<BIGINT>", "pend_ap ARRAY<BIGINT>"]
-        + (["pnn_ts ARRAY<BIGINT>", "pnn_sp ARRAY<BIGINT>",
-            "pnn_ap ARRAY<BIGINT>", "pnn_pos ARRAY<BIGINT>"]
-           if has_nn else [])
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_skip_neg_fn(list(steps), within_us, strategy, anchor_idx,
-                         neg_et, neg_within_us, nn_ets),
-        outputStructType=(
-            "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-            "start_us BIGINT"
-        ),
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _cep_gap_skip_neg_fn(steps, within_us, gap_us, strategy,
-                         anchor_idx, neg_et, neg_within_us,
-                         nn_ets=None):
-    """r14 continuation: the skip × gap-bound × terminal-negation
-    TRIPLE — _cep_gap_skip_fn's position-struct buffers feeding the
-    same flush-time acceptance cursor as _cep_skip_neg_fn. r15:
-    MID-PATTERN negated gaps compose (count-gated position-struct
-    buffers, see _gap_skip_hits) — the QUADRUPLE mid-negation + gap
-    + skip + terminal negation; bq/qc state exists only when some
-    step carries a negated gap. r16: notNext gates compose (delayed
-    absorption in _gap_skip_hits; the hold and the flush-time cursor
-    see only validated binds)."""
-    n = len(steps) - 1
-    anchored = strategy in ("skip_to_first", "skip_to_last")
-    past = strategy == "skip_past_last_event"
-    has_mneg = any(st[2] is not None for st in steps)
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    NP = 6
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            bts = [list(vals[i]) for i in range(n)]
-            bh = [list(vals[n + i]) for i in range(n)]
-            bsp = [list(vals[2 * n + i]) for i in range(n)]
-            bap = [list(vals[3 * n + i]) for i in range(n)]
-            if has_mneg:
-                bq = [list(vals[4 * n + i]) for i in range(n)]
-                L = [list(vals[5 * n]), list(vals[5 * n + 1]),
-                     list(vals[5 * n + 2])]
-                qc = list(vals[5 * n + 3])
-                prev_ts, pos, cursor = vals[5 * n + 4:5 * n + 7]
-                pend = [list(vals[5 * n + 7 + j]) for j in range(NP)]
-                rest = vals[5 * n + 7 + NP:]
-            else:
-                bq, qc = None, None
-                L = [list(vals[4 * n]), list(vals[4 * n + 1]),
-                     list(vals[4 * n + 2])]
-                prev_ts, pos, cursor = vals[4 * n + 3:4 * n + 6]
-                pend = [list(vals[4 * n + 6 + j]) for j in range(NP)]
-                rest = vals[4 * n + 6 + NP:]
-            pn = ([list(r) for r in rest[:5]] if has_nn else None)
-        else:
-            bts = [[] for _ in range(n)]
-            bh = [[] for _ in range(n)]
-            bsp = [[] for _ in range(n)]
-            bap = [[] for _ in range(n)]
-            bq = [[] for _ in range(n)] if has_mneg else None
-            qc = [0] * n if has_mneg else None
-            L = [[-1] * n, [-1] * n, [-1] * n]
-            prev_ts, pos, cursor = -1, 0, -1
-            pend = [[] for _ in range(NP)]
-            pn = ([[-1] * n for _ in range(5)] if has_nn else None)
-
-        def flush(wm_us):
-            nonlocal cursor
-            out = {"match_id": [], "match_us": [], "start_us": []}
-            keep = [[] for _ in range(NP)]
-            for mid, mus, sus, sp, mp, ap in zip(*pend):
-                if mus + neg_within_us < wm_us:
-                    ok = sp >= cursor if anchored else sp > cursor
-                    if ok:
-                        out["match_id"].append(mid)
-                        out["match_us"].append(mus)
-                        out["start_us"].append(sus)
-                        cursor = mp if past else (ap if anchored
-                                                  else sp)
-                else:
-                    for j, v in enumerate((mid, mus, sus, sp, mp, ap)):
-                        keep[j].append(v)
-            return out, keep
-
-        def save(keep):
-            state.update(
-                tuple(bts) + tuple(bh) + tuple(bsp) + tuple(bap)
-                + (tuple(bq) if has_mneg else ())
-                + (L[0], L[1], L[2])
-                + ((qc,) if has_mneg else ())
-                + (prev_ts, pos, cursor)
-                + tuple(keep)
-                + (tuple(pn) if has_nn else ())
-            )
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            hit = _gap_skip_hits(steps, bts, bh, bsp, bap, L, prev_ts,
-                                 etype, t, pos, gap_us, anchored,
-                                 anchor_idx, bq, qc,
-                                 nn_ets if has_nn else None, pn)
-            if etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
-            if hit[-1][0] >= 0 and (
-                within_us is None or t - hit[-1][0] <= within_us
-            ):
-                h, sp, ap = hit[-1]
-                for j, v in enumerate((int(eid), t, h, sp, pos, ap)):
-                    pend[j].append(v)
-            prev_ts = t
-            pos += 1
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
-
-
-def cep_gap_skip_neg_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, gap_us: int, strategy: str, anchor_idx,
-    neg_et: str, neg_within_us: int, nn_ets=None,
-) -> DataFrame:
-    """True-streaming compile of skip × gap bound × terminal negation
-    (see _cep_gap_skip_neg_fn)."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
-    )
-    fields = _gap_skip_state_fields(steps, pend=True, nn_ets=nn_ets)
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_gap_skip_neg_fn(list(steps), within_us, gap_us, strategy,
-                             anchor_idx, neg_et, neg_within_us, nn_ets),
-        outputStructType=(
-            "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-            "start_us BIGINT"
-        ),
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _cep_terminal_neg_fn(steps, within_us, neg_et, neg_within_us):
-    """Keyed-state executor for a compiled pattern ENDING in
-    notFollowedBy(within=T) (r13, r12 verdict item 4 — the last
-    refused streaming surface): candidate matches are held in keyed
-    state until the event-time watermark passes match_ts + T, then
-    emitted iff no negated event arrived in the open interval
-    (match_ts, match_ts + T] — the standard Flink answer
-    (watermark-delayed emission). State = the main chain's 4·(m-1)+1
-    causal longs (same as _cep_compiled_fn — mid-pattern negated gaps
-    compose) plus the pending-candidate arrays; pending size is
-    bounded by the key's match arrivals within one T horizon, the
-    negation's inherent buffering. A negated event KILLS pending
-    candidates immediately (strictly-earlier match_ts only — a match
-    at the negated event's own timestamp is outside the open
-    interval); emission happens on the data path when the watermark
-    has already passed a deadline, and via event-time timers for keys
-    that stop receiving events. The batch compile's `next_<neg>_ts`
-    audit column is batch-only: it reports the earliest following
-    negated event UNBOUNDEDLY, which no finite-state stream can await
-    — the twin contract is the match set (user_id, match_id,
-    match_us, start_us)."""
-    m = len(steps)
-    n = m - 1
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            C, L = list(vals[0]), list(vals[1])
-            BP, LQ = list(vals[2]), list(vals[3])
-            pos = vals[4]
-            pend = [list(vals[5]), list(vals[6]), list(vals[7])]
-        else:
-            C, L, BP, LQ = ([-1] * n for _ in range(4))
-            pos = 0
-            pend = [[], [], []]
-
-        def flush(wm_us):
-            """Split pending into (ripe survivors, still-held): ripe =
-            deadline strictly before the watermark (every event with
-            ts <= match_ts + T is guaranteed seen)."""
-            out = {"match_id": [], "match_us": [], "start_us": []}
-            keep = [[], [], []]
-            for mid, mus, sus in zip(*pend):
-                if mus + neg_within_us < wm_us:
-                    out["match_id"].append(mid)
-                    out["match_us"].append(mus)
-                    out["start_us"].append(sus)
-                else:
-                    keep[0].append(mid)
-                    keep[1].append(mus)
-                    keep[2].append(sus)
-            return out, keep
-
-        def save(keep):
-            state.update((C, L, BP, LQ, pos, keep[0], keep[1], keep[2]))
-            if keep[1]:
-                # re-arm: fire when the watermark passes the earliest
-                # deadline (ms, +1 so the timestamp is strictly beyond
-                # the current watermark as Spark requires)
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            hit = _cep_chain_hits(steps, C, L, BP, LQ, etype, t)
-            if etype == neg_et:
-                # kill candidates with match_ts strictly before this
-                # event and deadline at-or-after it (open interval
-                # (match_ts, match_ts+T] — a pending match at the SAME
-                # timestamp survives, matching the batch RANGE frame)
-                pend = [list(z) for z in zip(*[
-                    (mid, mus, sus)
-                    for mid, mus, sus in zip(*pend)
-                    if not (mus < t <= mus + neg_within_us)
-                ])] or [[], [], []]
-            if hit[-1] >= 0 and (
-                within_us is None or t - hit[-1] <= within_us
-            ):
-                pend[0].append(int(eid))
-                pend[1].append(t)
-                pend[2].append(hit[-1])
-            for i in range(n):
-                if hit[i] > C[i]:
-                    C[i] = hit[i]
-                if hit[i] >= 0:
-                    BP[i] = pos
-                L[i] = hit[i]
-                qt = steps[i + 1][2]
-                if qt is not None and etype == qt:
-                    LQ[i] = pos
-            pos += 1
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
 
 
 def _gap_hits(steps, bts, bh, L, prev_ts, etype, t, gap_us,
               bq=None, qc=None, nn_ets=None, pn=None):
     """One event's hit vector + buffer/lag maintenance for ONE
-    gap-bounded carry chain — the shared inner step of _cep_gap_fn and
-    the r14 gap-composition twins (_cep_gap_neg_fn, _cep_gap_enum_fn,
-    _cep_gap_skip*_fn). Mutates bts/bh/L in place (element rebinding
+    gap-bounded carry chain — the shared inner step of gap_scan and
+    gap_enum_scan. Mutates bts/bh/L in place (element rebinding
     on the caller's lists); the caller advances prev_ts once per
     event, AFTER every chain sharing the stream has consumed it.
 
@@ -2247,13 +1251,12 @@ def _gap_skip_hits(steps, bts, bh, bsp, bap, L, prev_ts, etype, t,
                    pos, gap_us, anchored, anchor_idx,
                    bq=None, qc=None, nn_ets=None, pn=None):
     """One event's position-struct hit vector + buffer/lag maintenance
-    for a gap-bounded SKIP chain — the shared inner step of
-    _cep_gap_skip_fn and _cep_gap_skip_neg_fn (r15 refactor; the two
-    previously duplicated this loop). Carried values are (h, sp, ap)
-    structs; the relaxed hop is the lexicographic max over
-    gap-feasible buffered predecessors (= the batch struct GREATEST),
-    the strict hop reads the previous row's struct gated on its time
-    gap, and the anchor hop stamps the current row position into ap.
+    for a gap-bounded SKIP chain — the inner step of gap_skip_scan.
+    Carried values are (h, sp, ap) structs; the relaxed hop is the
+    lexicographic max over gap-feasible buffered predecessors (= the
+    batch struct GREATEST), the strict hop reads the previous row's
+    struct gated on its time gap, and the anchor hop stamps the
+    current row position into ap.
 
     bq/qc (r15, mid-pattern negation under gap + skip): buffered
     entries additionally carry the inclusive negated-prefix-count q
@@ -2373,16 +1376,15 @@ def _gap_skip_hits(steps, bts, bh, bsp, bap, L, prev_ts, etype, t,
     return hit
 
 
-def _gap_skip_state_fields(steps, pend=False, nn_ets=None) -> list:
-    """stateStructType fields for the gap×skip machines — bq_*/qc
-    exist only when some step carries a negated gap (pre-r15
-    checkpoints of plain gap-skip queries restart cleanly); pnn_*
-    notNext pending slots (r16) exist only when some level is
-    notNext-gated."""
+def _gap_skip_state_fields(steps, nn_ets=None) -> list:
+    """State fields of gap_skip_scan — bq_*/qc exist only when some
+    step carries a negated gap (pre-r15 checkpoints of plain gap-skip
+    queries restart cleanly); pnn_* notNext pending slots (r16) exist
+    only when some level is notNext-gated."""
     n = len(steps) - 1
     has_mneg = any(st[2] is not None for st in steps)
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    fields = (
+    return (
         [f"bts_{i} ARRAY<BIGINT>" for i in range(n)]
         + [f"bh_{i} ARRAY<BIGINT>" for i in range(n)]
         + [f"bsp_{i} ARRAY<BIGINT>" for i in range(n)]
@@ -2392,26 +1394,20 @@ def _gap_skip_state_fields(steps, pend=False, nn_ets=None) -> list:
         + ["lh ARRAY<BIGINT>", "lsp ARRAY<BIGINT>", "lap ARRAY<BIGINT>"]
         + (["qc ARRAY<BIGINT>"] if has_mneg else [])
         + ["prev_ts BIGINT", "pos BIGINT", "cursor BIGINT"]
+        + (["pnn_ts ARRAY<BIGINT>", "pnn_h ARRAY<BIGINT>",
+            "pnn_sp ARRAY<BIGINT>", "pnn_ap ARRAY<BIGINT>",
+            "pnn_q ARRAY<BIGINT>"] if has_nn else [])
     )
-    if pend:
-        fields += ["pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-                   "pend_sus ARRAY<BIGINT>", "pend_sp ARRAY<BIGINT>",
-                   "pend_mp ARRAY<BIGINT>", "pend_ap ARRAY<BIGINT>"]
-    if has_nn:
-        fields += ["pnn_ts ARRAY<BIGINT>", "pnn_h ARRAY<BIGINT>",
-                   "pnn_sp ARRAY<BIGINT>", "pnn_ap ARRAY<BIGINT>",
-                   "pnn_q ARRAY<BIGINT>"]
-    return fields
 
 
-def _cep_gap_fn(steps, within_us, gap_us, nn_ets=None):
-    """Keyed-state executor for a pattern under a per-transition gap
-    bound (within previous_and_current, r13): the O(1) running-max
-    carry cannot expire old starts, so each chain level carries a
-    BUFFER of (row_ts, start) pairs still inside the gap horizon —
-    state ∝ events in ONE gap window per key, the bound's inherent
-    memory (Flink's NFA holds the same partial matches). Per row at
-    time t, a relaxed bounded hop reads max{start : (row_ts, start) ∈
+def gap_scan(steps, within_us, gap_us, nn_ets=None):
+    """Carry scan for a pattern under a per-transition gap bound
+    (within previous_and_current, r13): the O(1) running-max carry
+    cannot expire old starts, so each chain level carries a BUFFER of
+    (row_ts, start) pairs still inside the gap horizon — state ∝
+    events in ONE gap window per key, the bound's inherent memory
+    (Flink's NFA holds the same partial matches). Per row at time t, a
+    relaxed bounded hop reads max{start : (row_ts, start) ∈
     buffer_{i-1}, row_ts >= t − G} — for a NEGATED gap additionally
     count-gated (r14, see _gap_hits) — (rows processed earlier in
     (ts, id) order — same-µs earlier-tiebreak rows are already
@@ -2419,9 +1415,9 @@ def _cep_gap_fn(steps, within_us, gap_us, nn_ets=None):
     reads the previous row's hit gated on its time gap. Buffers prune
     causally (event time is non-decreasing within a key's sorted
     batch, and state carries only what the NEXT event might still
-    reach)."""
-    m = len(steps)
-    n = m - 1
+    reach). notNext gates (nn_ets, r16) park in one-row pending slots
+    (see _gap_hits)."""
+    n = len(steps) - 1
     # r14 advice: the bq/qc count buffers exist ONLY when some step
     # carries a negated gap — plain gap patterns keep the r13 state
     # schema (no widened stateStructType breaking existing checkpoints,
@@ -2430,75 +1426,53 @@ def _cep_gap_fn(steps, within_us, gap_us, nn_ets=None):
     has_neg = any(st[2] is not None for st in steps)
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            bts = [list(vals[i]) for i in range(n)]
-            bh = [list(vals[n + i]) for i in range(n)]
-            if has_neg:
-                bq = [list(vals[2 * n + i]) for i in range(n)]
-                L = list(vals[3 * n])
-                qc = list(vals[3 * n + 1])
-                prev_ts = vals[3 * n + 2]
-                rest = vals[3 * n + 3:]
-            else:
-                bq, qc = None, None
-                L = list(vals[2 * n])
-                prev_ts = vals[2 * n + 1]
-                rest = vals[2 * n + 2:]
-            pn = ([list(rest[0]), list(rest[1]), list(rest[2])]
-                  if has_nn else None)
+    def scan(vals, eids, etypes, ts):
+        bts = [list(vals[i]) for i in range(n)]
+        bh = [list(vals[n + i]) for i in range(n)]
+        if has_neg:
+            bq = [list(vals[2 * n + i]) for i in range(n)]
+            L = list(vals[3 * n])
+            qc = list(vals[3 * n + 1])
+            prev_ts = vals[3 * n + 2]
+            rest = vals[3 * n + 3:]
         else:
-            bts = [[] for _ in range(n)]
-            bh = [[] for _ in range(n)]
-            bq = [[] for _ in range(n)] if has_neg else None
-            L = [-1] * n
-            qc = [0] * n if has_neg else None
-            prev_ts = -1
-            pn = [[-1] * n, [-1] * n, [-1] * n] if has_nn else None
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+            bq, qc = None, None
+            L = list(vals[2 * n])
+            prev_ts = vals[2 * n + 1]
+            rest = vals[2 * n + 2:]
+        pn = [list(r) for r in rest] if has_nn else None
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             hit = _gap_hits(steps, bts, bh, L, prev_ts, etype, t,
                             gap_us, bq, qc,
                             nn_ets if has_nn else None, pn)
             if hit[-1] >= 0 and (
                 within_us is None or t - hit[-1] <= within_us
             ):
-                out["match_id"].append(int(eid))
-                out["match_us"].append(t)
-                out["start_us"].append(hit[-1])
+                cands.append((eid, t, hit[-1]))
             prev_ts = t
-        state.update(
-            (tuple(bts) + tuple(bh) + tuple(bq) + (L, qc, prev_ts)
-             if has_neg
-             else tuple(bts) + tuple(bh) + (L, prev_ts))
-            + (tuple(pn) if has_nn else ())
-        )
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        return (
+            bts + bh + (bq + [L, qc] if has_neg else [L]) + [prev_ts]
+            + (pn if has_nn else [])
+        ), cands
 
-    return fn
+    return CarryScan(
+        _gap_state_fields(steps, nn_ets),
+        lambda: ([[] for _ in range(2 * n)]
+                 + ([[] for _ in range(n)] + [[-1] * n, [0] * n]
+                    if has_neg else [[-1] * n])
+                 + [-1] + ([[-1] * n for _ in range(3)] if has_nn else [])),
+        scan,
+    )
 
 
 def _gap_state_fields(steps, nn_ets=None) -> list:
-    """stateStructType fields for cep_gap_bound_stream. bq_*/qc count
-    buffers exist ONLY when some step carries a negated gap (r14
-    advice): plain gap patterns keep the r13 schema, so a pre-r14
-    streaming query restarted from an existing checkpoint sees an
-    unchanged stateStructType and pays no state columns it never
-    reads. Same rule for the r16 notNext pending slots (pnn_*)."""
+    """State fields of gap_scan. bq_*/qc count buffers exist ONLY
+    when some step carries a negated gap (r14 advice): plain gap
+    patterns keep the r13 schema, so a pre-r14 streaming query
+    restarted from an existing checkpoint sees an unchanged
+    stateStructType and pays no state columns it never reads. Same
+    rule for the r16 notNext pending slots (pnn_*)."""
     n = len(steps) - 1
     has_neg = any(st[2] is not None for st in steps)
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
@@ -2514,94 +1488,46 @@ def _gap_state_fields(steps, nn_ets=None) -> list:
     )
 
 
-def cep_gap_bound_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, gap_us: int, nn_ets=None,
-) -> DataFrame:
-    """True-streaming compile of a per-gap-bounded pattern (see
-    _cep_gap_fn). State = per-level (ts, start) buffers bounded by one
-    gap horizon of events plus the strict-hop lag values (plus the
-    r16 one-row notNext pending slots when gated)."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    fields = _gap_state_fields(steps, nn_ets)
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_gap_fn(list(steps), within_us, gap_us, nn_ets),
-        outputStructType=(
-            "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-            "start_us BIGINT"
-        ),
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _cep_gap_skip_fn(steps, within_us, gap_us, strategy,
-                     anchor_idx=None, nn_ets=None):
+def gap_skip_scan(steps, within_us, gap_us, anchor_idx=None,
+                   nn_ets=None):
     """r14 continuation: AfterMatchSkip over a GAP-BOUNDED chain — the
     buffered carry generalized to (h, sp[, ap]) position structs
     (parallel arrays per level, lexicographic max over gap-feasible
-    predecessors = the batch struct GREATEST) plus the causal
-    acceptance cursor of _cep_skip_fn: skip_past accepts iff
-    start_pos > cursor and advances to the match row position,
-    skip_to_next advances to the accepted start position, the
-    anchored strategies accept iff start_pos >= cursor and advance to
-    the anchor copy's stamped position. Matches arrive in row order
-    within a key, so the fold is causal — one more long of keyed
-    state. r15: MID-PATTERN negated gaps compose (count-gated
-    position-struct buffers, see _gap_skip_hits); bq/qc state exists
-    only when some step carries a negated gap. r16: notNext gates
-    compose (one-row delayed absorption in _gap_skip_hits); pnn_*
-    state exists only when some level is gated."""
+    predecessors = the batch struct GREATEST, see _gap_skip_hits), with
+    the acceptance cursor of skip_scan one more long of keyed state
+    (matches arrive in row order within a key, so cep_keyed_fn's fold
+    is causal). r15: MID-PATTERN negated gaps compose (count-gated
+    position-struct buffers); bq/qc state exists only when some step
+    carries a negated gap. r16: notNext gates compose (one-row delayed
+    absorption in _gap_skip_hits); pnn_* state exists only when some
+    level is gated."""
     n = len(steps) - 1
-    anchored = strategy in ("skip_to_first", "skip_to_last")
-    past = strategy == "skip_past_last_event"
+    anchored = anchor_idx is not None
     has_mneg = any(st[2] is not None for st in steps)
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
+    fields = _gap_skip_state_fields(steps, nn_ets)
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            bts = [list(vals[i]) for i in range(n)]
-            bh = [list(vals[n + i]) for i in range(n)]
-            bsp = [list(vals[2 * n + i]) for i in range(n)]
-            bap = [list(vals[3 * n + i]) for i in range(n)]
-            if has_mneg:
-                bq = [list(vals[4 * n + i]) for i in range(n)]
-                L = [list(vals[5 * n]), list(vals[5 * n + 1]),
-                     list(vals[5 * n + 2])]
-                qc = list(vals[5 * n + 3])
-                prev_ts, pos, cursor = vals[5 * n + 4:5 * n + 7]
-                rest = vals[5 * n + 7:]
-            else:
-                bq, qc = None, None
-                L = [list(vals[4 * n]), list(vals[4 * n + 1]),
-                     list(vals[4 * n + 2])]
-                prev_ts, pos, cursor = vals[4 * n + 3:4 * n + 6]
-                rest = vals[4 * n + 6:]
-            pn = ([list(r) for r in rest[:5]] if has_nn else None)
+    def scan(vals, eids, etypes, ts):
+        bts = [list(vals[i]) for i in range(n)]
+        bh = [list(vals[n + i]) for i in range(n)]
+        bsp = [list(vals[2 * n + i]) for i in range(n)]
+        bap = [list(vals[3 * n + i]) for i in range(n)]
+        if has_mneg:
+            bq = [list(vals[4 * n + i]) for i in range(n)]
+            L = [list(vals[5 * n]), list(vals[5 * n + 1]),
+                 list(vals[5 * n + 2])]
+            qc = list(vals[5 * n + 3])
+            prev_ts, pos, cursor = vals[5 * n + 4:5 * n + 7]
+            rest = vals[5 * n + 7:]
         else:
-            bts = [[] for _ in range(n)]
-            bh = [[] for _ in range(n)]
-            bsp = [[] for _ in range(n)]
-            bap = [[] for _ in range(n)]
-            bq = [[] for _ in range(n)] if has_mneg else None
-            qc = [0] * n if has_mneg else None
-            L = [[-1] * n, [-1] * n, [-1] * n]
-            prev_ts, pos, cursor = -1, 0, -1
-            pn = ([[-1] * n for _ in range(5)] if has_nn else None)
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+            bq, qc = None, None
+            L = [list(vals[4 * n]), list(vals[4 * n + 1]),
+                 list(vals[4 * n + 2])]
+            prev_ts, pos, cursor = vals[4 * n + 3:4 * n + 6]
+            rest = vals[4 * n + 6:]
+        pn = [list(r) for r in rest] if has_nn else None
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             hit = _gap_skip_hits(steps, bts, bh, bsp, bap, L, prev_ts,
                                  etype, t, pos, gap_us, anchored,
                                  anchor_idx, bq, qc,
@@ -2610,220 +1536,28 @@ def _cep_gap_skip_fn(steps, within_us, gap_us, strategy,
                 within_us is None or t - hit[-1][0] <= within_us
             ):
                 h, sp, ap = hit[-1]
-                ok = sp >= cursor if anchored else sp > cursor
-                if ok:
-                    out["match_id"].append(int(eid))
-                    out["match_us"].append(t)
-                    out["start_us"].append(h)
-                    cursor = pos if past else (ap if anchored else sp)
+                cands.append((eid, t, h, sp, pos, ap))
             prev_ts = t
             pos += 1
-        state.update(
-            tuple(bts) + tuple(bh) + tuple(bsp) + tuple(bap)
-            + (tuple(bq) if has_mneg else ())
-            + (L[0], L[1], L[2])
-            + ((qc,) if has_mneg else ())
-            + (prev_ts, pos, cursor)
-            + (tuple(pn) if has_nn else ())
-        )
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        return (
+            bts + bh + bsp + bap + (bq if has_mneg else []) + L
+            + ([qc] if has_mneg else []) + [prev_ts, pos, cursor]
+            + (pn if has_nn else [])
+        ), cands
 
-    return fn
-
-
-def cep_gap_skip_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, gap_us: int, strategy: str,
-    anchor_idx=None, nn_ets=None,
-) -> DataFrame:
-    """True-streaming compile of after-match skip over a gap-bounded
-    chain (see _cep_gap_skip_fn)."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    fields = _gap_skip_state_fields(steps, nn_ets=nn_ets)
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_gap_skip_fn(list(steps), within_us, gap_us, strategy,
-                         anchor_idx, nn_ets),
-        outputStructType=(
-            "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-            "start_us BIGINT"
-        ),
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return CarryScan(
+        fields,
+        lambda: ([[] for _ in range((5 if has_mneg else 4) * n)]
+                 + [[-1] * n for _ in range(3)]
+                 + ([[0] * n] if has_mneg else []) + [-1, 0, -1]
+                 + ([[-1] * n for _ in range(5)] if has_nn else [])),
+        scan,
+        cursor=fields.index("cursor BIGINT"),
     )
 
 
-def _cep_gap_neg_fn(steps, within_us, gap_us, neg_et, neg_within_us,
-                    nn_ets=None):
-    """r14 (r13 verdict item 4a): TERMINAL negation over a gap-bounded
-    chain — the composition of _cep_gap_fn's horizon-pruned per-level
-    buffers (the carry) with _cep_terminal_neg_fn's watermark-delayed
-    hold (the negation): candidates found by the bounded chain are
-    held in keyed state until the event-time watermark passes
-    match_ts + T, killed on a negated arrival in the open interval
-    (match_ts, match_ts + T], emitted on the data path or an
-    event-time timer. State = the gap buffers (∝ one gap horizon of
-    events) + the pending arrays (∝ matches in one T horizon) — both
-    the bounds' inherent memory. r15: MID-PATTERN negated gaps
-    compose (the count-gated buffers of _gap_hits ride the same
-    chain; feasibility is causal at the match row, so the hold is
-    untouched) — bq/qc fields exist only when some step carries a
-    negated gap, keeping the r14 schema otherwise. Same rule for the
-    r16 notNext pending slots (nn_ets — the delayed absorption is
-    orthogonal to the hold: the final step is never gated)."""
-    n = len(steps) - 1
-    has_mneg = any(st[2] is not None for st in steps)
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            bts = [list(vals[i]) for i in range(n)]
-            bh = [list(vals[n + i]) for i in range(n)]
-            if has_mneg:
-                bq = [list(vals[2 * n + i]) for i in range(n)]
-                L = list(vals[3 * n])
-                qc = list(vals[3 * n + 1])
-                rest = vals[3 * n + 2:]
-            else:
-                bq, qc = None, None
-                L = list(vals[2 * n])
-                rest = vals[2 * n + 1:]
-            prev_ts = rest[0]
-            pend = [list(rest[1]), list(rest[2]), list(rest[3])]
-            pn = ([list(rest[4]), list(rest[5]), list(rest[6])]
-                  if has_nn else None)
-        else:
-            bts = [[] for _ in range(n)]
-            bh = [[] for _ in range(n)]
-            bq = [[] for _ in range(n)] if has_mneg else None
-            L = [-1] * n
-            qc = [0] * n if has_mneg else None
-            prev_ts = -1
-            pend = [[], [], []]
-            pn = [[-1] * n, [-1] * n, [-1] * n] if has_nn else None
-
-        def flush(wm_us):
-            out = {"match_id": [], "match_us": [], "start_us": []}
-            keep = [[], [], []]
-            for mid, mus, sus in zip(*pend):
-                if mus + neg_within_us < wm_us:
-                    out["match_id"].append(mid)
-                    out["match_us"].append(mus)
-                    out["start_us"].append(sus)
-                else:
-                    keep[0].append(mid)
-                    keep[1].append(mus)
-                    keep[2].append(sus)
-            return out, keep
-
-        def save(keep):
-            state.update(
-                tuple(bts) + tuple(bh)
-                + ((tuple(bq) + (L, qc)) if has_mneg else (L,))
-                + (prev_ts, keep[0], keep[1], keep[2])
-                + (tuple(pn) if has_nn else ())
-            )
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            hit = _gap_hits(steps, bts, bh, L, prev_ts, etype, t,
-                            gap_us, bq, qc,
-                            nn_ets if has_nn else None, pn)
-            if etype == neg_et:
-                # open interval (match_ts, match_ts+T] — a pending
-                # match at the SAME timestamp survives, matching the
-                # batch RANGE frame
-                pend = [list(z) for z in zip(*[
-                    (mid, mus, sus)
-                    for mid, mus, sus in zip(*pend)
-                    if not (mus < t <= mus + neg_within_us)
-                ])] or [[], [], []]
-            if hit[-1] >= 0 and (
-                within_us is None or t - hit[-1] <= within_us
-            ):
-                pend[0].append(int(eid))
-                pend[1].append(t)
-                pend[2].append(hit[-1])
-            prev_ts = t
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
-
-
-def cep_gap_negation_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, gap_us: int, neg_et: str,
-    neg_within_us: int, nn_ets=None,
-) -> DataFrame:
-    """True-streaming compile of terminal negation + per-gap bound
-    (see _cep_gap_neg_fn). Watermark + event-time timers exactly as
-    cep_terminal_negation_stream; the twin contract is the match set
-    (the batch next_<neg>_ts audit column is unbounded-lookahead)."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
-    )
-    n = len(steps) - 1
-    has_mneg = any(st[2] is not None for st in steps)
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    fields = (
-        [f"bts_{i} ARRAY<BIGINT>" for i in range(n)]
-        + [f"bh_{i} ARRAY<BIGINT>" for i in range(n)]
-        + ([f"bq_{i} ARRAY<BIGINT>" for i in range(n)] if has_mneg
-           else [])
-        + ["l ARRAY<BIGINT>"]
-        + (["qc ARRAY<BIGINT>"] if has_mneg else [])
-        + ["prev_ts BIGINT",
-           "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-           "pend_sus ARRAY<BIGINT>"]
-        + (["pnn_ts ARRAY<BIGINT>", "pnn_h ARRAY<BIGINT>",
-            "pnn_q ARRAY<BIGINT>"] if has_nn else [])
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_gap_neg_fn(list(steps), within_us, gap_us, neg_et,
-                        neg_within_us, nn_ets),
-        outputStructType=(
-            "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-            "start_us BIGINT"
-        ),
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _cep_gap_enum_fn(variant_steps, within_us, gap_us, incl_flags,
-                     flag_names):
+def gap_enum_scan(variant_steps, within_us, gap_us, incl_flags,
+                   flag_names):
     """r14 (r13 verdict item 4b): OPTIONAL steps under a per-gap bound
     — the streaming form of the batch 2^k variant enumeration (the
     skip-variant dominance is unsound under a gap bound, so EVERY
@@ -2843,52 +1577,31 @@ def _cep_gap_enum_fn(variant_steps, within_us, gap_us, incl_flags,
     ns = [len(s) - 1 for s in variant_steps]
     has_mneg = any(st[2] is not None
                    for s in variant_steps for st in s)
+    fields = []
+    for p in ("bts", "bh") + (("bq",) if has_mneg else ()):
+        for v in range(nvar):
+            fields += [f"{p}_{v}_{i} ARRAY<BIGINT>" for i in range(ns[v])]
+    fields += [f"l_{v} ARRAY<BIGINT>" for v in range(nvar)]
+    if has_mneg:
+        fields += [f"qc_{v} ARRAY<BIGINT>" for v in range(nvar)]
+    fields.append("prev_ts BIGINT")
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            idx = 0
-            bts, bh, bq, L, qc = [], [], [], [], []
+    def scan(vals, eids, etypes, ts):
+        idx = 0
+        bts, bh, bq = [], [], []
+        for buf in (bts, bh) + ((bq,) if has_mneg else ()):
             for v in range(nvar):
-                bts.append([list(vals[idx + i]) for i in range(ns[v])])
+                buf.append([list(vals[idx + i]) for i in range(ns[v])])
                 idx += ns[v]
-            for v in range(nvar):
-                bh.append([list(vals[idx + i]) for i in range(ns[v])])
-                idx += ns[v]
-            if has_mneg:
-                for v in range(nvar):
-                    bq.append([list(vals[idx + i])
-                               for i in range(ns[v])])
-                    idx += ns[v]
-            for v in range(nvar):
-                L.append(list(vals[idx]))
-                idx += 1
-            if has_mneg:
-                for v in range(nvar):
-                    qc.append(list(vals[idx]))
-                    idx += 1
-            prev_ts = vals[idx]
-        else:
-            bts = [[[] for _ in range(ns[v])] for v in range(nvar)]
-            bh = [[[] for _ in range(ns[v])] for v in range(nvar)]
-            bq = [[[] for _ in range(ns[v])] for v in range(nvar)] \
-                if has_mneg else []
-            L = [[-1] * ns[v] for v in range(nvar)]
-            qc = [[0] * ns[v] for v in range(nvar)] if has_mneg else []
-            prev_ts = -1
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": [],
-               **{f: [] for f in flag_names}}
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+        L = [list(x) for x in vals[idx:idx + nvar]]
+        idx += nvar
+        qc = []
+        if has_mneg:
+            qc = [list(x) for x in vals[idx:idx + nvar]]
+            idx += nvar
+        prev_ts = vals[idx]
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             starts = []
             for v in range(nvar):
                 hit = _gap_hits(variant_steps[v], bts[v], bh[v], L[v],
@@ -2901,318 +1614,34 @@ def _cep_gap_enum_fn(variant_steps, within_us, gap_us, incl_flags,
                 starts.append(hit[-1] if ok else -1)
             best = max(starts)
             if best >= 0:
-                out["match_id"].append(int(eid))
-                out["match_us"].append(t)
-                out["start_us"].append(best)
-                for f in flag_names:
-                    out[f].append(any(
-                        starts[v] >= 0 for v in range(nvar)
-                        if f in incl_flags[v]
-                    ))
+                cands.append((eid, t, best, *(
+                    any(starts[v] >= 0 for v in range(nvar)
+                        if f in incl_flags[v])
+                    for f in flag_names)))
             prev_ts = t
-        flat = []
-        for v in range(nvar):
-            flat.extend(bts[v])
-        for v in range(nvar):
-            flat.extend(bh[v])
-        for v in range(nvar):
-            flat.extend(bq[v] if has_mneg else [])
-        for v in range(nvar):
-            flat.append(L[v])
-        for v in range(nvar):
-            if has_mneg:
-                flat.append(qc[v])
-        flat.append(prev_ts)
-        state.update(tuple(flat))
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        return (
+            [b for buf in bts + bh + bq for b in buf] + L + qc + [prev_ts]
+        ), cands
 
-    return fn
-
-
-def _cep_gap_enum_neg_fn(variant_steps, within_us, gap_us, incl_flags,
-                         flag_names, neg_et, neg_within_us):
-    """r14 continuation: the TRIPLE composition — optional steps +
-    per-gap bound + TERMINAL negation — streams as the 2^k
-    gap-buffered variant machines (_cep_gap_enum_fn) feeding the
-    watermark-delayed candidate hold (_cep_gap_neg_fn): an OR-gated
-    enum match becomes a PENDING candidate (carrying its with_<name>
-    flags), killed by a negated arrival in the open interval
-    (match_ts, match_ts + T], emitted when the event-time watermark
-    passes the deadline (data path or timer). r15: MID-PATTERN
-    negated gaps compose here too (count-gated buffers per variant,
-    see _cep_gap_enum_fn) — the QUADRUPLE optional + mid-negation +
-    gap + terminal negation; bq/qc state exists only when the
-    pattern has a negated gap."""
-    nvar = len(variant_steps)
-    ns = [len(s) - 1 for s in variant_steps]
-    nf = len(flag_names)
-    has_mneg = any(st[2] is not None
-                   for s in variant_steps for st in s)
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-            idx = 0
-            bts, bh, bq, L, qc = [], [], [], [], []
-            for v in range(nvar):
-                bts.append([list(vals[idx + i]) for i in range(ns[v])])
-                idx += ns[v]
-            for v in range(nvar):
-                bh.append([list(vals[idx + i]) for i in range(ns[v])])
-                idx += ns[v]
-            if has_mneg:
-                for v in range(nvar):
-                    bq.append([list(vals[idx + i])
-                               for i in range(ns[v])])
-                    idx += ns[v]
-            for v in range(nvar):
-                L.append(list(vals[idx]))
-                idx += 1
-            if has_mneg:
-                for v in range(nvar):
-                    qc.append(list(vals[idx]))
-                    idx += 1
-            prev_ts = vals[idx]
-            idx += 1
-            pend = [list(vals[idx + j]) for j in range(3 + nf)]
-        else:
-            bts = [[[] for _ in range(ns[v])] for v in range(nvar)]
-            bh = [[[] for _ in range(ns[v])] for v in range(nvar)]
-            bq = [[[] for _ in range(ns[v])] for v in range(nvar)] \
-                if has_mneg else []
-            L = [[-1] * ns[v] for v in range(nvar)]
-            qc = [[0] * ns[v] for v in range(nvar)] if has_mneg else []
-            prev_ts = -1
-            pend = [[] for _ in range(3 + nf)]
-
-        def flush(wm_us):
-            out = {"match_id": [], "match_us": [], "start_us": [],
-                   **{f: [] for f in flag_names}}
-            keep = [[] for _ in range(3 + nf)]
-            for row in zip(*pend):
-                if row[1] + neg_within_us < wm_us:
-                    out["match_id"].append(row[0])
-                    out["match_us"].append(row[1])
-                    out["start_us"].append(row[2])
-                    for j, f in enumerate(flag_names):
-                        out[f].append(bool(row[3 + j]))
-                else:
-                    for j, v in enumerate(row):
-                        keep[j].append(v)
-            return out, keep
-
-        def save(keep):
-            flat = []
-            for v in range(nvar):
-                flat.extend(bts[v])
-            for v in range(nvar):
-                flat.extend(bh[v])
-            if has_mneg:
-                for v in range(nvar):
-                    flat.extend(bq[v])
-            for v in range(nvar):
-                flat.append(L[v])
-            if has_mneg:
-                for v in range(nvar):
-                    flat.append(qc[v])
-            flat.append(prev_ts)
-            flat.extend(keep)
-            state.update(tuple(flat))
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if state.hasTimedOut:
-            out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save(keep)
-            if out["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(out["match_id"]), **out}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
-            starts = []
-            for v in range(nvar):
-                hit = _gap_hits(variant_steps[v], bts[v], bh[v], L[v],
-                                prev_ts, etype, t, gap_us,
-                                bq[v] if has_mneg else None,
-                                qc[v] if has_mneg else None)
-                okv = hit[-1] >= 0 and (
-                    within_us is None or t - hit[-1] <= within_us
-                )
-                starts.append(hit[-1] if okv else -1)
-            if etype == neg_et:
-                # open interval (match_ts, match_ts+T]
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(3 + nf)])
-            best = max(starts)
-            if best >= 0:
-                pend[0].append(int(eid))
-                pend[1].append(t)
-                pend[2].append(best)
-                for j, f in enumerate(flag_names):
-                    pend[3 + j].append(int(any(
-                        starts[v] >= 0 for v in range(nvar)
-                        if f in incl_flags[v]
-                    )))
-            prev_ts = t
-        out, keep = flush(state.getCurrentWatermarkMs() * 1000)
-        save(keep)
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
-
-    return fn
-
-
-def cep_gap_enum_neg_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    variant_steps: list, within_us, gap_us: int, incl_flags: list,
-    flag_names: list, neg_et: str, neg_within_us: int,
-) -> DataFrame:
-    """True-streaming compile of optional + gap bound + terminal
-    negation (see _cep_gap_enum_neg_fn)."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
-    )
-    has_mneg = any(st[2] is not None
-                   for s in variant_steps for st in s)
-    fields = []
-    for v, steps in enumerate(variant_steps):
-        fields += [f"bts_{v}_{i} ARRAY<BIGINT>"
-                   for i in range(len(steps) - 1)]
-    for v, steps in enumerate(variant_steps):
-        fields += [f"bh_{v}_{i} ARRAY<BIGINT>"
-                   for i in range(len(steps) - 1)]
-    if has_mneg:
-        for v, steps in enumerate(variant_steps):
-            fields += [f"bq_{v}_{i} ARRAY<BIGINT>"
-                       for i in range(len(steps) - 1)]
-    fields += [f"l_{v} ARRAY<BIGINT>" for v in range(len(variant_steps))]
-    if has_mneg:
-        fields += [f"qc_{v} ARRAY<BIGINT>"
-                   for v in range(len(variant_steps))]
-    fields.append("prev_ts BIGINT")
-    fields += ["pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-               "pend_sus ARRAY<BIGINT>"]
-    fields += [f"pend_f{j} ARRAY<BIGINT>" for j in range(len(flag_names))]
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", {f} BOOLEAN" for f in flag_names)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_gap_enum_neg_fn(variant_steps, within_us, gap_us,
-                             incl_flags, flag_names, neg_et,
-                             neg_within_us),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return CarryScan(
+        fields,
+        lambda: ([[] for _ in range((3 if has_mneg else 2) * sum(ns))]
+                 + [[-1] * n for n in ns]
+                 + ([[0] * n for n in ns] if has_mneg else []) + [-1]),
+        scan,
+        [f"{f} BOOLEAN" for f in flag_names],
     )
 
 
-def cep_gap_enum_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    variant_steps: list, within_us, gap_us: int, incl_flags: list,
-    flag_names: list,
-) -> DataFrame:
-    """True-streaming compile of optional-steps-under-gap-bound (see
-    _cep_gap_enum_fn): one gap-buffered chain per include/exclude
-    variant in one keyed state tuple."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    has_mneg = any(st[2] is not None
-                   for s in variant_steps for st in s)
-    fields = []
-    for v, steps in enumerate(variant_steps):
-        fields += [f"bts_{v}_{i} ARRAY<BIGINT>"
-                   for i in range(len(steps) - 1)]
-    for v, steps in enumerate(variant_steps):
-        fields += [f"bh_{v}_{i} ARRAY<BIGINT>"
-                   for i in range(len(steps) - 1)]
-    if has_mneg:
-        for v, steps in enumerate(variant_steps):
-            fields += [f"bq_{v}_{i} ARRAY<BIGINT>"
-                       for i in range(len(steps) - 1)]
-    fields += [f"l_{v} ARRAY<BIGINT>" for v in range(len(variant_steps))]
-    if has_mneg:
-        fields += [f"qc_{v} ARRAY<BIGINT>"
-                   for v in range(len(variant_steps))]
-    fields.append("prev_ts BIGINT")
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", {f} BOOLEAN" for f in flag_names)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_gap_enum_fn(variant_steps, within_us, gap_us, incl_flags,
-                         flag_names),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def cep_terminal_negation_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, neg_et: str, neg_within_us: int,
-) -> DataFrame:
-    """True-streaming compile of a pattern with TERMINAL negation (see
-    _cep_terminal_neg_fn). Requires a watermark (0 s delay — the file
-    replay is in order; a production deployment would set the
-    pipeline's lateness bound here) and event-time timers for keys
-    whose streams go quiet before their last horizons close."""
-    ev = _events_stream(spark, files_dir, sf_dir).withWatermark(
-        "ts", "0 seconds"
-    )
-    fields = (
-        ["c ARRAY<BIGINT>", "l ARRAY<BIGINT>",
-         "bp ARRAY<BIGINT>", "lq ARRAY<BIGINT>", "pos BIGINT",
-         "pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-         "pend_sus ARRAY<BIGINT>"]
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_terminal_neg_fn(list(steps), within_us, neg_et,
-                             neg_within_us),
-        outputStructType=(
-            "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-            "start_us BIGINT"
-        ),
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _cep_until_fn(steps, within_us, counted, neg_et=None,
-                  neg_within_us=None, entry_idx=None, nn_ets=None):
-    """r15: keyed-state executor for a pattern with `until(condition)`
+def until_scan(steps, within_us, counted, entry_idx=None, nn_ets=None):
+    """r15: carry scan for a pattern with `until(condition)`
     stop-gated loops (FlinkCEP's loop stop condition, compiled batch-
     side as per-copy mid-negation gates + a carried freeze value).
     `steps` = [(etype, trans, gate_et)] with gate_et on EVERY copy of
     an until step (and on first copies of ordinary mid-negations);
     `counted` = [(name, etype, up_to, u_et_or_None)].
 
-    The carry machinery is _cep_compiled_fn's paired form (C/L +
+    The carry machinery is compiled_scan's paired form (C/L +
     BP/LQ gates + count-at-start pairs + shared running counts) plus
     ONE RIDER per counted-with-until step per level: u_k = the
     repeated-step count just before the FIRST stop event after the
@@ -3246,7 +1675,7 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
 
     nn_ets (r16): notNext gates compose — a gated level PARKS its
     (h, counts, riders) hit in a one-row pending slot resolved at the
-    next event (the delayed absorption of _cep_not_next_fn), and
+    next event (the delayed absorption of not_next_scan), and
     resolution runs BEFORE the stop-freeze step so a stop event that
     also validates a parked bind freezes the just-absorbed rider
     (the stop is strictly after the bind's entry row, exactly the
@@ -3254,7 +1683,6 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
     m = len(steps)
     n = m - 1
     qtypes = [st[2] for st in steps[1:]]
-    cnt_names = [c[0] for c in counted]
     cnt_ets = [c[1] for c in counted]
     up_tos = [c[2] for c in counted]
     u_ets = [c[3] for c in counted]
@@ -3263,32 +1691,22 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
     E = [e or 0 for e in E]
     has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
     NO_STOP = 1 << 62
-    NP = 3 + K  # terminal-negation hold: mid, mus, sus, pools...
+    # flat layout: C(n) L(n) BP(n) LQ(n) then per counted k:
+    # Ccs(n) Lcs(n), then per counted k with until: Cu(n) Lu(n),
+    # then (nn only) the pending block: Ph(n) Ppos(n), per k
+    # Pcs(n), per until-k Pu(n)
+    nu = sum(1 for u in u_ets if u is not None)
+    base = 4 * n + 2 * K * n + 2 * nu * n
+    if has_nn:
+        base += 2 * n + K * n + nu * n
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # flat layout: C(n) L(n) BP(n) LQ(n) then per counted k:
-        # Ccs(n) Lcs(n), then per counted k with until: Cu(n) Lu(n),
-        # then (nn only) the pending block: Ph(n) Ppos(n), per k
-        # Pcs(n), per until-k Pu(n)
-        nu = sum(1 for u in u_ets if u is not None)
-        base = 4 * n + 2 * K * n + 2 * nu * n
-        if has_nn:
-            base += 2 * n + K * n + nu * n
-        if state.exists:
-            vals = list(state.get)
-            flat = list(vals[0])
-            QCs = list(vals[1])
-            pos = vals[2]
-            pend = ([list(vals[3 + j]) for j in range(NP)]
-                    if neg_et is not None else None)
-        else:
-            flat = [-1] * base
-            QCs = [0] * K
-            pos = 0
-            pend = ([[] for _ in range(NP)]
-                    if neg_et is not None else None)
+    def ok(v, t):
+        return v >= 0 and (within_us is None or t - v <= within_us)
+
+    def scan(vals, eids, etypes, ts):
+        flat = list(vals[0])
+        QCs = list(vals[1])
+        pos = vals[2]
         off = 0
         C = flat[off:off + n]; off += n
         L = flat[off:off + n]; off += n
@@ -3313,71 +1731,8 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
             for k in range(K):
                 if u_ets[k] is not None:
                     Pu[k] = flat[off:off + n]; off += n
-
-        def pack_flat():
-            new_flat = C + L + BP + LQ
-            for k in range(K):
-                new_flat += Ccs[k] + Lcs[k]
-            for k in range(K):
-                if k in Cu:
-                    new_flat += Cu[k] + Lu[k]
-            if has_nn:
-                new_flat += Ph + Ppos
-                for k in range(K):
-                    new_flat += Pcs[k]
-                for k in range(K):
-                    if k in Pu:
-                        new_flat += Pu[k]
-            return new_flat
-
-        def flush(wm_us):
-            o = {"match_id": [], "match_us": [], "start_us": [],
-                 **{f"n_{nm}": [] for nm in cnt_names}}
-            keep = [[] for _ in range(NP)]
-            for row in zip(*pend):
-                if row[1] + neg_within_us < wm_us:
-                    o["match_id"].append(row[0])
-                    o["match_us"].append(row[1])
-                    o["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        o[f"n_{nm}"].append(row[3 + k])
-                else:
-                    for j, v in enumerate(row):
-                        keep[j].append(v)
-            return o, keep
-
-        def save_neg(keep):
-            state.update((pack_flat(), QCs, pos) + tuple(keep))
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if neg_et is not None and state.hasTimedOut:
-            o, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save_neg(keep)
-            if o["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(o["match_id"]), **o}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for nm in cnt_names:
-            out[f"n_{nm}"] = []
-
-        def ok(v, t):
-            return v >= 0 and (within_us is None or t - v <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             # (0) resolve notNext pendings (r16) BEFORE the stop
             # freeze: a just-validated bind's rider must see a stop
             # arriving on the SAME row (it is strictly after the
@@ -3481,17 +1836,9 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
                                 hcs[k][i] = QCs[k] + (
                                     1 if etype == cnt_ets[k] else 0)
                                 hu[k][i] = -1
-            # (3) emission — pool clamped at the chain's freeze; with
-            # a terminal negation the match becomes a held candidate
-            # instead (the pool is causal at the match row, so it
-            # rides the pending arrays like every other annotation)
-            if neg_et is not None and etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
+            # (3) emission — pool clamped at the chain's freeze
             if ok(hh[-1], t):
-                row = [int(eid), t, hh[-1]]
+                row = [eid, t, hh[-1]]
                 for k in range(K):
                     incl = QCs[k] + (1 if etype == cnt_ets[k] else 0)
                     if u_ets[k] is not None:
@@ -3503,15 +1850,7 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
                         pool if up_tos[k] is None
                         else min(pool, up_tos[k])
                     )
-                if neg_et is not None:
-                    for j, v in enumerate(row):
-                        pend[j].append(v)
-                else:
-                    out["match_id"].append(row[0])
-                    out["match_us"].append(row[1])
-                    out["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        out[f"n_{nm}"].append(row[3 + k])
+                cands.append(tuple(row))
             # (4) absorb hits — the lexicographic compare INCLUDES
             # the riders after the counts (unknown -1 ordered as
             # +inf), matching the batch (h, c.., u..) struct max on
@@ -3564,21 +1903,27 @@ def _cep_until_fn(steps, within_us, counted, neg_et=None,
                 if etype == cnt_ets[k]:
                     QCs[k] += 1
             pos += 1
-        if neg_et is not None:
-            o, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save_neg(keep)
-            if o["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(o["match_id"]), **o}
-                )
-            return
-        state.update((pack_flat(), QCs, pos))
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        new_flat = C + L + BP + LQ
+        for k in range(K):
+            new_flat += Ccs[k] + Lcs[k]
+        for k in range(K):
+            if k in Cu:
+                new_flat += Cu[k] + Lu[k]
+        if has_nn:
+            new_flat += Ph + Ppos
+            for k in range(K):
+                new_flat += Pcs[k]
+            for k in range(K):
+                if k in Pu:
+                    new_flat += Pu[k]
+        return [new_flat, QCs, pos], cands
 
-    return fn
+    return CarryScan(
+        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"],
+        lambda: [[-1] * base, [0] * K, 0],
+        scan,
+        [f"n_{c[0]} BIGINT" for c in counted],
+    )
 
 
 def cep_any_pairs_stream(
@@ -3634,50 +1979,37 @@ def cep_any_pairs_stream(
     )
 
 
-def _cep_not_next_fn(steps, within_us, counted, nn_ets, neg_et=None,
-                     neg_within_us=None):
-    """r15: keyed-state executor for patterns with notNext gates
-    (FlinkCEP's strict-contiguity negation, compiled batch-side as a
-    LEAD(1) flag folded into the step predicate). A bind's validity
-    ("the directly following event does not match") is only known at
-    the NEXT event, so gated levels use ONE-ROW DELAYED ABSORPTION:
-    the row's hit parks in a pending slot instead of the carry; the
-    next event either absorbs it (its type clears the gate) or drops
-    it — the lag value L and the gate watermark BP follow the same
-    delayed rule, so strict hops and downstream mid-negation gates
-    read only VALID binds, exactly the batch's gated hit column.
-    `steps` = [(etype, trans, neg_et)] (mid-negation first-copy gates
-    as usual), `counted` = [(name, etype, up_to)], `nn_ets[i]` = the
-    notNext type gating expanded copy i (None = ungated; the final
-    copy is never gated — a pattern cannot end in notNext)."""
+def not_next_scan(steps, within_us, counted, nn_ets):
+    """r15: carry scan for patterns with notNext gates (FlinkCEP's
+    strict-contiguity negation, compiled batch-side as a LEAD(1) flag
+    folded into the step predicate). A bind's validity ("the directly
+    following event does not match") is only known at the NEXT event,
+    so gated levels use ONE-ROW DELAYED ABSORPTION: the row's hit parks
+    in a pending slot instead of the carry; the next event either
+    absorbs it (its type clears the gate) or drops it — the lag value
+    L and the gate watermark BP follow the same delayed rule, so strict
+    hops and downstream mid-negation gates read only VALID binds,
+    exactly the batch's gated hit column. `steps` = [(etype, trans,
+    neg_et)] (mid-negation first-copy gates as usual), `counted` =
+    [(name, etype, up_to)], `nn_ets[i]` = the notNext type gating
+    expanded copy i (None = ungated; the final copy is never gated — a
+    pattern cannot end in notNext)."""
     m = len(steps)
     n = m - 1
     qtypes = [st[2] for st in steps[1:]]
-    cnt_names = [c[0] for c in counted]
     cnt_ets = [c[1] for c in counted]
     up_tos = [c[2] for c in counted]
     K = len(counted)
-    NP = 3 + K  # terminal-negation hold: mid, mus, sus, pools...
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def ok(v, t):
+        return v >= 0 and (within_us is None or t - v <= within_us)
+
+    def scan(vals, eids, etypes, ts):
         # flat: C(n) L(n) BP(n) LQ(n) + per k: Ccs(n) Lcs(n)
         #       + P(n) Ppos(n) + per k: Pcs(n)
-        base = 4 * n + 2 * K * n + 2 * n + K * n
-        if state.exists:
-            vals = list(state.get)
-            flat = list(vals[0])
-            QCs = list(vals[1])
-            pos = vals[2]
-            pend = ([list(vals[3 + j]) for j in range(NP)]
-                    if neg_et is not None else None)
-        else:
-            flat = [-1] * base
-            QCs = [0] * K
-            pos = 0
-            pend = ([[] for _ in range(NP)]
-                    if neg_et is not None else None)
+        flat = list(vals[0])
+        QCs = list(vals[1])
+        pos = vals[2]
         off = 0
         C = flat[off:off + n]; off += n
         L = flat[off:off + n]; off += n
@@ -3692,64 +2024,8 @@ def _cep_not_next_fn(steps, within_us, counted, nn_ets, neg_et=None,
         Pcs = []
         for _k in range(K):
             Pcs.append(flat[off:off + n]); off += n
-
-        def pack_flat():
-            new_flat = C + L + BP + LQ
-            for k in range(K):
-                new_flat += Ccs[k] + Lcs[k]
-            new_flat += P + Ppos
-            for k in range(K):
-                new_flat += Pcs[k]
-            return new_flat
-
-        def flush(wm_us):
-            o = {"match_id": [], "match_us": [], "start_us": [],
-                 **{f"n_{nm}": [] for nm in cnt_names}}
-            keep = [[] for _ in range(NP)]
-            for row in zip(*pend):
-                if row[1] + neg_within_us < wm_us:
-                    o["match_id"].append(row[0])
-                    o["match_us"].append(row[1])
-                    o["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        o[f"n_{nm}"].append(row[3 + k])
-                else:
-                    for j, v in enumerate(row):
-                        keep[j].append(v)
-            return o, keep
-
-        def save_neg(keep):
-            state.update((pack_flat(), QCs, pos) + tuple(keep))
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if neg_et is not None and state.hasTimedOut:
-            o, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save_neg(keep)
-            if o["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(o["match_id"]), **o}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for nm in cnt_names:
-            out[f"n_{nm}"] = []
-
-        def ok(v, t):
-            return v >= 0 and (within_us is None or t - v <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             # (0) resolve pendings: this event IS the gated binds'
             # direct successor — absorb if it clears the gate, drop
             # otherwise; either way the lag slot reflects the verdict
@@ -3799,31 +2075,15 @@ def _cep_not_next_fn(steps, within_us, counted, nn_ets, neg_et=None,
                         hh[i] = ch
                         for k in range(K):
                             hcs[k][i] = ccs[k]
-            # (2) emission (the final step is never notNext-gated);
-            # with a terminal negation the match holds instead
-            if neg_et is not None and etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
+            # (2) emission (the final step is never notNext-gated)
             if ok(hh[-1], t):
-                row = [int(eid), t, hh[-1]]
-                for k in range(K):
-                    pool = (QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                            - hcs[k][-1])
-                    row.append(
-                        pool if up_tos[k] is None
-                        else min(pool, up_tos[k])
-                    )
-                if neg_et is not None:
-                    for j, v in enumerate(row):
-                        pend[j].append(v)
-                else:
-                    out["match_id"].append(row[0])
-                    out["match_us"].append(row[1])
-                    out["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        out[f"n_{nm}"].append(row[3 + k])
+                pools = [QCs[k] + (1 if etype == cnt_ets[k] else 0)
+                         - hcs[k][-1] for k in range(K)]
+                cands.append((
+                    eid, t, hh[-1],
+                    *(p if cap is None else min(p, cap)
+                      for p, cap in zip(pools, up_tos)),
+                ))
             # (3) absorb — gated levels PARK the hit instead
             for i in range(n):
                 if nn_ets[i] is not None:
@@ -3851,101 +2111,28 @@ def _cep_not_next_fn(steps, within_us, counted, nn_ets, neg_et=None,
                 if etype == cnt_ets[k]:
                     QCs[k] += 1
             pos += 1
-        if neg_et is not None:
-            o, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save_neg(keep)
-            if o["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(o["match_id"]), **o}
-                )
-            return
-        state.update((pack_flat(), QCs, pos))
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        new_flat = C + L + BP + LQ
+        for k in range(K):
+            new_flat += Ccs[k] + Lcs[k]
+        new_flat += P + Ppos
+        for k in range(K):
+            new_flat += Pcs[k]
+        return [new_flat, QCs, pos], cands
 
-    return fn
-
-
-def cep_not_next_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, counted: list, nn_ets: list,
-    neg_et: str | None = None, neg_within_us: int | None = None,
-) -> DataFrame:
-    """True-streaming compile of notNext-gated chains (see
-    _cep_not_next_fn). With a terminal negation (r15 continuation)
-    the matches hold until the watermark passes their deadline."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    if neg_et is not None:
-        ev = ev.withWatermark("ts", "0 seconds")
-    fields = ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"]
-    if neg_et is not None:
-        fields += ["pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-                   "pend_sus ARRAY<BIGINT>"]
-        fields += [f"pend_n{k} ARRAY<BIGINT>"
-                   for k in range(len(counted))]
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", n_{c[0]} BIGINT" for c in counted)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_not_next_fn(list(steps), within_us, list(counted),
-                         list(nn_ets), neg_et, neg_within_us),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if neg_et is not None
-                     else GroupStateTimeout.NoTimeout),
+    return CarryScan(
+        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"],
+        lambda: [[-1] * (4 * n + 2 * K * n + 2 * n + K * n), [0] * K, 0],
+        scan,
+        [f"n_{c[0]} BIGINT" for c in counted],
     )
 
 
-def cep_until_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, counted: list,
-    neg_et: str | None = None, neg_within_us: int | None = None,
-    entry_idx=None, nn_ets=None,
-) -> DataFrame:
-    """True-streaming compile of until()-gated loops (see
-    _cep_until_fn). With a terminal negation (r15 continuation) the
-    matches hold in pending arrays until the watermark passes their
-    deadline — same hold as every other neg composite."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    if neg_et is not None:
-        ev = ev.withWatermark("ts", "0 seconds")
-    fields = ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"]
-    if neg_et is not None:
-        fields += ["pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-                   "pend_sus ARRAY<BIGINT>"]
-        fields += [f"pend_n{k} ARRAY<BIGINT>"
-                   for k in range(len(counted))]
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", n_{c[0]} BIGINT" for c in counted)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_until_fn(list(steps), within_us, list(counted),
-                      neg_et, neg_within_us, entry_idx, nn_ets),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if neg_et is not None
-                     else GroupStateTimeout.NoTimeout),
-    )
-
-
-def _cep_until_split_fn(variant_steps, within_us, counted,
-                        neg_et=None, neg_within_us=None,
-                        incl_flags=None, flag_names=None,
-                        entry_idx=None):
+def until_split_scan(variant_steps, within_us, counted,
+                      incl_flags=None, flag_names=None, entry_idx=None):
     """r16 (r15 verdict item 2): until()-gated loops COMPOSED with a
     both-strict oneOrMore/times(1, m) split elsewhere in the pattern —
-    the freeze-rider machinery of _cep_until_fn run over the
-    OR-of-variant-chains of _cep_or_split_fn. Each variant is one
+    the freeze-rider machinery of until_scan run over the
+    OR-of-variant-chains of or_split_scan. Each variant is one
     quantifier expansion of the same pattern (1-rep / >=2-rep per
     split step), each carrying its own C/L/BP/LQ gates, count-at-start
     pairs AND freeze riders; running counts and the row counter are
@@ -3955,27 +2142,23 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
     with unknown encoded as +inf (the f994a3d rule: a not-yet-frozen
     rider is always >= any frozen one because NB is nondecreasing in
     start position). Stop events freeze every variant's riders BEFORE
-    the row's hits, exactly _cep_until_fn's discipline. With a
-    terminal negation the winner row holds in pending arrays until
-    the watermark passes its deadline (pools are causal at the match
-    row).
+    the row's hits, exactly until_scan's discipline.
 
     incl_flags/flag_names (r16, until × optional — r15 verdict item
     8): when the variants are the 2^k include/exclude expansions of
     optional steps, incl_flags[v] is the set of with_<name> flags
     variant v includes and the output gains one BOOLEAN per optional
     step — true iff any including variant completed (causal at the
-    match row, so flags ride the pending hold like the pools).
+    match row).
 
     entry_idx (r16): per variant, per counted step, the expanded
     LEVEL of the loop's entry event — riders stamp there
-    (entry-relative freezes, see _cep_until_fn; the optional variants
+    (entry-relative freezes, see until_scan; the optional variants
     have DIFFERENT entry levels, which is exactly why the freeze must
     be entry-relative for this composition)."""
     sizes = [len(steps) - 1 for steps in variant_steps]
     qtypes = [[st[2] for st in steps[1:]] for steps in variant_steps]
     nvar = len(variant_steps)
-    cnt_names = [c[0] for c in counted]
     cnt_ets = [c[1] for c in counted]
     up_tos = [c[2] for c in counted]
     u_ets = [c[3] for c in counted]
@@ -3985,33 +2168,21 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
          else [[0] * K for _ in range(nvar)])
     E = [[e or 0 for e in ev] for ev in E]
     flag_names = list(flag_names or [])
-    nf = len(flag_names)
     NO_STOP = 1 << 62
-    NP = 3 + K + nf
+    # flat layout per variant v (size n): C L BP LQ, per k:
+    # Ccs Lcs, per k-with-until: Cu Lu — variants concatenated
+    base = sum(4 * n + 2 * K * n + 2 * len(uks) * n for n in sizes)
 
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # flat layout per variant v (size n): C L BP LQ, per k:
-        # Ccs Lcs, per k-with-until: Cu Lu — variants concatenated
-        per_var = [4 * n + 2 * K * n + 2 * len(uks) * n for n in sizes]
-        base = sum(per_var)
-        if state.exists:
-            vals = list(state.get)
-            flat = list(vals[0])
-            QCs = list(vals[1])
-            pos = vals[2]
-            pend = ([list(vals[3 + j]) for j in range(NP)]
-                    if neg_et is not None else None)
-        else:
-            flat = [-1] * base
-            QCs = [0] * K
-            pos = 0
-            pend = ([[] for _ in range(NP)]
-                    if neg_et is not None else None)
+    def ok(vv, t):
+        return vv >= 0 and (within_us is None or t - vv <= within_us)
+
+    def scan(vals, eids, etypes, ts):
+        flat = list(vals[0])
+        QCs = list(vals[1])
+        pos = vals[2]
         V = []  # per variant: (C, L, BP, LQ, Ccs, Lcs, Cu, Lu)
         off = 0
-        for v, n in enumerate(sizes):
+        for n in sizes:
             C = flat[off:off + n]; off += n
             L = flat[off:off + n]; off += n
             BP = flat[off:off + n]; off += n
@@ -4025,71 +2196,8 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
                 Cu[k] = flat[off:off + n]; off += n
                 Lu[k] = flat[off:off + n]; off += n
             V.append((C, L, BP, LQ, Ccs, Lcs, Cu, Lu))
-
-        def pack_flat():
-            new_flat = []
-            for C, L, BP, LQ, Ccs, Lcs, Cu, Lu in V:
-                new_flat += C + L + BP + LQ
-                for k in range(K):
-                    new_flat += Ccs[k] + Lcs[k]
-                for k in uks:
-                    new_flat += Cu[k] + Lu[k]
-            return new_flat
-
-        def flush(wm_us):
-            o = {"match_id": [], "match_us": [], "start_us": [],
-                 **{f"n_{nm}": [] for nm in cnt_names},
-                 **{f: [] for f in flag_names}}
-            keep = [[] for _ in range(NP)]
-            for row in zip(*pend):
-                if row[1] + neg_within_us < wm_us:
-                    o["match_id"].append(row[0])
-                    o["match_us"].append(row[1])
-                    o["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        o[f"n_{nm}"].append(row[3 + k])
-                    for j, f in enumerate(flag_names):
-                        o[f].append(bool(row[3 + K + j]))
-                else:
-                    for j, v in enumerate(row):
-                        keep[j].append(v)
-            return o, keep
-
-        def save_neg(keep):
-            state.update((pack_flat(), QCs, pos) + tuple(keep))
-            if keep[1]:
-                state.setTimeoutTimestamp(
-                    (min(keep[1]) + neg_within_us) // 1000 + 1
-                )
-
-        if neg_et is not None and state.hasTimedOut:
-            o, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save_neg(keep)
-            if o["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(o["match_id"]), **o}
-                )
-            return
-
-        pdf = _cep_events(pdf_iter)
-        if pdf is None:
-            return
-        out = {"match_id": [], "match_us": [], "start_us": []}
-        for nm in cnt_names:
-            out[f"n_{nm}"] = []
-        for f in flag_names:
-            out[f] = []
-
-        def ok(vv, t):
-            return vv >= 0 and (within_us is None
-                                or t - vv <= within_us)
-
-        for eid, etype, t in zip(
-            pdf["event_id"].to_numpy(),
-            pdf["event_type"].to_numpy(),
-            _ts_us(pdf["ts"]).to_numpy(),
-        ):
-            t = int(t)
+        cands = []
+        for eid, etype, t in zip(eids, etypes, ts):
             # (1) stop events freeze EVERY variant's riders first
             for k in uks:
                 if etype == u_ets[k]:
@@ -4147,11 +2255,6 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
                 hits.append((hh, hcs, hu))
             # (3) emission — lexicographic (h, c.., u-as-inf..) winner
             # across satisfied variants, pools from the winner
-            if neg_et is not None and etype == neg_et:
-                kept = [row for row in zip(*pend)
-                        if not (row[1] < t <= row[1] + neg_within_us)]
-                pend = ([list(z) for z in zip(*kept)]
-                        or [[] for _ in range(NP)])
             oks = [ok(hh[-1], t) for hh, _hcs, _hu in hits]
             if any(oks):
                 win = max(
@@ -4163,7 +2266,7 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
                     )
                     for (hh, hcs, hu), okv in zip(hits, oks) if okv
                 )
-                row = [int(eid), t, win[0]]
+                row = [eid, t, win[0]]
                 for k in range(K):
                     incl = QCs[k] + (1 if etype == cnt_ets[k] else 0)
                     if k in uks:
@@ -4174,21 +2277,11 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
                         else min(pool, up_tos[k])
                     )
                 for f in flag_names:
-                    row.append(int(any(
+                    row.append(any(
                         okv for v, okv in enumerate(oks)
                         if okv and f in incl_flags[v]
-                    )))
-                if neg_et is not None:
-                    for j, v in enumerate(row):
-                        pend[j].append(v)
-                else:
-                    out["match_id"].append(row[0])
-                    out["match_us"].append(row[1])
-                    out["start_us"].append(row[2])
-                    for k, nm in enumerate(cnt_names):
-                        out[f"n_{nm}"].append(row[3 + k])
-                    for j, f in enumerate(flag_names):
-                        out[f].append(bool(row[3 + K + j]))
+                    ))
+                cands.append(tuple(row))
             # (4) absorb per variant — riders join the compare
             for v, ((C, L, BP, LQ, Ccs, Lcs, Cu, Lu),
                     (hh, hcs, hu)) in enumerate(zip(V, hits)):
@@ -4230,163 +2323,21 @@ def _cep_until_split_fn(variant_steps, within_us, counted,
                 if etype == cnt_ets[k]:
                     QCs[k] += 1
             pos += 1
-        if neg_et is not None:
-            o, keep = flush(state.getCurrentWatermarkMs() * 1000)
-            save_neg(keep)
-            if o["match_id"]:
-                yield pd.DataFrame(
-                    {"user_id": [key[0]] * len(o["match_id"]), **o}
-                )
-            return
-        state.update((pack_flat(), QCs, pos))
-        if out["match_id"]:
-            yield pd.DataFrame(
-                {"user_id": [key[0]] * len(out["match_id"]), **out}
-            )
+        new_flat = []
+        for C, L, BP, LQ, Ccs, Lcs, Cu, Lu in V:
+            new_flat += C + L + BP + LQ
+            for k in range(K):
+                new_flat += Ccs[k] + Lcs[k]
+            for k in uks:
+                new_flat += Cu[k] + Lu[k]
+        return [new_flat, QCs, pos], cands
 
-    return fn
-
-
-def cep_until_split_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    variant_steps: list, within_us, counted: list,
-    neg_et: str | None = None, neg_within_us: int | None = None,
-    incl_flags=None, flag_names=None, entry_idx=None,
-) -> DataFrame:
-    """True-streaming compile of until() × both-strict OR-split and
-    until() × optional (see _cep_until_split_fn; the optional form
-    passes incl_flags/flag_names for the with_<name> outputs)."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    if neg_et is not None:
-        ev = ev.withWatermark("ts", "0 seconds")
-    flag_names = list(flag_names or [])
-    fields = ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"]
-    if neg_et is not None:
-        fields += ["pend_mid ARRAY<BIGINT>", "pend_mus ARRAY<BIGINT>",
-                   "pend_sus ARRAY<BIGINT>"]
-        fields += [f"pend_n{k} ARRAY<BIGINT>"
-                   for k in range(len(counted))]
-        fields += [f"pend_f{j} ARRAY<BIGINT>"
-                   for j in range(len(flag_names))]
-    out_fields = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-        "start_us BIGINT"
-        + "".join(f", n_{c[0]} BIGINT" for c in counted)
-        + "".join(f", {f} BOOLEAN" for f in flag_names)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_until_split_fn([list(s) for s in variant_steps],
-                            within_us, list(counted),
-                            neg_et, neg_within_us,
-                            incl_flags, flag_names, entry_idx),
-        outputStructType=out_fields,
-        stateStructType=", ".join(fields),
-        outputMode="append",
-        timeoutConf=(GroupStateTimeout.EventTimeTimeout
-                     if neg_et is not None
-                     else GroupStateTimeout.NoTimeout),
-    )
-
-
-def cep_compiled_stream(
-    spark: SparkSession, files_dir: str, sf_dir: str,
-    steps: list, within_us, flag_variants=(), skip="no_skip",
-    anchor_idx=None, counted=None, enum=None, nn_ets=None,
-) -> DataFrame:
-    """True-streaming execution of a compiled CEP pattern (reached via
-    cep.CepPattern.compile_stream): any begin/next/followedBy/times
-    [/optional] pattern — including MID-PATTERN negated gaps (r12),
-    whose gates are causal prefix maxima — runs unbounded with O(1)
-    keyed state: 4·(m-1)+1 longs for the gating chain (carry max, lag,
-    latest-non-null position, latest-negated position, one shared row
-    counter) plus 4·(m-1) per optional-step annotation chain. Every
-    after-match skip strategy streams too (r13 — the cursors are all
-    causal). Terminal negation does NOT route here: compile_stream
-    sends it to cep_terminal_negation_stream (r13), which holds
-    candidates in keyed state until the watermark passes match_ts + T
-    — a watermark-delayed hold, not an interval join. Like every
-    cep_*_stream wrapper it trusts its arguments: compile_stream's
-    front end (CepPattern._chain_set) has refused the compositions no
-    machine implements, and patterns under 2 positive steps."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    if skip != "no_skip":
-        anchored = skip in ("skip_to_first", "skip_to_last")
-        has_nn = (nn_ets is not None
-                  and any(e is not None for e in nn_ets))
-        n = len(steps) - 1
-        fields = (
-            [f"cts_{i} BIGINT" for i in range(n)]
-            + [f"csp_{i} BIGINT" for i in range(n)]
-            + [f"lts_{i} BIGINT" for i in range(n)]
-            + [f"lsp_{i} BIGINT" for i in range(n)]
-            + [f"bp_{i} BIGINT" for i in range(n)]
-            + [f"lq_{i} BIGINT" for i in range(n)]
-            + ([f"cap_{i} BIGINT" for i in range(n)]
-               + [f"lap_{i} BIGINT" for i in range(n)] if anchored else [])
-            + ["last_acc BIGINT", "pos BIGINT"]
-            + ([f"pnn_ts_{i} BIGINT" for i in range(n)]
-               + [f"pnn_sp_{i} BIGINT" for i in range(n)]
-               + [f"pnn_ap_{i} BIGINT" for i in range(n)]
-               + [f"pnn_pos_{i} BIGINT" for i in range(n)]
-               if has_nn else [])
-        )
-        return ev.groupBy("user_id").applyInPandasWithState(
-            _cep_skip_fn(list(steps), within_us, strategy=skip,
-                         anchor_idx=anchor_idx, nn_ets=nn_ets),
-            outputStructType=(
-                "user_id BIGINT, match_id BIGINT, match_us BIGINT, "
-                "start_us BIGINT"
-            ),
-            stateStructType=", ".join(fields),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if enum is not None:
-        # r13: strict-contiguity optional region — every chain is one
-        # of the 2^k include/exclude variants; OR-gated emission with
-        # greedy max-start ACROSS variants (see _cep_compiled_fn)
-        masks, variant_steps, flag_names = enum
-        chains = [(None, list(v)) for v in variant_steps]
-        enum_arg = (list(masks), list(flag_names))
-    else:
-        chains = [(None, list(steps))] + [
-            (name, list(v)) for name, v in flag_variants
-        ]
-        enum_arg = None
-    state_fields = []
-    for ci, (_, ch) in enumerate(chains):
-        n = len(ch) - 1
-        state_fields += [f"c{ci}_{i} BIGINT" for i in range(n)]
-        state_fields += [f"l{ci}_{i} BIGINT" for i in range(n)]
-        state_fields += [f"bp{ci}_{i} BIGINT" for i in range(n)]
-        state_fields += [f"lq{ci}_{i} BIGINT" for i in range(n)]
-    cnt_col = ""
-    if counted:
-        # the main chain's paired count carries + the running counts
-        # (r12: oneOrMore / times(n, m) repetition output streams too;
-        # r13: K counted steps — one carry pair + one running count
-        # each, the tuple max stays greedy because counts are monotone)
-        n0 = len(steps) - 1
-        for k, (nm, _et, _cap) in enumerate(counted):
-            state_fields += [f"cc{k}_{i} BIGINT" for i in range(n0)]
-            state_fields += [f"lc{k}_{i} BIGINT" for i in range(n0)]
-        state_fields += [f"qc{k} BIGINT" for k in range(len(counted))]
-        cnt_col = "".join(f", n_{nm} BIGINT" for nm, _et, _cap in counted)
-    state_fields.append("pos BIGINT")
-    flag_cols = (enum_arg[1] if enum_arg is not None
-                 else [name for name, _ in chains[1:]])
-    out_schema = (
-        "user_id BIGINT, match_id BIGINT, match_us BIGINT, start_us BIGINT"
-        + cnt_col
-        + "".join(f", {name} BOOLEAN" for name in flag_cols)
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _cep_compiled_fn(chains, within_us, counted=counted,
-                         enum=enum_arg),
-        outputStructType=out_schema,
-        stateStructType=", ".join(state_fields),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return CarryScan(
+        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"],
+        lambda: [[-1] * base, [0] * K, 0],
+        scan,
+        [f"n_{c[0]} BIGINT" for c in counted]
+        + [f"{f} BOOLEAN" for f in flag_names],
     )
 
 

@@ -109,3 +109,35 @@ def duck():
         return con
 
     return connect
+
+
+class FakeTimerState:
+    """applyInPandasWithState GroupState stand-in with the event-time
+    timer surface: lets a test drive a keyed CEP function
+    (stateful.cep_keyed_fn) across hand-built or random micro-batch
+    splits without a streaming query. The test sets wm_ms per batch,
+    and hasTimedOut for a timer call."""
+
+    def __init__(self):
+        self._v = None
+        self.hasTimedOut = False
+        self.wm_ms = 0
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ms):
+        assert ms > self.wm_ms, "timer must be beyond the watermark"
+        self.timeout_ms = ms

@@ -25,6 +25,8 @@ from sparkflow.catalog import table
 from sparkflow.registry import QUERIES
 from sparkflow.streaming.cep import CepPattern, _duration_us
 
+from conftest import FakeTimerState
+
 
 def _pdf(df, cols):
     return (
@@ -204,7 +206,7 @@ def test_greedy_dominance_matches_brute_force(spark):
     assert got == want
 
 
-def test_builder_refuses_inexact_constructs():
+def test_builder_refuses_inexact_constructs(spark):
     p = F.lit(True)
     pat = CepPattern.begin("a", p).not_followed_by("n", p, within="1 hour")
     with pytest.raises(ValueError, match="terminal"):
@@ -388,7 +390,7 @@ def test_optional_streaming_twin_matches_batch(spark, sf_small, tmp_path_factory
     assert got["with_click"].any() and not got["with_click"].all()
 
 
-def test_optional_builder_rules():
+def test_optional_builder_rules(spark):
     p = F.lit(True)
     with pytest.raises(ValueError, match="final step"):
         CepPattern.begin("a", p).followed_by("b", p).optional().compile(None)
@@ -408,7 +410,7 @@ def test_optional_builder_rules():
     assert [e for e, *_ in variants[0][1]] == ["A", "B", "B", "C"]
 
 
-def test_strict_contiguity_gating_r12():
+def test_strict_contiguity_gating_r12(spark):
     """r11 advice (medium): the skip/collapse dominance arguments fail
     under strict next() transitions around a quantified step — the
     builder must refuse at construction, never silently drop matches."""
@@ -454,7 +456,7 @@ def test_strict_contiguity_gating_r12():
     assert ok.steps[1].optional
 
 
-def test_mid_negation_builder_rules():
+def test_mid_negation_builder_rules(spark):
     """Mid-pattern negation: pending until the following followed_by;
     one per gap (r12: multiple GAPS may each carry one); never
     entered/exited via next(); never closed by an optional step;
@@ -1111,50 +1113,56 @@ def test_terminal_negation_streaming_twin(spark, sf_small,
     pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
 
 
-class _FakeTimerState:
-    """GroupState stand-in with event-time-timer surface for driving
-    _cep_terminal_neg_fn across hand-built micro-batches."""
-
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self.wm_ms = 0
-        self.timeout_ms = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def getCurrentWatermarkMs(self):
-        return self.wm_ms
-
-    def setTimeoutTimestamp(self, ms):
-        assert ms > self.wm_ms, "timer must be beyond the watermark"
-        self.timeout_ms = ms
+def _hold_cases() -> dict:
+    """One pattern per keyed machine the terminal-negation hold composes
+    with, each ending at event B and followed by notFollowedBy X within
+    60 s, with the events that precede B (ids < 1, all within 10 s)."""
+    A = CepPattern.begin("a", etype="A")
+    ab = A.followed_by("b", etype="B")
+    ar = [(-1, "A", 0), (0, "R", 5)]
+    return {
+        "plain": (ab, [(0, "A", 0)]),
+        "annotation": (A.followed_by("o", etype="O").optional()
+                       .followed_by("b", etype="B"), [(0, "A", 0)]),
+        "counted": (A.followed_by("r", etype="R").one_or_more()
+                    .followed_by("b", etype="B"), ar),
+        "enum": (A.followed_by("o", etype="O").optional()
+                 .next("b", etype="B"), [(0, "A", 0)]),
+        "or_split": (A.next("r", etype="R").one_or_more()
+                     .next("b", etype="B"), ar),
+        "skip": (ab.after_match_skip("skip_past_last_event"),
+                 [(0, "A", 0)]),
+        "gap": (ab.within(30, "previous_and_current"), [(0, "A", 0)]),
+        "gap_enum": (A.followed_by("o", etype="O").optional()
+                     .followed_by("b", etype="B")
+                     .within(30, "previous_and_current"), [(0, "A", 0)]),
+        "gap_skip": (ab.within(30, "previous_and_current")
+                     .after_match_skip("skip_to_next"), [(0, "A", 0)]),
+        "until": (A.followed_by("r", etype="R").one_or_more()
+                  .until("u", etype="U").followed_by("b", etype="B"), ar),
+        "until_optional": (
+            A.followed_by("o", etype="O").optional()
+            .followed_by("r", etype="R").one_or_more()
+            .until("u", etype="U").followed_by("b", etype="B"), ar),
+        "not_next": (A.not_next("y", etype="Y").followed_by("b", etype="B"),
+                     [(0, "A", 0)]),
+    }
 
 
 def test_terminal_negation_late_kill_hand_case():
     """The late-negated-event case (r12 verdict item 4's done
-    criterion): a candidate held across a micro-batch boundary must be
-    KILLED by a negated event arriving in a LATER batch inside its
-    horizon, must SURVIVE one outside it or at the exact same
-    timestamp (open interval), and the trailing survivor must emit on
-    the event-time TIMER, not only on the data path. Pattern A→B,
-    notFollowedBy X within 60 s."""
-    from sparkflow.streaming.stateful import _cep_terminal_neg_fn
+    criterion), on every keyed machine the hold composes with: a
+    candidate held across a micro-batch boundary must be KILLED by a
+    negated event arriving in a LATER batch inside its horizon, must
+    SURVIVE one outside it or at the exact same timestamp (open
+    interval), and the trailing survivor must emit on the event-time
+    TIMER, not only on the data path. The keyed function comes from
+    the same factory compile_stream uses, with no Spark session."""
+    from sparkflow.streaming import stateful
 
-    steps = [("A", "begin", None), ("B", "followed_by", None)]
-
-    def run(batches, wms, fire_at_ms):
-        fn = _cep_terminal_neg_fn(steps, None, "X", 60_000_000)
-        st = _FakeTimerState()
+    def run(pat, batches, wms, fire_at_ms):
+        fn = stateful.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
+        st = FakeTimerState()
         got = []
         for batch, wm in zip(batches, wms):
             st.wm_ms = wm
@@ -1172,20 +1180,24 @@ def test_terminal_negation_late_kill_hand_case():
                 got += list(zip(out["match_id"], out["match_us"]))
         return got
 
-    # killed: X@30 arrives one batch AFTER the B@10 candidate
-    assert run([[(0, "A", 0), (1, "B", 10)], [(2, "X", 30)]],
-               [10_000, 30_000], 200_000) == []
-    # survives: X@80 is outside (10, 70]
-    assert run([[(0, "A", 0), (1, "B", 10)], [(2, "X", 80)]],
-               [10_000, 80_000], 200_000) == [(1, 10_000_000)]
-    # survives: X at exactly match_ts is outside the open interval
-    assert run([[(0, "A", 0), (1, "B", 10)], [(2, "X", 10)]],
-               [10_000, 10_000], 200_000) == [(1, 10_000_000)]
-    # timer emission: no further data, the survivor emits at fire time
-    got = run([[(0, "A", 0), (1, "B", 10)]], [10_000], 71_000)
-    assert got == [(1, 10_000_000)]
-    # ...but NOT if the watermark has not yet passed the deadline
-    assert run([[(0, "A", 0), (1, "B", 10)]], [10_000], None) == []
+    for case, (pat, prefix) in _hold_cases().items():
+        pat = pat.not_followed_by("x", etype="X", within=60)
+        first = prefix + [(1, "B", 10)]
+        # killed: X@30 arrives one batch AFTER the B@10 candidate
+        assert run(pat, [first, [(2, "X", 30)]],
+                   [10_000, 30_000], 200_000) == [], case
+        # survives: X@80 is outside (10, 70]
+        assert run(pat, [first, [(2, "X", 80)]],
+                   [10_000, 80_000], 200_000) == [(1, 10_000_000)], case
+        # survives: X at exactly match_ts is outside the open interval
+        assert run(pat, [first, [(2, "X", 10)]],
+                   [10_000, 10_000], 200_000) == [(1, 10_000_000)], case
+        # timer emission: no further data, the survivor emits at fire
+        # time
+        assert run(pat, [first], [10_000], 71_000) == [(1, 10_000_000)], \
+            case
+        # ...but NOT if the watermark has not yet passed the deadline
+        assert run(pat, [first], [10_000], None) == [], case
 
 
 def test_enum_variant_streaming_twin(spark, sf_small, tmp_path_factory):
@@ -1536,7 +1548,7 @@ def test_gap_enum_streaming_twin(spark, sf_small, tmp_path_factory):
 
 def test_or_split_streaming_twin(spark, sf_small, tmp_path_factory):
     """The both-strict oneOrMore OR-split STREAMS (r14): the 2-variant
-    paired keyed machine (stateful.cep_or_split_stream, routed by
+    paired keyed machine (stateful.or_split_scan, routed by
     compile_stream) must equal the batch OR-of-chains compile —
     matches, greedy max-start across variants, AND n_click — across
     real micro-batch boundaries."""
@@ -1845,7 +1857,7 @@ def test_midneg_gap_streaming_twin(spark, sf_small, tmp_path_factory):
 
 
 def test_gap_state_schema_widens_only_under_negation():
-    """r14 advice: cep_gap_bound_stream's keyed-state schema gained
+    """r14 advice: the gap machine's keyed-state schema gained
     bq_*/qc count buffers for mid-pattern negation — but a PLAIN gap
     pattern must keep the r13 schema (a pre-r14 streaming query
     restarted from an existing checkpoint would otherwise fail on the
@@ -2090,7 +2102,7 @@ def test_next_optional_neg_streaming_twin(spark, sf_small,
 
 def test_until_streaming_twin(spark, sf_small, tmp_path_factory):
     """until() STREAMS (r15): the paired freeze-rider machine
-    (stateful._cep_until_fn, routed by compile_stream) must equal the
+    (stateful.until_scan, routed by compile_stream) must equal the
     batch gate+LEAST compile — matches, greedy starts, and the
     clamped n_click pools — across real micro-batch boundaries."""
     from sparkflow.streaming import stateful
@@ -2144,7 +2156,7 @@ def test_until_streaming_twin(spark, sf_small, tmp_path_factory):
 def test_until_split_streaming_twin(spark, sf_small, tmp_path_factory):
     """until() × both-strict OR-split STREAMS (r16): compile_stream
     routes the composed pattern to the per-variant freeze-rider
-    machine (stateful._cep_until_split_fn) — matches, greedy starts,
+    machine (stateful.until_split_scan) — matches, greedy starts,
     and both pools must equal the batch compile across real
     micro-batch boundaries."""
     from sparkflow.streaming import stateful
@@ -2240,7 +2252,7 @@ def test_until_prefix_pool_entry_relative(spark):
     Both batch and the streaming machine (entry_idx threading)."""
     import pandas as pd
 
-    from sparkflow.streaming.stateful import _cep_until_fn
+    from sparkflow.streaming import stateful
 
     # a U x b c : the stop precedes the loop entry x -> pool must be 1
     df = spark.createDataFrame(
@@ -2263,11 +2275,11 @@ def test_until_prefix_pool_entry_relative(spark):
     # the streaming machine agrees (entry_idx = [1])
     cnt_steps = [s for s in pat.steps
                  if s.one_or_more or s.up_to is not None]
-    fn = _cep_until_fn(
+    fn = stateful.cep_keyed_fn(stateful.until_scan(
         pat._event_expansion(pat.steps), 100 * 1_000_000,
         [("b", "B", None, "U")],
         entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
-    )
+    ))
 
     class _S:
         _v = None
@@ -2355,7 +2367,7 @@ def test_until_builder_rules(spark):
 
 def test_not_next_streaming_twin(spark, sf_small, tmp_path_factory):
     """notNext STREAMS (r15): the delayed-absorption machine
-    (stateful._cep_not_next_fn, routed by compile_stream) must equal
+    (stateful.not_next_scan, routed by compile_stream) must equal
     the batch LEAD-gated compile across real micro-batch
     boundaries."""
     from sparkflow.streaming import stateful
@@ -2609,16 +2621,21 @@ _STREAM_ONLY = ("compile_stream needs at least 2 positive steps",
                 "was built from a Column predicate")
 
 
-def _grid_pattern(combo, typed=True):
+# grid step names -> the corpus's event types
+_GRID_ETYPES = {"a": "view", "b": "click", "c": "purchase", "o": "signup",
+                "q": "error", "u": "error", "x": "error", "t": "error"}
+
+
+def _grid_pattern(combo):
     """a -mid-> b[quant][until][notNext] [-> o optional] [no q] -leave-> c
-    within 1 hour [gap 10 min] [no t within 5 min] [skip]. Untyped
-    steps carry a placeholder predicate: enough for the builder's
-    verdict, without a Column per step."""
+    within 1 day [gap 3 hours] [no t within 2 hours] [skip], every step
+    declared with its _GRID_ETYPES event type (horizons sized to the
+    corpus's roughly one event per key-hour, so patterns match)."""
     (mid, quant, optional, mid_neg, not_next, until, term_neg, skip, gap,
      leave) = combo
 
     def on(name):
-        return {"etype": name.upper()} if typed else {"pred": name}
+        return {"etype": _GRID_ETYPES[name]}
 
     p = getattr(CepPattern.begin("a", **on("a")), mid)("b", **on("b"))
     if quant == "one_or_more":
@@ -2635,17 +2652,17 @@ def _grid_pattern(combo, typed=True):
         p = p.followed_by("o", **on("o")).optional()
     if mid_neg:
         p = p.not_followed_by("q", **on("q"))
-    p = getattr(p, leave)("c", **on("c")).within("1 hour")
+    p = getattr(p, leave)("c", **on("c")).within("1 day")
     if gap:
-        p = p.within("10 minutes", "previous_and_current")
+        p = p.within("3 hours", "previous_and_current")
     if term_neg:
-        p = p.not_followed_by("t", within="5 minutes", **on("t"))
+        p = p.not_followed_by("t", within="2 hours", **on("t"))
     if skip != "no_skip":
         p = p.after_match_skip(skip, "b" if skip == "skip_to_last" else None)
     return p
 
 
-def _parity_grid(typed=True) -> list:
+def _parity_grid() -> list:
     """Every combination of _GRID_AXES the builder accepts, as
     (axis values, pattern). Builder refusals are shared by both
     compilers, so they are not part of the parity question."""
@@ -2654,7 +2671,7 @@ def _parity_grid(typed=True) -> list:
     out = []
     for combo in itertools.product(*(vals for _, vals in _GRID_AXES)):
         try:
-            out.append((combo, _grid_pattern(combo, typed)))
+            out.append((combo, _grid_pattern(combo)))
         except ValueError:
             continue
     return out
@@ -2728,8 +2745,7 @@ def test_compile_and_compile_stream_accept_alike(spark, sf_small,
         spark, sf_small, str(tmp_path_factory.mktemp("cep_parity")), 2
     )
     df = table(spark, sf_small, "events")
-    cases = [(c, _grid_pattern(c))
-             for c, _ in _pairwise(_parity_grid(typed=False))]
+    cases = _pairwise(_parity_grid())
     cases += _parity_extras()
     assert len(cases) >= 20
     diverged = []
@@ -2747,6 +2763,45 @@ def test_compile_and_compile_stream_accept_alike(spark, sf_small,
         if not ok:
             diverged.append((axes, batch, stream))
     assert not diverged, diverged
+
+
+def test_compile_stream_rows_equal_compile(spark, sf_small,
+                                           tmp_path_factory):
+    """Row-level parity of the two back ends: every pairwise grid
+    pattern that streams emits, over two micro-batch files (plus the
+    flush files that close every terminal-negation horizon), exactly
+    the batch compile's rows — user, match, match and start times and
+    every n_/with_ column. Some patterns must match, so empty output on
+    both sides cannot pass."""
+    from sparkflow.streaming import stateful
+
+    stream_dir = stateful.split_events_to_files(
+        spark, sf_small, str(tmp_path_factory.mktemp("cep_rows")), 2
+    )
+    _append_flush_files(spark, stream_dir)
+    df = table(spark, sf_small, "events")
+
+    def rows(frame):
+        return sorted(map(tuple, frame.astype(object).itertuples(
+            index=False)))
+
+    matched, diverged = 0, []
+    for i, (axes, pat) in enumerate(_pairwise(_parity_grid())):
+        try:
+            sdf = pat.compile_stream(spark, stream_dir, sf_small)
+        except ValueError:
+            continue
+        stateful.run_to_memory(sdf, f"t_cep_rows_{i}")
+        got = spark.table(f"t_cep_rows_{i}").toPandas()
+        want = pat.compile(df).toPandas()
+        for c in ("match", "start"):
+            want[f"{c}_us"] = (pd.to_datetime(want[f"{c}_ts"])
+                               .astype("datetime64[us]").astype("int64"))
+        if rows(got) != rows(want[list(got.columns)]):
+            diverged.append(axes)
+        matched += len(want) > 0
+    assert not diverged, diverged
+    assert matched > 0
 
 
 def test_stream_refuses_pre_1970_event_times(spark, sf_small, tmp_path):

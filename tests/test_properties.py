@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from sparkflow.catalog import table
 from sparkflow.oracle_compat import cents
 
+from conftest import FakeTimerState
+
 SF = "/root/testdata/sf0.001"
 _spark = None
 
@@ -1072,7 +1074,7 @@ def test_cep_two_counted_streaming_state_fuzz(streams, types, cut,
                                               within_s):
     """K=2 counted steps in the STREAMING state machine (r13, r12
     verdict item 8): for random streams and random type assignments,
-    driving _cep_compiled_fn through a fake GroupState with a random
+    driving compiled_scan through a fake GroupState with a random
     micro-batch split must emit exactly the batch compile's rows —
     BOTH n_ outputs included (each counted step's count-at-start pair
     and running count live in the state and must survive the batch
@@ -1080,7 +1082,7 @@ def test_cep_two_counted_streaming_state_fuzz(streams, types, cut,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_compiled_fn
+    from sparkflow.streaming import stateful as sf
 
     t0, t1, t2, t3 = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1106,10 +1108,10 @@ def test_cep_two_counted_streaming_state_fuzz(streams, types, cut,
 
     main, variants = pat.stream_chains()
     chains = [(None, main)] + [(n, v) for n, v in variants]
-    fn = _cep_compiled_fn(
+    fn = sf.cep_keyed_fn(sf.compiled_scan(
         chains, within_s * 1_000_000,
         counted=[("s1", t1, None), ("s2", t2, 3)],
-    )
+    ))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1237,7 +1239,7 @@ def test_cep_enum_streaming_state_fuzz(streams, pattern_types,
                                        within_s):
     """The enum-gated streaming state machine (r13): for random
     patterns with one optional step in a strict-contiguity region,
-    driving _cep_compiled_fn's enum mode through a fake GroupState
+    driving compiled_scan's enum mode through a fake GroupState
     with a random micro-batch split must emit exactly the batch
     compile's rows — match set, greedy-across-variants start, and the
     with_<o> flag (the 2^k variant carries and their OR-gate live in
@@ -1245,7 +1247,7 @@ def test_cep_enum_streaming_state_fuzz(streams, pattern_types,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_compiled_fn
+    from sparkflow.streaming import stateful as sf
 
     m = len(pattern_types)
     opt = min(opt_idx, m - 2)
@@ -1289,10 +1291,10 @@ def test_cep_enum_streaming_state_fuzz(streams, pattern_types,
         variant_steps.append(pat._event_expansion(chain))
         masks.append(frozenset(
             f"with_{s.name}" for i, s in opts if i in inc))
-    fn = _cep_compiled_fn(
+    fn = sf.cep_keyed_fn(sf.compiled_scan(
         [(None, v) for v in variant_steps], within_s * 1_000_000,
         enum=(masks, [flag]),
-    )
+    ))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1505,7 +1507,7 @@ def test_cep_gap_bound_fuzz(streams, pattern_types, strict_mask, gap_s,
 def test_cep_gap_streaming_state_fuzz(streams, pattern_types,
                                       strict_mask, gap_s, cut):
     """The gap-bounded streaming state machine (r13): driving
-    _cep_gap_fn through a fake GroupState with a random micro-batch
+    gap_scan through a fake GroupState with a random micro-batch
     split must emit exactly the batch compile's rows for random mixed
     strict/relaxed patterns — the per-level (ts, start) buffers and
     the strict-hop lag must survive the batch boundary, and the causal
@@ -1513,7 +1515,7 @@ def test_cep_gap_streaming_state_fuzz(streams, pattern_types,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_fn
+    from sparkflow.streaming import stateful as sf
 
     m = len(pattern_types)
     strict = [False] + [bool(strict_mask >> (i - 1) & 1)
@@ -1538,8 +1540,8 @@ def test_cep_gap_streaming_state_fuzz(streams, pattern_types,
         ).collect()
     }
 
-    fn = _cep_gap_fn(pat._event_expansion(pat.steps), None,
-                     gap_s * 1_000_000)
+    fn = sf.cep_keyed_fn(sf.gap_scan(pat._event_expansion(pat.steps),
+                                     None, gap_s * 1_000_000))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1718,7 +1720,7 @@ def test_cep_both_strict_one_or_more_fuzz(streams, types, cap, within_s):
 )
 def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
     """Optional-under-gap STREAMS (r14, r13 verdict item 4b): driving
-    _cep_gap_enum_fn (one gap-buffered chain per include/exclude
+    gap_enum_scan (one gap-buffered chain per include/exclude
     variant, shared prev_ts) through a fake GroupState with a random
     micro-batch split must emit exactly the batch 2^k-enumeration's
     rows — matches, greedy max-start ACROSS variants, and the
@@ -1726,7 +1728,7 @@ def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_enum_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1755,8 +1757,8 @@ def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
         pat._event_expansion(list(pat.steps)),
     ]
     incl = [frozenset(), frozenset({"with_s1"})]
-    fn = _cep_gap_enum_fn(chains, None, gap_s * 1_000_000, incl,
-                          ["with_s1"])
+    fn = sf.cep_keyed_fn(sf.gap_enum_scan(chains, None, gap_s * 1_000_000,
+                                          incl, ["with_s1"]))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1778,24 +1780,6 @@ def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
     assert got == want
 
 
-class _FakeTimerGroupState(_FakeGroupState):
-    """_FakeGroupState + the event-time-timer surface the
-    watermark-hold executors consume."""
-
-    def __init__(self):
-        super().__init__()
-        self.hasTimedOut = False
-        self.wm_ms = 0
-        self.timeout_ms = None
-
-    def getCurrentWatermarkMs(self):
-        return self.wm_ms
-
-    def setTimeoutTimestamp(self, ms):
-        assert ms > self.wm_ms, "timer must be beyond the watermark"
-        self.timeout_ms = ms
-
-
 @settings(max_examples=8, deadline=None)
 @given(
     streams=st.lists(
@@ -1813,8 +1797,8 @@ class _FakeTimerGroupState(_FakeGroupState):
 )
 def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
     """Terminal negation + gap bound STREAMS (r14, r13 verdict item
-    4a): driving _cep_gap_neg_fn (horizon-pruned buffers + watermark-
-    delayed hold) through a fake timer GroupState with a random
+    4a): driving gap_scan (horizon-pruned buffers) under the watermark-
+    delayed hold through a fake timer GroupState with a random
     micro-batch split — watermark advancing to each batch's max event
     time, final survivors flushed by an event-time timer — must emit
     exactly the batch compile's match set, including kills across the
@@ -1823,7 +1807,7 @@ def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_neg_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, x_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1845,16 +1829,17 @@ def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
         ).collect()
     }
 
-    fn = _cep_gap_neg_fn(
-        pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-        x_t, neg_s * 1_000_000,
+    fn = sf.cep_keyed_fn(
+        sf.gap_scan(pat._event_expansion(pat.steps), None,
+                    gap_s * 1_000_000),
+        hold=(x_t, neg_s * 1_000_000),
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -1895,7 +1880,7 @@ def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
 def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
                                            within_s, cut):
     """The both-strict OR-split STREAMS (r14): driving
-    _cep_or_split_fn (one paired carry chain per quantifier variant,
+    or_split_scan (one paired carry chain per quantifier variant,
     shared running counts, lexicographic winner) through a fake
     GroupState with a random micro-batch split must emit exactly the
     batch OR-of-chains compile's rows — matches, greedy max-start
@@ -1905,7 +1890,7 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
     from dataclasses import replace as dc_replace
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_or_split_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1929,12 +1914,12 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
           dc_replace(sp, one_or_more=False, times=1, up_to=None),
           pat.steps[2]]
     hi = [pat.steps[0], dc_replace(sp, times=2), pat.steps[2]]
-    fn = _cep_or_split_fn(
+    fn = sf.cep_keyed_fn(sf.or_split_scan(
         [(None, pat._event_expansion(lo)),
          (None, pat._event_expansion(hi))],
         within_s * 1_000_000,
         [("b", b_t, cap)],
-    )
+    ))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1974,15 +1959,15 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
 )
 def test_cep_gap_enum_neg_state_fuzz(streams, types, gap_s, neg_s, cut):
     """The TRIPLE composition — optional + gap bound + terminal
-    negation — STREAMS (r14): _cep_gap_enum_neg_fn (2^k gap machines
-    feeding the watermark hold) driven through a fake timer GroupState
+    negation — STREAMS (r14): gap_enum_scan (2^k gap machines)
+    feeding the watermark hold driven through a fake timer GroupState
     with a random micro-batch split must emit exactly the batch
     enum+negation compile's rows incl. flags; negated/positive type
     collisions included."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_enum_neg_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t, x_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2010,16 +1995,17 @@ def test_cep_gap_enum_neg_state_fuzz(streams, types, gap_s, neg_s, cut):
         pat._event_expansion(list(pat.steps)),
     ]
     incl = [frozenset(), frozenset({"with_s1"})]
-    fn = _cep_gap_enum_neg_fn(
-        chains, None, gap_s * 1_000_000, incl, ["with_s1"],
-        x_t, neg_s * 1_000_000,
+    fn = sf.cep_keyed_fn(
+        sf.gap_enum_scan(chains, None, gap_s * 1_000_000, incl,
+                         ["with_s1"]),
+        hold=(x_t, neg_s * 1_000_000),
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -2131,15 +2117,15 @@ def test_cep_skip_gap_fuzz(streams, types, gap_s):
     cut=st.integers(min_value=1, max_value=10),
 )
 def test_cep_gap_skip_state_fuzz(streams, types, gap_s, strategy, cut):
-    """skip+gap STREAMS (r14): _cep_gap_skip_fn (position-struct
-    buffers + causal cursor) driven through a fake GroupState with a
+    """skip+gap STREAMS (r14): gap_skip_scan (position-struct
+    buffers) + the causal cursor fold driven through a fake GroupState with a
     random micro-batch split must emit exactly the batch skip+gap
     compile's accepted rows, for all three cursor rules incl. the
     anchored one."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_skip_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2167,10 +2153,10 @@ def test_cep_gap_skip_state_fuzz(streams, types, gap_s, strategy, cut):
         ).collect()
     }
 
-    fn = _cep_gap_skip_fn(
+    fn = sf.cep_keyed_fn(sf.gap_skip_scan(
         pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-        strategy, anchor_idx,
-    )
+        anchor_idx,
+    ), skip=strategy)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2221,10 +2207,7 @@ def test_cep_skip_neg_state_fuzz(streams, types, neg_s, strategy,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import (
-        _cep_gap_skip_neg_fn,
-        _cep_skip_neg_fn,
-    )
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, x_t = types
     gap_s = 12
@@ -2252,21 +2235,21 @@ def test_cep_skip_neg_state_fuzz(streams, types, neg_s, strategy,
     }
 
     if gapped:
-        fn = _cep_gap_skip_neg_fn(
+        scan = sf.gap_skip_scan(
             pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-            strategy, anchor_idx, x_t, neg_s * 1_000_000,
+            anchor_idx,
         )
     else:
-        fn = _cep_skip_neg_fn(
-            pat._event_expansion(pat.steps), None, strategy,
-            anchor_idx, x_t, neg_s * 1_000_000,
-        )
+        scan = sf.skip_scan(pat._event_expansion(pat.steps), None,
+                            anchor_idx)
+    fn = sf.cep_keyed_fn(scan, hold=(x_t, neg_s * 1_000_000),
+                         skip=strategy)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -2313,7 +2296,7 @@ def test_cep_counted_neg_state_fuzz(streams, types, neg_s, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_compiled_neg_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t, x_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2338,18 +2321,17 @@ def test_cep_counted_neg_state_fuzz(streams, types, neg_s, within_s,
     }
 
     required = [s for s in pat.steps if not s.optional]
-    fn = _cep_compiled_neg_fn(
-        [(None, pat._event_expansion(required))],
-        within_s * 1_000_000,
-        [("b", b_t, None)],
-        x_t, neg_s * 1_000_000,
+    fn = sf.cep_keyed_fn(
+        sf.compiled_scan([(None, pat._event_expansion(required))],
+                         within_s * 1_000_000, [("b", b_t, None)]),
+        hold=(x_t, neg_s * 1_000_000),
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -2457,7 +2439,7 @@ def test_cep_midneg_gap_fuzz(streams, types, gap_s):
 )
 def test_cep_midneg_gap_streaming_state_fuzz(streams, types, gap_s,
                                              cut):
-    """Mid-pattern negation × gap bound STREAMS (r14): _cep_gap_fn
+    """Mid-pattern negation × gap bound STREAMS (r14): gap_scan
     with count-gated buffers driven through a fake GroupState with a
     random micro-batch split must emit exactly the batch count-gated
     compile's rows — gate state (running counts + per-entry counts)
@@ -2466,7 +2448,7 @@ def test_cep_midneg_gap_streaming_state_fuzz(streams, types, gap_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, x_t, b_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2488,8 +2470,8 @@ def test_cep_midneg_gap_streaming_state_fuzz(streams, types, gap_s,
         ).collect()
     }
 
-    fn = _cep_gap_fn(pat._event_expansion(pat.steps), None,
-                     gap_s * 1_000_000)
+    fn = sf.cep_keyed_fn(sf.gap_scan(pat._event_expansion(pat.steps),
+                                     None, gap_s * 1_000_000))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2628,17 +2610,15 @@ def test_cep_midneg_gap_skip_fuzz(streams, types, gap_s, neg_s,
 )
 def test_cep_midneg_gap_skip_state_fuzz(streams, types, gap_s, neg_s,
                                         strategy, with_neg, cut):
-    """midneg+gap+skip STREAMS (r15): _cep_gap_skip_fn /
-    _cep_gap_skip_neg_fn with count-gated position-struct buffers
+    """midneg+gap+skip STREAMS (r15): gap_skip_scan (with or without
+    the hold) with count-gated position-struct buffers
     driven through a fake (timer) GroupState with a random micro-batch
     split must emit exactly the batch rows, for all three cursor rules
     and with/without the terminal-negation hold."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import (
-        _cep_gap_skip_fn, _cep_gap_skip_neg_fn,
-    )
+    from sparkflow.streaming import stateful as sf
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2671,18 +2651,19 @@ def test_cep_midneg_gap_skip_state_fuzz(streams, types, gap_s, neg_s,
 
     steps = pat._event_expansion(pat.steps)
     if with_neg:
-        fn = _cep_gap_skip_neg_fn(steps, None, gap_s * 1_000_000,
-                                  strategy, anchor_idx, "A",
-                                  neg_s * 1_000_000)
+        fn = sf.cep_keyed_fn(
+            sf.gap_skip_scan(steps, None, gap_s * 1_000_000, anchor_idx),
+            hold=("A", neg_s * 1_000_000), skip=strategy)
     else:
-        fn = _cep_gap_skip_fn(steps, None, gap_s * 1_000_000,
-                              strategy, anchor_idx)
+        fn = sf.cep_keyed_fn(
+            sf.gap_skip_scan(steps, None, gap_s * 1_000_000, anchor_idx),
+            skip=strategy)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -2792,15 +2773,15 @@ def test_cep_midneg_gap_neg_fuzz(streams, types, gap_s, neg_s):
 )
 def test_cep_midneg_gap_neg_state_fuzz(streams, types, gap_s, neg_s,
                                        cut):
-    """midneg+gap+terminal-neg STREAMS (r15): _cep_gap_neg_fn with the
-    count-gated buffers (bq/qc) driven through a fake timer GroupState
+    """midneg+gap+terminal-neg STREAMS (r15): gap_scan + the hold, with
+    the count-gated buffers (bq/qc) driven through a fake timer GroupState
     with a random micro-batch split must emit exactly the batch match
     set — count gates, kills, and open-interval same-timestamp
     survival all across the batch boundary."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_neg_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, x_t, b_t, y_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2823,16 +2804,17 @@ def test_cep_midneg_gap_neg_state_fuzz(streams, types, gap_s, neg_s,
         ).collect()
     }
 
-    fn = _cep_gap_neg_fn(
-        pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-        y_t, neg_s * 1_000_000,
+    fn = sf.cep_keyed_fn(
+        sf.gap_scan(pat._event_expansion(pat.steps), None,
+                    gap_s * 1_000_000),
+        hold=(y_t, neg_s * 1_000_000),
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -2976,7 +2958,7 @@ def test_cep_opt_midneg_gap_fuzz(streams, types, gap_s, neg_s,
 def test_cep_opt_midneg_gap_state_fuzz(streams, types, gap_s, neg_s,
                                        with_neg, cut):
     """The optional×midneg×gap triple (and its terminal-negation
-    quadruple) STREAMS (r15): _cep_gap_enum_fn / _cep_gap_enum_neg_fn
+    quadruple) STREAMS (r15): gap_enum_scan (with or without the hold)
     with per-variant count-gated buffers driven through a fake (timer)
     GroupState with a random micro-batch split must emit exactly the
     batch rows — matches, greedy max-start across variants, the
@@ -2984,9 +2966,7 @@ def test_cep_opt_midneg_gap_state_fuzz(streams, types, gap_s, neg_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import (
-        _cep_gap_enum_fn, _cep_gap_enum_neg_fn,
-    )
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, x_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3018,18 +2998,19 @@ def test_cep_opt_midneg_gap_state_fuzz(streams, types, gap_s, neg_s,
     ]
     incl = [frozenset(), frozenset({"with_b"})]
     if with_neg:
-        fn = _cep_gap_enum_neg_fn(chains, None, gap_s * 1_000_000,
-                                  incl, ["with_b"], "B",
-                                  neg_s * 1_000_000)
+        fn = sf.cep_keyed_fn(
+            sf.gap_enum_scan(chains, None, gap_s * 1_000_000, incl,
+                             ["with_b"]),
+            hold=("B", neg_s * 1_000_000))
     else:
-        fn = _cep_gap_enum_fn(chains, None, gap_s * 1_000_000, incl,
-                              ["with_b"])
+        fn = sf.cep_keyed_fn(sf.gap_enum_scan(
+            chains, None, gap_s * 1_000_000, incl, ["with_b"]))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -3146,7 +3127,7 @@ def test_cep_or_split_neg_fuzz(streams, types, cap, within_s, neg_s):
 def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
                                      neg_s, cut):
     """The OR-split × terminal negation STREAMS (r15):
-    _cep_or_split_neg_fn (paired variant machines + watermark hold)
+    or_split_scan (paired variant machines) + the watermark hold
     driven through a fake timer GroupState with a random micro-batch
     split must emit exactly the batch rows — lexicographic winner,
     pools, kills across the boundary, and the timer-path flush."""
@@ -3155,7 +3136,7 @@ def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
     from dataclasses import replace as dc_replace
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_or_split_neg_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t, y_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3180,19 +3161,18 @@ def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
           dc_replace(sp, one_or_more=False, times=1, up_to=None),
           pat.steps[2]]
     hi = [pat.steps[0], dc_replace(sp, times=2), pat.steps[2]]
-    fn = _cep_or_split_neg_fn(
-        [(None, pat._event_expansion(lo)),
-         (None, pat._event_expansion(hi))],
-        within_s * 1_000_000,
-        [("b", b_t, cap)],
-        y_t, neg_s * 1_000_000,
+    fn = sf.cep_keyed_fn(
+        sf.or_split_scan([(None, pat._event_expansion(lo)),
+                          (None, pat._event_expansion(hi))],
+                         within_s * 1_000_000, [("b", b_t, cap)]),
+        hold=(y_t, neg_s * 1_000_000),
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -3322,7 +3302,7 @@ def test_cep_enum_neg_fuzz(streams, types, within_s, neg_s):
 )
 def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
     """Strict-optional enum × terminal negation STREAMS (r15):
-    _cep_enum_neg_fn (2^k variant chains + watermark hold) driven
+    compiled_scan's enum mode (2^k variant chains) + the hold, driven
     through a fake timer GroupState with a random micro-batch split
     must emit exactly the batch rows — OR-gated matches, greedy
     max-start across variants, flags riding the hold, kills and the
@@ -3330,7 +3310,7 @@ def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_enum_neg_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t, y_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3359,14 +3339,17 @@ def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
         (None, pat._event_expansion(list(pat.steps))),
     ]
     masks = [frozenset(), frozenset({"with_b"})]
-    fn = _cep_enum_neg_fn(chains, within_s * 1_000_000, masks,
-                          ["with_b"], y_t, neg_s * 1_000_000)
+    fn = sf.cep_keyed_fn(
+        sf.compiled_scan(chains, within_s * 1_000_000,
+                         enum=(masks, ["with_b"])),
+        hold=(y_t, neg_s * 1_000_000),
+    )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -3547,7 +3530,7 @@ def test_cep_until_fuzz(streams, types, quant, cap, within_s,
 )
 def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
                               with_neg, neg_s, cut):
-    """until() STREAMS (r15): _cep_until_fn (paired carries + per-level
+    """until() STREAMS (r15): until_scan (paired carries + per-level
     freeze riders, stop events freezing BEFORE the row's hits) driven
     through a fake (timer) GroupState with a random micro-batch split
     must emit exactly the batch rows — matches, greedy starts, and the
@@ -3556,7 +3539,7 @@ def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t, u_t = types
     if quant == 2 and cap is None:
@@ -3583,18 +3566,17 @@ def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
         ).collect()
     }
 
-    fn = _cep_until_fn(
-        pat._event_expansion(pat.steps), within_s * 1_000_000,
-        [("b", b_t, cap, u_t)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
+    fn = sf.cep_keyed_fn(
+        sf.until_scan(pat._event_expansion(pat.steps),
+                      within_s * 1_000_000, [("b", b_t, cap, u_t)]),
+        hold=("A", neg_s * 1_000_000) if with_neg else None,
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -3641,7 +3623,7 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
                                  with_neg, neg_s, cut):
     """notNext × until() (r16 — the last refused pair with a known
     construction): batch compile vs the nn-gated _until_brute, AND
-    the streaming machine (_cep_until_fn with nn_ets — one-row
+    the streaming machine (until_scan with nn_ets — one-row
     delayed absorption riding the freeze riders, resolution BEFORE
     the stop freeze) driven through a fake timer GroupState with a
     random micro-batch split. All roles collide; with_neg stacks the
@@ -3649,7 +3631,7 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t, u_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3681,20 +3663,20 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
                  if s.one_or_more or s.up_to is not None]
     steps_u = pat._event_expansion(pat.steps)
     _sx, nn_ets = pat._not_next_expansion()
-    fn = _cep_until_fn(
-        steps_u, within_s * 1_000_000,
-        [("b", b_t, cap, u_t)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
-        entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
-        nn_ets=nn_ets,
+    fn = sf.cep_keyed_fn(
+        sf.until_scan(
+            steps_u, within_s * 1_000_000, [("b", b_t, cap, u_t)],
+            entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
+            nn_ets=nn_ets,
+        ),
+        hold=("A", neg_s * 1_000_000) if with_neg else None,
     )
     got_s = {}
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -3993,14 +3975,14 @@ def test_cep_until_optional_state_fuzz(streams, types, opt_pos,
                                        within_s, with_neg, neg_s,
                                        cut):
     """until() × optional STREAMS (r16): the 2^k full-variant
-    enumeration through _cep_until_split_fn with incl_flags — match
+    enumeration through until_split_scan with incl_flags — match
     set, greedy starts, clamped pools AND with_o flags must equal the
     batch compile across a random micro-batch split; with_neg adds
     the watermark hold (flags ride the pending arrays)."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_split_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, o_t, b_t, c_t, u_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4038,19 +4020,18 @@ def test_cep_until_optional_state_fuzz(streams, types, opt_pos,
         entry.append(pat._until_entry_indices(chain, cnt_steps))
         incl.append(frozenset(
             f"with_{s.name}" for i, s in opts if i in inc))
-    fn = _cep_until_split_fn(
-        variant_steps, within_s * 1_000_000,
-        [("b", b_t, None, u_t)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
-        incl, ["with_o"], entry,
+    fn = sf.cep_keyed_fn(
+        sf.until_split_scan(variant_steps, within_s * 1_000_000,
+                            [("b", b_t, None, u_t)], incl, ["with_o"],
+                            entry),
+        hold=("A", neg_s * 1_000_000) if with_neg else None,
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -4097,7 +4078,7 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
                                        within_s, with_neg, neg_s,
                                        cut):
     """until() × both-strict OR-split STREAMS (r16):
-    _cep_until_split_fn (per-variant freeze-rider chains, shared
+    until_split_scan (per-variant freeze-rider chains, shared
     counts, cross-variant (h, c.., u-as-inf..) winner) driven through
     a fake (timer) GroupState with a random micro-batch split must
     emit exactly the batch rows; with_neg adds the terminal-negation
@@ -4105,7 +4086,7 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_split_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, c_t, d_t, u_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4153,18 +4134,18 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
             else:
                 var.append(s)
         variant_steps.append(pat._event_expansion(var))
-    fn = _cep_until_split_fn(
-        variant_steps, within_s * 1_000_000,
-        [("b", b_t, None, u_t), ("c", c_t, cap_c, None)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
+    fn = sf.cep_keyed_fn(
+        sf.until_split_scan(variant_steps, within_s * 1_000_000,
+                            [("b", b_t, None, u_t),
+                             ("c", c_t, cap_c, None)]),
+        hold=("A", neg_s * 1_000_000) if with_neg else None,
     )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -4304,7 +4285,7 @@ def test_cep_not_next_fuzz(streams, types, shape, within_s, with_neg,
 def test_cep_not_next_state_fuzz(streams, types, shape, within_s,
                                  with_neg, neg_s, cut):
     """notNext STREAMS (r15): the one-row delayed-absorption machine
-    (_cep_not_next_fn) driven through a fake GroupState with a random
+    (not_next_scan) driven through a fake GroupState with a random
     micro-batch split must emit exactly the batch rows — including a
     gated bind whose verdict event sits on the OTHER side of the
     boundary (the pending slot persists in keyed state). 'strict'
@@ -4312,7 +4293,7 @@ def test_cep_not_next_state_fuzz(streams, types, shape, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_not_next_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4344,15 +4325,16 @@ def test_cep_not_next_state_fuzz(streams, types, shape, within_s,
 
     steps_x, nn_ets = pat._not_next_expansion()
     counted = ([("b", b_t, None)] if shape == "counted" else [])
-    fn = _cep_not_next_fn(steps_x, within_s * 1_000_000, counted,
-                          nn_ets, "B" if with_neg else None,
-                          neg_s * 1_000_000 if with_neg else None)
+    fn = sf.cep_keyed_fn(
+        sf.not_next_scan(steps_x, within_s * 1_000_000, counted, nn_ets),
+        hold=("B", neg_s * 1_000_000) if with_neg else None,
+    )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue
@@ -4585,7 +4567,7 @@ def test_cep_not_next_gap_fuzz(streams, types, strict_mask, nn_on,
 )
 def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
                                       within_s, cut):
-    """notNext × skip STREAMS (r16): _cep_skip_fn's one-row pending
+    """notNext × skip STREAMS (r16): skip_scan's one-row pending
     slots driven through a fake GroupState with a random micro-batch
     split must emit exactly the batch rows — including a parked bind
     whose verdict event sits on the OTHER side of the boundary (the
@@ -4594,7 +4576,7 @@ def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_skip_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4621,8 +4603,11 @@ def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
     }
 
     steps_x, nn_ets = pat._not_next_expansion()
-    fn = _cep_skip_fn(steps_x, within_s * 1_000_000, strategy,
-                      pat._skip_anchor_idx(), nn_ets)
+    fn = sf.cep_keyed_fn(
+        sf.skip_scan(steps_x, within_s * 1_000_000,
+                     pat._skip_anchor_idx(), nn_ets),
+        skip=strategy,
+    )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4671,7 +4656,7 @@ def test_cep_not_next_gap_state_fuzz(streams, types, strict_mask,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, x_t, b_t, c_t = types
     strict = [False,
@@ -4703,7 +4688,8 @@ def test_cep_not_next_gap_state_fuzz(streams, types, strict_mask,
     }
 
     steps_x, nn_ets = pat._not_next_expansion()
-    fn = _cep_gap_fn(steps_x, None, gap_s * 1_000_000, nn_ets)
+    fn = sf.cep_keyed_fn(sf.gap_scan(steps_x, None, gap_s * 1_000_000,
+                                     nn_ets))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4752,7 +4738,7 @@ def test_cep_not_next_gap_skip_state_fuzz(streams, types, strategy,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_skip_fn
+    from sparkflow.streaming import stateful as sf
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4780,8 +4766,11 @@ def test_cep_not_next_gap_skip_state_fuzz(streams, types, strategy,
     }
 
     steps_x, nn_ets = pat._not_next_expansion()
-    fn = _cep_gap_skip_fn(steps_x, None, gap_s * 1_000_000, strategy,
-                          pat._skip_anchor_idx(), nn_ets)
+    fn = sf.cep_keyed_fn(
+        sf.gap_skip_scan(steps_x, None, gap_s * 1_000_000,
+                         pat._skip_anchor_idx(), nn_ets),
+        skip=strategy,
+    )
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4829,11 +4818,7 @@ def test_cep_not_next_neg_composites_state_fuzz(streams, types, mode,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import (
-        _cep_gap_neg_fn,
-        _cep_gap_skip_neg_fn,
-        _cep_skip_neg_fn,
-    )
+    from sparkflow.streaming import stateful as sf
 
     a_t, b_t, x_t = types
     gap_s = 12
@@ -4864,22 +4849,25 @@ def test_cep_not_next_neg_composites_state_fuzz(streams, types, mode,
     }
 
     steps_x, nn_ets = pat._not_next_expansion()
+    hold = (x_t, neg_s * 1_000_000)
     if mode == "skip":
-        fn = _cep_skip_neg_fn(steps_x, None, strategy, None,
-                              x_t, neg_s * 1_000_000, nn_ets)
+        fn = sf.cep_keyed_fn(sf.skip_scan(steps_x, None, None, nn_ets),
+                             hold=hold, skip=strategy)
     elif mode == "gap":
-        fn = _cep_gap_neg_fn(steps_x, None, gap_s * 1_000_000,
-                             x_t, neg_s * 1_000_000, nn_ets)
+        fn = sf.cep_keyed_fn(
+            sf.gap_scan(steps_x, None, gap_s * 1_000_000, nn_ets),
+            hold=hold)
     else:
-        fn = _cep_gap_skip_neg_fn(steps_x, None, gap_s * 1_000_000,
-                                  strategy, None, x_t,
-                                  neg_s * 1_000_000, nn_ets)
+        fn = sf.cep_keyed_fn(
+            sf.gap_skip_scan(steps_x, None, gap_s * 1_000_000, None,
+                             nn_ets),
+            hold=hold, skip=strategy)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
         by_user.setdefault(uid, []).append((ev_id, typ, sec))
     for uid, seq in by_user.items():
-        state = _FakeTimerGroupState()
+        state = FakeTimerState()
         for batch in (seq[:cut], seq[cut:]):
             if not batch:
                 continue

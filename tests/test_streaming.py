@@ -1734,7 +1734,7 @@ def test_cep_compiled_stream_strict_transition(spark, stream_dir, sf_small):
     pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
 
 
-def test_cep_compile_stream_refuses_unstreamable():
+def test_cep_compile_stream_refuses_unstreamable(spark):
     """Column-predicate steps and negation patterns must be refused by
     the streaming compiler with actionable errors (not silently
     mis-streamed)."""
