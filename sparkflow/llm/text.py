@@ -695,7 +695,7 @@ GROUP BY doc_id""")
 
 
 # Learned merge lists memoized per (session, sf_dir) — the same pattern
-# as similarity._HN_QUERY_CACHE: llm_bpe_encode (and repeated plan
+# as similarity._KNN_QUERY_CACHE: llm_bpe_encode (and repeated plan
 # builds / explain dumps of it) must not re-run the K-round trainer
 # job chain every time. Entries are tiny (K<=12 string pairs) and are
 # evicted when the owning session is GC'd.

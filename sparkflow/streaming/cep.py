@@ -616,7 +616,7 @@ class CepPattern:
         successor matches, so greedy dominance and every window shape
         are untouched; zero new exchanges. Streams with a ONE-ROW
         DELAYED absorption (a bind's validity is known at the next
-        event; see stateful.not_next_scan). A pattern cannot END
+        event; see stateful.Carry). A pattern cannot END
         in notNext (FlinkCEP refuses the same — there is no following
         step to emit at); a terminal notFollowedBy COMPOSES (r15
         same-round continuation — the held candidates are produced by
@@ -1206,11 +1206,16 @@ class CepPattern:
         runs unbounded with bounded state, Flink's CEP-on-keyed-state
         shape. It lowers the same chain set as compile() (one front
         end, _chain_set), so both compilers accept and refuse the same
-        compositions. Optional-step annotation chains, 2^k enum and
-        OR-split variants ride one state tuple and emit the same
-        `with_<name>` flags and `n_<name>` counts as the batch compile;
-        mid-pattern negated gaps, notNext, until() loops and gap bounds
-        stream as causal state. The after-match skip cursor and the
+        compositions. The chain set becomes one stateful.Carry: every
+        level carries one lexicographic tuple (start, count-at-start
+        per counted step, until() freeze riders, and the start and
+        anchor positions under a skip strategy), so annotation chains,
+        2^k enum and OR-split variants, counts, mid-pattern negated
+        gaps, notNext and until() loops all run on one ungapped machine
+        (stateful.carry_scan) and emit the same `with_<name>` flags and
+        `n_<name>` counts as the batch compile; a gap bound swaps in the
+        gap-buffered machine (stateful.gap_scan) that keeps the same
+        tuple in its buffers. The after-match skip cursor and the
         TERMINAL negation are stages of the one keyed adapter
         (stateful.cep_keyed_fn): the skip fold runs over the machine's
         candidates, and the negation holds them in keyed state until
@@ -1247,49 +1252,28 @@ class CepPattern:
     def _keyed_stages(self, cs: _ChainSet) -> tuple:
         """(carry scan, hold, skip) — the arguments of
         stateful.cep_keyed_fn for this pattern's validated chain set
-        (any kind but 'any_pairs'): one keyed machine picked from the
-        chain shape, the terminal-negation hold ((neg etype, T) or
-        None) and the after-match skip strategy (or None)."""
+        (any kind but 'any_pairs'): the chain set lowered to one
+        stateful.Carry, run by the gap-buffered machine under a gap
+        bound and by the ungapped one otherwise; the terminal-negation
+        hold ((neg etype, T) or None) and the after-match skip strategy
+        (or None)."""
         from . import stateful
 
-        xs = [self._event_expansion(c) for c in cs.chains]
-        W, gap = self.within_us, self.gap_us
-        incl, flags = list(cs.incl), list(cs.flag_names)
-        counted = [(c.name, c.etype, c.up_to) for c in cs.counted]
-        nn = (self._not_next_expansion()[1]
-              if any(s.not_next is not None for s in self.steps) else None)
         skip = None if self.skip == "no_skip" else self.skip
-        if any(s.until is not None for s in self.steps):
-            counted = [(c.name, c.etype, c.up_to,
-                        c.until[2] if c.until is not None else None)
-                       for c in cs.counted]
-            entry = [self._until_entry_indices(c, cs.counted)
-                     for c in cs.chains]
-            scan = (stateful.until_scan(xs[0], W, counted, entry[0], nn)
-                    if cs.kind == "plain" else
-                    stateful.until_split_scan(xs, W, counted, incl, flags,
-                                              entry))
-        elif gap is not None:
-            scan = (
-                stateful.gap_skip_scan(xs[0], W, gap, cs.anchor_idx, nn)
-                if skip is not None else
-                stateful.gap_enum_scan(xs, W, gap, incl, flags)
-                if cs.kind == "enum" else
-                stateful.gap_scan(xs[0], W, gap, nn)
-            )
-        elif skip is not None:
-            scan = stateful.skip_scan(xs[0], W, cs.anchor_idx, nn)
-        elif nn is not None:
-            scan = stateful.not_next_scan(xs[0], W, counted, nn)
-        elif cs.kind == "split":
-            scan = stateful.or_split_scan([(None, x) for x in xs], W,
-                                          counted)
-        elif cs.kind == "enum":
-            scan = stateful.compiled_scan([(None, x) for x in xs], W,
-                                          enum=(incl, flags))
-        else:
-            scan = stateful.compiled_scan(
-                [(None, xs[0])] + list(zip(flags, xs[1:])), W, counted)
+        carry = stateful.Carry(
+            [self._event_expansion(c) for c in cs.chains], self.within_us,
+            counted=[(c.name, c.etype, c.up_to,
+                      c.until[2] if c.until is not None else None)
+                     for c in cs.counted],
+            incl=cs.incl, flag_names=cs.flag_names,
+            gate=cs.kind == "plain",
+            entry=[self._until_entry_indices(c, cs.counted)
+                   for c in cs.chains],
+            nn_ets=self._not_next_expansion()[1],
+            skip=skip is not None, anchor_idx=cs.anchor_idx,
+        )
+        scan = (stateful.carry_scan(carry) if self.gap_us is None
+                else stateful.gap_scan(carry, self.gap_us))
         hold = (None if self.neg is None
                 else (self.neg_etype, self.neg_within_us))
         return scan, hold, skip
@@ -2433,9 +2417,9 @@ def stream_cep_both_strict_one_or_more(
     Brute-force fuzz over random streams incl. type collisions:
     tests/test_properties.py. Same one-exchange chained-Window plan;
     the second chain is two more window columns, not a new shuffle.
-    STREAMS too (r14): compile_stream routes to the 2-variant paired
-    keyed machine (stateful.or_split_scan — shared running
-    counts, lexicographic winner), twin pytest bit-equal across
+    STREAMS too (r14): compile_stream lowers it to two paired variant
+    chains of the ungapped keyed machine (stateful.carry_scan — shared
+    running counts, lexicographic winner), twin pytest bit-equal across
     micro-batch boundaries incl. fake-GroupState fuzz."""
     pat = (
         CepPattern.begin("view", etype="view")
@@ -2845,10 +2829,10 @@ def stream_cep_within_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stream_cep_midneg_gap) and the position struct riding the
     bounded GREATEST (stream_cep_skip_gap). r14:
     the gap compositions STREAM too — optional-under-gap as 2^k
-    gap-buffered variant machines (stateful.gap_enum_scan),
+    gap-buffered variant chains (stateful.gap_scan),
     terminal-negation+gap as the watermark hold over the buffered
     carry (stateful.gap_scan + cep_keyed_fn's hold), and even the
-    triple optional+negation+gap (the enum machines feeding the
+    triple optional+negation+gap (the variant chains feeding the
     hold); twin pytests are bit-equal
     across micro-batch boundaries incl. fake-GroupState fuzz. The
     oracle unrolls the identical bounded carries; brute-force fuzz
@@ -2962,7 +2946,7 @@ def stream_cep_skip_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Brute-force fuzz over random streams: tests/test_properties.py.
     STREAMS too (r14): the gap machine's buffers generalize to
     (h, sp[, ap]) position structs and the acceptance cursor is
-    causal (stateful.gap_skip_scan) — twin pytest bit-equal across
+    causal (stateful.gap_scan) — twin pytest bit-equal across
     micro-batch boundaries + fake-GroupState fuzz over all three
     cursor rules."""
     pat = (
@@ -3049,7 +3033,7 @@ def stream_cep_midneg_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (struct windows + struct-CASE GREATEST + the q = nq gate);
     brute-force fuzz incl. negated/positive type collisions in
     tests/test_properties.py. STREAMS (the gap buffers gain per-entry
-    counts + per-level running counts — _gap_hits' count gate; twin
+    counts + per-level running counts — gap_scan's count gate; twin
     pytest + fake-GroupState fuzz)."""
     pat = (
         CepPattern.begin("signup", etype="signup")
@@ -3245,7 +3229,7 @@ def stream_cep_midneg_gap_skip(
     lexicographically too) and replays acceptance as the recursive
     next-link CTE. Brute-force fuzz incl. the terminal-negation
     QUADRUPLE: tests/test_properties.py. STREAMS (count-gated
-    position-struct buffers — _gap_skip_hits; twin pytest bit-equal
+    position-struct buffers — gap_scan; twin pytest bit-equal
     across micro-batch boundaries + fake-GroupState fuzz over all
     three cursor rules)."""
     pat = (
@@ -3450,8 +3434,8 @@ def stream_cep_opt_midneg_gap(
     oracle unrolls both count-gated chains against the SHARED
     running error count. Brute-force fuzz (incl. the terminal-
     negation QUADRUPLE): test_cep_opt_midneg_gap_fuzz. STREAMS (2^k
-    count-gated gap machines in one keyed state tuple —
-    gap_enum_scan with per-variant bq/qc; twin pytest + fake-
+    count-gated gap chains in one keyed state tuple —
+    gap_scan with per-variant bq/qc; twin pytest + fake-
     GroupState fuzz)."""
     pat = (
         CepPattern.begin("signup", etype="signup")
@@ -3552,7 +3536,7 @@ def stream_cep_or_split_neg(
     negated/positive types: test_cep_or_split_neg_fuzz. STREAMS (r15:
     the 2-variant paired keyed machine's winner and pools are causal
     at the match row, so they ride the watermark-delayed hold —
-    stateful.or_split_scan + cep_keyed_fn's hold; twin contract = the match set
+    stateful.carry_scan + cep_keyed_fn's hold; twin contract = the match set
     without the audit column; fake-timer-GroupState fuzz +
     availableNow twin in tests)."""
     pat = (
@@ -3634,7 +3618,7 @@ def stream_cep_next_optional_neg(
     unroll. Brute-force fuzz: test_cep_enum_neg_fuzz. STREAMS (r15:
     the enum machine's OR-gated emission and flags are causal at the
     match row, so they ride the watermark-delayed hold —
-    stateful.compiled_scan's enum mode + the hold; fake-timer
+    stateful.carry_scan's any-chain emission + the hold; fake-timer
     GroupState fuzz + availableNow twin in tests)."""
     pat = (
         CepPattern.begin("view", etype="view")
@@ -3739,7 +3723,7 @@ def stream_cep_until(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions (incl. stop==repeat rows sitting AT the freeze):
     tests/test_properties.py::test_cep_until_fuzz. STREAMS (r15:
     paired carries + per-level freeze riders, stop events freezing
-    before the row's hits — stateful.until_scan; twin pytest
+    before the row's hits — stateful.carry_scan; twin pytest
     bit-equal across micro-batch boundaries + fake-GroupState
     fuzz)."""
     pat = (
@@ -3873,8 +3857,8 @@ def stream_cep_until_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX) and the LEAST freeze clamp. Brute-force fuzz with all five
     roles colliding:
     tests/test_properties.py::test_cep_until_or_split_fuzz. STREAMS
-    (r16): one freeze-rider variant machine per quantifier expansion
-    sharing running counts (stateful.until_split_scan) —
+    (r16): one freeze-rider variant chain per quantifier expansion
+    sharing running counts (stateful.carry_scan) —
     fake-GroupState fuzz incl. the terminal-negation hold +
     availableNow twin."""
     pat = (
@@ -4027,8 +4011,8 @@ def stream_cep_until_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     including variant completes. Brute-force fuzz with 5 colliding
     roles, optional before AND after the loop:
     tests/test_properties.py::test_cep_until_optional_fuzz. STREAMS
-    (r16): the 2^k variants run through the per-variant freeze-rider
-    machine with incl_flags (stateful.until_split_scan);
+    (r16): the 2^k variants run as freeze-rider chains of one
+    machine with include flags (stateful.carry_scan);
     fake-GroupState fuzz + availableNow twin."""
     pat = (
         CepPattern.begin("signup", etype="signup")
@@ -4097,7 +4081,7 @@ def stream_cep_not_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row DELAYED ABSORPTION — a bind parks in a pending keyed-state
     slot until its direct successor delivers the verdict, surviving
     micro-batch boundaries; strict hops and downstream gates read
-    only valid binds — stateful.not_next_scan; twin pytest +
+    only valid binds — stateful.carry_scan; twin pytest +
     fake-GroupState fuzz incl. the verdict event landing on the other
     side of the batch split)."""
     pat = (
@@ -4194,7 +4178,7 @@ def stream_cep_not_next_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fuzz (all four strategies × gate position):
     tests/test_properties.py::test_cep_not_next_skip_fuzz. STREAMS
     (r16): the one-row delayed absorption parks (ts, sp, ap, pos) in
-    pending state slots riding skip_scan's causal cursor —
+    pending state slots riding carry_scan's causal cursor —
     fake-GroupState fuzz + availableNow twin."""
     pat = (
         CepPattern.begin("view", etype="view")
@@ -4258,7 +4242,7 @@ def stream_cep_not_next_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r16): a gated level PARKS its (row_ts, start[, q]) entry in a
     one-row pending slot that joins the horizon-pruned gap buffers at
     the next event — absorb if the gate clears, drop otherwise
-    (stateful._gap_hits nn handling); fake-GroupState fuzz + the
+    (stateful.gap_scan nn handling); fake-GroupState fuzz + the
     availableNow twin pin bit-equality across micro-batch
     boundaries."""
     pat = (

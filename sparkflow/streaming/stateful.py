@@ -669,1260 +669,474 @@ def cep_keyed_stream(
     )
 
 
-def _cep_chain_hits(steps, C, L, BP, LQ, etype, t):
-    """One row's hit vector for one expanded chain, evaluated against
-    the PRE-row state (the batch plan's strictly-before frames). A
-    step with a negated entering gap (r12) gates its relaxed carry on
-    the batch compiler's latest-prefix-row dominance: connect iff no
-    negated event arrived after the latest prefix-complete row —
-    LQ[i-1] (latest negated position for this gap) <= BP[i-1] (latest
-    position whose step-(i-1) hit was non-null); both are causal
-    running maxima, so the gate is exact in keyed state."""
-    m = len(steps)
-    hit = [-1] * m
-    for i, (et, trans, neg_et) in enumerate(steps):
-        if etype != et:
-            continue
-        if i == 0:
-            hit[0] = t
-        else:
-            carry_in = C[i - 1] if trans == "followed_by" else L[i - 1]
-            if carry_in >= 0 and (
-                neg_et is None or LQ[i - 1] <= BP[i - 1]
-            ):
-                hit[i] = carry_in
-    return hit
+NO_STOP = 1 << 62  # an until() rider that has not frozen: compares as +inf
 
 
-def _cep_chain_hits_paired(steps, C, L, BP, LQ, Ccs, Lcs, QCs, cnt_ets,
-                           etype, t):
-    """Paired-carry variant of _cep_chain_hits for a chain whose carry
-    transports (start_ts, count-at-start...) — the batch compiler's
-    counted-step struct (r12; generalized to K counted steps r13, r12
-    verdict item 8): c_k = running count of counted-step-k events up to
-    AND INCLUDING the start row, carried through every hop so the
-    match row can emit pool_k = count-at-match − c_k. Ccs/Lcs/QCs/
-    cnt_ets are per-counted-step lists; the carry stays ONE running
-    max because the count fields are all monotone in row order (the
-    lexicographic tuple max still picks the greedy max-start chain)."""
-    m = len(steps)
-    K = len(cnt_ets)
-    hh = [-1] * m
-    hcs = [[-1] * m for _ in range(K)]
-    for i, (et, trans, neg_et) in enumerate(steps):
-        if etype != et:
-            continue
-        if i == 0:
-            hh[0] = t
-            for k in range(K):
-                hcs[k][0] = QCs[k] + (1 if etype == cnt_ets[k] else 0)
-        else:
-            if trans == "followed_by":
-                ch, ccs = C[i - 1], [Ccs[k][i - 1] for k in range(K)]
-            else:
-                ch, ccs = L[i - 1], [Lcs[k][i - 1] for k in range(K)]
-            if ch >= 0 and (neg_et is None or LQ[i - 1] <= BP[i - 1]):
-                hh[i] = ch
-                for k in range(K):
-                    hcs[k][i] = ccs[k]
-    return hh, hcs
+def _swap_unknown(u: int) -> int:
+    """Between the stored and the compared form of an until() rider:
+    the stored -1 (loop entered, no stop yet) and -2 (loop not yet
+    entered) become NO_STOP and NO_STOP + 1, so both order above every
+    frozen count in the lexicographic carry max; applied again it maps
+    back. The two never meet at one level (a level is uniformly before
+    or after the loop entry)."""
+    return u if 0 <= u < NO_STOP else NO_STOP - 1 - u
 
 
-def compiled_scan(chains: list, within_us, counted=None, enum=None):
-    """Carry scan for a compiled CEP pattern: `chains` =
-    [(flag_name_or_None, expanded_steps)], the first chain GATES the
-    match (cep.CepPattern's required steps), later chains annotate
-    (`with_<name>` flags for optional steps). Per chain, state = C[i]
-    (running max of step-i's hit over all processed rows — the MAX OVER
-    UNBOUNDED..1 PRECEDING carry) and L[i] (step-i's hit at the
-    immediately previous row — the LAG(1) carry for strict
-    transitions), plus — for mid-pattern negated gaps (r12) — BP[i]
-    (position of the latest row whose step-i hit was non-null) and
-    LQ[i] (position of the latest negated event for the gap entering
-    step i+1) with one per-key row counter: Σ 4·(m_c-1) + 1 BIGINTs,
-    O(1) regardless of stream length. Each row's hits evaluate against
-    the PRE-row state, then the state absorbs the row — so one event
-    can serve step i for future rows while consuming only
-    strictly-earlier events for step i+1, exactly the distinct-event
-    binding the batch compiler guarantees. `counted` (r12; K counted
-    steps r13) = [(name, etype, up_to), ...] — the main chain's carry
-    pairs with one count-at-start and one running count PER counted
-    step (2·K·(m-1) + K more longs, still O(1)).
+class Carry:
+    """What a keyed CEP machine carries and emits — the front end's
+    chain set lowered by cep.CepPattern._keyed_stages. carry_scan and
+    gap_scan run it.
 
-    `enum` (r13 — strict-contiguity optional regions): instead of
-    chain 0 gating and later chains annotating, EVERY chain is one of
-    the batch compile's 2^k include/exclude variants; enum =
-    (masks, flag_names) with masks[i] = the set of optional-step names
-    variant i includes. A row matches when ANY variant completes
-    within the window; start_us = the max satisfied variant's carry
-    (greedy max-start ACROSS variants — the batch GREATEST) and
-    with_<o> = OR over satisfied variants including o. Same per-chain
-    state as the annotation mode."""
-    sizes = [len(steps) - 1 for _, steps in chains]
-    if enum is not None:
-        enum_masks, flag_names = enum
-    else:
-        enum_masks = None
-        flag_names = [name for name, _ in chains[1:]]
-    # per chain, per carry slot j: the negated etype guarding the gap
-    # that enters step j+1 (None = ungated)
-    qtypes = [[st[2] for st in steps[1:]] for _, steps in chains]
-    counted = list(counted) if counted else []
-    cnt_ets = [c[1] for c in counted]
-    up_tos = [c[2] for c in counted]
-    K = len(counted)
-    n0 = sizes[0]
+    chains: the expanded step lists [(etype, transition, gate_etype)]
+    (gate_etype = the negated or until() stop type guarding the gap
+    that enters the step; None = ungated).
+
+    The carried value at every level is ONE lexicographic tuple
+    (h, c_1..c_K, u_1..u_U, sp, ap), compared as the batch compile's
+    struct max compares it:
+    - h: the chain's start time;
+    - c_k: per counted step (`counted` = [(name, etype, up_to,
+      until_etype or None)]), the running count of its events up to
+      AND INCLUDING the start row — the match row emits
+      n_<name> = count-at-match − c_k. The counts are monotone in row
+      order, so one running max still picks the greedy max-start chain;
+    - u_k: per counted step with an until() stop, the freeze rider —
+      the repeated-step count just before the FIRST stop event after
+      the loop entry; stored -1 while no stop has arrived and -2 before
+      the loop is entered, both compared as +inf (_swap_unknown). A
+      not-yet-frozen rider is always >= any frozen one (the batch NB
+      is nondecreasing in start position and freezes only grow with
+      time), so unknown-as-infinity reproduces the batch order without
+      knowing the future. `entry[ci][k]` is the expanded level of the
+      loop's entry event (the copy before the loop's first copy; 0 =
+      the chain start): the pair (c_k, u_k) is stamped there, so a stop
+      in an unguarded prefix gap cannot clamp the pool;
+    - (sp, ap): only with `skip`, the start row position and the
+      anchor copy's row position (stamped at expanded step
+      `anchor_idx`, skip_to_first/skip_to_last) — cep_keyed_fn's
+      acceptance cursor reads them.
+
+    Emission, with `gate`: chains[0] gates the match and chain ci
+    reports the with_<name> flags in incl[ci] (one annotation chain per
+    optional step). Without it any chain may match (the 2^k enum and
+    OR-split variants): the winner is the lexicographic max of the
+    satisfied chains' carries — the batch struct GREATEST — the counts
+    come from the winner and each flag is the OR over the satisfied
+    chains that include it.
+
+    nn_ets[i] (notNext): the type that must not directly follow copy
+    i's bound event (None = ungated; the final copy never is). Its
+    validity is only known at the NEXT event, so a gated level PARKS
+    its hit in a one-row pending slot that the next event absorbs (its
+    type clears the gate) or drops — strict hops and downstream gates
+    read only valid binds, exactly the batch LEAD(1)-folded predicate."""
+
+    def __init__(self, chains, within_us, counted=(), incl=(),
+                 flag_names=(), gate=True, entry=None, nn_ets=None,
+                 skip=False, anchor_idx=None):
+        self.chains = [list(s) for s in chains]
+        self.within_us = within_us
+        self.incl = list(incl)
+        self.flag_names = list(flag_names)
+        self.gate = gate
+        self.skip = skip
+        self.K = K = len(counted)
+        self.cnt_ets = [c[1] for c in counted]
+        self.up_tos = [c[2] for c in counted]
+        uks = [k for k, c in enumerate(counted) if c[3] is not None]
+        # tuple index of each until rider
+        self.uslot = {k: 1 + K + j for j, k in enumerate(uks)}
+        self.stops = {}  # stop etype -> [(k, tuple index)]
+        for k in uks:
+            self.stops.setdefault(counted[k][3], []).append(
+                (k, self.uslot[k]))
+        self.names = ([f"n{k}" for k in range(K)]
+                      + [f"u{k}" for k in uks]
+                      + (["sp", "ap"] if skip else []))
+        self.width = 1 + len(self.names)
+        self.uidx = set(self.uslot.values())
+        self.none = tuple(NO_STOP if j in self.uidx else -1
+                          for j in range(self.width))
+        entry = entry or [[0] * K for _ in self.chains]
+        # per chain: the until riders entered after the start, and the
+        # levels whose hop stamps a rider pair or the anchor position
+        self.late = [[k for k in uks if e[k]] for e in entry]
+        self.entry_at = [{} for _ in self.chains]
+        for ci, e in enumerate(entry):
+            for k in self.late[ci]:
+                self.entry_at[ci].setdefault(e[k], []).append(k)
+        anchor = {anchor_idx} if skip and anchor_idx is not None else set()
+        self.stamp_at = [set(ea) | anchor for ea in self.entry_at]
+        self.anchor_idx = anchor_idx
+        self.riders = ([f"n_{c[0]} BIGINT" for c in counted]
+                       + [f"{f} BOOLEAN" for f in self.flag_names])
+        self.gated = {i for i, e in enumerate(nn_ets or ()) if e is not None}
+        self.nn_ets = nn_ets
+
+    def start(self, ci, etype, t, pos, qcs) -> tuple:
+        """The carried value a begin-step hit at row `pos` starts."""
+        if self.width == 1:
+            return (t,)
+        late = self.late[ci]
+        return (
+            t,
+            *(-1 if k in late else qcs[k] + (etype == self.cnt_ets[k])
+              for k in range(self.K)),
+            *(NO_STOP + 1 if k in late else NO_STOP for k in self.uslot),
+            *((pos, -1) if self.skip else ()),
+        )
+
+    def stamp(self, v, ci, i, etype, qcs, pos) -> tuple:
+        """A hop's value at level `i` of chain `ci` after the loop-entry
+        and anchor stamps: the entered riders restart at this row."""
+        v = list(v)
+        for k in self.entry_at[ci].get(i, ()):
+            v[1 + k] = qcs[k] + (etype == self.cnt_ets[k])
+            v[self.uslot[k]] = NO_STOP
+        if self.skip and i == self.anchor_idx:
+            v[-1] = pos
+        return tuple(v)
+
+    def candidate(self, finals, eid, t, etype, qcs, pos):
+        """The row's candidate from each chain's final-level hit, or
+        None: (match_id, match_us, start_us, n_<name>.., with_<name>..
+        [, start_pos, match_pos, anchor_pos])."""
+        W = self.within_us
+        if self.gate:
+            win = finals[0]
+            if win[0] < 0 or (W is not None and t - win[0] > W):
+                return None
+        oks = [v[0] >= 0 and (W is None or t - v[0] <= W) for v in finals]
+        if not self.gate:
+            if not any(oks):
+                return None
+            win = max(v for v, ok in zip(finals, oks) if ok)
+        row = [eid, t, win[0]]
+        for k in range(self.K):
+            incl = qcs[k] + (etype == self.cnt_ets[k])
+            if k in self.uslot:
+                incl = min(incl, win[self.uslot[k]])
+            pool = incl - win[1 + k]
+            cap = self.up_tos[k]
+            row.append(pool if cap is None else min(pool, cap))
+        row += [any(ok for ok, inc in zip(oks, self.incl) if f in inc)
+                for f in self.flag_names]
+        if self.skip:
+            row += [win[-2], pos, win[-1]]
+        return tuple(row)
+
+    def tuples(self, vals, off, n) -> list:
+        """n carried tuples from `width` stored blocks of n values."""
+        cols = [vals[off + j * n:off + (j + 1) * n]
+                for j in range(self.width)]
+        for j in self.uidx:
+            cols[j] = [_swap_unknown(u) for u in cols[j]]
+        return list(zip(*cols))
+
+    def blocks(self, vs) -> list:
+        """The stored form of carried tuples: `width` blocks."""
+        return [_swap_unknown(v[j]) if j in self.uidx else v[j]
+                for j in range(self.width) for v in vs]
+
+
+def carry_scan(carry: Carry) -> CarryScan:
+    """The ungapped keyed CEP machine: per chain and level, state =
+    C (running max of the level's hit over all processed rows — the
+    MAX OVER UNBOUNDED..1 PRECEDING carry), L (the level's hit at the
+    previous row — the LAG(1) carry of strict transitions), BP (the
+    position of the latest row whose hit was non-null) and LQ (the
+    position of the latest negated or stop event for the gap entering
+    the next step), plus the notNext pending slot of gated levels, one
+    running count per counted step and the row counter: O(1) per key
+    regardless of stream length.
+
+    Per row: (0) last row's parked notNext hits resolve; (1) an until()
+    stop event freezes every live rider in state (every carried chain
+    started strictly before this row; starts made at it are not
+    frozen); (2) each level's hit is evaluated against the PRE-row
+    state — a relaxed hop reads C, a strict hop reads L, and a gated
+    gap connects iff LQ <= BP (no negated event after the latest
+    prefix-complete row; both causal running maxima, so the gate is
+    exact in keyed state); (3) the state absorbs the hits; (4) the
+    candidate is emitted from this row's hits (Carry's gate/any rule).
+    So one event can serve step i for future rows while consuming only
+    strictly-earlier events for step i+1 — the batch compiler's
+    distinct-event binding."""
+    chains, K, NONE = carry.chains, carry.K, carry.none
+    gated, nn_ets, w = carry.gated, carry.nn_ets, carry.width
+    sizes = [len(s) - 1 for s in chains]
+    # per chain: its steps, the negated type of each level's outgoing
+    # gap, its levels and the levels whose hop stamps
+    shapes = [(s, [st[2] for st in s[1:]], range(len(s) - 1), sa)
+              for s, sa in zip(chains, carry.stamp_at)]
+    sfx = [""] + [f"_{x}" for x in carry.names]
     fields = []
     for ci, n in enumerate(sizes):
-        fields += [f"{p}{ci}_{i} BIGINT"
-                   for p in ("c", "l", "bp", "lq") for i in range(n)]
-    for k in range(K):
-        fields += [f"{p}{k}_{i} BIGINT" for p in ("cc", "lc")
-                   for i in range(n0)]
-    fields += [f"qc{k} BIGINT" for k in range(K)] + ["pos BIGINT"]
-
-    def ok(v, t):
-        return v >= 0 and (within_us is None or t - v <= within_us)
+        def block(p, ss=("",)):
+            return [f"{p}{ci}_{i}{s} BIGINT" for s in ss for i in range(n)]
+        fields += block("c", sfx) + block("l", sfx) + block("bp") + block("lq")
+        if gated:
+            fields += block("p", sfx) + block("ppos")
+    fields += ([f"qc{k} BIGINT" for k in range(K)] + ["pos BIGINT"]
+               + (["cursor BIGINT"] if carry.skip else []))
+    per_chain = 2 * w + 2 + (w + 1 if gated else 0)
 
     def scan(vals, eids, etypes, ts):
-        CL, off = [], 0
+        st, off = [], 0
         for n in sizes:
-            CL.append((
-                vals[off:off + n], vals[off + n:off + 2 * n],
-                vals[off + 2 * n:off + 3 * n],
-                vals[off + 3 * n:off + 4 * n],
-            ))
-            off += 4 * n
-        Ccs, Lcs = [], []
-        for _k in range(K):
-            Ccs.append(vals[off:off + n0])
-            Lcs.append(vals[off + n0:off + 2 * n0])
-            off += 2 * n0
-        QCs = vals[off:off + K]
-        off += K
-        pos = vals[off]
+            C = carry.tuples(vals, off, n)
+            L = carry.tuples(vals, off + w * n, n)
+            off += 2 * w * n
+            BP, LQ = vals[off:off + n], vals[off + n:off + 2 * n]
+            off += 2 * n
+            P = Ppos = None
+            if gated:
+                P = carry.tuples(vals, off, n)
+                off += w * n
+                Ppos = vals[off:off + n]
+                off += n
+            st.append((C, L, BP, LQ, P, Ppos))
+        qcs, pos = vals[off:off + K], vals[off + K]
         cands = []
         for eid, etype, t in zip(eids, etypes, ts):
-            if counted:
-                C0, L0, BP0, LQ0 = CL[0]
-                hh, hcs = _cep_chain_hits_paired(
-                    chains[0][1], C0, L0, BP0, LQ0, Ccs, Lcs, QCs,
-                    cnt_ets, etype, t,
-                )
-                hits = [hh] + [
-                    _cep_chain_hits(steps, C, L, BP, LQ, etype, t)
-                    for (C, L, BP, LQ), (_, steps)
-                    in zip(CL[1:], chains[1:])
-                ]
-            else:
-                hits = [
-                    _cep_chain_hits(steps, C, L, BP, LQ, etype, t)
-                    for (C, L, BP, LQ), (_, steps) in zip(CL, chains)
-                ]
-            if enum_masks is not None:
-                oks = [ok(h[-1], t) for h in hits]
-                if any(oks):
-                    cands.append((
-                        eid, t,
-                        max(h[-1] for h, okv in zip(hits, oks) if okv),
-                        *(any(okv for okv, mask in zip(oks, enum_masks)
-                              if nm in mask) for nm in flag_names),
-                    ))
-            elif ok(hits[0][-1], t):
-                pools = [QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                         - hcs[k][-1] for k in range(K)]
-                cands.append((
-                    eid, t, hits[0][-1],
-                    *(p if cap is None else min(p, cap)
-                      for p, cap in zip(pools, up_tos)),
-                    *(ok(h[-1], t) for h in hits[1:]),
-                ))
-            for ci, ((C, L, BP, LQ), hit, qt) in enumerate(
-                zip(CL, hits, qtypes)
-            ):
-                paired = counted and ci == 0
-                for i in range(len(C)):
-                    if paired:
-                        htup = (hit[i],) + tuple(
-                            hcs[k][i] for k in range(K))
-                        ctup = (C[i],) + tuple(
-                            Ccs[k][i] for k in range(K))
-                        if htup > ctup:
-                            C[i] = hit[i]
-                            for k in range(K):
-                                Ccs[k][i] = hcs[k][i]
-                        for k in range(K):
-                            Lcs[k][i] = hcs[k][i]
-                    elif hit[i] > C[i]:
-                        C[i] = hit[i]
-                    if hit[i] >= 0:
-                        BP[i] = pos
-                    L[i] = hit[i]
+            for C, L, BP, LQ, P, Ppos in (st if gated else ()):
+                # (0) this event IS the parked binds' direct successor
+                for i in gated:
+                    p = P[i]
+                    if p[0] >= 0 and etype != nn_ets[i]:
+                        if p > C[i]:
+                            C[i] = p
+                        BP[i] = Ppos[i]
+                        L[i] = p
+                    else:
+                        L[i] = NONE
+                    P[i], Ppos[i] = NONE, -1
+            for k, j in carry.stops.get(etype, ()):
+                # (1) freeze the live riders
+                for C, L, *_ in st:
+                    for V in (C, L):
+                        for i, v in enumerate(V):
+                            if v[0] >= 0 and v[j] == NO_STOP:
+                                V[i] = v[:j] + (qcs[k],) + v[j + 1:]
+            finals = []
+            for ci, ((C, L, BP, LQ, P, Ppos), (steps, qt, levels, stamp_at)
+                     ) in enumerate(zip(st, shapes)):
+                # (2) hits against the pre-row state
+                hit = [NONE] * len(steps)
+                for i, (et, trans, neg_et) in enumerate(steps):
+                    if etype != et:
+                        continue
+                    if i == 0:
+                        hit[0] = carry.start(ci, etype, t, pos, qcs)
+                        continue
+                    v = C[i - 1] if trans == "followed_by" else L[i - 1]
+                    if v[0] >= 0 and (neg_et is None
+                                      or LQ[i - 1] <= BP[i - 1]):
+                        hit[i] = (carry.stamp(v, ci, i, etype, qcs, pos)
+                                  if i in stamp_at else v)
+                # (3) absorb — a gated level parks its hit instead
+                for i in levels:
+                    h = hit[i]
+                    if i in gated:
+                        P[i], Ppos[i] = h, (pos if h[0] >= 0 else -1)
+                    else:
+                        if h > C[i]:
+                            C[i] = h
+                        if h[0] >= 0:
+                            BP[i] = pos
+                        L[i] = h
                     if qt[i] is not None and etype == qt[i]:
                         LQ[i] = pos
+                finals.append(hit[-1])
+            # (4) emission
+            cand = carry.candidate(finals, eid, t, etype, qcs, pos)
+            if cand is not None:
+                cands.append(cand)
             for k in range(K):
-                if etype == cnt_ets[k]:
-                    QCs[k] += 1
+                if etype == carry.cnt_ets[k]:
+                    qcs[k] += 1
             pos += 1
-        return (
-            [v for C, L, BP, LQ in CL for v in C + L + BP + LQ]
-            + [v for k in range(K) for v in Ccs[k] + Lcs[k]]
-            + QCs + [pos]
-        ), cands
+        out = []
+        for C, L, BP, LQ, P, Ppos in st:
+            out += carry.blocks(C) + carry.blocks(L) + BP + LQ
+            if gated:
+                out += carry.blocks(P) + Ppos
+        return out + qcs + [pos] + vals[off + K + 1:], cands
 
     return CarryScan(
         fields,
-        lambda: [-1] * (4 * sum(sizes) + 2 * K * n0) + [0] * K + [0],
+        lambda: ([-1] * (per_chain * sum(sizes)) + [0] * K + [0]
+                 + ([-1] if carry.skip else [])),
         scan,
-        [f"n_{c[0]} BIGINT" for c in counted]
-        + [f"{nm} BOOLEAN" for nm in flag_names],
+        carry.riders,
+        fields.index("cursor BIGINT") if carry.skip else None,
     )
 
 
-def or_split_scan(chains: list, within_us, counted):
-    """r14: carry scan for the OR-OF-CHAINS compile of a both-strict
-    oneOrMore/times(1, m) step (see cep.CepPattern.next): every chain
-    is one quantifier variant of the SAME pattern (1-rep / >=2-rep per
-    split step), ALL paired with the count-at-start carries (the batch
-    struct), sharing one running count per counted step. A row matches
-    when ANY variant completes within the window; the winner is the
-    lexicographic max (start, c0..) over satisfied variants — the batch
-    struct GREATEST — and the pools are computed from the winner's
-    counts. State = per chain 4·(m_c−1) causal longs + 2·K·(m_c−1)
-    count carries, plus K shared running counts and the row counter:
-    O(1) per key."""
-    sizes = [len(steps) - 1 for _, steps in chains]
-    qtypes = [[st[2] for st in steps[1:]] for _, steps in chains]
-    counted = list(counted) if counted else []
-    cnt_ets = [c[1] for c in counted]
-    up_tos = [c[2] for c in counted]
-    K = len(counted)
+def _gap_state_fields(*chains, nn_ets=None, skip=False) -> list:
+    """State fields of gap_scan: per chain and level the buffers of
+    (row_ts, carried value[, negated-prefix count]) entries as parallel
+    arrays, the lag value, the per-level negated counts and the
+    notNext pending slots; then the previous event time (and the row
+    counter and the skip cursor). The count buffers exist only for a
+    chain with a negated gap and the pending slots only under notNext,
+    so a plain gap pattern keeps the r13 schema (a pre-r14 checkpoint
+    restarts); a lone chain's fields carry no variant suffix."""
+    comps = ["h"] + (["sp", "ap"] if skip else [])
+    has_nn = any(e is not None for e in nn_ets or ())
     fields = []
-    for v, n in enumerate(sizes):
-        fields += [f"{p}_{v}_{i} BIGINT"
-                   for p in ("c", "l", "bp", "lq") for i in range(n)]
-    for v, n in enumerate(sizes):
-        for k in range(K):
-            fields += [f"{p}_{v}_{k}_{i} BIGINT"
-                       for p in ("ccs", "lcs") for i in range(n)]
-    fields += [f"qc_{k} BIGINT" for k in range(K)] + ["pos BIGINT"]
-
-    def ok(v, t):
-        return v >= 0 and (within_us is None or t - v <= within_us)
-
-    def scan(vals, eids, etypes, ts):
-        CL, CNT, off = [], [], 0
-        for n in sizes:
-            CL.append((
-                vals[off:off + n], vals[off + n:off + 2 * n],
-                vals[off + 2 * n:off + 3 * n],
-                vals[off + 3 * n:off + 4 * n],
-            ))
-            off += 4 * n
-        for n in sizes:
-            ccs = [vals[off + 2 * k * n:off + (2 * k + 1) * n]
-                   for k in range(K)]
-            lcs = [vals[off + (2 * k + 1) * n:off + (2 * k + 2) * n]
-                   for k in range(K)]
-            CNT.append((ccs, lcs))
-            off += 2 * K * n
-        QCs = vals[off:off + K]
-        off += K
-        pos = vals[off]
-        cands = []
-        for eid, etype, t in zip(eids, etypes, ts):
-            hits = []
-            for (C, L, BP, LQ), (ccs, lcs), (_, steps) in zip(
-                CL, CNT, chains
-            ):
-                hits.append(_cep_chain_hits_paired(
-                    steps, C, L, BP, LQ, ccs, lcs, QCs, cnt_ets,
-                    etype, t,
-                ))
-            oks = [ok(hh[-1], t) for hh, _ in hits]
-            if any(oks):
-                # lexicographic (start, c0..) max across satisfied
-                # variants = the batch struct GREATEST
-                win = max(
-                    (hh[-1],) + tuple(hcs[k][-1] for k in range(K))
-                    for (hh, hcs), okv in zip(hits, oks) if okv
-                )
-                pools = [QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                         - win[1 + k] for k in range(K)]
-                cands.append((
-                    eid, t, win[0],
-                    *(p if cap is None else min(p, cap)
-                      for p, cap in zip(pools, up_tos)),
-                ))
-            for (C, L, BP, LQ), (ccs, lcs), (hh, hcs), qt in zip(
-                CL, CNT, hits, qtypes
-            ):
-                for i in range(len(C)):
-                    htup = (hh[i],) + tuple(
-                        hcs[k][i] for k in range(K))
-                    ctup = (C[i],) + tuple(
-                        ccs[k][i] for k in range(K))
-                    if htup > ctup:
-                        C[i] = hh[i]
-                        for k in range(K):
-                            ccs[k][i] = hcs[k][i]
-                    for k in range(K):
-                        lcs[k][i] = hcs[k][i]
-                    if hh[i] >= 0:
-                        BP[i] = pos
-                    L[i] = hh[i]
-                    if qt[i] is not None and etype == qt[i]:
-                        LQ[i] = pos
-            for k in range(K):
-                if etype == cnt_ets[k]:
-                    QCs[k] += 1
-            pos += 1
-        return (
-            [v for C, L, BP, LQ in CL for v in C + L + BP + LQ]
-            + [v for ccs, lcs in CNT
-               for k in range(K) for v in ccs[k] + lcs[k]]
-            + QCs + [pos]
-        ), cands
-
-    return CarryScan(
-        fields,
-        lambda: [-1] * (4 * sum(sizes) + 2 * K * sum(sizes))
-        + [0] * K + [0],
-        scan,
-        [f"n_{c[0]} BIGINT" for c in counted],
-    )
-
-
-def skip_scan(steps, within_us, anchor_idx=None, nn_ets=None):
-    """Carry scan for a compiled pattern under an after-match skip
-    strategy (r12 skip_past_last_event; r13 skip_to_next /
-    skip_to_first / skip_to_last): the carry values become (ts,
-    start-position[, anchor-position]) tuples under the same
-    lexicographic running max the batch compile's struct uses, and
-    acceptance is one extra long of state — the cursor, folded by
-    cep_keyed_fn; a match is accepted iff its greedy chain's start
-    clears the cursor (start-maximality makes that exactly 'some chain
-    clears it', the batch fold's argument). Candidates carry (start
-    pos, match row pos, anchor pos); the anchor position is stamped at
-    expanded step `anchor_idx` (skip_to_first/skip_to_last only),
-    mirroring the batch stamp_anchor hop.
-
-    Everything is causal, so all four strategies stream with O(1)
-    state: 6·(m-1)+2 longs (8·(m-1)+2 with an anchor — ts+sp[+ap] for
-    carry-max and lag, BP/LQ for negated gaps, the cursor, the row
-    counter). r16: notNext gates compose — a gated level PARKS its
-    (ts, sp, ap, row-pos) hit in a one-row pending slot (4·(m-1) more
-    longs, present only when gated) resolved at the next event: absorb
-    into the carry max / lag / BP if this event clears the gate, drop
-    otherwise — the cursor fold then sees only validated binds,
-    exactly the batch LEAD(1)-folded predicate under the position
-    struct."""
-    m = len(steps)
-    n = m - 1
-    anchored = anchor_idx is not None
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    base = (8 if anchored else 6) * n
-    fields = (
-        [f"{p}_{i} BIGINT" for p in ("cts", "csp", "lts", "lsp", "bp", "lq")
-         + (("cap", "lap") if anchored else ()) for i in range(n)]
-        + ["last_acc BIGINT", "pos BIGINT"]
-        + ([f"pnn_{p}_{i} BIGINT" for p in ("ts", "sp", "ap", "pos")
-            for i in range(n)] if has_nn else [])
-    )
-
-    def scan(vals, eids, etypes, ts):
-        Cts, Csp = vals[0:n], vals[n:2 * n]
-        Lts, Lsp = vals[2 * n:3 * n], vals[3 * n:4 * n]
-        BP, LQ = vals[4 * n:5 * n], vals[5 * n:6 * n]
-        if anchored:
-            Cap, Lap = vals[6 * n:7 * n], vals[7 * n:8 * n]
-        else:
-            Cap, Lap = [0] * n, [0] * n  # unused (tie-breaks only ever
-            # compare equal junk against equal junk — no-op updates)
-        cursor, pos = vals[base], vals[base + 1]
+    for v, steps in enumerate(chains):
+        n = len(steps) - 1
+        s = f"_{v}" if len(chains) > 1 else ""
+        mneg = any(st[2] is not None for st in steps)
+        fields += [f"{p}{s}_{i} ARRAY<BIGINT>"
+                   for p in ["bts"] + [f"b{c}" for c in comps]
+                   + (["bq"] if mneg else []) for i in range(n)]
+        fields += [f"l{c if c != 'h' else ''}{s} ARRAY<BIGINT>"
+                   for c in comps]
+        fields += [f"qc{s} ARRAY<BIGINT>"] if mneg else []
         if has_nn:
-            Pts = vals[base + 2:base + 2 + n]
-            Psp = vals[base + 2 + n:base + 2 + 2 * n]
-            Pap = vals[base + 2 + 2 * n:base + 2 + 3 * n]
-            Ppos = vals[base + 2 + 3 * n:base + 2 + 4 * n]
+            fields += [f"pnn{s}_{c} ARRAY<BIGINT>"
+                       for c in ["ts"] + comps + ["q"]]
+    return (fields + ["prev_ts BIGINT"]
+            + (["pos BIGINT", "cursor BIGINT"] if skip else []))
+
+
+def gap_scan(carry: Carry, gap_us: int) -> CarryScan:
+    """The gap-buffered keyed CEP machine, for a per-transition bound
+    (within previous_and_current, r13): the O(1) running max cannot
+    expire old starts, so each level keeps a BUFFER of (row_ts, carried
+    value, q) entries still inside the gap horizon — state ∝ events in
+    ONE gap window per key, the bound's inherent memory (Flink's NFA
+    holds the same partial matches). The carried value is Carry's tuple
+    ((h) or (h, sp, ap); the front end refuses counted steps under a gap
+    bound).
+
+    Per row at time t: a relaxed hop reads the lexicographic max over
+    buffered predecessors with row_ts >= t − G (rows processed earlier
+    in (ts, id) order — same-µs earlier-tiebreak rows are already
+    buffered, matching the batch RANGE+tie-frame split); under a
+    NEGATED gap only entries whose inclusive negated-prefix count q
+    equals the key's current strictly-before count are feasible ("no
+    negated event since b" — the batch count-gated bounded max). A
+    strict hop reads the previous row's hit gated on its time gap.
+    Buffers prune causally (event time is non-decreasing within a
+    key's sorted batch, and state carries only what the NEXT event
+    might still reach). A notNext-gated level parks its hit (q computed
+    at park time) and the next event absorbs it into the buffer and
+    the lag slot or drops it; the parked row_ts <= t keeps the buffer
+    ascending. Emission is Carry's gate/any rule."""
+    chains, NONE, w = carry.chains, carry.none, carry.width
+    gated, nn_ets = carry.gated, carry.nn_ets
+    mneg = [any(st[2] is not None for st in s) for s in chains]
+    qtypes = [[st[2] for st in s[1:]] for s in chains]
+    fields = _gap_state_fields(*chains, nn_ets=nn_ets, skip=carry.skip)
+
+    def scan(vals, eids, etypes, ts):
+        st, off = [], 0
+        for steps, neg in zip(chains, mneg):
+            n = len(steps) - 1
+            bts = vals[off:off + n]
+            cols = [vals[off + (1 + j) * n:off + (2 + j) * n]
+                    for j in range(w)]
+            off += (1 + w) * n
+            bq = vals[off:off + n] if neg else [[-1] * len(b) for b in bts]
+            off += n if neg else 0
+            B = [list(zip(bts[i], zip(*(c[i] for c in cols)), bq[i]))
+                 for i in range(n)]
+            L = list(zip(*vals[off:off + w]))
+            off += w
+            qc = list(vals[off]) if neg else [0] * n
+            off += 1 if neg else 0
+            pts = P = pq = None
+            if gated:
+                pts, pq = list(vals[off]), list(vals[off + 1 + w])
+                P = list(zip(*vals[off + 1:off + 1 + w]))
+                off += w + 2
+            st.append((B, L, qc, pts, P, pq))
+        prev_ts = vals[off]
+        pos = vals[off + 1] if carry.skip else 0
         cands = []
         for eid, etype, t in zip(eids, etypes, ts):
-            if has_nn:
-                # (0) resolve pendings: this event IS the gated binds'
-                # direct successor — absorb (carry max + BP + lag) if
-                # its type clears the gate, drop otherwise
-                for i in range(n):
-                    if nn_ets[i] is None:
-                        continue
-                    if Pts[i] >= 0 and etype != nn_ets[i]:
-                        if (Pts[i], Psp[i], Pap[i]) > (
-                            Cts[i], Csp[i], Cap[i]
-                        ):
-                            Cts[i], Csp[i] = Pts[i], Psp[i]
-                            Cap[i] = Pap[i]
-                        BP[i] = Ppos[i]
-                        Lts[i], Lsp[i], Lap[i] = Pts[i], Psp[i], Pap[i]
-                    else:
-                        Lts[i], Lsp[i], Lap[i] = -1, -1, -1
-                    Pts[i] = Psp[i] = Pap[i] = Ppos[i] = -1
-            hts, hsp, hap = [-1] * m, [-1] * m, [-1] * m
-            for i, (et, trans, neg_et) in enumerate(steps):
-                if etype != et:
-                    continue
-                if i == 0:
-                    hts[0], hsp[0] = t, pos
-                else:
-                    cin_ts, cin_sp, cin_ap = (
-                        (Cts[i - 1], Csp[i - 1], Cap[i - 1])
-                        if trans == "followed_by"
-                        else (Lts[i - 1], Lsp[i - 1], Lap[i - 1])
-                    )
-                    if cin_ts >= 0 and (
-                        neg_et is None or LQ[i - 1] <= BP[i - 1]
-                    ):
-                        hts[i], hsp[i] = cin_ts, cin_sp
-                        hap[i] = pos if i == anchor_idx else cin_ap
-            if hts[-1] >= 0 and (
-                within_us is None or t - hts[-1] <= within_us
-            ):
-                cands.append((eid, t, hts[-1], hsp[-1], pos, hap[-1]))
-            for i in range(n):
-                if has_nn and nn_ets[i] is not None:
-                    # PARK the gated hit; resolution above owns the
-                    # carry/lag/BP updates (the lag slot keeps last
-                    # row's verdict until the next resolution)
-                    Pts[i], Psp[i], Pap[i] = hts[i], hsp[i], hap[i]
-                    Ppos[i] = pos if hts[i] >= 0 else -1
-                else:
-                    if (hts[i], hsp[i], hap[i]) > (
-                        Cts[i], Csp[i], Cap[i]
-                    ):
-                        Cts[i], Csp[i] = hts[i], hsp[i]
-                        Cap[i] = hap[i]
-                    if hts[i] >= 0:
-                        BP[i] = pos
-                    Lts[i], Lsp[i] = hts[i], hsp[i]
-                    Lap[i] = hap[i]
-                neg_et = steps[i + 1][2]
-                if neg_et is not None and etype == neg_et:
-                    LQ[i] = pos
-            pos += 1
-        return (
-            Cts + Csp + Lts + Lsp + BP + LQ
-            + (Cap + Lap if anchored else [])
-            + [cursor, pos]
-            + (Pts + Psp + Pap + Ppos if has_nn else [])
-        ), cands
-
-    return CarryScan(
-        fields,
-        lambda: [-1] * base + [-1, 0] + ([-1] * (4 * n) if has_nn else []),
-        scan,
-        cursor=base,
-    )
-
-
-def _gap_hits(steps, bts, bh, L, prev_ts, etype, t, gap_us,
-              bq=None, qc=None, nn_ets=None, pn=None):
-    """One event's hit vector + buffer/lag maintenance for ONE
-    gap-bounded carry chain — the shared inner step of gap_scan and
-    gap_enum_scan. Mutates bts/bh/L in place (element rebinding
-    on the caller's lists); the caller advances prev_ts once per
-    event, AFTER every chain sharing the stream has consumed it.
-
-    bq/qc (r14, mid-pattern negation under the gap bound — the batch
-    count-gated bounded max): bq[i] carries each buffered entry's
-    INCLUSIVE negated-prefix-count for the gap entering step i+1,
-    qc[i] the key's current strictly-before count of that type; a
-    buffered row is feasible iff its count equals the current one
-    ("no negated event since b"). Callers whose steps carry negated
-    gaps MUST pass both; qc is maintained here (incremented after the
-    row is consumed, so reads see strictly-before counts).
-
-    nn_ets/pn (r16, notNext under the gap bound — r15 verdict item
-    1): nn_ets[i] = the notNext type gating level i's bind (None =
-    ungated), pn = [pts, ph, pq] one-row pending slots per level. A
-    gated bind's validity ("the directly following event does not
-    match") is only known at the NEXT event, so the gated level PARKS
-    its hit (with its inclusive q computed at park time — qc
-    increments the same event) instead of buffering it; this event
-    first RESOLVES last row's pendings — absorb into the buffer (and
-    the lag slot) if this event's type clears the gate, drop
-    otherwise. The parked row_ts <= t keeps the buffer ascending, so
-    the head-check prune stays complete. Callers with notNext steps
-    MUST pass both."""
-    m = len(steps)
-    if bq is None and any(st[2] is not None for st in steps):
-        raise ValueError(
-            "gap chain has negated gaps but the caller passed no "
-            "count buffers — this state machine would ignore the "
-            "negation"
-        )
-    if nn_ets is not None:
-        # (0) resolve: this event IS last row's gated binds' direct
-        # successor — absorb or drop BEFORE computing this row's hits
-        # (a just-validated bind is reachable by this row, exactly the
-        # batch LEAD(1) fold)
-        pts, ph, pq = pn
-        for i in range(m - 1):
-            if nn_ets[i] is None:
-                continue
-            if pts[i] >= 0 and etype != nn_ets[i]:
-                bts[i].append(pts[i])
-                bh[i].append(ph[i])
-                if bq is not None:
-                    bq[i].append(pq[i])
-                L[i] = ph[i]
-            else:
-                L[i] = -1
-            pts[i] = ph[i] = -1
-            pq[i] = -1
-    hit = [-1] * m
-    for i, (et, trans, neg_et) in enumerate(steps):
-        if etype != et:
-            continue
-        if i == 0:
-            hit[0] = t
-        elif trans == "followed_by":
             lo = t - gap_us
-            best = -1
-            if neg_et is None:
-                for rts, h in zip(bts[i - 1], bh[i - 1]):
-                    if rts >= lo and h > best:
-                        best = h
-            else:
-                cur_q = qc[i - 1]
-                for rts, h, q in zip(bts[i - 1], bh[i - 1],
-                                     bq[i - 1]):
-                    if rts >= lo and q == cur_q and h > best:
-                        best = h
-            if best >= 0:
-                hit[i] = best
-        else:
-            if (L[i - 1] >= 0 and prev_ts >= 0
-                    and t - prev_ts <= gap_us):
-                hit[i] = L[i - 1]
-    lo = t - gap_us
-    for i in range(m - 1):
-        gated = nn_ets is not None and nn_ets[i] is not None
-        if gated:
-            # PARK instead of buffering: validity is known at the
-            # next event (resolution above); the inclusive q is
-            # computed NOW — qc increments below for this same event
-            if hit[i] >= 0:
-                pts, ph, pq = pn
-                pts[i] = t
-                ph[i] = hit[i]
-                if bq is not None:
-                    qt = steps[i + 1][2]
-                    pq[i] = (
-                        -1 if qt is None
-                        else qc[i] + (1 if etype == qt else 0)
-                    )
-        elif hit[i] >= 0:
-            bts[i].append(t)
-            bh[i].append(hit[i])
-            if bq is not None:
-                qt = steps[i + 1][2]
-                bq[i].append(
-                    -1 if qt is None
-                    else qc[i] + (1 if etype == qt else 0)
-                )
-        # causal prune: a future event at t' >= t can only reach
-        # buffered rows with row_ts >= t' - G >= t - G
-        if bts[i] and bts[i][0] < lo:
-            keep = [k for k, rts in enumerate(bts[i]) if rts >= lo]
-            bts[i] = [bts[i][k] for k in keep]
-            bh[i] = [bh[i][k] for k in keep]
-            if bq is not None:
-                bq[i] = [bq[i][k] for k in keep]
-        if not gated:
-            # a gated level's lag is owned by the resolution step —
-            # between rows it holds the PREVIOUS row's verdict
-            L[i] = hit[i]
-        if bq is not None:
-            qt = steps[i + 1][2]
-            if qt is not None and etype == qt:
-                qc[i] += 1
-    return hit
-
-
-def _gap_skip_hits(steps, bts, bh, bsp, bap, L, prev_ts, etype, t,
-                   pos, gap_us, anchored, anchor_idx,
-                   bq=None, qc=None, nn_ets=None, pn=None):
-    """One event's position-struct hit vector + buffer/lag maintenance
-    for a gap-bounded SKIP chain — the inner step of gap_skip_scan.
-    Carried values are (h, sp, ap) structs; the relaxed hop is the
-    lexicographic max over gap-feasible buffered predecessors (= the
-    batch struct GREATEST), the strict hop reads the previous row's
-    struct gated on its time gap, and the anchor hop stamps the
-    current row position into ap.
-
-    bq/qc (r15, mid-pattern negation under gap + skip): buffered
-    entries additionally carry the inclusive negated-prefix-count q
-    for the gap they feed, and the bounded max runs over
-    (q, h, sp, ap) — feasibility of entry b ("no negated event in
-    (b, current)") is exactly q(b) == the current strictly-before
-    count, which is the maximum q any entry holds, so one
-    lexicographic max decides feasibility AND picks the greedy struct
-    among feasible rows (the batch (q, v) gate with v the position
-    struct). Callers whose steps carry negated gaps MUST pass both;
-    qc increments after the row is consumed (reads see
-    strictly-before counts), exactly _gap_hits' discipline.
-
-    nn_ets/pn (r16, notNext × gap × skip): pn = [pts, ph, psp, pap,
-    pq] one-row pending slots per level — a gated level PARKS its
-    (h, sp, ap) struct (q computed at park time) and this event
-    resolves last row's pendings before computing hits, exactly
-    _gap_hits' delayed absorption with the position struct riding
-    along."""
-    m = len(steps)
-    if bq is None and any(st[2] is not None for st in steps):
-        raise ValueError(
-            "gap chain has negated gaps but the caller passed no "
-            "count buffers — this state machine would ignore the "
-            "negation"
-        )
-    if nn_ets is not None:
-        pts, ph, psp, pap, pq = pn
-        for i in range(m - 1):
-            if nn_ets[i] is None:
-                continue
-            if pts[i] >= 0 and etype != nn_ets[i]:
-                bts[i].append(pts[i])
-                bh[i].append(ph[i])
-                bsp[i].append(psp[i])
-                bap[i].append(pap[i])
-                if bq is not None:
-                    bq[i].append(pq[i])
-                L[0][i], L[1][i], L[2][i] = ph[i], psp[i], pap[i]
-            else:
-                L[0][i], L[1][i], L[2][i] = -1, -1, -1
-            pts[i] = ph[i] = psp[i] = pap[i] = -1
-            pq[i] = -1
-    hit = [(-1, -1, -1)] * m
-    for i, (et, trans, neg_et) in enumerate(steps):
-        if etype != et:
-            continue
-        if i == 0:
-            hit[0] = (t, pos, -1)
-        elif trans == "followed_by":
-            lo = t - gap_us
-            if neg_et is None:
-                best = (-1, -1, -1)
-                for rts, h, sp, ap in zip(
-                    bts[i - 1], bh[i - 1], bsp[i - 1], bap[i - 1]
-                ):
-                    if rts >= lo and (h, sp, ap) > best:
-                        best = (h, sp, ap)
-                if best[0] >= 0:
-                    hit[i] = best
-            else:
-                cur_q = qc[i - 1]
-                best = (-1, -1, -1, -1)
-                for rts, h, sp, ap, q in zip(
-                    bts[i - 1], bh[i - 1], bsp[i - 1], bap[i - 1],
-                    bq[i - 1]
-                ):
-                    if rts >= lo and (q, h, sp, ap) > best:
-                        best = (q, h, sp, ap)
-                if best[0] == cur_q and best[1] >= 0:
-                    hit[i] = best[1:]
-        else:
-            if (L[0][i - 1] >= 0 and prev_ts >= 0
-                    and t - prev_ts <= gap_us):
-                hit[i] = (L[0][i - 1], L[1][i - 1], L[2][i - 1])
-        if hit[i][0] >= 0 and anchored and i == anchor_idx:
-            hit[i] = (hit[i][0], hit[i][1], pos)
-    lo = t - gap_us
-    for i in range(m - 1):
-        gated = nn_ets is not None and nn_ets[i] is not None
-        if gated:
-            if hit[i][0] >= 0:
-                pts, ph, psp, pap, pq = pn
-                pts[i] = t
-                ph[i], psp[i], pap[i] = hit[i]
-                if bq is not None:
-                    qt = steps[i + 1][2]
-                    pq[i] = (
-                        -1 if qt is None
-                        else qc[i] + (1 if etype == qt else 0)
-                    )
-        elif hit[i][0] >= 0:
-            bts[i].append(t)
-            bh[i].append(hit[i][0])
-            bsp[i].append(hit[i][1])
-            bap[i].append(hit[i][2])
-            if bq is not None:
-                qt = steps[i + 1][2]
-                bq[i].append(
-                    -1 if qt is None
-                    else qc[i] + (1 if etype == qt else 0)
-                )
-        if bts[i] and bts[i][0] < lo:
-            keep = [k for k, rts in enumerate(bts[i]) if rts >= lo]
-            bts[i] = [bts[i][k] for k in keep]
-            bh[i] = [bh[i][k] for k in keep]
-            bsp[i] = [bsp[i][k] for k in keep]
-            bap[i] = [bap[i][k] for k in keep]
-            if bq is not None:
-                bq[i] = [bq[i][k] for k in keep]
-        if not gated:
-            L[0][i], L[1][i], L[2][i] = hit[i]
-        if bq is not None:
-            qt = steps[i + 1][2]
-            if qt is not None and etype == qt:
-                qc[i] += 1
-    return hit
-
-
-def _gap_skip_state_fields(steps, nn_ets=None) -> list:
-    """State fields of gap_skip_scan — bq_*/qc exist only when some
-    step carries a negated gap (pre-r15 checkpoints of plain gap-skip
-    queries restart cleanly); pnn_* notNext pending slots (r16) exist
-    only when some level is notNext-gated."""
-    n = len(steps) - 1
-    has_mneg = any(st[2] is not None for st in steps)
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    return (
-        [f"bts_{i} ARRAY<BIGINT>" for i in range(n)]
-        + [f"bh_{i} ARRAY<BIGINT>" for i in range(n)]
-        + [f"bsp_{i} ARRAY<BIGINT>" for i in range(n)]
-        + [f"bap_{i} ARRAY<BIGINT>" for i in range(n)]
-        + ([f"bq_{i} ARRAY<BIGINT>" for i in range(n)] if has_mneg
-           else [])
-        + ["lh ARRAY<BIGINT>", "lsp ARRAY<BIGINT>", "lap ARRAY<BIGINT>"]
-        + (["qc ARRAY<BIGINT>"] if has_mneg else [])
-        + ["prev_ts BIGINT", "pos BIGINT", "cursor BIGINT"]
-        + (["pnn_ts ARRAY<BIGINT>", "pnn_h ARRAY<BIGINT>",
-            "pnn_sp ARRAY<BIGINT>", "pnn_ap ARRAY<BIGINT>",
-            "pnn_q ARRAY<BIGINT>"] if has_nn else [])
-    )
-
-
-def gap_scan(steps, within_us, gap_us, nn_ets=None):
-    """Carry scan for a pattern under a per-transition gap bound
-    (within previous_and_current, r13): the O(1) running-max carry
-    cannot expire old starts, so each chain level carries a BUFFER of
-    (row_ts, start) pairs still inside the gap horizon — state ∝
-    events in ONE gap window per key, the bound's inherent memory
-    (Flink's NFA holds the same partial matches). Per row at time t, a
-    relaxed bounded hop reads max{start : (row_ts, start) ∈
-    buffer_{i-1}, row_ts >= t − G} — for a NEGATED gap additionally
-    count-gated (r14, see _gap_hits) — (rows processed earlier in
-    (ts, id) order — same-µs earlier-tiebreak rows are already
-    buffered, matching the batch RANGE+tie-frame split); a strict hop
-    reads the previous row's hit gated on its time gap. Buffers prune
-    causally (event time is non-decreasing within a key's sorted
-    batch, and state carries only what the NEXT event might still
-    reach). notNext gates (nn_ets, r16) park in one-row pending slots
-    (see _gap_hits)."""
-    n = len(steps) - 1
-    # r14 advice: the bq/qc count buffers exist ONLY when some step
-    # carries a negated gap — plain gap patterns keep the r13 state
-    # schema (no widened stateStructType breaking existing checkpoints,
-    # no state columns the machine never reads). Same rule for the r16
-    # notNext pending slots (gated on nn_ets).
-    has_neg = any(st[2] is not None for st in steps)
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-
-    def scan(vals, eids, etypes, ts):
-        bts = [list(vals[i]) for i in range(n)]
-        bh = [list(vals[n + i]) for i in range(n)]
-        if has_neg:
-            bq = [list(vals[2 * n + i]) for i in range(n)]
-            L = list(vals[3 * n])
-            qc = list(vals[3 * n + 1])
-            prev_ts = vals[3 * n + 2]
-            rest = vals[3 * n + 3:]
-        else:
-            bq, qc = None, None
-            L = list(vals[2 * n])
-            prev_ts = vals[2 * n + 1]
-            rest = vals[2 * n + 2:]
-        pn = [list(r) for r in rest] if has_nn else None
-        cands = []
-        for eid, etype, t in zip(eids, etypes, ts):
-            hit = _gap_hits(steps, bts, bh, L, prev_ts, etype, t,
-                            gap_us, bq, qc,
-                            nn_ets if has_nn else None, pn)
-            if hit[-1] >= 0 and (
-                within_us is None or t - hit[-1] <= within_us
+            finals = []
+            for ci, ((B, L, qc, pts, P, pq), steps, qt) in enumerate(
+                zip(st, chains, qtypes)
             ):
-                cands.append((eid, t, hit[-1]))
-            prev_ts = t
-        return (
-            bts + bh + (bq + [L, qc] if has_neg else [L]) + [prev_ts]
-            + (pn if has_nn else [])
-        ), cands
-
-    return CarryScan(
-        _gap_state_fields(steps, nn_ets),
-        lambda: ([[] for _ in range(2 * n)]
-                 + ([[] for _ in range(n)] + [[-1] * n, [0] * n]
-                    if has_neg else [[-1] * n])
-                 + [-1] + ([[-1] * n for _ in range(3)] if has_nn else [])),
-        scan,
-    )
-
-
-def _gap_state_fields(steps, nn_ets=None) -> list:
-    """State fields of gap_scan. bq_*/qc count buffers exist ONLY
-    when some step carries a negated gap (r14 advice): plain gap
-    patterns keep the r13 schema, so a pre-r14 streaming query
-    restarted from an existing checkpoint sees an unchanged
-    stateStructType and pays no state columns it never reads. Same
-    rule for the r16 notNext pending slots (pnn_*)."""
-    n = len(steps) - 1
-    has_neg = any(st[2] is not None for st in steps)
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    return (
-        [f"bts_{i} ARRAY<BIGINT>" for i in range(n)]
-        + [f"bh_{i} ARRAY<BIGINT>" for i in range(n)]
-        + ([f"bq_{i} ARRAY<BIGINT>" for i in range(n)] if has_neg else [])
-        + ["l ARRAY<BIGINT>"]
-        + (["qc ARRAY<BIGINT>"] if has_neg else [])
-        + ["prev_ts BIGINT"]
-        + (["pnn_ts ARRAY<BIGINT>", "pnn_h ARRAY<BIGINT>",
-            "pnn_q ARRAY<BIGINT>"] if has_nn else [])
-    )
-
-
-def gap_skip_scan(steps, within_us, gap_us, anchor_idx=None,
-                   nn_ets=None):
-    """r14 continuation: AfterMatchSkip over a GAP-BOUNDED chain — the
-    buffered carry generalized to (h, sp[, ap]) position structs
-    (parallel arrays per level, lexicographic max over gap-feasible
-    predecessors = the batch struct GREATEST, see _gap_skip_hits), with
-    the acceptance cursor of skip_scan one more long of keyed state
-    (matches arrive in row order within a key, so cep_keyed_fn's fold
-    is causal). r15: MID-PATTERN negated gaps compose (count-gated
-    position-struct buffers); bq/qc state exists only when some step
-    carries a negated gap. r16: notNext gates compose (one-row delayed
-    absorption in _gap_skip_hits); pnn_* state exists only when some
-    level is gated."""
-    n = len(steps) - 1
-    anchored = anchor_idx is not None
-    has_mneg = any(st[2] is not None for st in steps)
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    fields = _gap_skip_state_fields(steps, nn_ets)
-
-    def scan(vals, eids, etypes, ts):
-        bts = [list(vals[i]) for i in range(n)]
-        bh = [list(vals[n + i]) for i in range(n)]
-        bsp = [list(vals[2 * n + i]) for i in range(n)]
-        bap = [list(vals[3 * n + i]) for i in range(n)]
-        if has_mneg:
-            bq = [list(vals[4 * n + i]) for i in range(n)]
-            L = [list(vals[5 * n]), list(vals[5 * n + 1]),
-                 list(vals[5 * n + 2])]
-            qc = list(vals[5 * n + 3])
-            prev_ts, pos, cursor = vals[5 * n + 4:5 * n + 7]
-            rest = vals[5 * n + 7:]
-        else:
-            bq, qc = None, None
-            L = [list(vals[4 * n]), list(vals[4 * n + 1]),
-                 list(vals[4 * n + 2])]
-            prev_ts, pos, cursor = vals[4 * n + 3:4 * n + 6]
-            rest = vals[4 * n + 6:]
-        pn = [list(r) for r in rest] if has_nn else None
-        cands = []
-        for eid, etype, t in zip(eids, etypes, ts):
-            hit = _gap_skip_hits(steps, bts, bh, bsp, bap, L, prev_ts,
-                                 etype, t, pos, gap_us, anchored,
-                                 anchor_idx, bq, qc,
-                                 nn_ets if has_nn else None, pn)
-            if hit[-1][0] >= 0 and (
-                within_us is None or t - hit[-1][0] <= within_us
-            ):
-                h, sp, ap = hit[-1]
-                cands.append((eid, t, h, sp, pos, ap))
-            prev_ts = t
-            pos += 1
-        return (
-            bts + bh + bsp + bap + (bq if has_mneg else []) + L
-            + ([qc] if has_mneg else []) + [prev_ts, pos, cursor]
-            + (pn if has_nn else [])
-        ), cands
-
-    return CarryScan(
-        fields,
-        lambda: ([[] for _ in range((5 if has_mneg else 4) * n)]
-                 + [[-1] * n for _ in range(3)]
-                 + ([[0] * n] if has_mneg else []) + [-1, 0, -1]
-                 + ([[-1] * n for _ in range(5)] if has_nn else [])),
-        scan,
-        cursor=fields.index("cursor BIGINT"),
-    )
-
-
-def gap_enum_scan(variant_steps, within_us, gap_us, incl_flags,
-                   flag_names):
-    """r14 (r13 verdict item 4b): OPTIONAL steps under a per-gap bound
-    — the streaming form of the batch 2^k variant enumeration (the
-    skip-variant dominance is unsound under a gap bound, so EVERY
-    include/exclude variant runs as its own gap-buffered chain in the
-    same keyed state; compile() builds the identical chain set). Per
-    event each variant advances independently (prev_ts is shared —
-    one event stream); emission OR-gates: match when ANY variant
-    completes within the window, start_us = the max satisfied start
-    (batch F.greatest), with_<name> = any satisfied variant INCLUDES
-    that optional step. 2^k is capped at 64 chains by the same k <= 6
-    builder cap the batch compile enforces. r15: MID-PATTERN negated
-    gaps compose — the step carrying the negation is required
-    (optional() refuses to close a negated gap), so EVERY variant
-    carries the count-gated buffers of _gap_hits; bq/qc state exists
-    only when the pattern has a negated gap."""
-    nvar = len(variant_steps)
-    ns = [len(s) - 1 for s in variant_steps]
-    has_mneg = any(st[2] is not None
-                   for s in variant_steps for st in s)
-    fields = []
-    for p in ("bts", "bh") + (("bq",) if has_mneg else ()):
-        for v in range(nvar):
-            fields += [f"{p}_{v}_{i} ARRAY<BIGINT>" for i in range(ns[v])]
-    fields += [f"l_{v} ARRAY<BIGINT>" for v in range(nvar)]
-    if has_mneg:
-        fields += [f"qc_{v} ARRAY<BIGINT>" for v in range(nvar)]
-    fields.append("prev_ts BIGINT")
-
-    def scan(vals, eids, etypes, ts):
-        idx = 0
-        bts, bh, bq = [], [], []
-        for buf in (bts, bh) + ((bq,) if has_mneg else ()):
-            for v in range(nvar):
-                buf.append([list(vals[idx + i]) for i in range(ns[v])])
-                idx += ns[v]
-        L = [list(x) for x in vals[idx:idx + nvar]]
-        idx += nvar
-        qc = []
-        if has_mneg:
-            qc = [list(x) for x in vals[idx:idx + nvar]]
-            idx += nvar
-        prev_ts = vals[idx]
-        cands = []
-        for eid, etype, t in zip(eids, etypes, ts):
-            starts = []
-            for v in range(nvar):
-                hit = _gap_hits(variant_steps[v], bts[v], bh[v], L[v],
-                                prev_ts, etype, t, gap_us,
-                                bq[v] if has_mneg else None,
-                                qc[v] if has_mneg else None)
-                ok = hit[-1] >= 0 and (
-                    within_us is None or t - hit[-1] <= within_us
-                )
-                starts.append(hit[-1] if ok else -1)
-            best = max(starts)
-            if best >= 0:
-                cands.append((eid, t, best, *(
-                    any(starts[v] >= 0 for v in range(nvar)
-                        if f in incl_flags[v])
-                    for f in flag_names)))
-            prev_ts = t
-        return (
-            [b for buf in bts + bh + bq for b in buf] + L + qc + [prev_ts]
-        ), cands
-
-    return CarryScan(
-        fields,
-        lambda: ([[] for _ in range((3 if has_mneg else 2) * sum(ns))]
-                 + [[-1] * n for n in ns]
-                 + ([[0] * n for n in ns] if has_mneg else []) + [-1]),
-        scan,
-        [f"{f} BOOLEAN" for f in flag_names],
-    )
-
-
-def until_scan(steps, within_us, counted, entry_idx=None, nn_ets=None):
-    """r15: carry scan for a pattern with `until(condition)`
-    stop-gated loops (FlinkCEP's loop stop condition, compiled batch-
-    side as per-copy mid-negation gates + a carried freeze value).
-    `steps` = [(etype, trans, gate_et)] with gate_et on EVERY copy of
-    an until step (and on first copies of ordinary mid-negations);
-    `counted` = [(name, etype, up_to, u_et_or_None)].
-
-    The carry machinery is compiled_scan's paired form (C/L +
-    BP/LQ gates + count-at-start pairs + shared running counts) plus
-    ONE RIDER per counted-with-until step per level: u_k = the
-    repeated-step count just before the FIRST stop event after the
-    carried chain's start (-1 = none yet). The rider IS part of the
-    lexicographic comparison, AFTER the counts and with -1 (unknown)
-    ordered as +infinity — exactly the batch struct (h, c.., u..)
-    whose u field carries the forward-window NB value: two same-ts
-    same-count starts tie on (h, c..) and the batch max picks the
-    larger NB; stream-side the not-yet-frozen rider is always >= any
-    frozen one (NB is nondecreasing in start position and freezes
-    only grow with time), so unknown-as-infinity reproduces the batch
-    order without knowing the future. Riders FREEZE when a stop event
-    arrives: a stop at row t applies to every value in state (all
-    started strictly before t) and not to starts made at t, so
-    freezing BEFORE the row's hits are computed is exactly the batch
-    nbu(A) = min over stops strictly after A. The pool at a match row
-    is then min(incl-count, frozen u) - count-at-start — causal,
-    matching the batch LEAST() arithmetic (brute-force fuzz:
-    tests/test_properties.py::test_cep_until_*).
-
-    entry_idx (r16): per counted step, the expanded LEVEL of the
-    loop's entry event (the copy directly before the until step's
-    first copy; None/0 for non-until or loop-adjacent-to-begin). The
-    rider pair (c, u) is stamped there, not at the chain start —
-    entry-relative freezes (the latent r15 bug: a stop in an
-    unguarded prefix gap clamped the pool from the start, below the
-    loop's lower bound). Pre-entry levels carry sentinels (c = -1,
-    u = -2 'not entered'); -2 never freezes and encodes as +inf in
-    the compare exactly like the live -1 (levels are uniformly
-    pre/post entry, so the encodings never mix at one level).
-
-    nn_ets (r16): notNext gates compose — a gated level PARKS its
-    (h, counts, riders) hit in a one-row pending slot resolved at the
-    next event (the delayed absorption of not_next_scan), and
-    resolution runs BEFORE the stop-freeze step so a stop event that
-    also validates a parked bind freezes the just-absorbed rider
-    (the stop is strictly after the bind's entry row, exactly the
-    batch forward-MIN)."""
-    m = len(steps)
-    n = m - 1
-    qtypes = [st[2] for st in steps[1:]]
-    cnt_ets = [c[1] for c in counted]
-    up_tos = [c[2] for c in counted]
-    u_ets = [c[3] for c in counted]
-    K = len(counted)
-    E = list(entry_idx) if entry_idx is not None else [0] * K
-    E = [e or 0 for e in E]
-    has_nn = nn_ets is not None and any(e is not None for e in nn_ets)
-    NO_STOP = 1 << 62
-    # flat layout: C(n) L(n) BP(n) LQ(n) then per counted k:
-    # Ccs(n) Lcs(n), then per counted k with until: Cu(n) Lu(n),
-    # then (nn only) the pending block: Ph(n) Ppos(n), per k
-    # Pcs(n), per until-k Pu(n)
-    nu = sum(1 for u in u_ets if u is not None)
-    base = 4 * n + 2 * K * n + 2 * nu * n
-    if has_nn:
-        base += 2 * n + K * n + nu * n
-
-    def ok(v, t):
-        return v >= 0 and (within_us is None or t - v <= within_us)
-
-    def scan(vals, eids, etypes, ts):
-        flat = list(vals[0])
-        QCs = list(vals[1])
-        pos = vals[2]
-        off = 0
-        C = flat[off:off + n]; off += n
-        L = flat[off:off + n]; off += n
-        BP = flat[off:off + n]; off += n
-        LQ = flat[off:off + n]; off += n
-        Ccs, Lcs = [], []
-        for _k in range(K):
-            Ccs.append(flat[off:off + n]); off += n
-            Lcs.append(flat[off:off + n]); off += n
-        Cu, Lu = {}, {}
-        for k in range(K):
-            if u_ets[k] is not None:
-                Cu[k] = flat[off:off + n]; off += n
-                Lu[k] = flat[off:off + n]; off += n
-        Ph = Ppos = None
-        Pcs, Pu = [], {}
-        if has_nn:
-            Ph = flat[off:off + n]; off += n
-            Ppos = flat[off:off + n]; off += n
-            for _k in range(K):
-                Pcs.append(flat[off:off + n]); off += n
-            for k in range(K):
-                if u_ets[k] is not None:
-                    Pu[k] = flat[off:off + n]; off += n
-        cands = []
-        for eid, etype, t in zip(eids, etypes, ts):
-            # (0) resolve notNext pendings (r16) BEFORE the stop
-            # freeze: a just-validated bind's rider must see a stop
-            # arriving on the SAME row (it is strictly after the
-            # bind's entry row)
-            if has_nn:
-                for i in range(n):
-                    if nn_ets[i] is None:
-                        continue
-                    if Ph[i] >= 0 and etype != nn_ets[i]:
-                        ptup = (
-                            (Ph[i],)
-                            + tuple(Pcs[k][i] for k in range(K))
-                            + tuple(
-                                (Pu[k][i] if Pu[k][i] >= 0
-                                 else NO_STOP) for k in range(K)
-                                if k in Cu
-                            )
-                        )
-                        ctup = (
-                            (C[i],)
-                            + tuple(Ccs[k][i] for k in range(K))
-                            + tuple(
-                                (Cu[k][i] if Cu[k][i] >= 0
-                                 else NO_STOP) for k in range(K)
-                                if k in Cu
-                            )
-                        )
-                        if ptup > ctup:
-                            C[i] = Ph[i]
-                            for k in range(K):
-                                Ccs[k][i] = Pcs[k][i]
-                                if k in Cu:
-                                    Cu[k][i] = Pu[k][i]
-                        BP[i] = Ppos[i]
-                        L[i] = Ph[i]
-                        for k in range(K):
-                            Lcs[k][i] = Pcs[k][i]
-                            if k in Lu:
-                                Lu[k][i] = Pu[k][i]
+                for i in gated:
+                    # this event IS the parked binds' direct successor
+                    if pts[i] >= 0 and etype != nn_ets[i]:
+                        B[i].append((pts[i], P[i], pq[i]))
+                        L[i] = P[i]
                     else:
-                        L[i] = -1
-                        for k in range(K):
-                            Lcs[k][i] = -1
-                            if k in Lu:
-                                Lu[k][i] = -1
-                    Ph[i] = -1
-                    Ppos[i] = -1
-                    for k in range(K):
-                        Pcs[k][i] = -1
-                        if k in Pu:
-                            Pu[k][i] = -1
-            # (1) stop events freeze riders FIRST: every value in
-            # state started strictly before this row, and the hits
-            # computed below inherit the frozen rider
-            for k in range(K):
-                if u_ets[k] is not None and etype == u_ets[k]:
-                    for i in range(n):
-                        if C[i] >= 0 and Cu[k][i] == -1:
-                            Cu[k][i] = QCs[k]
-                        if L[i] >= 0 and Lu[k][i] == -1:
-                            Lu[k][i] = QCs[k]
-            # (2) hits against the pre-row carries
-            hh = [-1] * m
-            hcs = [[-1] * m for _ in range(K)]
-            hu = [[-1] * m for _ in range(K)]
-            for i, (et, trans, _gate) in enumerate(steps):
-                if etype != et:
-                    continue
-                if i == 0:
-                    hh[0] = t
-                    for k in range(K):
-                        if u_ets[k] is not None and E[k] > 0:
-                            # entry-relative rider, stamped later
-                            hcs[k][0] = -1
-                            hu[k][0] = -2
-                        else:
-                            hcs[k][0] = QCs[k] + (
-                                1 if etype == cnt_ets[k] else 0)
-                            hu[k][0] = -1
-                else:
+                        L[i] = NONE
+                    pts[i], P[i], pq[i] = -1, NONE, -1
+                hit = [NONE] * len(steps)
+                for i, (et, trans, neg_et) in enumerate(steps):
+                    if etype != et:
+                        continue
+                    if i == 0:
+                        hit[0] = carry.start(ci, etype, t, pos, ())
+                        continue
                     if trans == "followed_by":
-                        ch = C[i - 1]
-                        ccs = [Ccs[k][i - 1] for k in range(K)]
-                        cus = {k: Cu[k][i - 1] for k in Cu}
-                    else:
-                        ch = L[i - 1]
-                        ccs = [Lcs[k][i - 1] for k in range(K)]
-                        cus = {k: Lu[k][i - 1] for k in Lu}
-                    if ch >= 0 and (
-                        qtypes[i - 1] is None or LQ[i - 1] <= BP[i - 1]
-                    ):
-                        hh[i] = ch
-                        for k in range(K):
-                            hcs[k][i] = ccs[k]
-                            if k in cus:
-                                hu[k][i] = cus[k]
-                        for k in range(K):
-                            if u_ets[k] is not None and E[k] == i:
-                                # the loop-entry hop: stamp the rider
-                                # with this row's values
-                                hcs[k][i] = QCs[k] + (
-                                    1 if etype == cnt_ets[k] else 0)
-                                hu[k][i] = -1
-            # (3) emission — pool clamped at the chain's freeze
-            if ok(hh[-1], t):
-                row = [eid, t, hh[-1]]
-                for k in range(K):
-                    incl = QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                    if u_ets[k] is not None:
-                        fz = hu[k][-1]
-                        incl = min(incl,
-                                   fz if fz >= 0 else NO_STOP)
-                    pool = incl - hcs[k][-1]
-                    row.append(
-                        pool if up_tos[k] is None
-                        else min(pool, up_tos[k])
-                    )
-                cands.append(tuple(row))
-            # (4) absorb hits — the lexicographic compare INCLUDES
-            # the riders after the counts (unknown -1 ordered as
-            # +inf), matching the batch (h, c.., u..) struct max on
-            # same-ts same-count start ties; a notNext-gated level
-            # PARKS instead (resolution above owns its carry/lag/BP)
-            for i in range(n):
-                if has_nn and nn_ets[i] is not None:
-                    Ph[i] = hh[i]
-                    Ppos[i] = pos if hh[i] >= 0 else -1
-                    for k in range(K):
-                        Pcs[k][i] = hcs[k][i]
-                        if k in Pu:
-                            Pu[k][i] = hu[k][i]
-                    if qtypes[i] is not None and etype == qtypes[i]:
-                        LQ[i] = pos
-                    continue
-                htup = (
-                    (hh[i],)
-                    + tuple(hcs[k][i] for k in range(K))
-                    + tuple(
-                        (hu[k][i] if hu[k][i] >= 0 else NO_STOP)
-                        for k in range(K) if k in Cu
-                    )
-                )
-                ctup = (
-                    (C[i],)
-                    + tuple(Ccs[k][i] for k in range(K))
-                    + tuple(
-                        (Cu[k][i] if Cu[k][i] >= 0 else NO_STOP)
-                        for k in range(K) if k in Cu
-                    )
-                )
-                if htup > ctup:
-                    C[i] = hh[i]
-                    for k in range(K):
-                        Ccs[k][i] = hcs[k][i]
-                        if k in Cu:
-                            Cu[k][i] = hu[k][i]
-                L[i] = hh[i]
-                for k in range(K):
-                    Lcs[k][i] = hcs[k][i]
-                    if k in Lu:
-                        Lu[k][i] = hu[k][i]
-                if hh[i] >= 0:
-                    BP[i] = pos
-                if qtypes[i] is not None and etype == qtypes[i]:
-                    LQ[i] = pos
-            # (5) shared running counts + row counter
-            for k in range(K):
-                if etype == cnt_ets[k]:
-                    QCs[k] += 1
+                        cur = qc[i - 1]
+                        hit[i] = max(
+                            (v for rts, v, q in B[i - 1]
+                             if rts >= lo and (neg_et is None or q == cur)),
+                            default=NONE)
+                    elif (L[i - 1][0] >= 0 and prev_ts >= 0
+                          and t - prev_ts <= gap_us):
+                        hit[i] = L[i - 1]
+                    if hit[i][0] >= 0 and i in carry.stamp_at[ci]:
+                        hit[i] = carry.stamp(hit[i], ci, i, etype, (), pos)
+                for i in range(len(B)):
+                    h, q_et = hit[i], qt[i]
+                    if h[0] >= 0:
+                        # the entry's INCLUSIVE negated-prefix count
+                        q = -1 if q_et is None else qc[i] + (etype == q_et)
+                        if i in gated:
+                            pts[i], P[i], pq[i] = t, h, q
+                        else:
+                            B[i].append((t, h, q))
+                    # a future event at t' >= t reaches only rows with
+                    # row_ts >= t' - G >= t - G
+                    if B[i] and B[i][0][0] < lo:
+                        B[i] = [e for e in B[i] if e[0] >= lo]
+                    if i not in gated:
+                        L[i] = h
+                    if q_et is not None and etype == q_et:
+                        qc[i] += 1
+                finals.append(hit[-1])
+            cand = carry.candidate(finals, eid, t, etype, (), pos)
+            if cand is not None:
+                cands.append(cand)
+            prev_ts = t
             pos += 1
-        new_flat = C + L + BP + LQ
-        for k in range(K):
-            new_flat += Ccs[k] + Lcs[k]
-        for k in range(K):
-            if k in Cu:
-                new_flat += Cu[k] + Lu[k]
-        if has_nn:
-            new_flat += Ph + Ppos
-            for k in range(K):
-                new_flat += Pcs[k]
-            for k in range(K):
-                if k in Pu:
-                    new_flat += Pu[k]
-        return [new_flat, QCs, pos], cands
+        out = []
+        for (B, L, qc, pts, P, pq), neg in zip(st, mneg):
+            out += [[e[0] for e in b] for b in B]
+            out += [[e[1][j] for e in b] for j in range(w) for b in B]
+            out += [[e[2] for e in b] for b in B] if neg else []
+            out += [[v[j] for v in L] for j in range(w)]
+            out += [qc] if neg else []
+            if gated:
+                out += [pts] + [[v[j] for v in P] for j in range(w)] + [pq]
+        return (out + [prev_ts]
+                + ([pos] + vals[off + 2:] if carry.skip else [])), cands
+
+    def init():
+        out = []
+        for steps, neg in zip(chains, mneg):
+            n = len(steps) - 1
+            out += [[] for _ in range((1 + w + neg) * n)]
+            out += [[-1] * n for _ in range(w)]
+            out += [[0] * n] if neg else []
+            out += [[-1] * n for _ in range(w + 2)] if gated else []
+        return out + [-1] + ([0, -1] if carry.skip else [])
 
     return CarryScan(
-        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"],
-        lambda: [[-1] * base, [0] * K, 0],
-        scan,
-        [f"n_{c[0]} BIGINT" for c in counted],
+        fields, init, scan, carry.riders,
+        fields.index("cursor BIGINT") if carry.skip else None,
     )
 
 
@@ -1976,368 +1190,6 @@ def cep_any_pairs_stream(
         F.unix_micros("e_ts").alias("match_us"),
         "start_id",
         F.unix_micros("s_ts").alias("start_us"),
-    )
-
-
-def not_next_scan(steps, within_us, counted, nn_ets):
-    """r15: carry scan for patterns with notNext gates (FlinkCEP's
-    strict-contiguity negation, compiled batch-side as a LEAD(1) flag
-    folded into the step predicate). A bind's validity ("the directly
-    following event does not match") is only known at the NEXT event,
-    so gated levels use ONE-ROW DELAYED ABSORPTION: the row's hit parks
-    in a pending slot instead of the carry; the next event either
-    absorbs it (its type clears the gate) or drops it — the lag value
-    L and the gate watermark BP follow the same delayed rule, so strict
-    hops and downstream mid-negation gates read only VALID binds,
-    exactly the batch's gated hit column. `steps` = [(etype, trans,
-    neg_et)] (mid-negation first-copy gates as usual), `counted` =
-    [(name, etype, up_to)], `nn_ets[i]` = the notNext type gating
-    expanded copy i (None = ungated; the final copy is never gated — a
-    pattern cannot end in notNext)."""
-    m = len(steps)
-    n = m - 1
-    qtypes = [st[2] for st in steps[1:]]
-    cnt_ets = [c[1] for c in counted]
-    up_tos = [c[2] for c in counted]
-    K = len(counted)
-
-    def ok(v, t):
-        return v >= 0 and (within_us is None or t - v <= within_us)
-
-    def scan(vals, eids, etypes, ts):
-        # flat: C(n) L(n) BP(n) LQ(n) + per k: Ccs(n) Lcs(n)
-        #       + P(n) Ppos(n) + per k: Pcs(n)
-        flat = list(vals[0])
-        QCs = list(vals[1])
-        pos = vals[2]
-        off = 0
-        C = flat[off:off + n]; off += n
-        L = flat[off:off + n]; off += n
-        BP = flat[off:off + n]; off += n
-        LQ = flat[off:off + n]; off += n
-        Ccs, Lcs = [], []
-        for _k in range(K):
-            Ccs.append(flat[off:off + n]); off += n
-            Lcs.append(flat[off:off + n]); off += n
-        P = flat[off:off + n]; off += n
-        Ppos = flat[off:off + n]; off += n
-        Pcs = []
-        for _k in range(K):
-            Pcs.append(flat[off:off + n]); off += n
-        cands = []
-        for eid, etype, t in zip(eids, etypes, ts):
-            # (0) resolve pendings: this event IS the gated binds'
-            # direct successor — absorb if it clears the gate, drop
-            # otherwise; either way the lag slot reflects the verdict
-            for i in range(n):
-                if nn_ets[i] is None:
-                    continue
-                if P[i] >= 0 and etype != nn_ets[i]:
-                    ptup = (P[i],) + tuple(Pcs[k][i] for k in range(K))
-                    ctup = (C[i],) + tuple(Ccs[k][i] for k in range(K))
-                    if ptup > ctup:
-                        C[i] = P[i]
-                        for k in range(K):
-                            Ccs[k][i] = Pcs[k][i]
-                    BP[i] = Ppos[i]
-                    L[i] = P[i]
-                    for k in range(K):
-                        Lcs[k][i] = Pcs[k][i]
-                else:
-                    L[i] = -1
-                    for k in range(K):
-                        Lcs[k][i] = -1
-                P[i] = -1
-                Ppos[i] = -1
-                for k in range(K):
-                    Pcs[k][i] = -1
-            # (1) hits against the (resolved) carries
-            hh = [-1] * m
-            hcs = [[-1] * m for _ in range(K)]
-            for i, (et, trans, _neg) in enumerate(steps):
-                if etype != et:
-                    continue
-                if i == 0:
-                    hh[0] = t
-                    for k in range(K):
-                        hcs[k][0] = QCs[k] + (
-                            1 if etype == cnt_ets[k] else 0)
-                else:
-                    if trans == "followed_by":
-                        ch = C[i - 1]
-                        ccs = [Ccs[k][i - 1] for k in range(K)]
-                    else:
-                        ch = L[i - 1]
-                        ccs = [Lcs[k][i - 1] for k in range(K)]
-                    if ch >= 0 and (
-                        qtypes[i - 1] is None or LQ[i - 1] <= BP[i - 1]
-                    ):
-                        hh[i] = ch
-                        for k in range(K):
-                            hcs[k][i] = ccs[k]
-            # (2) emission (the final step is never notNext-gated)
-            if ok(hh[-1], t):
-                pools = [QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                         - hcs[k][-1] for k in range(K)]
-                cands.append((
-                    eid, t, hh[-1],
-                    *(p if cap is None else min(p, cap)
-                      for p, cap in zip(pools, up_tos)),
-                ))
-            # (3) absorb — gated levels PARK the hit instead
-            for i in range(n):
-                if nn_ets[i] is not None:
-                    P[i] = hh[i]
-                    Ppos[i] = pos if hh[i] >= 0 else -1
-                    for k in range(K):
-                        Pcs[k][i] = hcs[k][i]
-                else:
-                    htup = (hh[i],) + tuple(
-                        hcs[k][i] for k in range(K))
-                    ctup = (C[i],) + tuple(
-                        Ccs[k][i] for k in range(K))
-                    if htup > ctup:
-                        C[i] = hh[i]
-                        for k in range(K):
-                            Ccs[k][i] = hcs[k][i]
-                    L[i] = hh[i]
-                    for k in range(K):
-                        Lcs[k][i] = hcs[k][i]
-                    if hh[i] >= 0:
-                        BP[i] = pos
-                if qtypes[i] is not None and etype == qtypes[i]:
-                    LQ[i] = pos
-            for k in range(K):
-                if etype == cnt_ets[k]:
-                    QCs[k] += 1
-            pos += 1
-        new_flat = C + L + BP + LQ
-        for k in range(K):
-            new_flat += Ccs[k] + Lcs[k]
-        new_flat += P + Ppos
-        for k in range(K):
-            new_flat += Pcs[k]
-        return [new_flat, QCs, pos], cands
-
-    return CarryScan(
-        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"],
-        lambda: [[-1] * (4 * n + 2 * K * n + 2 * n + K * n), [0] * K, 0],
-        scan,
-        [f"n_{c[0]} BIGINT" for c in counted],
-    )
-
-
-def until_split_scan(variant_steps, within_us, counted,
-                      incl_flags=None, flag_names=None, entry_idx=None):
-    """r16 (r15 verdict item 2): until()-gated loops COMPOSED with a
-    both-strict oneOrMore/times(1, m) split elsewhere in the pattern —
-    the freeze-rider machinery of until_scan run over the
-    OR-of-variant-chains of or_split_scan. Each variant is one
-    quantifier expansion of the same pattern (1-rep / >=2-rep per
-    split step), each carrying its own C/L/BP/LQ gates, count-at-start
-    pairs AND freeze riders; running counts and the row counter are
-    shared. Emission is EXISTS-any with the lexicographic
-    (h, c.., u-as-inf..) max across satisfied variants — the same
-    batch struct GREATEST, riders joining the compare after the counts
-    with unknown encoded as +inf (the f994a3d rule: a not-yet-frozen
-    rider is always >= any frozen one because NB is nondecreasing in
-    start position). Stop events freeze every variant's riders BEFORE
-    the row's hits, exactly until_scan's discipline.
-
-    incl_flags/flag_names (r16, until × optional — r15 verdict item
-    8): when the variants are the 2^k include/exclude expansions of
-    optional steps, incl_flags[v] is the set of with_<name> flags
-    variant v includes and the output gains one BOOLEAN per optional
-    step — true iff any including variant completed (causal at the
-    match row).
-
-    entry_idx (r16): per variant, per counted step, the expanded
-    LEVEL of the loop's entry event — riders stamp there
-    (entry-relative freezes, see until_scan; the optional variants
-    have DIFFERENT entry levels, which is exactly why the freeze must
-    be entry-relative for this composition)."""
-    sizes = [len(steps) - 1 for steps in variant_steps]
-    qtypes = [[st[2] for st in steps[1:]] for steps in variant_steps]
-    nvar = len(variant_steps)
-    cnt_ets = [c[1] for c in counted]
-    up_tos = [c[2] for c in counted]
-    u_ets = [c[3] for c in counted]
-    K = len(counted)
-    uks = [k for k in range(K) if u_ets[k] is not None]
-    E = (entry_idx if entry_idx is not None
-         else [[0] * K for _ in range(nvar)])
-    E = [[e or 0 for e in ev] for ev in E]
-    flag_names = list(flag_names or [])
-    NO_STOP = 1 << 62
-    # flat layout per variant v (size n): C L BP LQ, per k:
-    # Ccs Lcs, per k-with-until: Cu Lu — variants concatenated
-    base = sum(4 * n + 2 * K * n + 2 * len(uks) * n for n in sizes)
-
-    def ok(vv, t):
-        return vv >= 0 and (within_us is None or t - vv <= within_us)
-
-    def scan(vals, eids, etypes, ts):
-        flat = list(vals[0])
-        QCs = list(vals[1])
-        pos = vals[2]
-        V = []  # per variant: (C, L, BP, LQ, Ccs, Lcs, Cu, Lu)
-        off = 0
-        for n in sizes:
-            C = flat[off:off + n]; off += n
-            L = flat[off:off + n]; off += n
-            BP = flat[off:off + n]; off += n
-            LQ = flat[off:off + n]; off += n
-            Ccs, Lcs = [], []
-            for _k in range(K):
-                Ccs.append(flat[off:off + n]); off += n
-                Lcs.append(flat[off:off + n]); off += n
-            Cu, Lu = {}, {}
-            for k in uks:
-                Cu[k] = flat[off:off + n]; off += n
-                Lu[k] = flat[off:off + n]; off += n
-            V.append((C, L, BP, LQ, Ccs, Lcs, Cu, Lu))
-        cands = []
-        for eid, etype, t in zip(eids, etypes, ts):
-            # (1) stop events freeze EVERY variant's riders first
-            for k in uks:
-                if etype == u_ets[k]:
-                    for (C, L, _BP, _LQ, _Ccs, _Lcs, Cu, Lu) in V:
-                        for i in range(len(C)):
-                            if C[i] >= 0 and Cu[k][i] == -1:
-                                Cu[k][i] = QCs[k]
-                            if L[i] >= 0 and Lu[k][i] == -1:
-                                Lu[k][i] = QCs[k]
-            # (2) hits per variant against the pre-row carries
-            hits = []
-            for v, ((C, L, BP, LQ, Ccs, Lcs, Cu, Lu), steps) in \
-                    enumerate(zip(V, variant_steps)):
-                m = len(steps)
-                hh = [-1] * m
-                hcs = [[-1] * m for _ in range(K)]
-                hu = {k: [-1] * m for k in uks}
-                for i, (et, trans, _gate) in enumerate(steps):
-                    if etype != et:
-                        continue
-                    if i == 0:
-                        hh[0] = t
-                        for k in range(K):
-                            if k in uks and E[v][k] > 0:
-                                hcs[k][0] = -1
-                                hu[k][0] = -2
-                            else:
-                                hcs[k][0] = QCs[k] + (
-                                    1 if etype == cnt_ets[k] else 0)
-                    else:
-                        if trans == "followed_by":
-                            ch = C[i - 1]
-                            ccs = [Ccs[k][i - 1] for k in range(K)]
-                            cus = {k: Cu[k][i - 1] for k in uks}
-                        else:
-                            ch = L[i - 1]
-                            ccs = [Lcs[k][i - 1] for k in range(K)]
-                            cus = {k: Lu[k][i - 1] for k in uks}
-                        if ch >= 0 and (
-                            qtypes[v][i - 1] is None
-                            or LQ[i - 1] <= BP[i - 1]
-                        ):
-                            hh[i] = ch
-                            for k in range(K):
-                                hcs[k][i] = ccs[k]
-                            for k in uks:
-                                hu[k][i] = cus[k]
-                            for k in uks:
-                                if E[v][k] == i:
-                                    # loop-entry hop: stamp the rider
-                                    hcs[k][i] = QCs[k] + (
-                                        1 if etype == cnt_ets[k]
-                                        else 0)
-                                    hu[k][i] = -1
-                hits.append((hh, hcs, hu))
-            # (3) emission — lexicographic (h, c.., u-as-inf..) winner
-            # across satisfied variants, pools from the winner
-            oks = [ok(hh[-1], t) for hh, _hcs, _hu in hits]
-            if any(oks):
-                win = max(
-                    (hh[-1],)
-                    + tuple(hcs[k][-1] for k in range(K))
-                    + tuple(
-                        (hu[k][-1] if hu[k][-1] >= 0 else NO_STOP)
-                        for k in uks
-                    )
-                    for (hh, hcs, hu), okv in zip(hits, oks) if okv
-                )
-                row = [eid, t, win[0]]
-                for k in range(K):
-                    incl = QCs[k] + (1 if etype == cnt_ets[k] else 0)
-                    if k in uks:
-                        incl = min(incl, win[1 + K + uks.index(k)])
-                    pool = incl - win[1 + k]
-                    row.append(
-                        pool if up_tos[k] is None
-                        else min(pool, up_tos[k])
-                    )
-                for f in flag_names:
-                    row.append(any(
-                        okv for v, okv in enumerate(oks)
-                        if okv and f in incl_flags[v]
-                    ))
-                cands.append(tuple(row))
-            # (4) absorb per variant — riders join the compare
-            for v, ((C, L, BP, LQ, Ccs, Lcs, Cu, Lu),
-                    (hh, hcs, hu)) in enumerate(zip(V, hits)):
-                for i in range(len(C)):
-                    htup = (
-                        (hh[i],)
-                        + tuple(hcs[k][i] for k in range(K))
-                        + tuple(
-                            (hu[k][i] if hu[k][i] >= 0 else NO_STOP)
-                            for k in uks
-                        )
-                    )
-                    ctup = (
-                        (C[i],)
-                        + tuple(Ccs[k][i] for k in range(K))
-                        + tuple(
-                            (Cu[k][i] if Cu[k][i] >= 0 else NO_STOP)
-                            for k in uks
-                        )
-                    )
-                    if htup > ctup:
-                        C[i] = hh[i]
-                        for k in range(K):
-                            Ccs[k][i] = hcs[k][i]
-                        for k in uks:
-                            Cu[k][i] = hu[k][i]
-                    L[i] = hh[i]
-                    for k in range(K):
-                        Lcs[k][i] = hcs[k][i]
-                    for k in uks:
-                        Lu[k][i] = hu[k][i]
-                    if hh[i] >= 0:
-                        BP[i] = pos
-                    if qtypes[v][i] is not None \
-                            and etype == qtypes[v][i]:
-                        LQ[i] = pos
-            # (5) shared running counts + row counter
-            for k in range(K):
-                if etype == cnt_ets[k]:
-                    QCs[k] += 1
-            pos += 1
-        new_flat = []
-        for C, L, BP, LQ, Ccs, Lcs, Cu, Lu in V:
-            new_flat += C + L + BP + LQ
-            for k in range(K):
-                new_flat += Ccs[k] + Lcs[k]
-            for k in uks:
-                new_flat += Cu[k] + Lu[k]
-        return [new_flat, QCs, pos], cands
-
-    return CarryScan(
-        ["flat ARRAY<BIGINT>", "qcs ARRAY<BIGINT>", "pos BIGINT"],
-        lambda: [[-1] * base, [0] * K, 0],
-        scan,
-        [f"n_{c[0]} BIGINT" for c in counted]
-        + [f"{f} BOOLEAN" for f in flag_names],
     )
 
 

@@ -1151,13 +1151,14 @@ def _hold_cases() -> dict:
 
 def test_terminal_negation_late_kill_hand_case():
     """The late-negated-event case (r12 verdict item 4's done
-    criterion), on every keyed machine the hold composes with: a
+    criterion), on every route shape the hold composes with: a
     candidate held across a micro-batch boundary must be KILLED by a
     negated event arriving in a LATER batch inside its horizon, must
     SURVIVE one outside it or at the exact same timestamp (open
     interval), and the trailing survivor must emit on the event-time
-    TIMER, not only on the data path. The keyed function comes from
-    the same factory compile_stream uses, with no Spark session."""
+    TIMER, not only on the data path, and a watermark exactly at the
+    deadline must not ripen it. The keyed function comes from the same
+    factory compile_stream uses, with no Spark session."""
     from sparkflow.streaming import stateful
 
     def run(pat, batches, wms, fire_at_ms):
@@ -1198,6 +1199,16 @@ def test_terminal_negation_late_kill_hand_case():
             case
         # ...but NOT if the watermark has not yet passed the deadline
         assert run(pat, [first], [10_000], None) == [], case
+        # the ripeness boundary: a watermark exactly at match_ts + T
+        # holds the candidate (the batch RANGE frame still reaches an
+        # event at match_ts + T)...
+        at_deadline = [(2, "Z", 70)]
+        assert run(pat, [first, at_deadline], [10_000, 70_000],
+                   None) == [], case
+        # ...so a negated event exactly at match_ts + T in the next
+        # batch still kills it
+        assert run(pat, [first, at_deadline, [(3, "X", 70)]],
+                   [10_000, 70_000, 70_000], 200_000) == [], case
 
 
 def test_enum_variant_streaming_twin(spark, sf_small, tmp_path_factory):
@@ -1548,7 +1559,7 @@ def test_gap_enum_streaming_twin(spark, sf_small, tmp_path_factory):
 
 def test_or_split_streaming_twin(spark, sf_small, tmp_path_factory):
     """The both-strict oneOrMore OR-split STREAMS (r14): the 2-variant
-    paired keyed machine (stateful.or_split_scan, routed by
+    paired keyed machine (stateful.carry_scan, routed by
     compile_stream) must equal the batch OR-of-chains compile —
     matches, greedy max-start across variants, AND n_click — across
     real micro-batch boundaries."""
@@ -2102,7 +2113,7 @@ def test_next_optional_neg_streaming_twin(spark, sf_small,
 
 def test_until_streaming_twin(spark, sf_small, tmp_path_factory):
     """until() STREAMS (r15): the paired freeze-rider machine
-    (stateful.until_scan, routed by compile_stream) must equal the
+    (stateful.carry_scan, routed by compile_stream) must equal the
     batch gate+LEAST compile — matches, greedy starts, and the
     clamped n_click pools — across real micro-batch boundaries."""
     from sparkflow.streaming import stateful
@@ -2156,7 +2167,7 @@ def test_until_streaming_twin(spark, sf_small, tmp_path_factory):
 def test_until_split_streaming_twin(spark, sf_small, tmp_path_factory):
     """until() × both-strict OR-split STREAMS (r16): compile_stream
     routes the composed pattern to the per-variant freeze-rider
-    machine (stateful.until_split_scan) — matches, greedy starts,
+    machine (stateful.carry_scan) — matches, greedy starts,
     and both pools must equal the batch compile across real
     micro-batch boundaries."""
     from sparkflow.streaming import stateful
@@ -2273,13 +2284,7 @@ def test_until_prefix_pool_entry_relative(spark):
     assert got == [(1, 5, 1)]
 
     # the streaming machine agrees (entry_idx = [1])
-    cnt_steps = [s for s in pat.steps
-                 if s.one_or_more or s.up_to is not None]
-    fn = stateful.cep_keyed_fn(stateful.until_scan(
-        pat._event_expansion(pat.steps), 100 * 1_000_000,
-        [("b", "B", None, "U")],
-        entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
-    ))
+    fn = stateful.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
 
     class _S:
         _v = None
@@ -2367,7 +2372,7 @@ def test_until_builder_rules(spark):
 
 def test_not_next_streaming_twin(spark, sf_small, tmp_path_factory):
     """notNext STREAMS (r15): the delayed-absorption machine
-    (stateful.not_next_scan, routed by compile_stream) must equal
+    (stateful.carry_scan, routed by compile_stream) must equal
     the batch LEAD-gated compile across real micro-batch
     boundaries."""
     from sparkflow.streaming import stateful

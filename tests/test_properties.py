@@ -1074,7 +1074,7 @@ def test_cep_two_counted_streaming_state_fuzz(streams, types, cut,
                                               within_s):
     """K=2 counted steps in the STREAMING state machine (r13, r12
     verdict item 8): for random streams and random type assignments,
-    driving compiled_scan through a fake GroupState with a random
+    driving carry_scan through a fake GroupState with a random
     micro-batch split must emit exactly the batch compile's rows —
     BOTH n_ outputs included (each counted step's count-at-start pair
     and running count live in the state and must survive the batch
@@ -1106,12 +1106,7 @@ def test_cep_two_counted_streaming_state_fuzz(streams, types, cut,
         ).collect()
     }
 
-    main, variants = pat.stream_chains()
-    chains = [(None, main)] + [(n, v) for n, v in variants]
-    fn = sf.cep_keyed_fn(sf.compiled_scan(
-        chains, within_s * 1_000_000,
-        counted=[("s1", t1, None), ("s2", t2, 3)],
-    ))
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1239,7 +1234,7 @@ def test_cep_enum_streaming_state_fuzz(streams, pattern_types,
                                        within_s):
     """The enum-gated streaming state machine (r13): for random
     patterns with one optional step in a strict-contiguity region,
-    driving compiled_scan's enum mode through a fake GroupState
+    driving carry_scan's any-chain mode through a fake GroupState
     with a random micro-batch split must emit exactly the batch
     compile's rows — match set, greedy-across-variants start, and the
     with_<o> flag (the 2^k variant carries and their OR-gate live in
@@ -1291,10 +1286,10 @@ def test_cep_enum_streaming_state_fuzz(streams, pattern_types,
         variant_steps.append(pat._event_expansion(chain))
         masks.append(frozenset(
             f"with_{s.name}" for i, s in opts if i in inc))
-    fn = sf.cep_keyed_fn(sf.compiled_scan(
-        [(None, v) for v in variant_steps], within_s * 1_000_000,
-        enum=(masks, [flag]),
-    ))
+    fn = sf.cep_keyed_fn(sf.carry_scan(sf.Carry(
+        variant_steps, within_s * 1_000_000, incl=masks,
+        flag_names=[flag], gate=False,
+    )))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1540,8 +1535,7 @@ def test_cep_gap_streaming_state_fuzz(streams, pattern_types,
         ).collect()
     }
 
-    fn = sf.cep_keyed_fn(sf.gap_scan(pat._event_expansion(pat.steps),
-                                     None, gap_s * 1_000_000))
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1720,7 +1714,7 @@ def test_cep_both_strict_one_or_more_fuzz(streams, types, cap, within_s):
 )
 def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
     """Optional-under-gap STREAMS (r14, r13 verdict item 4b): driving
-    gap_enum_scan (one gap-buffered chain per include/exclude
+    gap_scan (one gap-buffered chain per include/exclude
     variant, shared prev_ts) through a fake GroupState with a random
     micro-batch split must emit exactly the batch 2^k-enumeration's
     rows — matches, greedy max-start ACROSS variants, and the
@@ -1757,8 +1751,9 @@ def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
         pat._event_expansion(list(pat.steps)),
     ]
     incl = [frozenset(), frozenset({"with_s1"})]
-    fn = sf.cep_keyed_fn(sf.gap_enum_scan(chains, None, gap_s * 1_000_000,
-                                          incl, ["with_s1"]))
+    fn = sf.cep_keyed_fn(sf.gap_scan(
+        sf.Carry(chains, None, incl=incl, flag_names=["with_s1"],
+                 gate=False), gap_s * 1_000_000))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1829,11 +1824,7 @@ def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
         ).collect()
     }
 
-    fn = sf.cep_keyed_fn(
-        sf.gap_scan(pat._event_expansion(pat.steps), None,
-                    gap_s * 1_000_000),
-        hold=(x_t, neg_s * 1_000_000),
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1880,7 +1871,7 @@ def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
 def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
                                            within_s, cut):
     """The both-strict OR-split STREAMS (r14): driving
-    or_split_scan (one paired carry chain per quantifier variant,
+    carry_scan (one paired carry chain per quantifier variant,
     shared running counts, lexicographic winner) through a fake
     GroupState with a random micro-batch split must emit exactly the
     batch OR-of-chains compile's rows — matches, greedy max-start
@@ -1914,12 +1905,11 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
           dc_replace(sp, one_or_more=False, times=1, up_to=None),
           pat.steps[2]]
     hi = [pat.steps[0], dc_replace(sp, times=2), pat.steps[2]]
-    fn = sf.cep_keyed_fn(sf.or_split_scan(
-        [(None, pat._event_expansion(lo)),
-         (None, pat._event_expansion(hi))],
+    fn = sf.cep_keyed_fn(sf.carry_scan(sf.Carry(
+        [pat._event_expansion(lo), pat._event_expansion(hi)],
         within_s * 1_000_000,
-        [("b", b_t, cap)],
-    ))
+        [("b", b_t, cap, None)], gate=False,
+    )))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1959,7 +1949,7 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
 )
 def test_cep_gap_enum_neg_state_fuzz(streams, types, gap_s, neg_s, cut):
     """The TRIPLE composition — optional + gap bound + terminal
-    negation — STREAMS (r14): gap_enum_scan (2^k gap machines)
+    negation — STREAMS (r14): gap_scan (2^k gap chains)
     feeding the watermark hold driven through a fake timer GroupState
     with a random micro-batch split must emit exactly the batch
     enum+negation compile's rows incl. flags; negated/positive type
@@ -1996,8 +1986,9 @@ def test_cep_gap_enum_neg_state_fuzz(streams, types, gap_s, neg_s, cut):
     ]
     incl = [frozenset(), frozenset({"with_s1"})]
     fn = sf.cep_keyed_fn(
-        sf.gap_enum_scan(chains, None, gap_s * 1_000_000, incl,
-                         ["with_s1"]),
+        sf.gap_scan(sf.Carry(chains, None, incl=incl,
+                             flag_names=["with_s1"], gate=False),
+                    gap_s * 1_000_000),
         hold=(x_t, neg_s * 1_000_000),
     )
     got = set()
@@ -2117,7 +2108,7 @@ def test_cep_skip_gap_fuzz(streams, types, gap_s):
     cut=st.integers(min_value=1, max_value=10),
 )
 def test_cep_gap_skip_state_fuzz(streams, types, gap_s, strategy, cut):
-    """skip+gap STREAMS (r14): gap_skip_scan (position-struct
+    """skip+gap STREAMS (r14): gap_scan (position-struct
     buffers) + the causal cursor fold driven through a fake GroupState with a
     random micro-batch split must emit exactly the batch skip+gap
     compile's accepted rows, for all three cursor rules incl. the
@@ -2140,10 +2131,8 @@ def test_cep_gap_skip_state_fuzz(streams, types, gap_s, strategy, cut):
     )
     if strategy == "skip_to_first":
         pat = pat.after_match_skip(strategy, "b")
-        anchor_idx = 1
     else:
         pat = pat.after_match_skip(strategy)
-        anchor_idx = None
     want = {
         (r.user_id, r.match_id, int(r.start_sec))
         for r in pat.compile(df).select(
@@ -2153,10 +2142,7 @@ def test_cep_gap_skip_state_fuzz(streams, types, gap_s, strategy, cut):
         ).collect()
     }
 
-    fn = sf.cep_keyed_fn(sf.gap_skip_scan(
-        pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-        anchor_idx,
-    ), skip=strategy)
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2221,10 +2207,8 @@ def test_cep_skip_neg_state_fuzz(streams, types, neg_s, strategy,
     pat = pat.not_followed_by("x", etype=x_t, within=neg_s)
     if strategy == "skip_to_first":
         pat = pat.after_match_skip(strategy, "b")
-        anchor_idx = 1
     else:
         pat = pat.after_match_skip(strategy)
-        anchor_idx = None
     want = {
         (r.user_id, r.match_id, int(r.start_sec))
         for r in pat.compile(df).select(
@@ -2234,16 +2218,7 @@ def test_cep_skip_neg_state_fuzz(streams, types, neg_s, strategy,
         ).collect()
     }
 
-    if gapped:
-        scan = sf.gap_skip_scan(
-            pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-            anchor_idx,
-        )
-    else:
-        scan = sf.skip_scan(pat._event_expansion(pat.steps), None,
-                            anchor_idx)
-    fn = sf.cep_keyed_fn(scan, hold=(x_t, neg_s * 1_000_000),
-                         skip=strategy)
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2320,12 +2295,7 @@ def test_cep_counted_neg_state_fuzz(streams, types, neg_s, within_s,
         ).collect()
     }
 
-    required = [s for s in pat.steps if not s.optional]
-    fn = sf.cep_keyed_fn(
-        sf.compiled_scan([(None, pat._event_expansion(required))],
-                         within_s * 1_000_000, [("b", b_t, None)]),
-        hold=(x_t, neg_s * 1_000_000),
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2470,8 +2440,7 @@ def test_cep_midneg_gap_streaming_state_fuzz(streams, types, gap_s,
         ).collect()
     }
 
-    fn = sf.cep_keyed_fn(sf.gap_scan(pat._event_expansion(pat.steps),
-                                     None, gap_s * 1_000_000))
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2610,7 +2579,7 @@ def test_cep_midneg_gap_skip_fuzz(streams, types, gap_s, neg_s,
 )
 def test_cep_midneg_gap_skip_state_fuzz(streams, types, gap_s, neg_s,
                                         strategy, with_neg, cut):
-    """midneg+gap+skip STREAMS (r15): gap_skip_scan (with or without
+    """midneg+gap+skip STREAMS (r15): gap_scan (with or without
     the hold) with count-gated position-struct buffers
     driven through a fake (timer) GroupState with a random micro-batch
     split must emit exactly the batch rows, for all three cursor rules
@@ -2634,10 +2603,8 @@ def test_cep_midneg_gap_skip_state_fuzz(streams, types, gap_s, neg_s,
     )
     if strategy == "skip_to_first":
         pat = pat.after_match_skip(strategy, "b")
-        anchor_idx = 1
     else:
         pat = pat.after_match_skip(strategy)
-        anchor_idx = None
     if with_neg:
         pat = pat.not_followed_by("y", etype="A", within=neg_s)
     want = {
@@ -2649,15 +2616,7 @@ def test_cep_midneg_gap_skip_state_fuzz(streams, types, gap_s, neg_s,
         ).collect()
     }
 
-    steps = pat._event_expansion(pat.steps)
-    if with_neg:
-        fn = sf.cep_keyed_fn(
-            sf.gap_skip_scan(steps, None, gap_s * 1_000_000, anchor_idx),
-            hold=("A", neg_s * 1_000_000), skip=strategy)
-    else:
-        fn = sf.cep_keyed_fn(
-            sf.gap_skip_scan(steps, None, gap_s * 1_000_000, anchor_idx),
-            skip=strategy)
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2804,11 +2763,7 @@ def test_cep_midneg_gap_neg_state_fuzz(streams, types, gap_s, neg_s,
         ).collect()
     }
 
-    fn = sf.cep_keyed_fn(
-        sf.gap_scan(pat._event_expansion(pat.steps), None,
-                    gap_s * 1_000_000),
-        hold=(y_t, neg_s * 1_000_000),
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2958,7 +2913,7 @@ def test_cep_opt_midneg_gap_fuzz(streams, types, gap_s, neg_s,
 def test_cep_opt_midneg_gap_state_fuzz(streams, types, gap_s, neg_s,
                                        with_neg, cut):
     """The optional×midneg×gap triple (and its terminal-negation
-    quadruple) STREAMS (r15): gap_enum_scan (with or without the hold)
+    quadruple) STREAMS (r15): gap_scan (with or without the hold)
     with per-variant count-gated buffers driven through a fake (timer)
     GroupState with a random micro-batch split must emit exactly the
     batch rows — matches, greedy max-start across variants, the
@@ -2997,14 +2952,13 @@ def test_cep_opt_midneg_gap_state_fuzz(streams, types, gap_s, neg_s,
         pat._event_expansion(list(pat.steps)),
     ]
     incl = [frozenset(), frozenset({"with_b"})]
+    scan = sf.gap_scan(sf.Carry(chains, None, incl=incl,
+                                flag_names=["with_b"], gate=False),
+                       gap_s * 1_000_000)
     if with_neg:
-        fn = sf.cep_keyed_fn(
-            sf.gap_enum_scan(chains, None, gap_s * 1_000_000, incl,
-                             ["with_b"]),
-            hold=("B", neg_s * 1_000_000))
+        fn = sf.cep_keyed_fn(scan, hold=("B", neg_s * 1_000_000))
     else:
-        fn = sf.cep_keyed_fn(sf.gap_enum_scan(
-            chains, None, gap_s * 1_000_000, incl, ["with_b"]))
+        fn = sf.cep_keyed_fn(scan)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -3127,7 +3081,7 @@ def test_cep_or_split_neg_fuzz(streams, types, cap, within_s, neg_s):
 def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
                                      neg_s, cut):
     """The OR-split × terminal negation STREAMS (r15):
-    or_split_scan (paired variant machines) + the watermark hold
+    carry_scan (paired variant chains) + the watermark hold
     driven through a fake timer GroupState with a random micro-batch
     split must emit exactly the batch rows — lexicographic winner,
     pools, kills across the boundary, and the timer-path flush."""
@@ -3162,9 +3116,9 @@ def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
           pat.steps[2]]
     hi = [pat.steps[0], dc_replace(sp, times=2), pat.steps[2]]
     fn = sf.cep_keyed_fn(
-        sf.or_split_scan([(None, pat._event_expansion(lo)),
-                          (None, pat._event_expansion(hi))],
-                         within_s * 1_000_000, [("b", b_t, cap)]),
+        sf.carry_scan(sf.Carry(
+            [pat._event_expansion(lo), pat._event_expansion(hi)],
+            within_s * 1_000_000, [("b", b_t, cap, None)], gate=False)),
         hold=(y_t, neg_s * 1_000_000),
     )
     got = set()
@@ -3302,7 +3256,7 @@ def test_cep_enum_neg_fuzz(streams, types, within_s, neg_s):
 )
 def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
     """Strict-optional enum × terminal negation STREAMS (r15):
-    compiled_scan's enum mode (2^k variant chains) + the hold, driven
+    carry_scan's any-chain mode (2^k variant chains) + the hold, driven
     through a fake timer GroupState with a random micro-batch split
     must emit exactly the batch rows — OR-gated matches, greedy
     max-start across variants, flags riding the hold, kills and the
@@ -3334,14 +3288,13 @@ def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
     }
 
     chains = [
-        (None, pat._event_expansion(
-            [s for s in pat.steps if not s.optional])),
-        (None, pat._event_expansion(list(pat.steps))),
+        pat._event_expansion([s for s in pat.steps if not s.optional]),
+        pat._event_expansion(list(pat.steps)),
     ]
     masks = [frozenset(), frozenset({"with_b"})]
     fn = sf.cep_keyed_fn(
-        sf.compiled_scan(chains, within_s * 1_000_000,
-                         enum=(masks, ["with_b"])),
+        sf.carry_scan(sf.Carry(chains, within_s * 1_000_000, incl=masks,
+                               flag_names=["with_b"], gate=False)),
         hold=(y_t, neg_s * 1_000_000),
     )
     got = set()
@@ -3530,7 +3483,7 @@ def test_cep_until_fuzz(streams, types, quant, cap, within_s,
 )
 def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
                               with_neg, neg_s, cut):
-    """until() STREAMS (r15): until_scan (paired carries + per-level
+    """until() STREAMS (r15): carry_scan (paired carries + per-level
     freeze riders, stop events freezing BEFORE the row's hits) driven
     through a fake (timer) GroupState with a random micro-batch split
     must emit exactly the batch rows — matches, greedy starts, and the
@@ -3566,11 +3519,7 @@ def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
         ).collect()
     }
 
-    fn = sf.cep_keyed_fn(
-        sf.until_scan(pat._event_expansion(pat.steps),
-                      within_s * 1_000_000, [("b", b_t, cap, u_t)]),
-        hold=("A", neg_s * 1_000_000) if with_neg else None,
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -3623,7 +3572,7 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
                                  with_neg, neg_s, cut):
     """notNext × until() (r16 — the last refused pair with a known
     construction): batch compile vs the nn-gated _until_brute, AND
-    the streaming machine (until_scan with nn_ets — one-row
+    the streaming machine (carry_scan with nn_ets — one-row
     delayed absorption riding the freeze riders, resolution BEFORE
     the stop freeze) driven through a fake timer GroupState with a
     random micro-batch split. All roles collide; with_neg stacks the
@@ -3659,18 +3608,7 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
     assert got == want
 
     # streaming machine vs the batch rows
-    cnt_steps = [s for s in pat.steps
-                 if s.one_or_more or s.up_to is not None]
-    steps_u = pat._event_expansion(pat.steps)
-    _sx, nn_ets = pat._not_next_expansion()
-    fn = sf.cep_keyed_fn(
-        sf.until_scan(
-            steps_u, within_s * 1_000_000, [("b", b_t, cap, u_t)],
-            entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
-            nn_ets=nn_ets,
-        ),
-        hold=("A", neg_s * 1_000_000) if with_neg else None,
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got_s = {}
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -3975,7 +3913,7 @@ def test_cep_until_optional_state_fuzz(streams, types, opt_pos,
                                        within_s, with_neg, neg_s,
                                        cut):
     """until() × optional STREAMS (r16): the 2^k full-variant
-    enumeration through until_split_scan with incl_flags — match
+    enumeration through carry_scan with incl flags — match
     set, greedy starts, clamped pools AND with_o flags must equal the
     batch compile across a random micro-batch split; with_neg adds
     the watermark hold (flags ride the pending arrays)."""
@@ -4021,9 +3959,9 @@ def test_cep_until_optional_state_fuzz(streams, types, opt_pos,
         incl.append(frozenset(
             f"with_{s.name}" for i, s in opts if i in inc))
     fn = sf.cep_keyed_fn(
-        sf.until_split_scan(variant_steps, within_s * 1_000_000,
-                            [("b", b_t, None, u_t)], incl, ["with_o"],
-                            entry),
+        sf.carry_scan(sf.Carry(
+            variant_steps, within_s * 1_000_000, [("b", b_t, None, u_t)],
+            incl=incl, flag_names=["with_o"], gate=False, entry=entry)),
         hold=("A", neg_s * 1_000_000) if with_neg else None,
     )
     got = set()
@@ -4078,7 +4016,7 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
                                        within_s, with_neg, neg_s,
                                        cut):
     """until() × both-strict OR-split STREAMS (r16):
-    until_split_scan (per-variant freeze-rider chains, shared
+    carry_scan (per-variant freeze-rider chains, shared
     counts, cross-variant (h, c.., u-as-inf..) winner) driven through
     a fake (timer) GroupState with a random micro-batch split must
     emit exactly the batch rows; with_neg adds the terminal-negation
@@ -4135,9 +4073,10 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
                 var.append(s)
         variant_steps.append(pat._event_expansion(var))
     fn = sf.cep_keyed_fn(
-        sf.until_split_scan(variant_steps, within_s * 1_000_000,
-                            [("b", b_t, None, u_t),
-                             ("c", c_t, cap_c, None)]),
+        sf.carry_scan(sf.Carry(
+            variant_steps, within_s * 1_000_000,
+            [("b", b_t, None, u_t), ("c", c_t, cap_c, None)],
+            gate=False)),
         hold=("A", neg_s * 1_000_000) if with_neg else None,
     )
     got = set()
@@ -4285,7 +4224,7 @@ def test_cep_not_next_fuzz(streams, types, shape, within_s, with_neg,
 def test_cep_not_next_state_fuzz(streams, types, shape, within_s,
                                  with_neg, neg_s, cut):
     """notNext STREAMS (r15): the one-row delayed-absorption machine
-    (not_next_scan) driven through a fake GroupState with a random
+    (carry_scan) driven through a fake GroupState with a random
     micro-batch split must emit exactly the batch rows — including a
     gated bind whose verdict event sits on the OTHER side of the
     boundary (the pending slot persists in keyed state). 'strict'
@@ -4323,12 +4262,7 @@ def test_cep_not_next_state_fuzz(streams, types, shape, within_s,
         ).collect()
     }
 
-    steps_x, nn_ets = pat._not_next_expansion()
-    counted = ([("b", b_t, None)] if shape == "counted" else [])
-    fn = sf.cep_keyed_fn(
-        sf.not_next_scan(steps_x, within_s * 1_000_000, counted, nn_ets),
-        hold=("B", neg_s * 1_000_000) if with_neg else None,
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4567,7 +4501,7 @@ def test_cep_not_next_gap_fuzz(streams, types, strict_mask, nn_on,
 )
 def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
                                       within_s, cut):
-    """notNext × skip STREAMS (r16): skip_scan's one-row pending
+    """notNext × skip STREAMS (r16): carry_scan's one-row pending
     slots driven through a fake GroupState with a random micro-batch
     split must emit exactly the batch rows — including a parked bind
     whose verdict event sits on the OTHER side of the boundary (the
@@ -4602,12 +4536,7 @@ def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
         ).collect()
     }
 
-    steps_x, nn_ets = pat._not_next_expansion()
-    fn = sf.cep_keyed_fn(
-        sf.skip_scan(steps_x, within_s * 1_000_000,
-                     pat._skip_anchor_idx(), nn_ets),
-        skip=strategy,
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4648,7 +4577,7 @@ def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
 )
 def test_cep_not_next_gap_state_fuzz(streams, types, strict_mask,
                                      nn_on, with_midneg, gap_s, cut):
-    """notNext × gap bound STREAMS (r16): _gap_hits' delayed
+    """notNext × gap bound STREAMS (r16): gap_scan's delayed
     absorption (pending slots joining the horizon-pruned buffers one
     row late, with the inclusive q recorded at park time) driven
     through a fake GroupState must emit exactly the batch rows across
@@ -4687,9 +4616,7 @@ def test_cep_not_next_gap_state_fuzz(streams, types, strict_mask,
         ).collect()
     }
 
-    steps_x, nn_ets = pat._not_next_expansion()
-    fn = sf.cep_keyed_fn(sf.gap_scan(steps_x, None, gap_s * 1_000_000,
-                                     nn_ets))
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4731,7 +4658,7 @@ def test_cep_not_next_gap_state_fuzz(streams, types, strict_mask,
 )
 def test_cep_not_next_gap_skip_state_fuzz(streams, types, strategy,
                                           nn_on, gap_s, cut):
-    """The notNext × gap × skip TRIPLE streams (r16): _gap_skip_hits'
+    """The notNext × gap × skip TRIPLE streams (r16): gap_scan's
     position-struct pendings + the causal cursor driven through a
     fake GroupState must equal the batch compile across a random
     micro-batch split."""
@@ -4765,12 +4692,7 @@ def test_cep_not_next_gap_skip_state_fuzz(streams, types, strategy,
         ).collect()
     }
 
-    steps_x, nn_ets = pat._not_next_expansion()
-    fn = sf.cep_keyed_fn(
-        sf.gap_skip_scan(steps_x, None, gap_s * 1_000_000,
-                         pat._skip_anchor_idx(), nn_ets),
-        skip=strategy,
-    )
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4848,20 +4770,7 @@ def test_cep_not_next_neg_composites_state_fuzz(streams, types, mode,
         ).collect()
     }
 
-    steps_x, nn_ets = pat._not_next_expansion()
-    hold = (x_t, neg_s * 1_000_000)
-    if mode == "skip":
-        fn = sf.cep_keyed_fn(sf.skip_scan(steps_x, None, None, nn_ets),
-                             hold=hold, skip=strategy)
-    elif mode == "gap":
-        fn = sf.cep_keyed_fn(
-            sf.gap_scan(steps_x, None, gap_s * 1_000_000, nn_ets),
-            hold=hold)
-    else:
-        fn = sf.cep_keyed_fn(
-            sf.gap_skip_scan(steps_x, None, gap_s * 1_000_000, None,
-                             nn_ets),
-            hold=hold, skip=strategy)
+    fn = sf.cep_keyed_fn(*pat._keyed_stages(pat._chain_set()))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:

@@ -31,13 +31,20 @@ not this tool.
     after the warm-up both sides read their memoized checkpoint and the
     noop write times nothing.
 
-  python tools/perf.py plan [--sf DIR] [--out FILE] [--dump DIR] [key ...]
+  python tools/perf.py plan [--sf DIR] [--out FILE] [--dump DIR]
+                           [--explain FILE] [key ...]
 
     Counts over each key's ``explain("formatted")``: exchanges, scans,
     sorts, windows, generates, Python nodes, join kinds, cartesian and
     single-partition exchanges, windows without partition keys. One JSON
     line per key on stdout (also appended to ``--out``); ``--dump DIR``
-    also writes each plan to ``DIR/<key>.txt``.
+    also writes each plan to ``DIR/<key>.txt``. ``--explain FILE``
+    writes the plans as one markdown file, each cut to its first
+    EXPLAIN_LINES lines; with no keys it covers the HEADLINE keys, not
+    the whole registry. ``EXPLAIN.md`` is generated this way, on the
+    default corpus:
+
+      python tools/perf.py plan --explain EXPLAIN.md
 
 ``--sf`` defaults to $SPARK_GRAFT_SF_DIR, else the sf0.01 corpus the
 board runs on.
@@ -63,6 +70,124 @@ from sparkflow.plans.explain import formatted_plan  # noqa: E402
 from tools.reseed import SRC as _BOARD_SF  # noqa: E402
 
 OLD_ROOT = "/tmp/sparkflow_ab_old"
+
+# the keys whose plans EXPLAIN.md shows (plan --explain with no keys)
+HEADLINE = [
+    "agg_hash_group",
+    "agg_distinct",
+    "fn_json",
+    "limit_topk",
+    "join_multiway_star",
+    "win_topk_per_group",
+    "win_rank_dense_ntile",
+    "join_asof",
+    "llm_dedup_near",
+    "llm_knn_cosine",
+    "stream_cep_negation",
+    "join_range_binned",
+    "llm_decontaminate",
+    "sql_merge_upsert",
+    "llm_semdedup",
+    "events_anomaly_zscore",
+    "join_bloom_filter",
+    "join_partition_pruned",
+    "sort_zorder_layout",
+    "graph_triangle_count",
+    "llm_embedding_pca",
+    "llm_hard_negatives",
+    "sql_correlated_exists",
+    "sql_exists_chain",
+    "join_asof_nearest",
+    "llm_curriculum_stages",
+    "maintenance_incremental_rollup",
+    "graph_label_propagation",
+    "llm_winnowing_overlap",
+    "llm_winnowing_overlap_aligned",
+    "win_ewma_segmented",
+    "win_rolling_median_segmented",
+    "llm_dedup_containment",
+    "join_multiway_star_bucketed",
+    "join_multiway_star_denorm",
+    "maintenance_json_materialize",
+    "llm_bpe_train",
+    # r9: the avro round-trip source
+    "scan_avro",
+    "llm_dedup_near_prefix",
+    "maintenance_table_versions",
+    "scan_avro_splittable",
+    "scan_time_travel_pruned",
+    "maintenance_vacuum",
+    # r9 continuation: protobuf source, CDC apply + schema evolution on
+    # the versioned table, and the quantile member of the sketch family
+    "scan_protobuf",
+    "maintenance_table_cdc_apply",
+    "maintenance_table_add_column",
+    "agg_quantile_sketch",
+    "llm_dedup_exact_substr",
+    "scan_zorder_pruned",
+    # r11: the CEP combinator keys (one sort + Window chain, join-free)
+    # and the IVM rollup passes behind the engine-floor repoints
+    "stream_cep_compile",
+    "stream_cep_optional",
+    "maintenance_rollup_pricing",
+    "maintenance_rollup_distinct",
+    "maintenance_rollup_tumbling",
+    # r12: mid-pattern negation + oneOrMore counts (still one sort +
+    # Window chain), the flagship's join-aggregate IVM view, and the
+    # exercised ingest-delta merges (delta-only scans, plan-pinned)
+    "stream_cep_midneg",
+    "stream_cep_one_or_more",
+    "stream_cep_times_range",
+    "stream_cep_midneg_multi",
+    "stream_cep_skip_past",
+    # r13: strict-contiguity optional — 2^k variant chains, still one
+    # exchange (the enumeration adds window columns, not shuffles) —
+    # and the completed AfterMatchSkipStrategy surface (same single
+    # exchange + match-frame fold as skip_past)
+    "stream_cep_next_optional",
+    "stream_cep_skip_to_next",
+    "stream_cep_skip_to_first",
+    "stream_cep_one_or_more_next",
+    "stream_cep_within_gap",
+    "stream_cep_both_strict_times",
+    "stream_cep_both_strict_one_or_more",
+    "stream_cep_skip_gap",
+    "stream_cep_midneg_gap",
+    "stream_cep_midneg_gap_skip",
+    "stream_cep_midneg_gap_neg",
+    "stream_cep_opt_midneg_gap",
+    "stream_cep_or_split_neg",
+    "stream_cep_next_optional_neg",
+    "stream_cep_until",
+    "stream_cep_until_split",
+    "stream_cep_until_optional",
+    "stream_cep_not_next",
+    "stream_cep_not_next_skip",
+    "stream_cep_not_next_gap",
+    "stream_cep_followed_by_any",
+    "maintenance_knn_quantize",
+    "maintenance_knn_ingest",
+    "maintenance_rollup_q3",
+    "maintenance_rollup_ingest_q3",
+    "maintenance_rollup_q5",
+    "maintenance_rollup_ingest_pricing",
+    "maintenance_rollup_ingest_distinct",
+    "maintenance_rollup_ingest_tumbling",
+    "maintenance_rollup_ingest_q5",
+]
+
+# deep iterative plans (PCA, triangle count) print thousands of lines;
+# the operator tree at the top carries the evidence
+EXPLAIN_LINES = 150
+EXPLAIN_HEADER = (
+    "# EXPLAIN — formatted physical plans ({sf}, AQE initial plans)\n\n"
+    "Generated by `python tools/perf.py plan --explain EXPLAIN.md`.\n"
+    "What to look for: `PushedFilters` (predicate "
+    "pushdown), `ReadSchema` (column\npruning), `BroadcastHashJoin` vs "
+    "`SortMergeJoin` (dim joins must\nbroadcast), "
+    "`TakeOrderedAndProject` (top-k), `HashAggregate`\npairs "
+    "(partial+final).\n"
+)
 
 
 def noop(df) -> None:
@@ -129,11 +254,14 @@ def plan_counts(p: str) -> dict:
     )
 
 
-def plan(spark, sf: str, keys: list, dump: "str | None" = None):
+def plan(spark, sf: str, keys: list, dump: "str | None" = None,
+         explain: "str | None" = None):
     """Yield one plan-count record per key; with ``dump`` also write
-    each key's formatted plan to ``dump/<key>.txt``."""
+    each key's formatted plan to ``dump/<key>.txt``, with ``explain``
+    all of them, truncated, to one markdown file."""
     if dump:
         os.makedirs(dump, exist_ok=True)
+    sections = [EXPLAIN_HEADER.format(sf=os.path.basename(sf))]
     for name in keys:
         rec: dict = {"key": name}
         try:
@@ -144,7 +272,17 @@ def plan(spark, sf: str, keys: list, dump: "str | None" = None):
                     fh.write(f"# {name} @ {sf}\n{p}")
         except Exception as e:
             rec["error"] = f"{type(e).__name__}: {e}"[:200]
+            p = f"error: {rec['error']}"
+        lines = p.strip().splitlines()
+        if len(lines) > EXPLAIN_LINES:
+            lines = lines[:EXPLAIN_LINES] + [
+                f"... [{len(lines) - EXPLAIN_LINES} more lines truncated]"]
+        sections.append(f"\n## {name}\n\n```\n" + "\n".join(lines)
+                        + "\n```\n")
         yield rec
+    if explain:
+        with open(explain, "w") as fh:
+            fh.write("".join(sections))
 
 
 def materialize_old() -> None:
@@ -218,6 +356,8 @@ def main() -> None:
     p = modes.add_parser("plan", parents=[common])
     p.add_argument("--out", default=None, help="also append JSONL here")
     p.add_argument("--dump", default=None, help="write DIR/<key>.txt plans")
+    p.add_argument("--explain", default=None,
+                   help="write the truncated plans as markdown to FILE")
     p.add_argument("keys", nargs="*")
     args = ap.parse_args()
 
@@ -226,11 +366,12 @@ def main() -> None:
         sys.path.insert(0, OLD_ROOT)
     from sparkflow.session import get_spark
 
-    keys = args.keys or sorted(sparkflow.QUERIES)
+    keys = args.keys or (HEADLINE if getattr(args, "explain", None)
+                         else sorted(sparkflow.QUERIES))
     spark = get_spark(f"perf-{args.mode}")
     spark.sparkContext.setLogLevel("ERROR")
     if args.mode == "plan":
-        _emit(plan(spark, args.sf, keys, args.dump), args.out)
+        _emit(plan(spark, args.sf, keys, args.dump, args.explain), args.out)
         spark.stop()
         return
     noop(spark.range(10))  # the session floor, so key #1 skips JVM start
