@@ -9,9 +9,13 @@ is identical, which is why nothing above this module cares.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from .sources.staging import corpus_digest
 
 TABLES = (
     "region",
@@ -32,17 +36,30 @@ TABLES = (
 ALWAYS_BROADCAST = ("region", "nation")
 
 
-# (session, sf_dir, table) -> DataFrame. A DataFrame is an immutable
-# lazy plan, so reuse across queries is safe; caching skips the file
-# listing + parquet footer read spark.read.parquet repeats per call
-# (~0.1 s/table of py4j+IO at local scale, and the testdata is
-# read-only so the resolved schema can never go stale). The stored
-# weakref guards against id() reuse: if the original session was
-# garbage-collected and a new one landed at the same address, the
-# stale entry is discarded instead of handing out a dead plan.
-_CACHE: dict[tuple[int, str, str], tuple["weakref.ref", DataFrame]] = {}
+# (session id, sf_dir, name) -> (weakref(session), corpus digest, value)
+_MEMO: dict = {}
 
-import weakref  # noqa: E402
+
+def session_memo(spark: SparkSession, sf_dir: str, tables, name: str, build):
+    """build(), reused while this session lives and the data files of
+    `tables` under `sf_dir` are unchanged (staging.corpus_digest: one
+    os.stat per file). A corpus rewritten in place misses and rebuilds,
+    so a memoized value never outlives the content it was built from;
+    the weakref evicts the entry with its session and guards against
+    id() reuse. A corpus that cannot be digested (no local data files)
+    is not memoized: build() runs and raises or answers as it would."""
+    key = (id(spark), sf_dir.rstrip("/"), name)
+    try:
+        digest = corpus_digest(sf_dir, tables)
+    except OSError:
+        return build()
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0]() is spark and hit[1] == digest:
+        return hit[2]
+    value = build()
+    _MEMO[key] = (weakref.ref(spark, lambda _, k=key: _MEMO.pop(k, None)),
+                  digest, value)
+    return value
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,13 +80,26 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # cluster operator's — is NOT 200 and is left untouched.
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
         spark.conf.set("spark.sql.shuffle.partitions", "32")
-    key = (id(spark), sf_dir.rstrip("/"), name)
-    hit = _CACHE.get(key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    df = _load(spark, sf_dir, name)
-    _CACHE[key] = (weakref.ref(spark), df)
-    return df
+    # the loaded frame skips the file listing and footer read each
+    # spark.read.parquet repeats (~0.1 s/table of py4j + IO locally)
+    return session_memo(spark, sf_dir, (name,), name,
+                        lambda: _load(spark, sf_dir, name))
+
+
+def round_robin(df: DataFrame) -> DataFrame:
+    """df round-robin repartitioned to defaultParallelism, ahead of a
+    row-amplifying stage (a per-row explode of ~n_chars shingles or
+    ~n_tokens tokens, or a Python-worker map). A compact parquet scan,
+    or a union of a few filtered selects of one, reads as 1-3 input
+    splits, so byte-based partitioning understates such a stage's work
+    by orders of magnitude and runs it on as many cores (the LSH
+    signature stage at the 10x scale point: 235 s on one core, ~13 s
+    after the spread). The shuffle moves the small pre-explode rows
+    once, and it is the single exchange later branches hang off, so
+    AQE's exchange reuse scans once per query. Row placement cannot
+    change a result: every caller follows it only with key-grouped
+    aggregates, equi-joins, per-key windows or per-row maps."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:

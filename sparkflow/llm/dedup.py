@@ -19,12 +19,10 @@ Scale design:
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import round_robin, table
 from ..registry import register
 
 # deterministic duplicate synthesis: every 7th doc gets an exact copy,
@@ -287,21 +285,9 @@ def _near_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     at runtime AQE exchange reuse collapses the identical subtrees; at
     100 TB the corpus would arrive pre-partitioned and the signature
     table would be staged to a real table, not executor memory."""
-    # EXPLODE AMPLIFICATION: every corpus row fans out to ~n_chars
-    # shingle rows (and ~n_tokens token rows) downstream, so the scan's
-    # byte-based partitioning understates the real work by ~300x — a
-    # compact parquet reads as 1-3 input splits and the whole
-    # signature stage runs on as many cores (measured at the 10x scale
-    # point: 235 s single-threaded vs ~13 s after this repartition).
-    # One explicit round-robin shuffle of the (small, pre-explode)
-    # corpus fixes the parallelism; it is also the SINGLE exchange all
-    # six lineage branches (band-join sides, toks, sizes) hang off, so
-    # AQE's exchange reuse computes the scan+union once per query
-    # instead of once per branch. Row placement cannot affect results:
-    # every downstream op is a key-grouped agg or equi-join.
-    corpus = dup_corpus(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # the six lineage branches below (band-join sides, toks, sizes)
+    # hang off this one exchange
+    corpus = round_robin(dup_corpus(spark, sf_dir))
 
     # Signatures: explode shingles once, compute the two salted digests
     # per shingle row and slice all K lanes out as plain WIDE int64
@@ -428,23 +414,6 @@ def _near_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (session, sf_dir) -> materialized near-dup pairs. llm_dedup_near and
-# llm_dedup_clusters share one localCheckpoint of the LSH pipeline output
-# (tiny: one row per verified pair), so a harness that runs both pays for
-# the shingle/minhash work ONCE. Weakref-guarded like catalog._CACHE.
-_PAIRS_CACHE: dict[tuple[int, str], tuple["weakref.ref", DataFrame]] = {}
-
-
-def _near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir.rstrip("/"))
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    pairs = _near_pairs_plan(spark, sf_dir).localCheckpoint()
-    _PAIRS_CACHE[key] = (weakref.ref(spark), pairs)
-    return pairs
-
-
 @register(
     "llm_dedup_near",
     oracle=f"""
@@ -458,7 +427,7 @@ def llm_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     twelve 20-bit lanes sliced from their hex, integer min) is
     reimplemented verbatim in the oracle, so the check is end-to-end
     deterministic (SURVEY §7 hard item 2)."""
-    return _near_pairs(spark, sf_dir)
+    return _near_pairs_plan(spark, sf_dir)
 
 
 # Prefix-filtering threshold: char-shingle Jaccard, the similarity the
@@ -561,9 +530,7 @@ def llm_dedup_near_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     all three filters — an unsound bound hash-mismatches instead of
     mirroring itself green (unlike the LSH op, whose candidate set is
     parameter-defined and must be replayed)."""
-    corpus = dup_corpus(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    corpus = round_robin(dup_corpus(spark, sf_dir))
     sh = (
         char_kgrams(corpus, _SHINGLE)
         .select("doc_id", F.col("g").alias("s"))
@@ -750,14 +717,7 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ in O(1) bits — Hamming-ball lookup replaces pairwise
     comparison at scale. SQL-oracle-exact because the bit derivation is
     md5-based in both engines."""
-    # r17: round-robin the compact doc rows before the ~n_tokens×
-    # explode (same §2.5 rationale as _near_pairs_plan/_fpset — the
-    # sub-MB scan union yields ≤3 input splits, so the whole
-    # explode+md5+vote map stage otherwise runs on ≤3 cores). Vote
-    # sums per doc are integers — placement-invariant.
-    corpus = dup_corpus(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    corpus = round_robin(dup_corpus(spark, sf_dir))
     toks = corpus.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     )
@@ -875,11 +835,11 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cc_doubling_oracle — so even the iterative op is SQL-oracle-exact
     at every sf (the earlier recursive-CTE transitive closure was
     quadratic per component and died at sf0.1)."""
-    # _near_pairs is the session-memoized localCheckpoint of the LSH
-    # pipeline — shared with llm_dedup_near, so a harness running both
-    # executes the shingle/minhash work once, and every propagation
-    # round (and its convergence count) starts from the tiny pair set.
-    pairs = _near_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    # One localCheckpoint of the LSH pair set per call, taken at the
+    # caller's shuffle parallelism before the scope below narrows it:
+    # the edge union and every propagation round (and its convergence
+    # count) start from the tiny pair set, not the shingle pipeline.
+    pairs = _near_pairs_plan(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
     # The verified-pair graph is orders of magnitude smaller than the
     # corpus (only confirmed near-dups), so the per-round joins shuffle
     # tiny data: scope the shuffle parallelism down for the eager loop
@@ -980,12 +940,12 @@ def llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs (task brief: the n-gram-Jaccard dedup flavor). Re-scores each
     LSH-proposed, token-verified pair with a stricter order-sensitive
     set: trigram overlap collapses for shuffled/boilerplate text where
-    unigram Jaccard stays high, so pipelines threshold on BOTH. Reuses
-    the session-memoized pair set (the LSH pipeline runs once across
-    llm_dedup_near / _clusters / _ngram); trigram sets are built from
-    three aligned array slices zipped together (r16) — no per-element
-    lambdas and no per-doc window sort."""
-    pairs = _near_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    unigram Jaccard stays high, so pipelines threshold on BOTH. The
+    pair set is llm_dedup_near's lazy plan, run as part of this one;
+    trigram sets are built from three aligned array slices zipped
+    together (r16) — no per-element lambdas and no per-doc window
+    sort."""
+    pairs = _near_pairs_plan(spark, sf_dir).select("doc_a", "doc_b")
     # (r17: a pre-explode round-robin like _fpset's was tried here and
     # REJECTED by the interleaved A/B at 1.19× — the zip+xxhash64
     # trigram pass is too cheap per row to pay for the extra exchange;
@@ -1250,16 +1210,13 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesized first-half excerpt, plus the corpus's organic
     subset-relationships. Ties on set size keep the lower doc_id as
     inner, so (inner, outer) is deterministic."""
-    corpus = contain_corpus(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    corpus = round_robin(contain_corpus(spark, sf_dir))
     return _containment_pairs(corpus)
 
 
 def _containment_pairs(corpus: DataFrame) -> DataFrame:
     """Core of llm_dedup_containment over any (doc_id, text) frame."""
-    # distinct char-8-gram-ID set per doc (same explode-amplification
-    # repartition rationale as _near_pairs_plan). r17: the gram never
+    # distinct char-8-gram-ID set per doc. r17: the gram never
     # becomes a string — char_kgram_ids hashes the 8 zipped slice
     # columns straight to a LONG (r16 had rejected the zipped-slice
     # shape here at 1.10× because of the 8-wide concat_ws re-assembly;

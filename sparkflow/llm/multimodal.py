@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import round_robin, table
 from ..registry import register
 
 _FEATURE_SCHEMA = (
@@ -247,15 +247,7 @@ def llm_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks EXACT. At 100 TB this is the image-preprocessing shape:
     binary payloads columnar through Arrow, vectorized decode in
     Python workers, fixed-size typed output, no driver materialization."""
-    # r17 (guide §2.5): the sub-MB documents scan is ONE input split,
-    # so both Python stages — the PNG encode and the decode+resize —
-    # otherwise run on a single core. Round-robin the compact rows
-    # first; the per-doc outputs are placement-invariant.
-    d = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    d = round_robin(table(spark, sf_dir, "documents").select("doc_id", "text"))
     pngs = d.mapInPandas(_to_png, schema="doc_id BIGINT, payload BINARY")
     return pngs.mapInPandas(
         _resize_png,

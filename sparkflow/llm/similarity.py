@@ -29,7 +29,7 @@ from pyspark.sql.functions import pandas_udf
 
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
-from ..catalog import table
+from ..catalog import session_memo, table
 from ..registry import register
 
 # The deterministic KNN query point is the embedding of the SMALLEST
@@ -49,37 +49,26 @@ _SQL_QUERY_VEC_ID = "(SELECT MIN(vec_id) FROM embeddings)"
 # the cap mine negatives for the first 4096 query ids — beyond that,
 # shard the query matrix and union (see docstring).
 _HN_MAX_QUERIES = 4096
-# (session id, sf_dir) -> (weakref(session), (query vec_id, quantized
-# query vector)) for llm_knn_cosine / llm_knn_ivf: one 64-float head()
-# lookup, constant-sized, memoized so warm re-invocations (bench loop,
-# explain dumps) skip the extra job.
-_KNN_QUERY_CACHE: dict = {}
 _TOP_K = 10
 
 
 def _query_row(spark: SparkSession, sf_dir: str):
     """(qid, qi): the smallest vec_id and its fixed-point-quantized
     embedding — the shared deterministic KNN query point. One bounded
-    driver lookup (TakeOrdered 1 row), memoized per (session, sf_dir)."""
-    import weakref
+    driver lookup (TakeOrdered 1 row), memoized per session and
+    embeddings content so warm re-invocations skip the extra job."""
 
-    memo_key = (id(spark), sf_dir.rstrip("/"))
-    hit = _KNN_QUERY_CACHE.get(memo_key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    row = (
-        table(spark, sf_dir, "embeddings")
-        .orderBy("vec_id")
-        .select("vec_id", "embedding")
-        .head()
-    )
-    qi = np.floor(np.asarray(row[1], dtype=np.float64) * _FXP + 0.5).astype(np.int64)
-    out = (int(row[0]), qi)
-    _KNN_QUERY_CACHE[memo_key] = (
-        weakref.ref(spark, lambda _, k=memo_key: _KNN_QUERY_CACHE.pop(k, None)),
-        out,
-    )
-    return out
+    def lookup():
+        row = (
+            table(spark, sf_dir, "embeddings")
+            .orderBy("vec_id")
+            .select("vec_id", "embedding")
+            .head()
+        )
+        qi = np.floor(np.asarray(row[1], dtype=np.float64) * _FXP + 0.5)
+        return int(row[0]), qi.astype(np.int64)
+
+    return session_memo(spark, sf_dir, ("embeddings",), "knn_query", lookup)
 
 # Deterministic rational projection matrix for hyperplane LSH:
 # proj[t][b][d] = ((2654435761 * (t*S + b*64 + d)) % 2001 - 1000) / 1000
@@ -1135,37 +1124,18 @@ def _cells_from_assigned(assigned: DataFrame) -> DataFrame:
 
 _IVF_KMEANS_NPROBE = 3
 
-# (session id, sf_dir) -> (weakref(session), checkpointed assignment
-# DataFrame). One codebook training per (session, corpus): repeated
-# invocations (bench loops, recall sweeps) reuse the SAME checkpointed
-# assignment instead of stacking a fresh localCheckpoint's storage
-# blocks on the executors per call — the leak ADVICE r10 flagged. The
-# weakref callback drops the entry when the session is GC'd.
-_IVF_KMEANS_ASSIGN_CACHE: dict = {}
-
-
 def _ivf_kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The k-means assignment frame, trained once per (session, corpus)
-    and localCheckpoint'ed so the probe path's two references (cell
-    ranking, member rescoring) never re-run the Lloyd rounds. Memoized:
-    the checkpoint is a session-lifetime artifact (a codebook), not a
-    per-query allocation."""
-    import weakref
-
-    memo_key = (id(spark), sf_dir.rstrip("/"))
-    hit = _IVF_KMEANS_ASSIGN_CACHE.get(memo_key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    assigned, _ = _kmeans_state(spark, sf_dir, _KMEANS_ITERS)
-    assigned = assigned.localCheckpoint(eager=False)
-    _IVF_KMEANS_ASSIGN_CACHE[memo_key] = (
-        weakref.ref(
-            spark,
-            lambda _, k=memo_key: _IVF_KMEANS_ASSIGN_CACHE.pop(k, None),
-        ),
-        assigned,
+    """The k-means assignment frame, trained once per session and
+    embeddings content and localCheckpoint'ed so the probe path's two
+    references (cell ranking, member rescoring) never re-run the Lloyd
+    rounds. Memoized: the checkpoint is a session-lifetime artifact (a
+    codebook), not a per-query allocation, so repeated invocations do
+    not stack a fresh checkpoint's storage blocks on the executors."""
+    return session_memo(
+        spark, sf_dir, ("embeddings",), "ivf_kmeans_assign",
+        lambda: _kmeans_state(spark, sf_dir, _KMEANS_ITERS)[0]
+        .localCheckpoint(eager=False),
     )
-    return assigned
 
 
 @register(

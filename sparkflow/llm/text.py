@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import session_memo, table
 from ..registry import register
 
 
@@ -694,30 +694,15 @@ FROM toks JOIN enc USING (tok)
 GROUP BY doc_id""")
 
 
-# Learned merge lists memoized per (session, sf_dir) — the same pattern
-# as similarity._KNN_QUERY_CACHE: llm_bpe_encode (and repeated plan
-# builds / explain dumps of it) must not re-run the K-round trainer
-# job chain every time. Entries are tiny (K<=12 string pairs) and are
-# evicted when the owning session is GC'd.
-_BPE_MERGE_CACHE: dict = {}
-
-
 def _bpe_merges_for(spark: SparkSession, sf_dir: str) -> list:
-    import weakref
-
-    memo_key = (id(spark), sf_dir.rstrip("/"))
-    hit = _BPE_MERGE_CACHE.get(memo_key)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    merges = [
-        (r["left"], r["right"])
-        for r in llm_bpe_train(spark, sf_dir).collect()
-    ]
-    _BPE_MERGE_CACHE[memo_key] = (
-        weakref.ref(spark, lambda _, k=memo_key: _BPE_MERGE_CACHE.pop(k, None)),
-        merges,
+    """The learned merge list, memoized per session and documents
+    content: llm_bpe_encode (and repeated plan builds of it) must not
+    re-run the K-round trainer job chain every time."""
+    return session_memo(
+        spark, sf_dir, ("documents",), "bpe_merges",
+        lambda: [(r["left"], r["right"])
+                 for r in llm_bpe_train(spark, sf_dir).collect()],
     )
-    return merges
 
 
 def _bpe_merge_fold(syms, a: str, b: str):

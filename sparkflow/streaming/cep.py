@@ -1231,7 +1231,15 @@ class CepPattern:
         and the gating chain has at least 2 positive steps after
         times() expansion (a single step has no transition to carry).
         The keyed machines also refuse event times before 1970-01-01,
-        which collide with their -1 state sentinel."""
+        which collide with their -1 state sentinel; a terminal negation
+        also refuses one at exactly 1970-01-01 00:00:00.
+
+        Late rows under a terminal negation: Spark drops a row whose ts
+        is <= the watermark in force before it reaches the keyed
+        function, and counts it in numRowsDroppedByWatermark. A negated
+        event that late cannot kill a held candidate, so the stream
+        emits a match that the batch compile kills; the file replay's
+        0 s delay assumes in-order files."""
         from . import stateful
 
         cs = self._chain_set()

@@ -654,7 +654,18 @@ def cep_keyed_stream(
     ev = _events_stream(spark, files_dir, sf_dir)
     fields = list(machine.fields)
     if hold is not None:
-        ev = ev.withWatermark("ts", "0 seconds")
+        # Spark drops a row with ts <= the watermark in force as late,
+        # and the first micro-batch runs at watermark 0: refuse such a
+        # row here instead of losing it silently
+        ev = ev.withColumn("ts", F.when(
+            F.unix_micros("ts") <= 0,
+            F.raise_error(F.lit(
+                "CepPattern.compile_stream with a terminal negation "
+                "requires event times after 1970-01-01 00:00:00 (a row "
+                "at epoch µs <= 0 is late under the first micro-batch's "
+                "watermark 0 and would be dropped; the batch "
+                "CepPattern.compile has no such limit)")),
+        ).otherwise(F.col("ts"))).withWatermark("ts", "0 seconds")
         fields += [f"pend_{c} ARRAY<BIGINT>" for c in _pend_cols(machine)]
     return ev.groupBy("user_id").applyInPandasWithState(
         cep_keyed_fn(machine, hold, skip),

@@ -2812,7 +2812,8 @@ def test_compile_stream_rows_equal_compile(spark, sf_small,
 def test_stream_refuses_pre_1970_event_times(spark, sf_small, tmp_path):
     """The keyed machines encode "no hit yet" as -1 epoch µs, so an
     event before 1970-01-01 must fail the streaming query loudly (the
-    batch compile has no such limit)."""
+    batch compile has no such limit); under a terminal negation so must
+    an event at exactly 1970-01-01 00:00:00."""
     from pyspark.errors import StreamingQueryException
 
     from sparkflow.streaming import stateful
@@ -2829,3 +2830,18 @@ def test_stream_refuses_pre_1970_event_times(spark, sf_small, tmp_path):
     with pytest.raises(StreamingQueryException, match="1970"):
         stateful.run_to_memory(
             pat.compile_stream(spark, files, sf_small), "t_cep_pre1970")
+
+    # a terminal negation runs under a watermark whose first value, 0,
+    # makes a row at exactly epoch µs 0 late: refused, not dropped
+    epoch0 = str(tmp_path / "epoch0")
+    (spark.createDataFrame(
+        [(1, 1, "A", 0), (1, 2, "B", 10)],
+        "user_id BIGINT, event_id BIGINT, event_type STRING, sec INT")
+     .withColumn("ts", F.timestamp_seconds("sec")).drop("sec")
+     .coalesce(1).write.parquet(epoch0))
+    neg = (CepPattern.begin("a", etype="A").followed_by("b", etype="B")
+           .within(120).not_followed_by("x", etype="X", within=60))
+    assert neg.compile(spark.read.parquet(epoch0)).count() == 1
+    with pytest.raises(StreamingQueryException, match="1970"):
+        stateful.run_to_memory(
+            neg.compile_stream(spark, epoch0, sf_small), "t_cep_epoch0")

@@ -260,10 +260,10 @@ def test_dedup_clusters_reach_fixpoint(spark, sf_small):
     against silent non-convergence on deeper similarity chains)."""
     from pyspark.sql import functions as F
 
-    from sparkflow.llm.dedup import _near_pairs
+    from sparkflow.llm.dedup import _near_pairs_plan
 
     labels = sparkflow.QUERIES["llm_dedup_clusters"](spark, sf_small)
-    pairs = _near_pairs(spark, sf_small).select("doc_a", "doc_b")
+    pairs = _near_pairs_plan(spark, sf_small).select("doc_a", "doc_b")
     edges = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )

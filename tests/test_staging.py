@@ -79,6 +79,40 @@ def test_digest_change_invalidates(spark, private_corpus):
     assert staging.is_published(serve_path())
 
 
+def test_corpus_rewritten_in_place_gets_new_answer(spark, private_corpus, duck):
+    """Session memos (catalog.table's loaded frame, the KNN query row)
+    are keyed on the corpus content, not its path: events and
+    embeddings rewritten in place within one session answer as the
+    rewritten corpus does. Embeddings lose rows, the minimum vec_id
+    (the KNN query point) among them; events lose rows and the rest is
+    written three times in small row groups, so the file grows and a
+    frame holding the old file listing would silently skip its tail."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tools.check import compare
+
+    sf = private_corpus
+    keys = ("agg_distinct", "llm_knn_cosine")
+    before = {k: sparkflow.QUERIES[k](spark, sf).toPandas() for k in keys}
+    ev_path, emb_path = (os.path.join(sf, f"{t}.parquet")
+                         for t in ("events", "embeddings"))
+    ev = pq.read_table(ev_path)
+    kept = ev.filter(pc.not_equal(pc.bit_wise_and(ev["event_id"], 3), 0))
+    pq.write_table(pa.concat_tables([kept] * 3), ev_path, row_group_size=100)
+    emb = pq.read_table(emb_path)
+    keep = pc.equal(pc.bit_wise_and(emb["vec_id"], 1), 1)
+    pq.write_table(emb.filter(keep), emb_path)
+    assert pc.min(emb["vec_id"]).as_py() % 2 == 0  # the query row goes
+    con = duck(sf)
+    for k in keys:
+        got = sparkflow.QUERIES[k](spark, sf).toPandas()
+        want = con.execute(sparkflow.ORACLES[k]).fetchdf()
+        assert compare(got, want) == "EXACT", (k, compare(got, want))
+        assert compare(before[k], want) != "EXACT", k
+
+
 def test_concurrent_publish_loser_discards(tmp_path):
     """Two writers race the same artifact: both build private
     scratches, one rename wins, the loser's publish() is a no-op

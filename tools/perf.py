@@ -26,10 +26,7 @@ not this tool.
     pairs, interleaved. Each run builds a fresh DataFrame (fresh shuffle
     ids, so a full execution) after ``clearCache()``. Timings taken in
     different sessions drift too far to compare; only this interleave
-    counts. Keys behind the session memo ``dedup._PAIRS_CACHE``
-    (llm_dedup_near, llm_dedup_clusters) cannot be A/B'd this way:
-    after the warm-up both sides read their memoized checkpoint and the
-    noop write times nothing.
+    counts.
 
   python tools/perf.py plan [--sf DIR] [--out FILE] [--dump DIR]
                            [--explain FILE] [key ...]
