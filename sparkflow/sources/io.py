@@ -1350,13 +1350,7 @@ def _tv_latest_version(base: str) -> int:
     """Highest committed manifest version — the durable cursor a
     restarted streaming writer resumes from (a driver-side counter
     resets on restart; the manifest ledger does not)."""
-    import glob as _glob
-    import re as _re
-
-    return max(
-        int(_re.search(r"manifest_v(\d+)\.json$", m).group(1))
-        for m in _glob.glob(os.path.join(base, "manifest_v*.json"))
-    )
+    return _tv_versions(base)[-1]
 
 
 def _pq_footer_stats(path: str, keys: list) -> "tuple | None":

@@ -482,11 +482,11 @@ def stream_cep_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     EARLIEST following purchase per user; the negation holds iff it is
     absent or beyond the horizon. Linear per key with a single shuffle —
     the naive formulation (left anti range-join views×purchases) pays a
-    second shuffle and a per-row range probe. Streaming twin via a
-    watermarked left-outer interval join in streaming/stateful.py
-    (cep_negation_stream): Spark emits the unmatched left rows exactly
-    when the watermark passes view_ts + 1h — the timer FlinkCEP would
-    set for the `within` clause."""
+    second shuffle and a per-row range probe. Streaming twin: the same
+    pattern through `CepPattern.compile_stream`, whose terminal-negation
+    hold keeps each view in keyed state until the watermark passes
+    view_ts + 1h — the timer FlinkCEP would set for the `within`
+    clause — and emits it iff no purchase arrived in the interval."""
     ev = table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")

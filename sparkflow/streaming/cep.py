@@ -2,9 +2,10 @@
 `Pattern.begin(...).next(...).followedBy(...).notFollowedBy(...)
 .times(n).within(t)` surface compiled to the engine's carried-window
 algebra, so a user can point a NEW pattern at any keyed event frame
-without writing window algebra by hand (r10 verdict item 2: the one
-reference-side capability that was demonstrated by three hardcoded
-rungs — stream_cep_funnel / _negation / _times — but not productized).
+without writing window algebra by hand. The three hand rungs
+(stream_cep_funnel / _negation / _times) are each one declared
+pattern here: compile() equals each rung row for row, and the same
+pattern through compile_stream() is each rung's streaming twin.
 
 How the compiler works
 ----------------------
@@ -146,9 +147,10 @@ for terminal-negation patterns the earliest strictly-following negated
 event's timestamp (NULL if none), so callers can audit the negation
 decision. Streaming: the compiled plan is window algebra over event
 time, so its batch-analog semantics equal the NFA's on bounded
-event-time data (SURVEY §2.9 analog strategy); the three hand rungs'
-TRUE streaming twins in streaming/stateful.py remain the
-unbounded-execution evidence.
+event-time data (SURVEY §2.9 analog strategy); compile_stream() is
+the unbounded-execution evidence — the same patterns, the three hand
+rungs' among them, run on keyed state (streaming/stateful.py's one
+keyed adapter) and equal the batch compile row for row.
 """
 
 from __future__ import annotations
@@ -1229,7 +1231,10 @@ class CepPattern:
         Stream-only rules, on top of the front end's: every predicate
         is declared with etype= (keyed state evaluates it row by row),
         and the gating chain has at least 2 positive steps after
-        times() expansion (a single step has no transition to carry).
+        times() expansion (a single step has no transition to carry)
+        unless the pattern ends in a terminal negation: then the chain
+        emits each begin row and the hold decides it, so
+        begin(view).not_followed_by(purchase, within=1h) streams.
         The keyed machines also refuse event times before 1970-01-01,
         which collide with their -1 state sentinel; a terminal negation
         also refuses one at exactly 1970-01-01 00:00:00.
@@ -1244,11 +1249,12 @@ class CepPattern:
 
         cs = self._chain_set()
         self._require_etypes()
-        if sum(s.times for s in cs.chains[0]) < 2:
+        if sum(s.times for s in cs.chains[0]) < 2 and self.neg is None:
             raise ValueError(
                 "compile_stream needs at least 2 positive steps (times() "
                 "copies count) — a single-step pattern has no transition "
-                "for keyed state to carry; use compile()"
+                "for keyed state to carry unless a terminal "
+                "not_followed_by(within=) holds it; use compile()"
             )
         if cs.kind == "any_pairs":
             a, b = self.steps

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import bisect
 import importlib.util
+import json
 import os
 import shutil
 from typing import Any, Callable, Iterator, NamedTuple, Tuple
@@ -51,12 +52,29 @@ except ModuleNotFoundError:
 GAP_SECONDS = 1800  # 30-minute inactivity gap, same as the analogs
 
 
+def _write_replay_files(out_dir: str, slices: list) -> str:
+    """Write each slice (a DataFrame) as one parquet file of a replay
+    directory, `out_dir/stream`, in list order: stage the slice, copy
+    its part file to `NNN.parquet`, and give the files strictly
+    increasing mtimes — the file source replays in MODIFICATION-TIME
+    order, not name order."""
+    shutil.rmtree(out_dir, ignore_errors=True)
+    final = os.path.join(out_dir, "stream")
+    os.makedirs(final)
+    for i, df in enumerate(slices):
+        stage = os.path.join(out_dir, f"stage_{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+        dst = os.path.join(final, f"{i:03d}.parquet")
+        shutil.copy(os.path.join(stage, part), dst)
+        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
+    return final
+
+
 def split_events_to_files(spark: SparkSession, sf_dir: str, out_dir: str, n_files: int = 3) -> str:
     """Materialize events as n sequential parquet files (by event_id range,
     which equals arrival AND event-time order in this data) so the file
     stream source replays them as distinct micro-batches."""
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
     ev = table(spark, sf_dir, "events")
     # Slice by the ACTUAL id range, not an assumed 0-based dense one:
     # with 1-based (or offset) ids, count-derived bounds would silently
@@ -64,28 +82,11 @@ def split_events_to_files(spark: SparkSession, sf_dir: str, out_dir: str, n_file
     # equality tests would compare unequal populations.
     lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
     step = (hi - lo + n_files) // n_files
-    for i in range(n_files):
-        (
-            ev.filter(
-                (F.col("event_id") >= lo + i * step)
-                & (F.col("event_id") < lo + (i + 1) * step)
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"stage_{i}"))
-        )
-    # flatten: file source needs one directory of files, arriving in name order
-    final = os.path.join(out_dir, "stream")
-    os.makedirs(final)
-    for i in range(n_files):
-        stage = os.path.join(out_dir, f"stage_{i}")
-        part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
-        dst = os.path.join(final, f"{i:03d}.parquet")
-        shutil.copy(os.path.join(stage, part), dst)
-        # the file source replays in MODIFICATION-TIME order, not name
-        # order — give each file a strictly increasing mtime
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-    return final
+    return _write_replay_files(out_dir, [
+        ev.filter((F.col("event_id") >= lo + i * step)
+                  & (F.col("event_id") < lo + (i + 1) * step))
+        for i in range(n_files)
+    ])
 
 
 def _events_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFrame:
@@ -102,8 +103,11 @@ def _events_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFram
     return normalize_ts(df)
 
 
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append") -> None:
-    """Execute a streaming DataFrame to completion into a memory sink."""
+def run_to_memory(stream_df: DataFrame, name: str,
+                  output_mode: str = "append") -> list:
+    """Execute a streaming DataFrame to completion into a memory sink;
+    returns each micro-batch's progress dict (stateOperators
+    numRowsTotal, eventTime watermark, ...)."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -112,25 +116,7 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append") 
         .start()
     )
     q.awaitTermination()
-
-
-def run_to_memory_progress(stream_df: DataFrame, name: str,
-                           output_mode: str = "append") -> list:
-    """run_to_memory, returning each micro-batch's progress dict —
-    the state-store evidence (stateOperators numRowsTotal, watermark)
-    the r16 CEP state-bound pins assert against (r15 verdict item
-    6)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import json as _json
-
-    return [_json.loads(p.json) for p in q.recentProgress]
+    return [json.loads(p.json) for p in q.recentProgress]
 
 
 def _ts_us(series: pd.Series) -> pd.Series:
@@ -357,129 +343,6 @@ def sessionize_stream(
             " event_in_session BIGINT"
         ),
         stateStructType="last_us BIGINT, seq BIGINT, in_sess BIGINT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# CEP funnel — carried-state NFA (view → click → purchase within 24h)
-# ---------------------------------------------------------------------------
-
-
-def _funnel_fn(
-    key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """FlinkCEP begin('view').followedBy('click').followedBy('purchase')
-    .within(24h) as O(1) keyed state: (latest view ts, latest view ts
-    that a click has confirmed). A purchase matches iff the confirmed
-    view is within the horizon — identical to the batch analog's two
-    carried windows, incrementalized. max() updates make the state
-    monotone, so a late row can never regress it."""
-    last_view, best_view = state.get if state.exists else (-1, -1)
-    chunks = [p for p in pdf_iter if len(p)]
-    if not chunks:
-        return
-    pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-    out_id, out_ts, out_open = [], [], []
-    for eid, etype, t in zip(
-        pdf["event_id"].to_numpy(),
-        pdf["event_type"].to_numpy(),
-        _ts_us(pdf["ts"]).to_numpy(),
-    ):
-        t = int(t)
-        if etype == "view":
-            last_view = max(last_view, t)
-        elif etype == "click":
-            best_view = max(best_view, last_view)
-        elif etype == "purchase" and best_view >= 0:
-            if t - best_view <= 86400 * 1_000_000:
-                out_id.append(int(eid))
-                out_ts.append(t)
-                out_open.append(best_view)
-    state.update((last_view, best_view))
-    if out_id:
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_id),
-                "purchase_id": out_id,
-                "purchase_us": out_ts,
-                "funnel_open_us": out_open,
-            }
-        )
-
-
-def cep_funnel_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFrame:
-    """True-streaming twin of `stream_cep_funnel`."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _funnel_fn,
-        outputStructType=(
-            "user_id BIGINT, purchase_id BIGINT,"
-            " purchase_us BIGINT, funnel_open_us BIGINT"
-        ),
-        stateStructType="last_view BIGINT, best_view BIGINT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# CEP times(3) quantifier — bounded-buffer keyed state
-# ---------------------------------------------------------------------------
-
-
-def _times_fn(
-    key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """FlinkCEP times(3).within(24h) as keyed state: keep the last TWO
-    click timestamps per user (the bounded NFA buffer); each new click
-    matches iff the click two-back is within the window. State is O(n-1)
-    timestamps regardless of stream length."""
-    t1, t2 = state.get if state.exists else (-1, -1)  # two-back, one-back
-    chunks = [p for p in pdf_iter if len(p)]
-    if not chunks:
-        return
-    pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-    ids = pdf["event_id"].to_numpy()
-    out_id, out_start, out_end = [], [], []
-    for eid, t in zip(ids, _ts_us(pdf["ts"]).to_numpy()):
-        t = int(t)
-        if t2 >= 0 and t < t2:
-            # late arrival behind the buffered timestamps: appending it
-            # would corrupt the (two-back, one-back) order invariant —
-            # drop it, the watermarked-timer formulation's semantics
-            continue
-        if t1 >= 0 and t - t1 <= 86400 * 1_000_000:
-            out_id.append(int(eid))
-            out_start.append(t1)
-            out_end.append(t)
-        t1, t2 = t2, t
-    state.update((t1, t2))
-    if out_id:
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_id),
-                "streak_end_id": out_id,
-                "streak_start_us": out_start,
-                "streak_end_us": out_end,
-            }
-        )
-
-
-def cep_times_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFrame:
-    """True-streaming twin of `stream_cep_times`: the quantifier's
-    bounded buffer (last n-1 timestamps) as applyInPandasWithState."""
-    ev = _events_stream(spark, files_dir, sf_dir).filter(
-        F.col("event_type") == "click"
-    )
-    return ev.groupBy("user_id").applyInPandasWithState(
-        _times_fn,
-        outputStructType=(
-            "user_id BIGINT, streak_end_id BIGINT,"
-            " streak_start_us BIGINT, streak_end_us BIGINT"
-        ),
-        stateStructType="t1 BIGINT, t2 BIGINT",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -1389,24 +1252,10 @@ def split_events_out_of_order(
     """Replay variant for late-data tests: files are interleaved slices
     (event_id % n), so every micro-batch spans the full time range and
     each batch after the first delivers events far behind the watermark."""
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
     ev = table(spark, sf_dir, "events")
-    final = os.path.join(out_dir, "stream")
-    os.makedirs(final)
-    for i in range(n_files):
-        stage = os.path.join(out_dir, f"stage_{i}")
-        (
-            ev.filter(F.col("event_id") % n_files == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
-        dst = os.path.join(final, f"{i:03d}.parquet")
-        shutil.copy(os.path.join(stage, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-    return final
+    return _write_replay_files(out_dir, [
+        ev.filter(F.col("event_id") % n_files == i) for i in range(n_files)
+    ])
 
 
 def stream_static_join_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFrame:
@@ -1593,44 +1442,6 @@ def interval_left_join_stream(spark: SparkSession, files_dir: str, sf_dir: str) 
     )
     return clicks.join(purchases, cond, "leftOuter").select(
         "click_id", "user_id", "purchase_id"
-    )
-
-
-def cep_negation_stream(spark: SparkSession, files_dir: str, sf_dir: str) -> DataFrame:
-    """True-streaming twin of `stream_cep_negation` (FlinkCEP
-    notFollowedBy + within(1h)): a watermarked LEFT OUTER interval join
-    views⟕purchases; a view with no purchase in (view_ts, view_ts+1h]
-    is emitted null-extended exactly when the watermark passes the end
-    of its join window — the same moment FlinkCEP's `within` timer would
-    fire and declare the negation matched."""
-    ev = _events_stream(spark, files_dir, sf_dir)
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "10 seconds")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 seconds")
-    )
-    cond = (
-        (views.user_id == purchases.p_user_id)
-        & (purchases.p_ts >= views.view_ts)
-        & (purchases.p_ts <= views.view_ts + F.expr("INTERVAL 1 HOUR"))
-    )
-    return (
-        views.join(purchases, cond, "leftOuter")
-        .filter(F.col("purchase_id").isNull())
-        .select("user_id", "view_id", "view_ts")
     )
 
 

@@ -1071,46 +1071,47 @@ def test_terminal_negation_streaming_twin(spark, sf_small,
     micro-batch boundaries (the batch-only next_<neg>_ts audit column
     is unbounded-lookahead by definition). Two far-future flush files
     close the tail horizons so the comparison is bit-equal, not
-    subset."""
+    subset. Besides a two-step chain, the paper's single-step
+    begin(view).notFollowedBy(purchase, within=1h) (the
+    stream_cep_negation rung) streams on both keyed machines: plain,
+    and under a previous_and_current gap bound."""
     from sparkflow.streaming import stateful
 
     stream_dir = stateful.split_events_to_files(
         spark, sf_small, str(tmp_path_factory.mktemp("cep_tneg_stream")), 3
     )
     _append_flush_files(spark, stream_dir)
-    pat = (
-        CepPattern.begin("view", etype="view")
-        .followed_by("click", etype="click")
-        .within("36 hours")
-        .not_followed_by("error", etype="error", within="12 hours")
-    )
-    sdf = pat.compile_stream(spark, stream_dir, sf_small)
-    stateful.run_to_memory(sdf, "t_ceptneg", "append")
-    got = (
-        spark.table("t_ceptneg").toPandas()
-        .sort_values("match_id").reset_index(drop=True)
-    )
-    want = (
-        pat.compile(table(spark, sf_small, "events")).toPandas()
-        .sort_values("match_id").reset_index(drop=True)
-    )
-    assert len(want) > 0
-    # the negation must actually kill candidates on this fixture
-    no_neg = (
-        CepPattern.begin("view", etype="view")
-        .followed_by("click", etype="click")
-        .within("36 hours")
-    )
-    assert no_neg.compile(
-        table(spark, sf_small, "events")
-    ).count() > len(want)
-    want_us = want.assign(
-        match_us=pd.to_datetime(want["match_ts"])
-        .astype("datetime64[us]").astype("int64"),
-        start_us=pd.to_datetime(want["start_ts"])
-        .astype("datetime64[us]").astype("int64"),
-    )[["user_id", "match_id", "match_us", "start_us"]]
-    pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
+    view = CepPattern.begin("view", etype="view")
+    positives = [
+        (view.followed_by("click", etype="click").within("36 hours"),
+         ("error", "12 hours")),
+        (view, ("purchase", "1 hour")),
+        (view.within("1 hour", "previous_and_current"),
+         ("purchase", "1 hour")),
+    ]
+    events = table(spark, sf_small, "events")
+    for i, (no_neg, (neg, horizon)) in enumerate(positives):
+        pat = no_neg.not_followed_by(neg, etype=neg, within=horizon)
+        sdf = pat.compile_stream(spark, stream_dir, sf_small)
+        stateful.run_to_memory(sdf, f"t_ceptneg_{i}", "append")
+        got = (
+            spark.table(f"t_ceptneg_{i}").toPandas()
+            .sort_values("match_id").reset_index(drop=True)
+        )
+        want = (
+            pat.compile(events).toPandas()
+            .sort_values("match_id").reset_index(drop=True)
+        )
+        assert len(want) > 0
+        # the negation must actually kill candidates on this fixture
+        assert no_neg.compile(events).count() > len(want)
+        want_us = want.assign(
+            match_us=pd.to_datetime(want["match_ts"])
+            .astype("datetime64[us]").astype("int64"),
+            start_us=pd.to_datetime(want["start_ts"])
+            .astype("datetime64[us]").astype("int64"),
+        )[["user_id", "match_id", "match_us", "start_us"]]
+        pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
 
 
 def _hold_cases() -> dict:
@@ -2621,7 +2622,7 @@ _GRID_AXES = (
 )
 
 # refusals only compile_stream makes (keyed state needs row-evaluable
-# predicates and at least one transition to carry)
+# predicates, and a transition to carry or a terminal negation to hold)
 _STREAM_ONLY = ("compile_stream needs at least 2 positive steps",
                 "was built from a Column predicate")
 
@@ -2703,7 +2704,8 @@ def _pairwise(rows: list) -> list:
 def _parity_extras() -> list:
     """Hand cases the grid does not reach: a dangling mid-pattern
     negation (no within=, no following step) on every stream route,
-    and single-step patterns, which only compile() accepts."""
+    and single-step patterns, which only compile() accepts unless a
+    terminal negation ends them."""
     A = CepPattern.begin("a", etype="A")
     ab = A.followed_by("b", etype="B")
     dangle = [
@@ -2742,8 +2744,9 @@ def test_compile_and_compile_stream_accept_alike(spark, sf_small,
     every composition alike — with the same message — except for the
     stream-only rules. Covers every pair of grid axis values plus the
     hand cases; a single-step pattern compiles in batch and is refused
-    by the one stream-only message. The full grid is too slow for
-    tier-1 (every compile() analyses eagerly)."""
+    by the one stream-only message, unless it ends in a terminal
+    negation, which both accept. The full grid is too slow for tier-1
+    (every compile() analyses eagerly)."""
     from sparkflow.streaming import stateful
 
     stream_dir = stateful.split_events_to_files(
@@ -2758,7 +2761,7 @@ def test_compile_and_compile_stream_accept_alike(spark, sf_small,
         batch = _outcome(lambda: pat.compile(df))
         stream = _outcome(
             lambda: pat.compile_stream(spark, stream_dir, sf_small))
-        if axes[0] == "single":
+        if axes[0] == "single" and pat.neg is None:
             ok = batch is None and stream is not None \
                 and stream.startswith(_STREAM_ONLY[0])
         elif stream is not None and any(m in stream for m in _STREAM_ONLY):

@@ -72,103 +72,6 @@ def test_interval_join_stream_matches_batch(spark, stream_dir, sf_small):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_cep_negation_stream_matches_analog(spark, stream_dir, sf_small):
-    """Streaming negations must be a subset of the batch analog's (the
-    join can only suppress a negation near ties / the stream tail, never
-    invent one), and every batch negation whose 1 h horizon closes well
-    before the stream's end must be emitted."""
-    got = _collect(
-        spark,
-        stateful.cep_negation_stream(spark, stream_dir, sf_small),
-        "t_cepneg",
-    )
-    want = sparkflow.QUERIES["stream_cep_negation"](spark, sf_small).toPandas()
-    got_ids = set(got["view_id"])
-    want_ids = set(want["view_id"])
-    assert got_ids.issubset(want_ids), sorted(got_ids - want_ids)[:5]
-    # the watermark that evicts outer-join state is the one computed
-    # BEFORE the final micro-batch (availableNow does not run an extra
-    # eviction-only batch), so the guaranteed-fired horizon derives from
-    # the max event time of all replay files except the last
-    import os
-
-    ev = sparkflow.catalog.table(spark, sf_small, "events").toPandas()
-    parts = sorted(
-        os.path.join(stream_dir, f)
-        for f in os.listdir(stream_dir)
-        if f.endswith(".parquet")
-    )
-    head = pd.concat([pd.read_parquet(p) for p in parts[:-1]])
-    max_us = pd.to_datetime(head["ts"]).astype("datetime64[us]").astype("int64").max()
-    want_us = (
-        pd.to_datetime(want["view_ts"]).astype("datetime64[us]").astype("int64")
-    )
-    safe = set(want.loc[want_us + 3_600_000_000 < max_us - 10_000_000, "view_id"])
-    # tie edge: the streaming join's p_ts >= view_ts cannot see the
-    # event_id tiebreak, so a purchase at EXACTLY view_ts (earlier id)
-    # suppresses the streaming negation while the batch keeps it
-    ev_us = pd.to_datetime(ev["ts"]).astype("datetime64[us]").astype("int64")
-    purchase_keys = set(
-        zip(ev.loc[ev["event_type"] == "purchase", "user_id"],
-            ev_us[ev["event_type"] == "purchase"])
-    )
-    view_key = dict(zip(want["view_id"], zip(want["user_id"], want_us)))
-    tied = {vid for vid in safe if view_key[vid] in purchase_keys}
-    assert (safe - tied).issubset(got_ids), sorted(safe - tied - got_ids)[:5]
-
-
-def test_cep_funnel_stream_matches_analog(spark, stream_dir, sf_small):
-    """The carried-state funnel must reproduce the batch analog exactly
-    (funnels span micro-batch boundaries; every completed funnel emits
-    once with the same opening view)."""
-    got = _collect(
-        spark,
-        stateful.cep_funnel_stream(spark, stream_dir, sf_small),
-        "t_cepfunnel",
-    ).sort_values("purchase_id").reset_index(drop=True)
-    want = (
-        sparkflow.QUERIES["stream_cep_funnel"](spark, sf_small)
-        .toPandas()
-        .sort_values("purchase_id")
-        .reset_index(drop=True)
-    )
-    want_us = want.assign(
-        purchase_us=pd.to_datetime(want["purchase_ts"])
-        .astype("datetime64[us]")
-        .astype("int64"),
-        funnel_open_us=pd.to_datetime(want["funnel_open_ts"])
-        .astype("datetime64[us]")
-        .astype("int64"),
-    )[["user_id", "purchase_id", "purchase_us", "funnel_open_us"]]
-    pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
-
-
-def test_cep_times_stream_matches_analog(spark, stream_dir, sf_small):
-    """The bounded-buffer quantifier must reproduce the batch analog
-    exactly: state crosses micro-batch boundaries (a streak can span
-    files), and every match is emitted exactly once."""
-    got = _collect(
-        spark,
-        stateful.cep_times_stream(spark, stream_dir, sf_small),
-        "t_ceptimes",
-    ).sort_values("streak_end_id").reset_index(drop=True)
-    want = (
-        sparkflow.QUERIES["stream_cep_times"](spark, sf_small)
-        .toPandas()
-        .sort_values("streak_end_id")
-        .reset_index(drop=True)
-    )
-    want_us = want.assign(
-        streak_start_us=pd.to_datetime(want["streak_start_ts"])
-        .astype("datetime64[us]")
-        .astype("int64"),
-        streak_end_us=pd.to_datetime(want["streak_end_ts"])
-        .astype("datetime64[us]")
-        .astype("int64"),
-    )[["user_id", "streak_end_id", "streak_start_us", "streak_end_us"]]
-    pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
-
-
 def test_update_mode_aggregation_upserts_to_batch(spark, stream_dir, sf_small):
     """Flink retract-stream analog: a watermarked groupBy in
     outputMode('update') emits per-batch UPSERTS through foreachBatch;
@@ -1666,41 +1569,53 @@ def test_cdc_ledger_scoped_per_writer(spark, sf_small, tmp_path_factory):
 def test_cep_compiled_stream_matches_batch_compile(
     spark, stream_dir, sf_small
 ):
-    """The CEP combinator's GENERIC streaming twin (r11): the registered
-    4-step pattern (view → click ×2 → purchase within 48h) executed as
-    applyInPandasWithState — 2·(m-1) longs of keyed state, matches
-    spanning micro-batch boundaries — must equal the batch compile
-    row-for-row. This is the combinator's unbounded-execution evidence:
-    the carry chain IS an O(1)-state machine, so ANY positive pattern
-    the builder accepts streams with bounded state."""
+    """The CEP combinator's GENERIC streaming twin (r11): each
+    registered pattern run through compile_stream — keyed carry state,
+    matches spanning micro-batch boundaries — must equal its registered
+    batch key row-for-row: the 4-step combinator pattern (view → click
+    ×2 → purchase within 48h) and the paper's funnel and times(3) hand
+    rungs, whose columns are renamed onto the compiled schema. The
+    carry chain IS an O(1)-state machine, so ANY positive pattern the
+    builder accepts streams with bounded state."""
     from sparkflow.streaming.cep import CepPattern
 
-    pat = (
-        CepPattern.begin("view", etype="view")
-        .followed_by("click", etype="click")
-        .times(2)
-        .followed_by("purchase", etype="purchase")
-        .within("48 hours")
-    )
-    got = _collect(
-        spark,
-        pat.compile_stream(spark, stream_dir, sf_small),
-        "t_cepcompiled",
-    ).sort_values("match_id").reset_index(drop=True)
-    want = (
-        sparkflow.QUERIES["stream_cep_compile"](spark, sf_small)
-        .toPandas()
-        .sort_values("match_id")
-        .reset_index(drop=True)
-    )
-    assert len(want) > 0, "degenerate fixture: pattern matched nothing"
-    want_us = want.assign(
-        match_us=pd.to_datetime(want["match_ts"])
-        .astype("datetime64[us]").astype("int64"),
-        start_us=pd.to_datetime(want["start_ts"])
-        .astype("datetime64[us]").astype("int64"),
-    )[["user_id", "match_id", "match_us", "start_us"]]
-    pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
+    view = CepPattern.begin("view", etype="view")
+    cases = [
+        (view.followed_by("click", etype="click").times(2)
+         .followed_by("purchase", etype="purchase").within("48 hours"),
+         "stream_cep_compile", {}),
+        (view.followed_by("click", etype="click")
+         .followed_by("purchase", etype="purchase").within("24 hours"),
+         "stream_cep_funnel",
+         {"purchase_id": "match_id", "purchase_ts": "match_ts",
+          "funnel_open_ts": "start_ts"}),
+        (CepPattern.begin("click", etype="click").times(3)
+         .within("24 hours"),
+         "stream_cep_times",
+         {"streak_end_id": "match_id", "streak_end_ts": "match_ts",
+          "streak_start_ts": "start_ts"}),
+    ]
+    for pat, key, renames in cases:
+        got = _collect(
+            spark,
+            pat.compile_stream(spark, stream_dir, sf_small),
+            f"t_{key}",
+        ).sort_values("match_id").reset_index(drop=True)
+        want = (
+            sparkflow.QUERIES[key](spark, sf_small)
+            .toPandas()
+            .rename(columns=renames)
+            .sort_values("match_id")
+            .reset_index(drop=True)
+        )
+        assert len(want) > 0, f"degenerate fixture: {key} matched nothing"
+        want_us = want.assign(
+            match_us=pd.to_datetime(want["match_ts"])
+            .astype("datetime64[us]").astype("int64"),
+            start_us=pd.to_datetime(want["start_ts"])
+            .astype("datetime64[us]").astype("int64"),
+        )[["user_id", "match_id", "match_us", "start_us"]]
+        pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
 
 
 def test_cep_compiled_stream_strict_transition(spark, stream_dir, sf_small):
@@ -1794,7 +1709,7 @@ def test_cep_streaming_state_bounds(spark, stream_dir, sf_small):
         .followed_by_any("purchase", etype="purchase")
         .within("1 hour")
     )
-    prog = stateful.run_to_memory_progress(
+    prog = stateful.run_to_memory(
         pat_any.compile_stream(spark, stream_dir, sf_small), "t_sb_any"
     )
     assert prog, "no progress entries recorded"
@@ -1830,7 +1745,7 @@ def test_cep_streaming_state_bounds(spark, stream_dir, sf_small):
         .followed_by("purchase", etype="purchase")
         .within("72 hours")
     )
-    prog = stateful.run_to_memory_progress(
+    prog = stateful.run_to_memory(
         pat_until.compile_stream(spark, stream_dir, sf_small),
         "t_sb_until",
     )
@@ -1850,7 +1765,7 @@ def test_cep_streaming_state_bounds(spark, stream_dir, sf_small):
         .followed_by("purchase", etype="purchase")
         .within("12 hours", "previous_and_current")
     )
-    prog = stateful.run_to_memory_progress(
+    prog = stateful.run_to_memory(
         pat_mg.compile_stream(spark, stream_dir, sf_small), "t_sb_mg"
     )
     totals = [
