@@ -57,7 +57,9 @@ def session_memo(spark: SparkSession, sf_dir: str, tables, name: str, build):
     if hit is not None and hit[0]() is spark and hit[1] == digest:
         return hit[2]
     value = build()
-    _MEMO[key] = (weakref.ref(spark, lambda _, k=key: _MEMO.pop(k, None)),
+    # the dict is bound now: at interpreter exit the module global may
+    # already be None when a dying session fires the callback
+    _MEMO[key] = (weakref.ref(spark, lambda _, k=key, m=_MEMO: m.pop(k, None)),
                   digest, value)
     return value
 

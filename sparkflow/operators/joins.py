@@ -1122,24 +1122,21 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: the fact table is LAID OUT partitioned
-    by day (staged once per app — fixture setup standing in for how a
+    by day (a session fixture standing in for how a
     100 TB event table is actually stored), the dim filter (dow = 1)
     is only knowable at runtime, and Spark turns the broadcast build
     side into a partition filter on the fact scan — only ~1/7 of the
     day directories are read at all. This is THE mechanism that makes
     star-schema queries on date-partitioned lakes cheap; the pytest
     companion asserts `dynamicpruningexpression` lands on the scan."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    import os
+    from ..sources import staging
 
-    base = os.path.join(
-        "/tmp/sparkflow_io/dpp", spark.sparkContext.applicationId, f"events_{sfkey}"
-    )
-    ev = table(spark, sf_dir, "events")
-    if not os.path.isdir(base):
-        ev.select(
+    def write(base: str) -> None:
+        table(spark, sf_dir, "events").select(
             "event_id", "user_id", F.dayofmonth("ts").cast("int").alias("day")
         ).write.partitionBy("day").mode("overwrite").parquet(base)
+
+    base = staging.session_fixture(spark, sf_dir, ("events",), "dpp", write)
     fact = spark.read.parquet(base)
     dim = (
         fact.select("day").distinct().select(

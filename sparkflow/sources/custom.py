@@ -30,8 +30,8 @@ from pyspark.sql.datasource import (
 
 from ..catalog import table
 from ..registry import register
+from .staging import session_fixture
 
-_TMP = "/tmp/sparkflow_io"
 _N_FILES = 4
 
 
@@ -67,20 +67,15 @@ class DocMetaSource(DataSource):
 
 
 def _stage_files(spark: SparkSession, sf_dir: str) -> str:
-    """Export documents metadata to the custom line format, once per
-    (application, sf). Files get deterministic doc_id-range splits.
+    """Export documents metadata to the custom line format. Files get
+    deterministic doc_id-range splits.
 
     FIXTURE STAGING, not the operator's data path: this materializes the
     foreign format the connector exists to read (in production that data
     already lives in the external system). The driver-side toPandas here
     is the test harness building its fixture; the connector itself reads
     partition-parallel with no driver involvement."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = os.path.join(
-        _TMP, "docmeta", spark.sparkContext.applicationId, sfkey
-    )
-    if not os.path.isdir(out):
-        os.makedirs(out, exist_ok=True)
+    def write(out: str) -> None:
         rows = (
             table(spark, sf_dir, "documents")
             .select("doc_id", "lang", "n_chars")
@@ -93,7 +88,8 @@ def _stage_files(spark: SparkSession, sf_dir: str) -> str:
             with open(os.path.join(out, f"docmeta-{i}.txt"), "w", encoding="utf-8") as fh:
                 for r in part.itertuples():
                     fh.write(f"{r.doc_id}|{r.lang}|{r.n_chars}\n")
-    return out
+
+    return session_fixture(spark, sf_dir, ("documents",), "docmeta", write)
 
 
 @register(
@@ -199,13 +195,7 @@ def scan_avro_splittable(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping split would break."""
     from . import avrolite
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "avro_one", spark.sparkContext.applicationId, sfkey
-    )
-    path = os.path.join(base, "orders.avro")
-    if not os.path.exists(path):
-        os.makedirs(base, exist_ok=True)
+    def write(base: str) -> None:
         schema = {
             "type": "record",
             "name": "orders",
@@ -227,10 +217,11 @@ def scan_avro_splittable(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema, pdf.itertuples(index=False, name=None),
             codec="deflate", rows_per_block=512,
         )
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as fh:
+        with open(os.path.join(base, "orders.avro"), "wb") as fh:
             fh.write(data)
-        os.replace(tmp, path)
+
+    base = session_fixture(spark, sf_dir, ("orders",), "avro_one", write)
+    path = os.path.join(base, "orders.avro")
     spark.dataSource.register(AvroLiteSource)
     return spark.read.format("avrolite").option("path", path).load()
 
@@ -400,16 +391,9 @@ def sink_custom_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same aggregation on the original table, so write-path
     completeness (no lost/duplicated rows under the commit protocol) is
     exactly what the hash equality certifies."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = os.path.join(
-        _TMP, "docmeta_sink", spark.sparkContext.applicationId, sfkey
-    )
     spark.dataSource.register(DocMetaSource)
-    # marker-based guard, not isdir: a first attempt that created the dir
-    # but failed mid-write must NOT make later calls read a partial sink
-    marker = os.path.join(out, "_STAGED_OK")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
+
+    def write(out: str) -> None:
         (
             table(spark, sf_dir, "documents")
             .select("doc_id", "lang", "n_chars")
@@ -419,8 +403,8 @@ def sink_custom_python(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .save()
         )
-        with open(marker, "w", encoding="utf-8"):
-            pass
+
+    out = session_fixture(spark, sf_dir, ("documents",), "docmeta_sink", write)
     df = spark.read.format("docmeta").option("path", out).load()
     return df.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -8,9 +8,8 @@ Spark-first notes:
   parquet reader (PushedFilters / ReadSchema in explain).
 - sink_parquet demonstrates partitionBy + partition-pruned read-back —
   at 100 TB, partition layout IS the primary index.
-- Round-trips write under /tmp/sparkflow_io (never the read-only
-  testdata), deterministic content, overwrite mode so re-runs are
-  idempotent.
+- Round-trips write session fixtures (staging.session_fixture), never
+  the read-only testdata.
 """
 
 from __future__ import annotations
@@ -25,8 +24,7 @@ from ..catalog import table
 from ..operators.joins import _Q5_ORACLE
 from ..oracle_compat import cents, dsum, revenue_units, sql_dsum, sql_rev_sum
 from ..registry import register
-
-_TMP = "/tmp/sparkflow_io"
+from .staging import session_dir, session_fixture
 
 
 @register(
@@ -55,19 +53,16 @@ def scan_csv_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-ful CSV and JSON read: round-trip nation through both
     formats, join the two read-backs — equality with the parquet truth is
     what the oracle checks."""
-    n = table(spark, sf_dir, "nation")
-    # applicationId-namespaced (concurrent processes must not race the
-    # overwrite) and written once per app — the write is setup for the
-    # read-back under test, not the operator's subject
-    app = spark.sparkContext.applicationId
-    csv_dir = os.path.join(_TMP, app, "nation_csv")
-    json_dir = os.path.join(_TMP, app, "nation_json")
-    if not os.path.isdir(csv_dir):
-        n.write.mode("overwrite").option("header", True).csv(csv_dir)
-        n.write.mode("overwrite").json(json_dir)
+    def write(out: str) -> None:
+        n = table(spark, sf_dir, "nation")
+        n.write.option("header", True).csv(os.path.join(out, "csv"))
+        n.write.json(os.path.join(out, "json"))
+
+    base = session_fixture(spark, sf_dir, ("nation",), "nation_csv_json", write)
     schema = "n_nationkey INT, n_name STRING, n_regionkey INT"
-    from_csv = spark.read.schema(schema).option("header", True).csv(csv_dir)
-    from_json = spark.read.schema(schema).json(json_dir)
+    from_csv = (spark.read.schema(schema).option("header", True)
+                .csv(os.path.join(base, "csv")))
+    from_json = spark.read.schema(schema).json(os.path.join(base, "json"))
     return from_csv.join(from_json, ["n_nationkey", "n_name", "n_regionkey"], "inner").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -85,18 +80,15 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships): write supplier to ORC, read back with a pushed filter —
     pushdown/pruning work identically to parquet (same DataSource V2
     scan machinery). Output equality with the parquet truth is the
-    oracle. Path is applicationId-namespaced so concurrent processes
-    never race the overwrite (DuckDB cannot read ORC, so the oracle is
-    the logically-identical parquet query — the round-trip itself is
-    what's under test)."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = os.path.join(
-        _TMP, "orc", spark.sparkContext.applicationId, f"supplier_{sfkey}"
-    )
-    if not os.path.isdir(out):
+    oracle (DuckDB cannot read ORC, so the oracle is the
+    logically-identical parquet query — the round-trip itself is what's
+    under test)."""
+    def write(out: str) -> None:
         table(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
         ).write.mode("overwrite").orc(out)
+
+    out = session_fixture(spark, sf_dir, ("supplier",), "orc", write)
     return spark.read.orc(out).filter(F.col("s_acctbal") > 0)
 
 
@@ -113,13 +105,13 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned parquet write + partition-pruned read-back: only the
     l_returnflag=R directory is scanned (dynamic pruning via the
     partition column filter), then aggregated."""
-    # the write IS the operator here, so it always runs; the path is
-    # applicationId-namespaced against concurrent-process overwrite races
-    out = os.path.join(_TMP, spark.sparkContext.applicationId, "lineitem_by_flag")
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus", "l_extendedprice"
-    )
-    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+    def write(out: str) -> None:
+        table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus",
+            "l_extendedprice",
+        ).write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+
+    out = session_fixture(spark, sf_dir, ("lineitem",), "lineitem_by_flag", write)
     back = spark.read.parquet(out).filter(F.col("l_returnflag") == "R")
     return back.groupBy("l_linestatus").agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -199,29 +191,28 @@ def sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands in a parquet staging dir keyed by batch_id (idempotent on
     retry, the exactly-once recipe), then the staged batches are
     re-aggregated. Same per-type counts as the batch oracle."""
-    import shutil
+    def write(out: str) -> None:
+        table(spark, sf_dir, "events")  # set nanosAsLong BEFORE the schema read
+        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
-    out = os.path.join(_TMP, "foreachbatch_sink")
-    shutil.rmtree(out, ignore_errors=True)
-    table(spark, sf_dir, "events")  # set nanosAsLong BEFORE the schema read
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                batch_df.groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n_events"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(out, f"batch_{batch_id}"))
+            )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, f"batch_{batch_id}"))
+            spark.readStream.schema(raw_schema)
+            .parquet(f"{sf_dir}/events*.parquet")
+            .writeStream.foreachBatch(sink)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
 
-    q = (
-        spark.readStream.schema(raw_schema)
-        .parquet(f"{sf_dir}/events*.parquet")
-        .writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = session_fixture(spark, sf_dir, ("events",), "foreachbatch_sink", write)
     staged = spark.read.parquet(os.path.join(out, "batch_*"))
     return staged.groupBy("event_type").agg(F.sum("n_events").alias("n_events"))
 
@@ -253,21 +244,19 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size (a round-7 interim modulo cut would have
     staged 40% of a replica corpus — fixture staging must stay
     O(constant))."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "evolve", spark.sparkContext.applicationId, f"events_{sfkey}"
-    )
-    if not os.path.isdir(base):
+    def write(base: str) -> None:
         ev = table(spark, sf_dir, "events")
         lo = ev.agg(F.min("event_id")).first()[0]
         ev.filter(F.col("event_id") < lo + 2000).select(
             "event_id", "user_id"
-        ).write.mode("overwrite").parquet(os.path.join(base, "v1"))
+        ).write.parquet(os.path.join(base, "v1"))
         ev.filter(
             (F.col("event_id") >= lo + 2000) & (F.col("event_id") < lo + 4000)
         ).select(
             "event_id", "value"
-        ).write.mode("overwrite").parquet(os.path.join(base, "v2"))
+        ).write.parquet(os.path.join(base, "v2"))
+
+    base = session_fixture(spark, sf_dir, ("events",), "evolve", write)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(os.path.join(base, "v1"), os.path.join(base, "v2"))
@@ -303,12 +292,7 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUNDED (a round-7 interim modulo cut staged half the corpus, which
     is a driver-side toPandas of 5M rows on the sf10 replica tree —
     fixture staging must stay O(constant) at any corpus size)."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = os.path.join(
-        _TMP, "jsonl", spark.sparkContext.applicationId, f"events_{sfkey}"
-    )
-    if not os.path.isdir(out):
-        os.makedirs(out, exist_ok=True)
+    def write(out: str) -> None:
         lo = table(spark, sf_dir, "events").agg(F.min("event_id")).first()[0]
         ev = (
             table(spark, sf_dir, "events")
@@ -323,6 +307,8 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if r.event_id % 97 == 0:
                     line = line[: len(line) // 2]  # truncate -> malformed
                 fh.write(line + "\n")
+
+    out = session_fixture(spark, sf_dir, ("events",), "jsonl", write)
     df = (
         spark.read.schema(
             "event_id BIGINT, props STRUCT<k: BIGINT>, _corrupt_record STRING"
@@ -369,37 +355,36 @@ def stream_side_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     (persist + two writes — one source scan per batch); both sinks are
     keyed parquet appends. This is the production posture for poison
     records at 100 TB: quarantine, don't crash, don't re-read."""
-    import shutil
+    def write(out: str) -> None:
+        table(spark, sf_dir, "events")  # set nanosAsLong BEFORE the schema read
+        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
-    out = os.path.join(_TMP, spark.sparkContext.applicationId, "side_output")
-    shutil.rmtree(out, ignore_errors=True)
-    table(spark, sf_dir, "events")  # set nanosAsLong BEFORE the schema read
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        def route(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.persist()
+            try:
+                (
+                    batch_df.filter(F.col("event_type") != "error")
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(out, "main", f"batch_{batch_id}"))
+                )
+                (
+                    batch_df.filter(F.col("event_type") == "error")
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(out, "dlq", f"batch_{batch_id}"))
+                )
+            finally:
+                batch_df.unpersist()
 
-    def route(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            (
-                batch_df.filter(F.col("event_type") != "error")
-                .write.mode("overwrite")
-                .parquet(os.path.join(out, "main", f"batch_{batch_id}"))
-            )
-            (
-                batch_df.filter(F.col("event_type") == "error")
-                .write.mode("overwrite")
-                .parquet(os.path.join(out, "dlq", f"batch_{batch_id}"))
-            )
-        finally:
-            batch_df.unpersist()
+        (
+            spark.readStream.schema(raw_schema)
+            .parquet(f"{sf_dir}/events*.parquet")
+            .writeStream.foreachBatch(route)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
-    q = (
-        spark.readStream.schema(raw_schema)
-        .parquet(f"{sf_dir}/events*.parquet")
-        .writeStream.foreachBatch(route)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = session_fixture(spark, sf_dir, ("events",), "side_output", write)
 
     def agg(route_name: str) -> DataFrame:
         return (
@@ -434,26 +419,21 @@ def maintenance_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition(4) is an explicit round-robin shuffle to equal-size
     outputs (coalesce would skip the shuffle but inherit skew);
     sortWithinPartitions costs no extra exchange."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "compact", spark.sparkContext.applicationId, f"events_{sfkey}"
-    )
-    frag, packed = os.path.join(base, "fragmented"), os.path.join(base, "compacted")
-    ev = table(spark, sf_dir, "events")
-    if not os.path.isdir(frag):
-        ev.withColumn("day", F.dayofmonth("ts")).repartition(
-            32, "day"
-        ).write.partitionBy("day").mode("overwrite").parquet(frag)
-    if not os.path.isdir(packed):
+    def write(base: str) -> None:
+        frag = os.path.join(base, "fragmented")
+        table(spark, sf_dir, "events").withColumn(
+            "day", F.dayofmonth("ts")
+        ).repartition(32, "day").write.partitionBy("day").parquet(frag)
         (
             spark.read.parquet(frag)
             .repartition(4)
             .sortWithinPartitions("user_id")
-            .write.mode("overwrite")
-            .parquet(packed)
+            .write.parquet(os.path.join(base, "compacted"))
         )
+
+    base = session_fixture(spark, sf_dir, ("events",), "compact", write)
     return (
-        spark.read.parquet(packed)
+        spark.read.parquet(os.path.join(base, "compacted"))
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1442,8 +1422,8 @@ def _tv_with_stats(spark: SparkSession, paths: list, *keys: str) -> list:
 
 
 def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the two-version COW orders table once per (application,
-    sf): v1 = 8 range-partitioned files; v2 = contiguous-band UPDATE
+    """Stage the two-version COW orders table: v1 = 8 range-partitioned
+    files; v2 = contiguous-band UPDATE
     (lo+1000..lo+3000, +1.00) via file-level copy-on-write + re-keyed
     INSERTS (%101, past max) in one new file. Shared by
     maintenance_table_versions (diff), scan_time_travel_pruned
@@ -1452,11 +1432,7 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> str:
     crashed writer leaves, which vacuum exists to collect."""
     import glob as _glob
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "table_versions", spark.sparkContext.applicationId,
-        f"orders_{sfkey}"
-    )
+    base = session_dir(spark, sf_dir, ("orders",), "table_versions")
     if os.path.exists(os.path.join(base, "manifest_v2.json")):
         return base
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
@@ -1861,10 +1837,7 @@ def maintenance_table_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaces as a hash mismatch."""
     import json as _json
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "cdc_users", spark.sparkContext.applicationId, f"users_{sfkey}"
-    )
+    base = session_dir(spark, sf_dir, ("events",), "cdc_users")
     if not os.path.exists(os.path.join(base, "manifest_v2.json")):
         os.makedirs(os.path.join(base, "data"), exist_ok=True)
         # params persisted WITH the table (IVM discipline, atomic write):
@@ -2127,10 +2100,7 @@ def maintenance_table_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staging dependency: the CDC apply's v1→v2 history (idempotent,
     # session-memoized by manifest existence)
     maintenance_table_cdc_apply(spark, sf_dir)
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "cdc_users", spark.sparkContext.applicationId, f"users_{sfkey}"
-    )
+    base = session_dir(spark, sf_dir, ("events",), "cdc_users")
     if not os.path.exists(os.path.join(base, "manifest_v3.json")):
         _tv_commit(
             base, 3, _tv_entries(base, 2),
@@ -2184,11 +2154,7 @@ def maintenance_table_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a second call is a manifest no-op)."""
     import glob as _glob
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "table_optimize", spark.sparkContext.applicationId,
-        f"orders_{sfkey}"
-    )
+    base = session_dir(spark, sf_dir, ("orders",), "table_optimize")
     cols = ["o_orderkey", "o_totalprice"]
 
     def with_meta(paths: list) -> list:
@@ -2245,10 +2211,10 @@ def maintenance_table_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stage_zorder_optimized(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the two-version OPTIMIZE-ZORDER orders table once per
-    (application, sf): v1 = 16 files range-partitioned on o_orderkey
-    ONLY (tight stats on one dimension, custkey spans ~the full range
-    in every file — the layout any single-key ingest leaves behind);
+    """Stage the two-version OPTIMIZE-ZORDER orders table: v1 = 16 files
+    range-partitioned on o_orderkey ONLY (tight stats on one dimension,
+    custkey spans ~the full range in every file — the layout any
+    single-key ingest leaves behind);
     v2 = the SAME rows re-clustered by the 16-bit Morton key over
     (o_custkey, o_orderkey) and committed through the manifest
     protocol. Both manifests carry 2-D per-file stats so the pruning
@@ -2260,11 +2226,7 @@ def _stage_zorder_optimized(spark: SparkSession, sf_dir: str) -> str:
 
     from ..operators.sort_set import _morton16
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "table_optimize_zorder", spark.sparkContext.applicationId,
-        f"orders_{sfkey}"
-    )
+    base = session_dir(spark, sf_dir, ("orders",), "table_optimize_zorder")
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     if not os.path.exists(os.path.join(base, "manifest_v1.json")):
         os.makedirs(os.path.join(base, "data"), exist_ok=True)
@@ -2494,12 +2456,7 @@ def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (constant per split), cost-free at any scale."""
     import pyarrow.parquet as pq
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "lineage", spark.sparkContext.applicationId, f"events_{sfkey}"
-    )
-    if not os.path.isdir(base):
-        os.makedirs(base, exist_ok=True)
+    def write(base: str) -> None:
         ev = table(spark, sf_dir, "events")
         lo = ev.agg(F.min("event_id")).first()[0]
         pdf = (
@@ -2518,6 +2475,8 @@ def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pa.Table.from_pandas(pdf[mask], preserve_index=False),
                 os.path.join(base, f"{name}.parquet"),
             )
+
+    base = session_fixture(spark, sf_dir, ("events",), "lineage", write)
     return (
         spark.read.parquet(base)
         .select("event_id", F.col("_metadata.file_name").alias("file_name"))
@@ -2623,15 +2582,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan in front of it. Scale: binaryFile splits by file (no
     intra-file parallelism), so shard large media archives into object-
     per-record or use `recursiveFileLookup` over a manifest."""
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "binfiles", spark.sparkContext.applicationId, f"docs_{sfkey}"
-    )
-    # marker-based staging guard: an interrupted first staging loop must
-    # not leave a partial .bin set that later calls silently read
-    marker = os.path.join(base, "_STAGED_OK")
-    if not os.path.exists(marker):
-        os.makedirs(base, exist_ok=True)
+    def write(base: str) -> None:
         pdf = (
             table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 10 == 0)
@@ -2641,8 +2592,8 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in pdf.itertuples():
             with open(os.path.join(base, f"doc_{r.doc_id}.bin"), "wb") as fh:
                 fh.write(r.text.encode("utf-8"))
-        with open(marker, "w", encoding="utf-8"):
-            pass
+
+    base = session_fixture(spark, sf_dir, ("documents",), "binfiles", write)
     meta = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)
@@ -2686,8 +2637,8 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape, both halves distributed:
     - SINK: orders is repartitioned and each partition serializes its
       rows to one container file via mapInPandas (executor-side write,
-      atomic tmp+rename so task retries never publish partials; a
-      driver-side marker commits the staging like every fixture here).
+      atomic tmp+rename so task retries never publish partials; the
+      session fixture's publishing rename commits the staging).
     - SOURCE: `binaryFile` scan of the directory (one row per file,
       splits by file — the same 100 TB listing story as
       scan_binary_files) + mapInPandas decode, Arrow-batched back to
@@ -2699,10 +2650,6 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import avrolite
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "avro", spark.sparkContext.applicationId, f"orders_{sfkey}"
-    )
     schema = {
         "type": "record",
         "name": "orders",
@@ -2714,10 +2661,8 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     }
     cols = [f["name"] for f in schema["fields"]]
-    marker = os.path.join(base, "_STAGED_OK")
-    if not os.path.exists(marker):
-        os.makedirs(base, exist_ok=True)
 
+    def write(base: str) -> None:
         def write_part(it):
             from pyspark import TaskContext
 
@@ -2742,8 +2687,8 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mapInPandas(write_part, "path STRING, n_rows LONG")
             .collect()  # bounded: 8 (path, count) rows — the write action
         )
-        with open(marker, "w", encoding="utf-8"):
-            pass
+
+    base = session_fixture(spark, sf_dir, ("orders",), "avro", write)
 
     def decode_part(it):
         for pdf in it:
@@ -2810,14 +2755,8 @@ def scan_protobuf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import protolite
 
     cols = [name for _, name, _ in _PB_FIELDS]
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "protobuf", spark.sparkContext.applicationId, f"orders_{sfkey}"
-    )
-    marker = os.path.join(base, "_STAGED_OK")
-    if not os.path.exists(marker):
-        os.makedirs(base, exist_ok=True)
 
+    def write(base: str) -> None:
         def write_part(it):
             from pyspark import TaskContext
 
@@ -2842,8 +2781,8 @@ def scan_protobuf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mapInPandas(write_part, "path STRING, n_rows LONG")
             .collect()  # bounded: 8 (path, count) rows — the write action
         )
-        with open(marker, "w", encoding="utf-8"):
-            pass
+
+    base = session_fixture(spark, sf_dir, ("orders",), "protobuf", write)
 
     def decode_part(it):
         for pdf in it:
@@ -2890,45 +2829,32 @@ def maintenance_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     agg_hll_merge / agg_bitmap_distinct for both answers.
 
     Staging (the 'yesterday' fixture, not the operator): the first call
-    materializes base partials for event_id < 60% of the id range under
-    an applicationId-namespaced path. The oracle is the full
+    materializes base partials for event_id < 60% of the id range as a
+    session fixture. The oracle is the full
     recompute — equality IS the IVM correctness claim. Money flows as
     integer cents end-to-end, so merged and recomputed results are
     bit-identical."""
     ev = table(spark, sf_dir, "events")
     cents = F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)")
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base_path = os.path.join(
-        _TMP, "ivm", spark.sparkContext.applicationId, f"base_{sfkey}"
-    )
-    # The cutoff is persisted WITH the partials: re-deriving it from the
-    # live table on every call would (a) run a data-sized min/max job
-    # per plan build and (b) shift if the table grew, double-counting
-    # rows already folded into the base. The cutoff file is written LAST
-    # (atomically, tmp+rename) and is the completeness marker: its
-    # presence implies the parquet write (and its _SUCCESS) finished. A
-    # crash between parquet _SUCCESS and the cutoff write therefore
-    # re-stages on the next call instead of failing at open().
-    cutoff_file = os.path.join(base_path + "_cutoff.txt")
-    if not os.path.exists(cutoff_file):
+    # the cutoff is stored with the partials, so a plan build runs no
+    # data-sized min/max job
+    def write(base: str) -> None:
         lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
         cutoff = lo + ((hi - lo + 1) * 3) // 5
         (
             ev.filter(F.col("event_id") < cutoff)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("cents"))
-            .write.mode("overwrite")
-            .parquet(base_path)
+            .write.parquet(os.path.join(base, "partials"))
         )
-        os.makedirs(os.path.dirname(cutoff_file), exist_ok=True)
-        tmp = cutoff_file + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
+        with open(os.path.join(base, "cutoff.txt"), "w", encoding="utf-8") as fh:
             fh.write(str(cutoff))
-        os.replace(tmp, cutoff_file)
-    with open(cutoff_file, encoding="utf-8") as fh:
+
+    base = session_fixture(spark, sf_dir, ("events",), "ivm", write)
+    with open(os.path.join(base, "cutoff.txt"), encoding="utf-8") as fh:
         cutoff = int(fh.read().strip())
-    base_partials = spark.read.parquet(base_path)
+    base_partials = spark.read.parquet(os.path.join(base, "partials"))
     delta_partials = (
         ev.filter(F.col("event_id") >= cutoff)  # pushed to the scan
         .groupBy("event_type")
@@ -2989,10 +2915,7 @@ def scan_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.sort_set import _morton16
 
-    sfkey = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(
-        _TMP, "zorder", spark.sparkContext.applicationId, f"orders_{sfkey}"
-    )
+    base = session_dir(spark, sf_dir, ("orders",), "zorder")
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     orders = table(spark, sf_dir, "orders")
     cmin, cmax, omin, omax = orders.agg(

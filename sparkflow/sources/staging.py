@@ -45,7 +45,8 @@ import json
 import os
 import shutil
 
-SHARED_ROOT = "/tmp/sparkflow_io/shared"
+_TMP = "/tmp/sparkflow_io"
+SHARED_ROOT = os.path.join(_TMP, "shared")
 _MANIFEST = "_sparkflow_manifest.json"
 
 
@@ -151,6 +152,45 @@ def unpublish(kind: str, sf_dir: str, tables, name: str) -> None:
     except FileNotFoundError:
         return
     shutil.rmtree(final, ignore_errors=True)
+
+
+def session_dir(spark, sf_dir: str, tables, kind: str) -> str:
+    """`<_TMP>/<kind>/<applicationId>/<corpus_digest(sf_dir, tables)>`;
+    a corpus with no local data files to digest is addressed by a hash
+    of its path instead."""
+    try:
+        key = corpus_digest(sf_dir, tables)
+    except OSError:
+        key = "path-" + hashlib.sha256(
+            sf_dir.rstrip("/").encode()).hexdigest()[:20]
+    return os.path.join(_TMP, kind, spark.sparkContext.applicationId, key)
+
+
+def session_fixture(spark, sf_dir: str, tables, kind: str, write) -> str:
+    """The directory of session fixture `kind`: the staged input a
+    registered key reads (a foreign-format copy, a partitioned layout,
+    a sink's output), built from `tables` at `sf_dir`.
+
+    The fixture rule: a fixture is built once per session and corpus
+    content, at session_dir — the applicationId keeps concurrent
+    processes apart, and the corpus digest keeps apart two corpora of
+    the same name and a corpus before and after an in-place rewrite.
+    On a miss write(scratch) fills a private scratch directory, which
+    one os.rename publishes with its manifest: an interrupted build is
+    never served, and a published fixture never changes, so every plan
+    built over it stays readable. Tables whose manifests hold absolute
+    data paths cannot be renamed into place; they take session_dir
+    alone and guard each committed version themselves."""
+    final = session_dir(spark, sf_dir, tables, kind)
+    if not is_published(final):
+        scratch = scratch_path(final, spark.sparkContext.applicationId)
+        shutil.rmtree(scratch, ignore_errors=True)
+        os.makedirs(scratch)
+        write(scratch)
+        publish(scratch, final, {"kind": kind,
+                                 "sf_dir": os.path.abspath(sf_dir),
+                                 "tables": sorted(set(tables))})
+    return final
 
 
 def stage_parquet(spark, kind: str, sf_dir: str, tables, name: str, build):

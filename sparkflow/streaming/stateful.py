@@ -136,12 +136,12 @@ def _counter_fn(
     the oracle's cents path (values are exact 2-decimal doubles)."""
     cnt, cents0 = state.get if state.exists else (0, 0)
     # Arrow chunks for a key within one micro-batch arrive unordered —
-    # concat + sort by arrival id before accumulating (a Flink keyed
-    # operator would see them in arrival order already).
+    # concat + sort by (ts, event_id), the batch analog's window order,
+    # before accumulating.
     chunks = [p for p in pdf_iter if len(p)]
     if not chunks:
         return
-    pdf = pd.concat(chunks).sort_values("event_id")
+    pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
     counts = cnt + pd.RangeIndex(1, len(pdf) + 1).to_numpy()
     # floor(x*100+0.5): replay the batch cents() half-up quantization
     # exactly — numpy .round() is half-to-even and diverges on .5 mids.
@@ -1095,7 +1095,7 @@ def _quiet_fn(
     quiet_since, silence = [], []
     chunks = [p for p in pdf_iter if len(p)]
     if chunks:
-        pdf = pd.concat(chunks).sort_values("event_id")
+        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
         for t in _ts_us(pdf["ts"]).to_numpy():
             if prev is not None and t - prev > GAP_SECONDS * 1_000_000:
                 quiet_since.append(prev)
@@ -1148,7 +1148,7 @@ if HAS_PROTOBUF:  # pragma: no cover - environment lacks protobuf
         def handleInputRows(
             self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
         ) -> Iterator[pd.DataFrame]:
-            pdf = pd.concat(list(rows)).sort_values("event_id")
+            pdf = pd.concat(list(rows)).sort_values(["ts", "event_id"])
             cnt, cents0 = self._state.get() if self._state.exists() else (0, 0)
             counts = cnt + pd.RangeIndex(1, len(pdf) + 1).to_numpy()
             # floor(x*100+0.5): replay the batch cents() half-up

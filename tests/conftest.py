@@ -45,19 +45,23 @@ def sf_med() -> str:
     return SF_MED
 
 
+def copy_corpus(src: str, dst, tables=TABLES) -> str:
+    """Copy the data files of `tables` from corpus `src` into the new
+    directory `dst`; returns its path."""
+    os.makedirs(dst)
+    for t in tables:
+        shutil.copyfile(os.path.join(src, f"{t}.parquet"),
+                        os.path.join(dst, f"{t}.parquet"))
+    return str(dst)
+
+
 @pytest.fixture
 def private_corpus(spark, sf_small, tmp_path):
     """A private copy of sf_small. On teardown every artifact published
     for it under the shared staging root is removed (matched by the
     manifest's recorded sf_dir), together with the session's bucketed
     registrations over it, so a test leaves no staged state behind."""
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    for t in TABLES:
-        shutil.copyfile(
-            os.path.join(sf_small, f"{t}.parquet"), corpus / f"{t}.parquet"
-        )
-    sf = str(corpus)
+    sf = copy_corpus(sf_small, tmp_path / "corpus")
     yield sf
     remove_published(spark, sf)
 

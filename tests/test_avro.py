@@ -176,21 +176,16 @@ def test_table_versions_cow_reuses_files_and_preserves_v1(spark, sf_small):
     manifest still equals the source table after the merge committed;
     (c) commits are atomic manifest swaps (no .tmp leftovers)."""
     import glob
-    import json
     import os
 
     import sparkflow
     from sparkflow.catalog import table
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources.io import _stage_versioned_orders, _tv_entries
 
     sparkflow.QUERIES["maintenance_table_versions"](spark, sf_small).collect()
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "table_versions",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
-    with open(os.path.join(base, "manifest_v1.json")) as fh:
-        v1 = [e["path"] for e in json.load(fh)["files"]]
-    with open(os.path.join(base, "manifest_v2.json")) as fh:
-        v2 = [e["path"] for e in json.load(fh)["files"]]
+    base = _stage_versioned_orders(spark, sf_small)
+    v1 = [e["path"] for e in _tv_entries(base, 1)]
+    v2 = [e["path"] for e in _tv_entries(base, 2)]
     reused = set(v1) & set(v2)
     assert len(reused) * 2 >= len(v1), (
         f"COW rewrote too much: {len(reused)}/{len(v1)} reused")
@@ -283,22 +278,17 @@ def test_scan_avro_streaming_twin_matches_batch(spark, sf_small):
     decode — the micro-batch twin of scan_avro's batch scan (same
     pattern as every streaming twin here: batch analog owns the oracle,
     the stream must reproduce it row-for-row across batches)."""
-    import os
-
     import pandas as pd
 
     import sparkflow
-    from sparkflow.sources import avrolite
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources import avrolite, staging
 
     # batch run stages the files and is the truth
     want = (
         sparkflow.QUERIES["scan_avro"](spark, sf_small)
         .toPandas().sort_values("o_orderkey").reset_index(drop=True)
     )
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "avro", spark.sparkContext.applicationId,
-                        f"orders_{sfkey}")
+    base = staging.session_dir(spark, sf_small, ("orders",), "avro")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
 
     def decode_part(it):
@@ -450,12 +440,10 @@ def test_table_versions_commit_is_first_writer_wins(spark, sf_small):
     import pytest
 
     import sparkflow
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources.io import _stage_versioned_orders
 
     sparkflow.QUERIES["maintenance_table_versions"](spark, sf_small).collect()
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "table_versions",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
+    base = _stage_versioned_orders(spark, sf_small)
     final = os.path.join(base, "manifest_v2.json")
     with open(final) as fh:
         winner = json.load(fh)
@@ -475,20 +463,13 @@ def test_table_versions_diff_reads_only_unshared_files(spark, sf_small):
     touch ONLY the files the two manifests do not share — 2×churn, not
     2×table (at 100 TB the difference between diffing two table scans
     and diffing the day's rewritten partitions)."""
-    import json
-    import os
-
     import sparkflow
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources.io import _stage_versioned_orders, _tv_entries
 
     df = sparkflow.QUERIES["maintenance_table_versions"](spark, sf_small)
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "table_versions",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
-    with open(os.path.join(base, "manifest_v1.json")) as fh:
-        f1 = [e["path"] for e in json.load(fh)["files"]]
-    with open(os.path.join(base, "manifest_v2.json")) as fh:
-        f2 = [e["path"] for e in json.load(fh)["files"]]
+    base = _stage_versioned_orders(spark, sf_small)
+    f1 = [e["path"] for e in _tv_entries(base, 1)]
+    f2 = [e["path"] for e in _tv_entries(base, 2)]
     shared = set(f1) & set(f2)
     scanned = {
         "/" + p.split("://", 1)[-1].lstrip("/") if "://" in p else p
@@ -506,18 +487,12 @@ def test_time_travel_pruned_skips_files(spark, sf_small):
     strictly fewer files than manifest v2 references, every scanned
     file must be manifest-listed, and the key band must be fully
     covered (no false prune — the oracle differential reproves values)."""
-    import json
-    import os
-
     import sparkflow
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources.io import _stage_versioned_orders, _tv_entries
 
     df = sparkflow.QUERIES["scan_time_travel_pruned"](spark, sf_small)
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "table_versions",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
-    with open(os.path.join(base, "manifest_v2.json")) as fh:
-        v2 = [e["path"] for e in json.load(fh)["files"]]
+    base = _stage_versioned_orders(spark, sf_small)
+    v2 = [e["path"] for e in _tv_entries(base, 2)]
     scanned = {
         "/" + p.split("://", 1)[-1].lstrip("/") if "://" in p else p
         for p in df.inputFiles()
@@ -532,11 +507,10 @@ def test_vacuum_removes_only_orphans(spark, sf_small):
     every manifest-referenced file survives, and both versions remain
     fully readable (time travel intact post-vacuum)."""
     import glob
-    import json
     import os
 
     import sparkflow
-    from sparkflow.sources.io import _TMP, _stage_versioned_orders
+    from sparkflow.sources.io import _stage_versioned_orders, _tv_entries
 
     base = _stage_versioned_orders(spark, sf_small)
     orphans = glob.glob(os.path.join(base, "data", "orphan", "*.parquet"))
@@ -544,8 +518,7 @@ def test_vacuum_removes_only_orphans(spark, sf_small):
     sparkflow.QUERIES["maintenance_vacuum"](spark, sf_small).collect()
     assert not glob.glob(os.path.join(base, "data", "orphan", "*.parquet"))
     for v in (1, 2):
-        with open(os.path.join(base, f"manifest_v{v}.json")) as fh:
-            files = [e["path"] for e in json.load(fh)["files"]]
+        files = [e["path"] for e in _tv_entries(base, v)]
         assert all(os.path.exists(f) for f in files), v
         assert spark.read.parquet(*files).count() > 0
 
@@ -563,25 +536,22 @@ def test_cdc_apply_reuse_tombstones_and_time_travel(spark, sf_small):
     import os
 
     import sparkflow
+    from sparkflow.sources import staging
     from sparkflow.sources.io import (
-        _TMP,
         _cdc_net_changelog,
         _cdc_users_params,
+        _tv_entries,
     )
 
     df = sparkflow.QUERIES["maintenance_table_cdc_apply"](spark, sf_small)
     res = df.toPandas()
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "cdc_users",
-                        spark.sparkContext.applicationId, f"users_{sfkey}")
+    base = staging.session_dir(spark, sf_small, ("events",), "cdc_users")
     with open(os.path.join(base, "params.json")) as fh:
         params = json.load(fh)
     assert (params["cut"], params["band_hi"]) == _cdc_users_params(
         spark, sf_small)
-    with open(os.path.join(base, "manifest_v1.json")) as fh:
-        v1 = json.load(fh)["files"]
-    with open(os.path.join(base, "manifest_v2.json")) as fh:
-        v2 = json.load(fh)["files"]
+    v1 = _tv_entries(base, 1)
+    v2 = _tv_entries(base, 2)
     p1, p2 = {e["path"] for e in v1}, {e["path"] for e in v2}
 
     # (1) genuine reuse AND a genuine rewrite, stats-sound either way
@@ -625,13 +595,11 @@ def test_add_column_is_metadata_only(spark, sf_small):
     import os
 
     import sparkflow
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources import staging
 
     df = sparkflow.QUERIES["maintenance_table_add_column"](spark, sf_small)
     res = df.toPandas()
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "cdc_users",
-                        spark.sparkContext.applicationId, f"users_{sfkey}")
+    base = staging.session_dir(spark, sf_small, ("events",), "cdc_users")
     with open(os.path.join(base, "manifest_v2.json")) as fh:
         v2 = json.load(fh)
     with open(os.path.join(base, "manifest_v3.json")) as fh:
@@ -714,21 +682,17 @@ def test_table_optimize_is_selective_and_idempotent(spark, sf_small):
     identity (selectivity — the decision read only manifest metadata),
     the file count shrinks 32 → ≤ 7, v1 stays readable with the same
     total rows (time travel), and a second call is a manifest no-op."""
-    import json
     import os
 
     import sparkflow
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources import staging
+    from sparkflow.sources.io import _tv_entries
 
     df = sparkflow.QUERIES["maintenance_table_optimize"](spark, sf_small)
     n = df.count()
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "table_optimize",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
-    with open(os.path.join(base, "manifest_v1.json")) as fh:
-        v1 = json.load(fh)["files"]
-    with open(os.path.join(base, "manifest_v2.json")) as fh:
-        v2 = json.load(fh)["files"]
+    base = staging.session_dir(spark, sf_small, ("orders",), "table_optimize")
+    v1 = _tv_entries(base, 1)
+    v2 = _tv_entries(base, 2)
     assert len(v1) == 32 and len(v2) <= 7, (len(v1), len(v2))
     mean_rows = sum(e["n_rows"] for e in v1) / len(v1)
     big = {e["path"] for e in v1 if e["n_rows"] >= mean_rows}
@@ -748,20 +712,15 @@ def test_zorder_pruned_read_beats_single_dim_stats(spark, sf_small):
     the scan touches exactly the 2-D hit set, and every scanned file is
     manifest-listed. (The oracle differential separately reproves the
     returned values, so a false prune cannot hide.)"""
-    import json
-    import os
-
     import sparkflow
     from sparkflow.catalog import table
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources import staging
+    from sparkflow.sources.io import _tv_entries
 
     df = sparkflow.QUERIES["scan_zorder_pruned"](spark, sf_small)
     assert df.count() > 0
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "zorder",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
-    with open(os.path.join(base, "manifest_v1.json")) as fh:
-        ents = json.load(fh)["files"]
+    base = staging.session_dir(spark, sf_small, ("orders",), "zorder")
+    ents = _tv_entries(base, 1)
     from pyspark.sql import functions as F
 
     cmin, cmax, omin, omax = table(spark, sf_small, "orders").agg(
@@ -801,24 +760,20 @@ def test_optimize_zorder_commits_prunable_version(spark, sf_small):
     alone on v2 — AND time travel holds: v1 reads bit-identical to the
     base table after the optimize commit. (The driver oracle separately
     reproves v2's full content identity.)"""
-    import json
     import os
 
     import sparkflow
     from pyspark.sql import functions as F
     from sparkflow.catalog import table
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources.io import _stage_zorder_optimized, _tv_entries
 
     df = sparkflow.QUERIES["maintenance_table_optimize_zorder"](spark, sf_small)
     orders = table(spark, sf_small, "orders")
     assert df.count() == orders.count()
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "table_optimize_zorder",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
+    base = _stage_zorder_optimized(spark, sf_small)
     v = {}
     for n in (1, 2):
-        with open(os.path.join(base, f"manifest_v{n}.json")) as fh:
-            v[n] = json.load(fh)["files"]
+        v[n] = _tv_entries(base, n)
     cmin, cmax, omin, omax = orders.agg(
         F.min("o_custkey"), F.max("o_custkey"),
         F.min("o_orderkey"), F.max("o_orderkey"),
@@ -978,23 +933,19 @@ def test_optimize_zorder_incremental_rewrites_only_the_tail(spark, sf_small):
     stats hits no appended-tail file and strictly beats either single
     dimension. (The driver oracle separately reproves full content =
     base ∪ appended.)"""
-    import json
     import os
 
     import sparkflow
     from pyspark.sql import functions as F
     from sparkflow.catalog import table
-    from sparkflow.sources.io import _TMP
+    from sparkflow.sources.io import _stage_zorder_optimized, _tv_entries
 
     df = sparkflow.QUERIES[
         "maintenance_table_optimize_zorder_incremental"](spark, sf_small)
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "table_optimize_zorder",
-                        spark.sparkContext.applicationId, f"orders_{sfkey}")
+    base = _stage_zorder_optimized(spark, sf_small)
     v = {}
     for n in (2, 3, 4):
-        with open(os.path.join(base, f"manifest_v{n}.json")) as fh:
-            v[n] = json.load(fh)["files"]
+        v[n] = _tv_entries(base, n)
     paths = {n: {e["path"] for e in v[n]} for n in v}
     appended = paths[3] - paths[2]
     assert appended, "staging appended no files"

@@ -63,10 +63,10 @@ def test_partitioned_sink_prunes_partitions(spark, sf_small):
     sparkflow.QUERIES["sink_parquet"](spark, sf_small).collect()  # materialize sink
     import pyspark.sql.functions as F
 
-    app = spark.sparkContext.applicationId
-    back = spark.read.parquet(f"/tmp/sparkflow_io/{app}/lineitem_by_flag").filter(
-        F.col("l_returnflag") == "R"
-    )
+    from sparkflow.sources import staging
+
+    out = staging.session_dir(spark, sf_small, ("lineitem",), "lineitem_by_flag")
+    back = spark.read.parquet(out).filter(F.col("l_returnflag") == "R")
     plan = formatted_plan(back)
     assert "PartitionFilters" in plan and "l_returnflag" in plan
 
@@ -324,12 +324,10 @@ def test_compaction_shrinks_file_count(spark, sf_small):
     import glob
     import os
 
+    from sparkflow.sources import staging
+
     sparkflow.QUERIES["maintenance_compaction"](spark, sf_small).collect()
-    base = os.path.join(
-        "/tmp/sparkflow_io/compact",
-        spark.sparkContext.applicationId,
-        f"events_{sf_small.rstrip('/').rsplit('/', 1)[-1]}",
-    )
+    base = staging.session_dir(spark, sf_small, ("events",), "compact")
     frag = glob.glob(os.path.join(base, "fragmented", "**", "*.parquet"), recursive=True)
     packed = glob.glob(os.path.join(base, "compacted", "*.parquet"))
     assert len(frag) >= 20, frag

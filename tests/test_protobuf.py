@@ -299,21 +299,18 @@ def test_scan_protobuf_streaming_twin_matches_batch(spark):
     — the micro-batch twin of scan_protobuf's batch scan (same contract
     as the Avro twin: batch analog owns the oracle, the stream must
     reproduce it row-for-row across batches)."""
-    import os
-
     import pandas as pd
 
     import sparkflow
-    from sparkflow.sources.io import _PB_FIELDS, _TMP
+    from sparkflow.sources import staging
+    from sparkflow.sources.io import _PB_FIELDS
 
     sf_small = "/root/testdata/sf0.001"
     want = (
         sparkflow.QUERIES["scan_protobuf"](spark, sf_small)
         .toPandas().sort_values("o_orderkey").reset_index(drop=True)
     )
-    sfkey = sf_small.rstrip("/").rsplit("/", 1)[-1]
-    base = os.path.join(_TMP, "protobuf", spark.sparkContext.applicationId,
-                        f"orders_{sfkey}")
+    base = staging.session_dir(spark, sf_small, ("orders",), "protobuf")
     cols = [name for _, name, _ in _PB_FIELDS]
 
     def decode_part(it):

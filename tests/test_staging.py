@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import shutil
 
+from conftest import copy_corpus
+
 import sparkflow
 from sparkflow.sources import staging
 from sparkflow.sources.io import _ROLLUP_TABLES
@@ -81,6 +83,7 @@ def test_digest_change_invalidates(spark, private_corpus):
 
 def test_corpus_rewritten_in_place_gets_new_answer(spark, private_corpus, duck):
     """Session memos (catalog.table's loaded frame, the KNN query row)
+    and session fixtures (scan_schema_evolution's two producer files)
     are keyed on the corpus content, not its path: events and
     embeddings rewritten in place within one session answer as the
     rewritten corpus does. Embeddings lose rows, the minimum vec_id
@@ -94,7 +97,7 @@ def test_corpus_rewritten_in_place_gets_new_answer(spark, private_corpus, duck):
     from tools.check import compare
 
     sf = private_corpus
-    keys = ("agg_distinct", "llm_knn_cosine")
+    keys = ("agg_distinct", "llm_knn_cosine", "scan_schema_evolution")
     before = {k: sparkflow.QUERIES[k](spark, sf).toPandas() for k in keys}
     ev_path, emb_path = (os.path.join(sf, f"{t}.parquet")
                          for t in ("events", "embeddings"))
@@ -111,6 +114,42 @@ def test_corpus_rewritten_in_place_gets_new_answer(spark, private_corpus, duck):
         want = con.execute(sparkflow.ORACLES[k]).fetchdf()
         assert compare(got, want) == "EXACT", (k, compare(got, want))
         assert compare(before[k], want) != "EXACT", k
+
+
+def test_same_named_corpora_get_their_own_fixtures(spark, sf_small, sf_med,
+                                                   tmp_path, duck):
+    """Two corpora with the same directory name and different content in
+    one session: each key that reads a session fixture answers as its
+    own corpus does, and a sink_parquet plan built over the first
+    corpus still reads its own output after the second corpus's sink
+    has been written."""
+    from tools.check import compare
+
+    corpora = [copy_corpus(sf_small, tmp_path / "a" / "corpus"),
+               copy_corpus(sf_med, tmp_path / "b" / "corpus")]
+
+    def check(key, sf, df):
+        want = duck(sf).execute(sparkflow.ORACLES[key]).fetchdf()
+        assert compare(df.toPandas(), want) == "EXACT", (key, sf)
+
+    sink_first = sparkflow.QUERIES["sink_parquet"](spark, corpora[0])
+    for sf in corpora:
+        for key in ("scan_orc", "scan_schema_evolution"):
+            check(key, sf, sparkflow.QUERIES[key](spark, sf))
+    check("sink_parquet", corpora[1],
+          sparkflow.QUERIES["sink_parquet"](spark, corpora[1]))
+    check("sink_parquet", corpora[0], sink_first)
+
+
+def test_session_dir_of_undigestable_corpus(tmp_path):
+    """A corpus with no local data files to digest still gets a session
+    fixture address, one per path."""
+    from types import SimpleNamespace
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    a, b = (staging.session_dir(spark, str(tmp_path / d / "corpus"),
+                                ("events",), "orc") for d in "ab")
+    assert a != b and os.path.dirname(a) == os.path.dirname(b)
 
 
 def test_concurrent_publish_loser_discards(tmp_path):
@@ -151,13 +190,7 @@ def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
     age), crashed-writer scratches and stale/undigestable artifacts are
     reclaimed only past the min-age window (the open-reader contract),
     and empty parents disappear."""
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    shutil.copy(
-        os.path.join(sf_small, "events.parquet"),
-        corpus / "events.parquet",
-    )
-    sf = str(corpus)
+    sf = copy_corpus(sf_small, tmp_path / "corpus", ("events",))
 
     def build():
         return (
@@ -193,7 +226,7 @@ def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
 
     # mutate the corpus: the artifact is now stale (unreachable) but a
     # YOUNG manifest keeps it (an open reader may still be scanning)
-    os.utime(corpus / "events.parquet")
+    os.utime(os.path.join(sf, "events.parquet"))
     s = staging.staging_vacuum(min_age_sec=3600)
     assert staging.is_published(live)
 
@@ -209,7 +242,7 @@ def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
         spark, "testvac", sf, ["events"], "counts", build
     )
     gone = staging.shared_path("testvac", sf, ["events"], "counts")
-    shutil.rmtree(corpus)
+    shutil.rmtree(sf)
     mf = os.path.join(gone, "_sparkflow_manifest.json")
     os.utime(mf, (past, past))
     s = staging.staging_vacuum(min_age_sec=3600)
@@ -243,13 +276,7 @@ def test_mid_read_publish_never_tears(spark, sf_small, tmp_path):
        the open-reader window and is reclaimed after it."""
     import pandas as pd
 
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    for t in sparkflow.catalog.TABLES:
-        shutil.copyfile(
-            os.path.join(sf_small, f"{t}.parquet"), corpus / f"{t}.parquet"
-        )
-    sf = str(corpus)
+    sf = copy_corpus(sf_small, tmp_path / "corpus")
     from sparkflow.catalog import table as _table
 
     def build():
@@ -273,7 +300,7 @@ def test_mid_read_publish_never_tears(spark, sf_small, tmp_path):
     # (2) concurrent ingest: corpus mutates (append-style mtime bump),
     # the ingest session publishes under the NEW digest
     old_final = final
-    os.utime(corpus / "events.parquet")
+    os.utime(os.path.join(sf, "events.parquet"))
     new_final = staging.shared_path("race", sf, ("events",), "counts")
     assert new_final != old_final
     staging.stage_parquet(spark, "race", sf, ("events",), "counts", build)
@@ -301,13 +328,7 @@ def test_maintenance_vacuum_sweeps_staging_root(spark, sf_small, tmp_path):
     reclaimed by running THE KEY, while a live artifact for an intact
     corpus survives, and the key's own output stays non-empty."""
     # live artifact on a private corpus copy
-    corpus = tmp_path / "live_corpus"
-    corpus.mkdir()
-    for t in sparkflow.catalog.TABLES:
-        shutil.copyfile(
-            os.path.join(sf_small, f"{t}.parquet"), corpus / f"{t}.parquet"
-        )
-    sf = str(corpus)
+    sf = copy_corpus(sf_small, tmp_path / "live_corpus")
     from sparkflow.catalog import table as _table
 
     staging.stage_parquet(
@@ -318,15 +339,11 @@ def test_maintenance_vacuum_sweeps_staging_root(spark, sf_small, tmp_path):
 
     # orphan artifact whose corpus is then deleted; manifest backdated
     # beyond the open-reader window
-    gone = tmp_path / "gone_corpus"
-    gone.mkdir()
-    shutil.copyfile(
-        os.path.join(sf_small, "events.parquet"), gone / "events.parquet"
-    )
-    orphan_path = staging.shared_path("mvkind", str(gone), ("events",), "dead")
+    gone = copy_corpus(sf_small, tmp_path / "gone_corpus", ("events",))
+    orphan_path = staging.shared_path("mvkind", gone, ("events",), "dead")
     staging.stage_parquet(
-        spark, "mvkind", str(gone), ("events",), "dead", lambda: _table(
-            spark, str(gone), "events").groupBy("event_type").count(),
+        spark, "mvkind", gone, ("events",), "dead", lambda: _table(
+            spark, gone, "events").groupBy("event_type").count(),
     )
     shutil.rmtree(gone)
     old = 4000.0
@@ -352,13 +369,7 @@ def test_staging_vacuum_keeps_unverifiable_source(
     with its table files permanently deleted ('no data files') is
     permanently unresolvable — keeping those forever is a disk leak, so
     they sweep as undigestable past the age window (r14 advice)."""
-    corpus = tmp_path / "corpus_unv"
-    corpus.mkdir()
-    shutil.copy(
-        os.path.join(sf_small, "events.parquet"),
-        corpus / "events.parquet",
-    )
-    sf = str(corpus)
+    sf = copy_corpus(sf_small, tmp_path / "corpus_unv", ("events",))
 
     def build():
         return (
@@ -409,7 +420,7 @@ def test_staging_vacuum_keeps_unverifiable_source(
     # permanent no-data-files: dir exists, table files deleted ->
     # corpus_digest's deterministic FileNotFoundError -> undigestable,
     # swept once past the age window (NOT kept forever)
-    os.remove(corpus / "events.parquet")
+    os.remove(os.path.join(sf, "events.parquet"))
     os.utime(mf, (past, past))
     s = staging.staging_vacuum(min_age_sec=3600)
     assert not os.path.exists(live)
@@ -420,13 +431,7 @@ def test_staging_vacuum_stale_digest_sweeps(spark, sf_small, tmp_path):
     """A source that digests SUCCESSFULLY to a different address is the
     ordinary stale case: swept past the window (split out of the
     unverifiable test when r14 advice tightened no-data-files)."""
-    corpus = tmp_path / "corpus_stale"
-    corpus.mkdir()
-    shutil.copy(
-        os.path.join(sf_small, "events.parquet"),
-        corpus / "events.parquet",
-    )
-    sf = str(corpus)
+    sf = copy_corpus(sf_small, tmp_path / "corpus_stale", ("events",))
 
     def build():
         return (
@@ -443,7 +448,7 @@ def test_staging_vacuum_stale_digest_sweeps(spark, sf_small, tmp_path):
     # rewrite the source file -> mtime bump -> different digest
     shutil.copy(
         os.path.join(sf_small, "events.parquet"),
-        corpus / "events.parquet",
+        os.path.join(sf, "events.parquet"),
     )
     mf = os.path.join(live, "_sparkflow_manifest.json")
     past = os.path.getmtime(mf) - 7200

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from conftest import FakeTimerState
 
 import sparkflow
 from sparkflow.streaming import stateful
@@ -40,6 +41,18 @@ def test_stateful_counter_matches_analog(spark, stream_dir, sf_small):
     pd.testing.assert_frame_equal(
         got[["event_id", "running_count", "running_sum"]], want, check_dtype=False
     )
+    # a key's micro-batch whose id order differs from its time order
+    # counts in (ts, event_id) order, as the analog's window does
+    batch = pd.DataFrame({
+        "event_id": [1, 2, 3],
+        "ts": pd.to_datetime(["2024-01-01 00:00:02", "2024-01-01 00:00:01",
+                              "2024-01-01 00:00:01"]),
+        "value": [1.0, 2.0, 4.0],
+    })
+    (out,) = stateful._counter_fn((7,), iter([batch]), FakeTimerState())
+    assert out["event_id"].tolist() == [2, 3, 1]
+    assert out["running_count"].tolist() == [1, 2, 3]
+    assert out["running_sum"].tolist() == [2.0, 6.0, 7.0]
 
 
 def test_dedup_within_watermark_matches_analog(spark, stream_dir, sf_small):
@@ -144,6 +157,18 @@ def test_timeout_timers_fire(spark, stream_dir, sf_small):
     final_want = set(analog_us[analog["silence_seconds"].isna()])
     got_final = got[got["silence_seconds"] == -1]
     assert set(got_final["quiet_since_us"]).issubset(final_want)
+    # a key's micro-batch whose id order differs from its time order:
+    # the 3 h gap between its two events is a quiet row
+    state = FakeTimerState()
+    batch = pd.DataFrame({
+        "event_id": [1, 2],
+        "ts": pd.to_datetime(["2024-01-01 03:00:00", "2024-01-01 00:00:00"]),
+    })
+    (out,) = stateful._quiet_fn((7,), iter([batch]), state)
+    t0 = int(pd.Timestamp("2024-01-01").value // 1000)
+    assert out["quiet_since_us"].tolist() == [t0]
+    assert out["silence_seconds"].tolist() == [3 * 3600]
+    assert state.get == (t0 + 3 * 3600 * 1_000_000,)
 
 
 def test_tumbling_append_emits_closed_windows_only(spark, stream_dir, sf_small):
