@@ -22,21 +22,32 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+#: key -> the keys registered with ``oracle_of`` that key
+_SHARERS: dict[str, list[str]] = {}
 
 
-def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryFn]:
+def register(name: str, oracle: Optional[str] = None,
+             oracle_of: Optional[str] = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn`` under ``name`` with an optional DuckDB oracle.
 
     ``oracle=None`` means the op is not SQL-expressible (driver records a
-    rows-only check); pytest covers its semantics instead.
+    rows-only check); pytest covers its semantics instead. ``oracle_of``
+    names the key whose oracle ``name`` shares instead (a maintained view
+    and the cold query it answers); a key that registers later hands its
+    oracle on when it registers.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query registration: {name}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        text = oracle
+        if oracle_of is not None:
+            _SHARERS.setdefault(oracle_of, []).append(name)
+            text = ORACLES.get(oracle_of)
+        if text is not None:
+            for key in (name, *_SHARERS.get(name, ())):
+                ORACLES[key] = text
         return fn
 
     return deco

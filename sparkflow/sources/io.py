@@ -15,16 +15,18 @@ Spark-first notes:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import table
-from ..operators.joins import _Q5_ORACLE
-from ..oracle_compat import cents, dsum, revenue_units, sql_dsum, sql_rev_sum
+from ..operators.aggregates import _charge_units
+from ..oracle_compat import cents, dsum, revenue_units, sql_dsum
 from ..registry import register
-from .staging import session_dir, session_fixture
+from .staging import session_dir, session_fixture, stage_parquet
 
 
 @register(
@@ -516,624 +518,237 @@ def maintenance_json_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: source tables each rollup's digest (and correctness) depends on
-_ROLLUP_TABLES = {
-    "tumbling": ("events",), "distinct": ("events",),
-    "pricing": ("lineitem",),
-    "q5": ("lineitem", "orders", "customer", "supplier", "nation"),
-    "q3": ("lineitem", "orders", "customer"),
-}
+@dataclass(frozen=True)
+class RollupView:
+    """One incrementally maintained aggregate view, declared once: the
+    partials, their merge, the delta-only update, the registered keys
+    and their oracle all derive from it (Flink's AggregateFunction
+    split: partials = createAccumulator/add, merge, read = getResult).
+
+    - `tables` are the tables the view depends on (the digest address
+      of its staged artifacts); the first is the fact table ingest
+      batches land in.
+    - `source` maps a fact-shaped frame to the frame the partials group.
+      A view filter (pricing's shipdate cutoff) applies to the base and
+      to every batch alike. A join view's source is the delta-join: a
+      batch ΔL joins the dimension tables and its partials merge into
+      the view, so the fact history is never rescanned.
+    - `keys` and `measures` build the partials; each measure is a
+      (name, partial aggregate, merge monoid) triple: SUM, or bitmap OR
+      for exact distinct (a user present in two batches counts once).
+    - `read` turns merged partials into the answer.
+    - `cold` is the key whose answer the view maintains; its oracle, the
+      full recompute, is the view's oracle.
+
+    Money and revenue flow as integer units, so merged partials hold the
+    integers a full recompute sums, and `read` applies the cold plan's
+    IEEE operations to them: maintained and cold answers are
+    bit-identical. q3 keeps one row per order, so its view grows with
+    the order count; it is a maintained top-k whose 10-row serving
+    frame is recomputed from the view after each merge."""
+
+    name: str
+    tables: tuple
+    keys: Callable[[], list]
+    measures: Callable[[], list]
+    read: Callable[[DataFrame], DataFrame]
+    cold: str | None = None
+    source: Callable = lambda spark, sf_dir, src: src
+
+    def partials(self, spark: SparkSession, sf_dir: str, src: DataFrame) -> DataFrame:
+        return self.source(spark, sf_dir, src).groupBy(*self.keys()).agg(
+            *[agg.alias(name) for name, agg, _ in self.measures()])
+
+    def merge(self, parts: DataFrame) -> DataFrame:
+        measures = self.measures()
+        names = {name for name, _, _ in measures}
+        return parts.groupBy(*[c for c in parts.columns if c not in names]).agg(
+            *[monoid(name).alias(name) for name, _, monoid in measures])
+
+    def update(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The delta-only update: the fact table splits 90/10 on its key,
+        the 10 % ingest batch is staged as its own directory (the landing
+        zone an ingest job writes) and the base partials from the rest;
+        the update reads only those two (plan pinned in the tests)."""
+        fact = self.tables[0]
+        batch = F.col(_INGEST_KEY[fact]) % 10 == 0
+        delta = stage_parquet(
+            spark, "ingest", sf_dir, (fact,), f"{fact}_delta",
+            lambda: table(spark, sf_dir, fact).filter(batch))
+        base = stage_parquet(
+            spark, "ingest", sf_dir, self.tables, f"{self.name}_base_partials",
+            lambda: self.partials(
+                spark, sf_dir, table(spark, sf_dir, fact).filter(~batch)))
+        return self.merge(base.unionByName(self.partials(spark, sf_dir, delta)))
+
+    def serve(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Partials of the whole fact table and the answer read from
+        them, both published content-addressed: a repeat call in any
+        session scans the serving frame."""
+        mat = stage_parquet(
+            spark, "rollup", sf_dir, self.tables, self.name,
+            lambda: self.partials(
+                spark, sf_dir, table(spark, sf_dir, self.tables[0])))
+        return stage_parquet(spark, "rollup", sf_dir, self.tables,
+                             f"{self.name}_serve", lambda: self.read(mat))
+
+    def ingest(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The answer read from the updated partials, published as the
+        view's next version."""
+        return self.read(stage_parquet(
+            spark, "ingest", sf_dir, self.tables, f"{self.name}_partials_v2",
+            lambda: self.update(spark, sf_dir)))
 
 
-def _staged_rollup(spark: SparkSession, sf_dir: str, name: str, build):
-    """DURABLE staged IVM rollup partials (maintenance_rollup_* below):
-    built once into an app-scoped scratch and published atomically
-    under the content-addressed shared root, so any session over the
-    same corpus digest reuses them (a changed corpus changes the
-    digest, so stale partials can never serve)."""
-    from . import staging
-
-    return staging.stage_parquet(
-        spark, "rollup", sf_dir, _ROLLUP_TABLES[name], name, build
-    )
+#: the key an ingest batch is split on, per fact table
+_INGEST_KEY = {"events": "event_id", "lineitem": "l_orderkey"}
 
 
-def _publish_serve(spark: SparkSession, sf_dir: str, name: str,
-                   frame: DataFrame) -> DataFrame:
-    """Write-or-reuse the serving artifact for `name` and return a scan
-    of it (the maintenance keys' return path — a second call in any
-    session is a constant-size read)."""
-    from . import staging
-
-    return staging.stage_parquet(
-        spark, "rollup", sf_dir, _ROLLUP_TABLES[name], f"{name}_serve",
-        lambda: frame,
-    )
+def _sums(**partials) -> list:
+    """Measures whose merge monoid is SUM."""
+    return [(name, agg, F.sum) for name, agg in partials.items()]
 
 
-def tumbling_partials(src: DataFrame) -> DataFrame:
-    """(hour_start, event_type, n_events, value_cents) partials over an
-    arbitrary events-shaped frame — applied to the full table at stage
-    time and to a DELTA-ONLY scan at ingest-merge time (the two callers
-    of IVM)."""
-    hour = F.expr(
-        "timestamp_micros(((unix_micros(ts) div 1000000) div 3600)"
-        " * 3600 * 1000000)"
-    )
-    return src.groupBy(hour.alias("hour_start"), "event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(cents("value")).alias("value_cents"),
-    )
+def _event_measures() -> list:
+    return _sums(n_events=F.count(F.lit(1)), value_cents=F.sum(cents("value")))
 
 
-def tumbling_merge(parts: DataFrame) -> DataFrame:
-    """Monoid merge of tumbling partials (SUM per output group) —
-    base ⊎ delta partials collapse back to output granularity."""
-    return parts.groupBy("hour_start", "event_type").agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("value_cents").alias("value_cents"),
-    )
+def _event_read(*keys):
+    return lambda mat: mat.select(
+        *keys, "n_events",
+        (F.col("value_cents").cast("double") / 100.0).alias("value_sum"))
 
 
-def tumbling_rollup(spark: SparkSession, sf_dir: str):
-    """(hour_start, event_type, n_events, value_cents) partials — the
-    materialized view behind the 1-hour tumbling aggregate. Count and
-    integer-cents sum are commutative monoids, so partials at output
-    granularity merge across ingest batches by SUM and the read side
-    reconstructs the raw plan's doubles bit-exactly
-    (SUM(int)::double / 100 is associative over the integer sums)."""
-    return _staged_rollup(
-        spark, sf_dir, "tumbling",
-        lambda: tumbling_partials(table(spark, sf_dir, "events")),
-    )
-
-
-def distinct_partials(src: DataFrame) -> DataFrame:
-    """(event_type, bucket, bm, n_events) bitmap partials over an
-    arbitrary events-shaped frame (full table at stage time, delta-only
-    scan at ingest-merge time)."""
+def _q5_source(spark: SparkSession, sf_dir: str, li: DataFrame) -> DataFrame:
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", F.year("o_orderdate").alias("o_year"))
+    customer = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    supplier = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
-        src.select("event_type", F.col("user_id").alias("k"))
-        .groupBy("event_type", F.bitmap_bucket_number("k").alias("bucket"))
-        .agg(
-            F.bitmap_construct_agg(F.bitmap_bit_position("k")).alias("bm"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
+        li.select("l_orderkey", "l_suppkey", revenue_units().alias("rev_u"))
+        .join(orders, F.col("l_orderkey") == orders.o_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(supplier, (F.col("l_suppkey") == supplier.s_suppkey)
+              & (F.col("c_nationkey") == supplier.s_nationkey))
+        .join(F.broadcast(nation), supplier.s_nationkey == F.col("n_nationkey"))
     )
 
 
-def distinct_merge(parts: DataFrame) -> DataFrame:
-    """Monoid merge of bitmap partials: bitmaps OR (set union — a user
-    present in both base and delta counts once), event counts SUM."""
-    return parts.groupBy("event_type", "bucket").agg(
-        F.bitmap_or_agg("bm").alias("bm"),
-        F.sum("n_events").alias("n_events"),
+def _q3_source(spark: SparkSession, sf_dir: str, li: DataFrame) -> DataFrame:
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate")
+    cust = (table(spark, sf_dir, "customer")
+            .filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey"))
+    return (
+        li.select("l_orderkey", revenue_units().alias("rev_u"))
+        .join(orders, F.col("l_orderkey") == orders.o_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
     )
 
 
-def distinct_rollup(spark: SparkSession, sf_dir: str):
-    """(event_type, bucket, bm, n_events) partials — EXACT distinct as
-    mergeable bitmaps (agg_bitmap_distinct's machinery as a maintained
-    artifact): each user sets one bit in one fixed bucket bitmap, so
-    buckets are disjoint, bitmaps OR-merge across ingest batches, and
-    n_users = Σ bitmap_count — exact at any history length without
-    rescanning raw events. Partial row count is types × ⌈users/2²⁵⌉,
-    orders of magnitude below the event count."""
-    return _staged_rollup(
-        spark, sf_dir, "distinct",
-        lambda: distinct_partials(table(spark, sf_dir, "events")),
-    )
+def _revenue_measures() -> list:
+    return _sums(rev_u=F.sum("rev_u"), n_items=F.count(F.lit(1)))
 
 
-def pricing_partials(src: DataFrame) -> DataFrame:
-    """Q1 integer-monoid partials over an arbitrary lineitem-shaped
-    frame (the shipdate filter is part of the view definition, so it
-    applies to base and delta alike)."""
-    li = src.filter(
-        F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp")
-    )
-    disc_price = F.floor(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-        * 10000 + F.lit(0.5)
-    ).cast("long")
-    charge = F.floor(
-        F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-        * (F.lit(1) + F.col("l_tax")) * 1000000 + F.lit(0.5)
-    ).cast("long")
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(cents("l_quantity")).alias("qty_c"),
-        F.sum(cents("l_extendedprice")).alias("price_c"),
-        F.sum(disc_price).alias("disc_price_u"),
-        F.sum(charge).alias("charge_u"),
-        F.sum(cents("l_discount")).alias("disc_c"),
-        F.count("l_quantity").alias("n_qty"),
-        F.count("l_extendedprice").alias("n_price"),
-        F.count("l_discount").alias("n_disc"),
-        F.count(F.lit(1)).alias("n_all"),
-    )
+def _pricing_read(mat: DataFrame) -> DataFrame:
+    def unit_sum(col, scale):
+        return F.sum(col).cast("double") / scale
 
-
-def pricing_merge(parts: DataFrame) -> DataFrame:
-    """Monoid merge of Q1 partials (every column an integer SUM)."""
-    return parts.groupBy("l_returnflag", "l_linestatus").agg(
-        *[F.sum(c).alias(c) for c in (
-            "qty_c", "price_c", "disc_price_u", "charge_u", "disc_c",
-            "n_qty", "n_price", "n_disc", "n_all",
-        )]
-    )
-
-
-def pricing_rollup(spark: SparkSession, sf_dir: str):
-    """Q1 pricing-summary partials per (l_returnflag, l_linestatus):
-    the five exact integer unit-sums plus the per-column non-null
-    counts — every one a commutative monoid, so the 6-row partial table
-    merges across ingest batches by SUM and reconstructs every raw
-    output column bit-exactly (same SUM(int)::double / scale [/ count]
-    expressions, same IEEE operations in the same order)."""
-    return _staged_rollup(
-        spark, sf_dir, "pricing",
-        lambda: pricing_partials(table(spark, sf_dir, "lineitem")),
-    )
-
-
-def tumbling_rollup_read(mat) -> DataFrame:
-    """Final tumbling frame from staged partials (shared by the
-    maintenance and ingest keys)."""
-    return mat.select(
-        "hour_start", "event_type", "n_events",
-        (F.col("value_cents").cast("double") / 100.0).alias("value_sum"),
-    )
-
-
-def distinct_rollup_read(mat) -> DataFrame:
-    """Final distinct-count frame from staged bitmap partials (shared
-    by the maintenance and ingest keys)."""
-    return mat.groupBy("event_type").agg(
-        F.sum(F.bitmap_count("bm")).cast("bigint").alias("n_users"),
-        F.sum("n_events").cast("bigint").alias("n_events"),
-    )
-
-
-def pricing_rollup_read(mat) -> DataFrame:
-    """Final Q1 frame from staged integer partials (shared by the
-    maintenance and ingest keys) — the exact raw expressions re-applied
-    over the merged integer sums."""
     return mat.groupBy("l_returnflag", "l_linestatus").agg(
-        (F.sum("qty_c").cast("double") / 100.0).alias("sum_qty"),
-        (F.sum("price_c").cast("double") / 100.0).alias("sum_base_price"),
-        (F.sum("disc_price_u").cast("double") / 10000.0).alias("sum_disc_price"),
-        (F.sum("charge_u").cast("double") / 1000000.0).alias("sum_charge"),
-        ((F.sum("qty_c").cast("double") / 100.0) / F.sum("n_qty")).alias("avg_qty"),
-        ((F.sum("price_c").cast("double") / 100.0) / F.sum("n_price")).alias("avg_price"),
-        ((F.sum("disc_c").cast("double") / 100.0) / F.sum("n_disc")).alias("avg_disc"),
+        unit_sum("qty_c", 100.0).alias("sum_qty"),
+        unit_sum("price_c", 100.0).alias("sum_base_price"),
+        unit_sum("disc_price_u", 10000.0).alias("sum_disc_price"),
+        unit_sum("charge_u", 1000000.0).alias("sum_charge"),
+        (unit_sum("qty_c", 100.0) / F.sum("n_qty")).alias("avg_qty"),
+        (unit_sum("price_c", 100.0) / F.sum("n_price")).alias("avg_price"),
+        (unit_sum("disc_c", 100.0) / F.sum("n_disc")).alias("avg_disc"),
         F.sum("n_all").alias("count_order"),
     )
 
 
-_SQL_TUMBLING = """
-    SELECT make_timestamp(((epoch_us(ts)//1000000//3600)*3600)*1000000)
-             AS hour_start,
-           event_type,
-           COUNT(*) AS n_events,
-           (CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-              / 100.0) AS value_sum
-    FROM events GROUP BY 1, 2
-    """
-
-
-@register("maintenance_rollup_tumbling", oracle=_SQL_TUMBLING)
-def maintenance_rollup_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVM posture for the tumbling-window aggregate (r10 verdict: the
-    stream_tumbling row is engine-floor at sf10 — map-side partials on
-    a KB shuffle, shards linearly, but DuckDB's in-process scan keeps a
-    ~4-6× constant; r11 sf30 proof shows the ratio improving with
-    scale). The PRODUCTION answer to a recurring engine-floor aggregate
-    is a materialized view: this pass builds (hour, type) partials once
-    per ingest, after which the query is a partials read — measured
-    same-window at sf10 in SCALE.md ('IVM posture A/B'). Oracle: the
-    full recompute from raw events — equality IS the IVM correctness
-    claim. Partials AND the serving frame are published
-    content-addressed (sources/staging.py), so the investment survives
-    sessions and a repeat call is a one-stage constant-size scan."""
-    mat = tumbling_rollup(spark, sf_dir)
-    return _publish_serve(spark, sf_dir, "tumbling", tumbling_rollup_read(mat))
-
-
-@register(
-    "maintenance_rollup_distinct",
-    oracle="""
-    SELECT event_type,
-           COUNT(DISTINCT user_id) AS n_users,
-           COUNT(*) AS n_events
-    FROM events GROUP BY event_type
-    """,
+#: the five maintained views, each registered as maintenance_rollup_<name>
+#: (the view served) and maintenance_rollup_ingest_<name> (one batch folded in)
+VIEWS = (
+    RollupView(
+        "tumbling", ("events",),
+        keys=lambda: [F.expr(
+            "timestamp_micros(((unix_micros(ts) div 1000000) div 3600)"
+            " * 3600 * 1000000)").alias("hour_start"), "event_type"],
+        measures=_event_measures,
+        read=_event_read("hour_start", "event_type"),
+        cold="stream_tumbling",
+    ),
+    RollupView(
+        "distinct", ("events",),
+        source=lambda spark, sf_dir, ev: ev.select(
+            "event_type", F.col("user_id").alias("k")),
+        keys=lambda: ["event_type", F.bitmap_bucket_number("k").alias("bucket")],
+        measures=lambda: [
+            ("bm", F.bitmap_construct_agg(F.bitmap_bit_position("k")),
+             F.bitmap_or_agg),
+            ("n_events", F.count(F.lit(1)), F.sum),
+        ],
+        read=lambda mat: mat.groupBy("event_type").agg(
+            F.sum(F.bitmap_count("bm")).cast("bigint").alias("n_users"),
+            F.sum("n_events").cast("bigint").alias("n_events")),
+        cold="agg_distinct",
+    ),
+    RollupView(
+        "pricing", ("lineitem",),
+        source=lambda spark, sf_dir, li: li.filter(
+            F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp")),
+        keys=lambda: ["l_returnflag", "l_linestatus"],
+        measures=lambda: _sums(
+            qty_c=F.sum(cents("l_quantity")),
+            price_c=F.sum(cents("l_extendedprice")),
+            disc_price_u=F.sum(revenue_units()),
+            charge_u=F.sum(_charge_units()),
+            disc_c=F.sum(cents("l_discount")),
+            n_qty=F.count("l_quantity"),
+            n_price=F.count("l_extendedprice"),
+            n_disc=F.count("l_discount"),
+            n_all=F.count(F.lit(1)),
+        ),
+        read=_pricing_read,
+        cold="agg_hash_group",
+    ),
+    RollupView(
+        "q5", ("lineitem", "orders", "customer", "supplier", "nation"),
+        source=_q5_source,
+        keys=lambda: [F.col("n_name").alias("nation"), "o_year"],
+        measures=_revenue_measures,
+        read=lambda mat: (
+            mat.filter(F.col("o_year").isin(1996, 1997)).groupBy("nation")
+            .agg((F.sum("rev_u").cast("double") / 10000.0).alias("revenue"))),
+        cold="join_multiway_star",
+    ),
+    RollupView(
+        "q3", ("lineitem", "orders", "customer"),
+        source=_q3_source,
+        keys=lambda: ["o_orderkey", "o_orderdate"],
+        measures=_revenue_measures,
+        read=lambda mat: (
+            mat.groupBy("o_orderkey", "o_orderdate")
+            .agg((F.sum("rev_u").cast("double") / 10000.0).alias("revenue"))
+            .orderBy(F.col("revenue").desc(), F.col("o_orderkey")).limit(10)),
+        cold="limit_topk",
+    ),
 )
-def maintenance_rollup_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVM posture for exact distinct counting (agg_distinct's
-    engine-floor row): maintained (type, bucket) bitmaps — OR-mergeable
-    across ingest batches, so exact uniques never rescan history
-    (agg_bitmap_distinct documents the machinery; this key makes it a
-    STAGED ARTIFACT): the answer is Σ bitmap_count over the partials
-    (types × ⌈users/2²⁵⌉ rows) instead of a raw-event distinct. Oracle:
-    COUNT(DISTINCT) recomputed from raw. Durable content-addressed
-    publish + a serving artifact (the 5-row final frame), so a repeat
-    call is a bare one-stage scan."""
-    mat = distinct_rollup(spark, sf_dir)
-    return _publish_serve(spark, sf_dir, "distinct", distinct_rollup_read(mat))
 
 
-@register(
-    "maintenance_rollup_pricing",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           (CAST(SUM(CAST(FLOOR((l_quantity) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_qty,
-           (CAST(SUM(CAST(FLOOR((l_extendedprice) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_base_price,
-           (CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000 + 0.5) AS BIGINT)) AS DOUBLE) / 10000.0) AS sum_disc_price,
-           (CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) AS sum_charge,
-           ((CAST(SUM(CAST(FLOOR((l_quantity) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) / COUNT(l_quantity)) AS avg_qty,
-           ((CAST(SUM(CAST(FLOOR((l_extendedprice) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) / COUNT(l_extendedprice)) AS avg_price,
-           ((CAST(SUM(CAST(FLOOR((l_discount) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) / COUNT(l_discount)) AS avg_disc,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def maintenance_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVM posture for the Q1 pricing summary (agg_hash_group — r10's
-    third justified engine-floor row; 99.95% of its time is map-side
-    partial aggregation, i.e. the query IS its partials): maintain the
-    6-row integer partials per ingest batch and every subsequent Q1 is
-    a constant-size read. The read side recomputes each output with the
-    SAME IEEE expressions as the raw plan (SUM(int)::double / scale,
-    then / count for the averages), so staged and raw results are
-    bit-identical — the oracle is the full recompute. Durable
-    content-addressed publish + a 6-row serving artifact."""
-    mat = pricing_rollup(spark, sf_dir)
-    return _publish_serve(spark, sf_dir, "pricing", pricing_rollup_read(mat))
+def _register_view_key(key: str, view: RollupView, step: str) -> None:
+    """Register `view.<step>` as `key`, sharing the cold key's oracle."""
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return getattr(view, step)(spark, sf_dir)
+
+    register(key, oracle_of=view.cold)(query)
 
 
-# ---------------------------------------------------------------------------
-# Q5 join-aggregate IVM (r11 verdict item 4: give the flagship the same
-# closure q1 got). The maintained view is the star join's aggregate at
-# (nation, order-year) granularity with integer revenue units — every
-# column a commutative monoid, so the ~(25 nations x years) partial
-# table merges across lineitem ingest batches by SUM, and the read side
-# (filter 1996-97, SUM to nation) reconstructs the raw plan's doubles
-# bit-exactly (one long total -> one double division, same IEEE op).
-# ---------------------------------------------------------------------------
-
-
-def q5_partials(spark: SparkSession, sf_dir: str, li_src: DataFrame) -> DataFrame:
-    """(nation, o_year, rev_units, n_items) partials over an arbitrary
-    lineitem-shaped frame — the DELTA-JOIN of incremental view
-    maintenance: for a join-aggregate V = γ(L ⋈ O ⋈ C ⋈ S ⋈ N), an
-    insert batch ΔL contributes γ(ΔL ⋈ O ⋈ C ⋈ S ⋈ N), merged into V by
-    monoid SUM — the accumulated fact history (L, the 100 TB table) is
-    never rescanned; only the delta and the (smaller) dimension-side
-    relations are. Partials carry ALL years so any year-window read
-    serves from the same view; no date filter here."""
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", F.year("o_orderdate").alias("o_year")
-    )
-    customer = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supplier = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    joined = (
-        li_src.select("l_orderkey", "l_suppkey", revenue_units().alias("rev_u"))
-        .join(orders, F.col("l_orderkey") == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(
-            supplier,
-            (F.col("l_suppkey") == supplier.s_suppkey)
-            & (F.col("c_nationkey") == supplier.s_nationkey),
-        )
-        .join(F.broadcast(nation), supplier.s_nationkey == F.col("n_nationkey"))
-    )
-    return joined.groupBy(F.col("n_name").alias("nation"), "o_year").agg(
-        F.sum("rev_u").alias("rev_u"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-def q5_merge(parts: DataFrame) -> DataFrame:
-    """Monoid merge of Q5 partials (SUM per (nation, year))."""
-    return parts.groupBy("nation", "o_year").agg(
-        F.sum("rev_u").alias("rev_u"), F.sum("n_items").alias("n_items")
-    )
-
-
-def q5_rollup_read(mat: DataFrame) -> DataFrame:
-    """The flagship's exact output frame from staged (nation, year)
-    partials: filter the 1996-97 window, SUM the integer units, divide
-    once — bit-identical to the raw star plan's rev_sum."""
-    return (
-        mat.filter(F.col("o_year").isin(1996, 1997))
-        .groupBy("nation")
-        .agg((F.sum("rev_u").cast("double") / 10000.0).alias("revenue"))
-    )
-
-
-def q5_rollup(spark: SparkSession, sf_dir: str):
-    return _staged_rollup(
-        spark, sf_dir, "q5",
-        lambda: q5_partials(spark, sf_dir, table(spark, sf_dir, "lineitem")),
-    )
-
-
-@register("maintenance_rollup_q5", oracle=_Q5_ORACLE)
-def maintenance_rollup_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVM posture for the FLAGSHIP star join (join_multiway_star — the
-    last r11 `weak` row with no <2x sf10 posture): one maintenance pass
-    materializes the Q5 join-aggregate at (nation, order-year)
-    granularity — ~175 rows at any scale factor — and publishes both
-    the partials and the 1996-97 serving frame content-addressed
-    (sources/staging.py). Every later call is then a one-stage
-    constant-size scan; ingest batches fold in by
-    delta-join + SUM without rescanning lineitem history
-    (maintenance_rollup_ingest_q5 exercises exactly that). Oracle: the
-    full star recompute — equality IS the join-aggregate IVM
-    correctness claim, and the integer-unit revenue makes staged and
-    raw bit-identical. join_multiway_star is the cold star plan."""
-    mat = q5_rollup(spark, sf_dir)
-    return _publish_serve(spark, sf_dir, "q5", q5_rollup_read(mat))
-
-
-# ---------------------------------------------------------------------------
-# Q3 join-aggregate IVM (r12 continuation — the last headline join
-# without its own maintained view; previously warm only via the bucket
-# family at ~1.75x). The view is the BUILDING-segment revenue aggregate
-# at (o_orderkey, o_orderdate) granularity in integer units — a SUM
-# monoid per group, delta-join maintainable exactly like q5's, except
-# the view GROWS with the order count (unlike q5's 175 rows), so the
-# published artifacts are (a) the partials (the maintainable view) and
-# (b) the constant-size top-10 serving frame recomputed from them after
-# each merge — the classic maintained-top-k split.
-# ---------------------------------------------------------------------------
-
-
-def q3_partials(spark: SparkSession, sf_dir: str, li_src: DataFrame) -> DataFrame:
-    """(o_orderkey, o_orderdate, rev_u, n_items) partials over an
-    arbitrary lineitem-shaped frame: ΔL ⋈ orders ⋈ BUILDING-customers,
-    SUM of exact 1e-4 revenue units per order — the delta-join of the
-    Q3 view; the fact history is never rescanned on ingest."""
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    cust = (
-        table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    joined = (
-        li_src.select("l_orderkey", revenue_units().alias("rev_u"))
-        .join(orders, F.col("l_orderkey") == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-    )
-    return joined.groupBy("o_orderkey", "o_orderdate").agg(
-        F.sum("rev_u").alias("rev_u"), F.count(F.lit(1)).alias("n_items")
-    )
-
-
-def q3_merge(parts: DataFrame) -> DataFrame:
-    """Monoid merge of Q3 partials (SUM per (orderkey, orderdate))."""
-    return parts.groupBy("o_orderkey", "o_orderdate").agg(
-        F.sum("rev_u").alias("rev_u"), F.sum("n_items").alias("n_items")
-    )
-
-
-def q3_rollup_read(mat: DataFrame) -> DataFrame:
-    """Q3's exact output frame from the maintained partials: re-collapse
-    (base ⊎ delta rows may share a group), one double division, top-10
-    by (revenue desc, orderkey) — bit-identical to the raw 3-way plan
-    (same integer units, same IEEE op, deterministic tiebreak)."""
-    return (
-        mat.groupBy("o_orderkey", "o_orderdate")
-        .agg((F.sum("rev_u").cast("double") / 10000.0).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
-def q3_rollup(spark: SparkSession, sf_dir: str):
-    return _staged_rollup(
-        spark, sf_dir, "q3",
-        lambda: q3_partials(spark, sf_dir, table(spark, sf_dir, "lineitem")),
-    )
-
-
-_SQL_Q3 = f"""
-    SELECT o_orderkey, o_orderdate,
-           {sql_rev_sum('revenue')}
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-    GROUP BY o_orderkey, o_orderdate
-    ORDER BY revenue DESC, o_orderkey
-    LIMIT 10
-    """
-
-
-@register("maintenance_rollup_q3", oracle=_SQL_Q3)
-def maintenance_rollup_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVM posture for the Q3 top-10 (limit_topk — the last headline
-    join whose best warm shape was the ~1.75x bucket-family read): one
-    maintenance pass materializes the BUILDING-segment revenue view at
-    (orderkey, orderdate) granularity and publishes BOTH the partials
-    and the top-10 serving frame content-addressed. A later call is a
-    floor-time 10-row scan; ingest batches fold in by
-    delta-join + SUM and a top-10 recompute over the view (a partials
-    scan, never the fact history — maintenance_rollup_ingest_q3 proves
-    the delta-only plan). Oracle: the full 3-way recompute — equality
-    IS the maintained-top-k correctness claim. limit_topk is the cold
-    plan."""
-    mat = q3_rollup(spark, sf_dir)
-    return _publish_serve(spark, sf_dir, "q3", q3_rollup_read(mat))
-
-
-# ---------------------------------------------------------------------------
-# Exercised ingest-delta merges (r11 verdict item 2: prove "one pass
-# over the increment only" end-to-end for the IVM rollups, not just the
-# merge property in prose). Fixture: the source fact table is split
-# 90/10 by a deterministic key predicate; the 10% "ingest batch" is
-# materialized as its OWN parquet directory (at 100 TB this is the
-# landing zone the ingest job wrote — new files, never a filter over
-# history), base partials are built from the remaining 90%, and the
-# UPDATE pass merges partials(delta-scan) into the base by monoid
-# SUM / bitmap-OR. tests/test_plans.py pins the update plan's file
-# sources: the delta directory and the KB-sized base partials — the
-# 90% base slice of the fact table appears NOWHERE in the update scan.
-# ---------------------------------------------------------------------------
-
-_INGEST_SPECS = {
-    # name -> (fact table, delta predicate builder, partials, merge, read)
-    "tumbling": ("events", lambda: F.col("event_id") % 10 == 0,
-                 tumbling_partials, tumbling_merge),
-    "distinct": ("events", lambda: F.col("event_id") % 10 == 0,
-                 distinct_partials, distinct_merge),
-    "pricing": ("lineitem", lambda: F.col("l_orderkey") % 10 == 0,
-                pricing_partials, pricing_merge),
-}
-
-
-def _ingest_fixture(spark: SparkSession, sf_dir: str, name: str):
-    """(base_partials_df, delta_df) for one rollup's ingest exercise,
-    both content-addressed staged: the delta slice as raw rows (the
-    ingest batch), the base partials as yesterday's materialized view.
-    partials_fn for the join-aggregates (q5, q3) needs the session, so
-    it's resolved here."""
-    from . import staging
-
-    if name in ("q5", "q3"):
-        tname, pred = "lineitem", lambda: F.col("l_orderkey") % 10 == 0
-        pfn = q5_partials if name == "q5" else q3_partials
-        partials = lambda src: pfn(spark, sf_dir, src)  # noqa: E731
-    else:
-        tname, pred, partials, _merge = _INGEST_SPECS[name]
-    delta = staging.stage_parquet(
-        spark, "ingest", sf_dir, (tname,), f"{tname}_delta",
-        lambda: table(spark, sf_dir, tname).filter(pred()),
-    )
-    base = staging.stage_parquet(
-        spark, "ingest", sf_dir, _ROLLUP_TABLES[name], f"{name}_base_partials",
-        lambda: partials(table(spark, sf_dir, tname).filter(~pred())),
-    )
-    return base, delta
-
-
-def rollup_ingest_update(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """THE delta-only update plan: base partials (a KB-sized parquet
-    read) ⊎ partials over the delta directory scan, collapsed by the
-    rollup's monoid merge. This frame's physical plan reads exactly two
-    file sources — the delta and the base partials; the fact history is
-    absent (pinned in tests/test_plans.py). Exposed separately from the
-    registered keys so the plan pin tests the update in isolation."""
-    base, delta = _ingest_fixture(spark, sf_dir, name)
-    if name in ("q5", "q3"):
-        pfn, mfn = ((q5_partials, q5_merge) if name == "q5"
-                    else (q3_partials, q3_merge))
-        return mfn(base.unionByName(pfn(spark, sf_dir, delta)))
-    _t, _p, partials, merge = _INGEST_SPECS[name]
-    return merge(base.unionByName(partials(delta)))
-
-
-def _rollup_ingest(spark: SparkSession, sf_dir: str, name: str, read) -> DataFrame:
-    """Registered-key body: run the update, publish the merged partials
-    as the view's next version (content-addressed; idempotent re-runs
-    read it back), return the exact query frame. The oracle is the full
-    recompute over base+delta (== the whole fixture table), so equality
-    proves the increment-only merge reconstructs the view exactly."""
-    from . import staging
-
-    merged = staging.stage_parquet(
-        spark, "ingest", sf_dir, _ROLLUP_TABLES[name], f"{name}_partials_v2",
-        lambda: rollup_ingest_update(spark, sf_dir, name),
-    )
-    return read(merged)
-
-
-@register("maintenance_rollup_ingest_tumbling", oracle=_SQL_TUMBLING)
-def maintenance_rollup_ingest_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-delta IVM, exercised end-to-end for the tumbling rollup
-    (r11 verdict item 2): merge = SUM of (count, cents) partials per
-    (hour, type) — the update scans the 10% ingest batch plus the
-    KB-sized base partials, never the 90% history (plan pinned), and
-    the result is bit-identical to a full recompute (integer monoids;
-    oracle = the full-table tumbling SQL)."""
-    return _rollup_ingest(spark, sf_dir, "tumbling", tumbling_rollup_read)
-
-
-@register(
-    "maintenance_rollup_ingest_distinct",
-    oracle="""
-    SELECT event_type,
-           COUNT(DISTINCT user_id) AS n_users,
-           COUNT(*) AS n_events
-    FROM events GROUP BY event_type
-    """,
-)
-def maintenance_rollup_ingest_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-delta IVM for EXACT distinct: the bitmap partials
-    OR-merge (set union — a user active in both the history and the
-    ingest batch counts once), counts SUM. The update pass scans only
-    the delta and the base bitmaps; COUNT(DISTINCT) over the full table
-    is the oracle. This is the operation that makes exact uniques
-    maintainable at 100 TB — no rescan, no approximation."""
-    return _rollup_ingest(spark, sf_dir, "distinct", distinct_rollup_read)
-
-
-@register(
-    "maintenance_rollup_ingest_pricing",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           (CAST(SUM(CAST(FLOOR((l_quantity) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_qty,
-           (CAST(SUM(CAST(FLOOR((l_extendedprice) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_base_price,
-           (CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 10000 + 0.5) AS BIGINT)) AS DOUBLE) / 10000.0) AS sum_disc_price,
-           (CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) AS sum_charge,
-           ((CAST(SUM(CAST(FLOOR((l_quantity) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) / COUNT(l_quantity)) AS avg_qty,
-           ((CAST(SUM(CAST(FLOOR((l_extendedprice) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) / COUNT(l_extendedprice)) AS avg_price,
-           ((CAST(SUM(CAST(FLOOR((l_discount) * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0) / COUNT(l_discount)) AS avg_disc,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def maintenance_rollup_ingest_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-delta IVM for the Q1 pricing summary: all nine partial
-    columns are integer SUM monoids, so the 6-row view folds in an
-    ingest batch with a delta-only scan, and every derived double
-    (sums, averages) reconstructs bit-exactly — oracle = full-table Q1
-    recompute. The view's filter (l_shipdate <= cutoff) lives in the
-    partials builder, so it applies to the delta identically."""
-    return _rollup_ingest(spark, sf_dir, "pricing", pricing_rollup_read)
-
-
-@register("maintenance_rollup_ingest_q5", oracle=_Q5_ORACLE)
-def maintenance_rollup_ingest_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELTA-JOIN IVM for the flagship join-aggregate (the classic
-    incremental maintenance of γ(L ⋈ dims)): the ingest batch ΔL joins
-    the dimension-side relations (orders/customer/supplier/nation —
-    scanned, but orders-of-magnitude smaller than the fact history; on
-    the bucket family this join is additionally co-located), its
-    (nation, year) partial SUMs merge into the base view, and lineitem
-    history is never rescanned (plan pinned). Oracle: the full 6-table
-    star recompute over base+delta."""
-    return _rollup_ingest(spark, sf_dir, "q5", q5_rollup_read)
-
-
-@register("maintenance_rollup_ingest_q3", oracle=_SQL_Q3)
-def maintenance_rollup_ingest_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELTA-JOIN IVM for the maintained TOP-K (r12): the ingest batch
-    ΔL joins orders + BUILDING customers, its (orderkey, orderdate)
-    revenue partials SUM into the base view, and the top-10 is
-    recomputed from the view — a partials scan that never touches the
-    lineitem history (plan pinned like the other ingest keys). This is
-    the standard maintained-top-k split: the view is incrementally
-    exact, the constant-size serving frame is derived from it per
-    merge. Oracle: the full 3-way recompute over base+delta."""
-    return _rollup_ingest(spark, sf_dir, "q3", q3_rollup_read)
+for _prefix, _step in (("maintenance_rollup_", "serve"),
+                       ("maintenance_rollup_ingest_", "ingest")):
+    for _view in VIEWS:
+        _register_view_key(_prefix + _view.name, _view, _step)
 
 
 class CommitConflict(RuntimeError):
@@ -2804,6 +2419,13 @@ def scan_protobuf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: maintenance_incremental_rollup's view: the tumbling measures at event_type grain
+_EVENT_TYPE_VIEW = RollupView(
+    "event_type", ("events",), keys=lambda: ["event_type"],
+    measures=_event_measures, read=_event_read("event_type"),
+)
+
+
 @register(
     "maintenance_incremental_rollup",
     oracle="""
@@ -2821,8 +2443,8 @@ def maintenance_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     into a group-count-sized read plus a scan of one day's increment.
 
     Works because count/sum are commutative monoids: the staged base
-    table stores per-group (n, cents) partials (one row per group, not
-    per event), and merge = union + re-aggregate of partials. The fresh
+    table stores the partials of _EVENT_TYPE_VIEW (one row per group,
+    not per event), and merge = union + re-aggregate of partials. The fresh
     scan touches ONLY rows past the cutoff (predicate pushed to the
     parquet scan); the base rows are never re-read. Non-monoid measures
     (exact distinct) need mergeable sketches instead — see
@@ -2835,41 +2457,26 @@ def maintenance_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     integer cents end-to-end, so merged and recomputed results are
     bit-identical."""
     ev = table(spark, sf_dir, "events")
-    cents = F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)")
 
     # the cutoff is stored with the partials, so a plan build runs no
     # data-sized min/max job
     def write(base: str) -> None:
         lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
         cutoff = lo + ((hi - lo + 1) * 3) // 5
-        (
-            ev.filter(F.col("event_id") < cutoff)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("cents"))
-            .write.parquet(os.path.join(base, "partials"))
-        )
+        _EVENT_TYPE_VIEW.partials(
+            spark, sf_dir, ev.filter(F.col("event_id") < cutoff)
+        ).write.parquet(os.path.join(base, "partials"))
         with open(os.path.join(base, "cutoff.txt"), "w", encoding="utf-8") as fh:
             fh.write(str(cutoff))
 
     base = session_fixture(spark, sf_dir, ("events",), "ivm", write)
     with open(os.path.join(base, "cutoff.txt"), encoding="utf-8") as fh:
         cutoff = int(fh.read().strip())
+    delta = _EVENT_TYPE_VIEW.partials(
+        spark, sf_dir, ev.filter(F.col("event_id") >= cutoff))  # pushed to the scan
     base_partials = spark.read.parquet(os.path.join(base, "partials"))
-    delta_partials = (
-        ev.filter(F.col("event_id") >= cutoff)  # pushed to the scan
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("cents"))
-    )
-    return (
-        base_partials.unionByName(delta_partials)
-        .groupBy("event_type")
-        .agg(F.sum("n").alias("n_events"), F.sum("cents").alias("total_cents"))
-        .select(
-            "event_type",
-            "n_events",
-            (F.col("total_cents").cast("double") / 100.0).alias("value_sum"),
-        )
-    )
+    return _EVENT_TYPE_VIEW.read(
+        _EVENT_TYPE_VIEW.merge(base_partials.unionByName(delta)))
 
 
 @register(

@@ -508,13 +508,17 @@ def test_vacuum_removes_only_orphans(spark, sf_small):
     fully readable (time travel intact post-vacuum)."""
     import glob
     import os
+    import shutil
 
     import sparkflow
     from sparkflow.sources.io import _stage_versioned_orders, _tv_entries
 
     base = _stage_versioned_orders(spark, sf_small)
-    orphans = glob.glob(os.path.join(base, "data", "orphan", "*.parquet"))
-    assert orphans, "staging should plant an orphan"
+    # plant an orphan of our own: an earlier vacuum in this session may
+    # already have removed the one the staging planted
+    os.makedirs(os.path.join(base, "data", "orphan"), exist_ok=True)
+    shutil.copyfile(_tv_entries(base, 1)[0]["path"],
+                    os.path.join(base, "data", "orphan", "planted.parquet"))
     sparkflow.QUERIES["maintenance_vacuum"](spark, sf_small).collect()
     assert not glob.glob(os.path.join(base, "data", "orphan", "*.parquet"))
     for v in (1, 2):
@@ -1228,33 +1232,26 @@ def test_vacuum_retains_by_position_not_version_arithmetic(
 
 
 def test_ivm_rollup_read_through_bit_identical(spark, sf_small):
-    """r11 IVM: each maintenance key that publishes a serving frame (a)
-    answers from it — every file its plan scans lies under the shared
-    staging root, none is a raw table — and (b) returns BIT-IDENTICAL
-    values to the cold query it maintains — the IEEE-reconstruction
-    claim the full-recompute oracles pin."""
+    """Each maintenance key that publishes a serving frame (a) answers
+    from it — every file its plan scans lies under the shared staging
+    root, none is a raw table — and (b) returns BIT-IDENTICAL values to
+    the cold query it maintains (a view's declared cold key) — the
+    IEEE-reconstruction claim the full-recompute oracles pin."""
     import pandas as pd
 
     import sparkflow
-    from bench import events_tumbling_batch
     from sparkflow.sources import staging
+    from sparkflow.sources.io import VIEWS
 
     q = sparkflow.QUERIES
-    for key, cold, sort_cols in (
-        ("maintenance_rollup_distinct", q["agg_distinct"], ["event_type"]),
-        ("maintenance_rollup_pricing", q["agg_hash_group"],
-         ["l_returnflag", "l_linestatus"]),
-        ("maintenance_rollup_tumbling", events_tumbling_batch,
-         ["hour_start", "event_type"]),
-        ("maintenance_rollup_q5", q["join_multiway_star"], ["nation"]),
-        ("maintenance_json_materialize", q["fn_json"], ["event_type"]),
-    ):
-        want = (cold(spark, sf_small).toPandas().sort_values(sort_cols)
-                .reset_index(drop=True))
+    pairs = [(f"maintenance_rollup_{v.name}", v.cold) for v in VIEWS]
+    for key, cold in pairs + [("maintenance_json_materialize", "fn_json")]:
+        want = q[cold](spark, sf_small).toPandas()
+        want = want.sort_values(list(want.columns)).reset_index(drop=True)
         got_df = q[key](spark, sf_small)
         files = got_df.inputFiles()
         assert files and all(staging.SHARED_ROOT in p for p in files), (key, files)
-        got = (got_df.toPandas().sort_values(sort_cols)
+        got = (got_df.toPandas().sort_values(list(want.columns))
                .reset_index(drop=True))
         # bit-identity, not approx: astype(str) compares exact doubles
         pd.testing.assert_frame_equal(

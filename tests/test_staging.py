@@ -17,7 +17,9 @@ from conftest import copy_corpus
 
 import sparkflow
 from sparkflow.sources import staging
-from sparkflow.sources.io import _ROLLUP_TABLES
+from sparkflow.sources.io import VIEWS
+
+_TABLES = {view.name: view.tables for view in VIEWS}
 
 #: registered queries (plus bench's tumbling twin) that must never read
 #: the shared staging root
@@ -46,7 +48,7 @@ def test_results_independent_of_published_artifacts(spark, private_corpus):
     for key in publishers:
         sparkflow.QUERIES[key](spark, sf).collect()
     assert staging.is_published(
-        staging.shared_path("rollup", sf, _ROLLUP_TABLES["pricing"], "pricing_serve")
+        staging.shared_path("rollup", sf, _TABLES["pricing"], "pricing_serve")
     )
     for k, fn in queries.items():
         df = fn(spark, sf)
@@ -67,7 +69,7 @@ def test_digest_change_invalidates(spark, private_corpus):
 
     def serve_path():
         return staging.shared_path(
-            "rollup", sf, _ROLLUP_TABLES["distinct"], "distinct_serve"
+            "rollup", sf, _TABLES["distinct"], "distinct_serve"
         )
 
     old = serve_path()
@@ -247,19 +249,6 @@ def test_staging_vacuum_lifecycle(spark, sf_small, tmp_path):
     os.utime(mf, (past, past))
     s = staging.staging_vacuum(min_age_sec=3600)
     assert not os.path.exists(gone) and s["removed_undigestable"] == 1
-
-
-def test_q3_serve_frame_matches_cold_topk(spark, sf_small):
-    """maintenance_rollup_q3 (r12): the maintained top-10 serve frame
-    equals limit_topk's cold 3-way plan row-for-row (integer revenue
-    units → identical doubles), in the contract order."""
-    from pyspark.sql import functions as F
-
-    cold = sparkflow.QUERIES["limit_topk"](spark, sf_small).collect()
-    serve = sparkflow.QUERIES["maintenance_rollup_q3"](spark, sf_small)
-    warm = serve.orderBy(F.col("revenue").desc(), F.col("o_orderkey")).collect()
-    assert len(cold) == 10
-    assert [tuple(r) for r in warm] == [tuple(r) for r in cold]
 
 
 def test_mid_read_publish_never_tears(spark, sf_small, tmp_path):
@@ -456,3 +445,35 @@ def test_staging_vacuum_stale_digest_sweeps(spark, sf_small, tmp_path):
     s = staging.staging_vacuum(min_age_sec=3600)
     assert not os.path.exists(live)
     assert s["removed_stale"] >= 1
+
+
+#: the partials schema of each view at sf0.001, as published
+_PARTIALS_LAYOUT = {
+    "tumbling": "struct<hour_start:timestamp,event_type:string,"
+                "n_events:bigint,value_cents:bigint>",
+    "distinct": "struct<event_type:string,bucket:bigint,bm:binary,"
+                "n_events:bigint>",
+    "pricing": "struct<l_returnflag:string,l_linestatus:string,"
+               "qty_c:bigint,price_c:bigint,disc_price_u:bigint,"
+               "charge_u:bigint,disc_c:bigint,n_qty:bigint,n_price:bigint,"
+               "n_disc:bigint,n_all:bigint>",
+    "q5": "struct<nation:string,o_year:int,rev_u:bigint,n_items:bigint>",
+    "q3": "struct<o_orderkey:bigint,o_orderdate:timestamp_ntz,"
+          "rev_u:bigint,n_items:bigint>",
+}
+
+
+def test_partials_layouts_pinned(spark, sf_small):
+    """A published partials artifact is addressed by corpus content and
+    name only, so a directory written by an older layout would be read
+    as the new one: each view's partials schema is pinned here."""
+    from sparkflow.catalog import table
+
+    assert sorted(_PARTIALS_LAYOUT) == sorted(_TABLES)
+    for view in VIEWS:
+        src = table(spark, sf_small, view.tables[0])
+        got = view.partials(spark, sf_small, src).schema.simpleString()
+        assert got == _PARTIALS_LAYOUT[view.name], (
+            f"{view.name} partials layout changed; a layout change also "
+            f"needs a new artifact name, or published partials of the old "
+            f"layout are served as the new one: {got}")
